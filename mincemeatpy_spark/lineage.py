@@ -96,8 +96,9 @@ def fenced_filter(df: DataFrame, cond: Column) -> DataFrame:
     not degrade silently back to duplicated evaluation.
     """
     fence = "_fence"
+    taken = {c.lower() for c in df.columns}  # column names resolve case-insensitively
     i = 0
-    while fence in df.columns:
+    while fence in taken:
         i += 1
         fence = f"_fence{i}"
     return (

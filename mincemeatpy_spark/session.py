@@ -52,11 +52,26 @@ def get_spark(
     # the first streaming query pays a full worker respawn (~2 s,
     # measured r9).  With the path stable from the start,
     # ensure_protobuf's guard sees it present and never mutates.
-    shim = os.path.join(os.path.dirname(os.path.abspath(__file__)), "pbshim")
+    #
+    # Python workers fork from pyworker/mincemeatpy_daemon.py:
+    # pyspark.daemon plus the lazy zip-importer invalidation of CPython
+    # 3.13's zipimport.  Each task's setup calls
+    # importlib.invalidate_caches(); before 3.13 (3.12.1 included) every
+    # zipimporter answers by re-reading its archive's directory at once.
+    # A warm Spark 4.1 worker holds 16 of them over pyspark.zip, the
+    # Spark jar and py4j: ~0.12 s of CPU per task on a 4-vCPU x86 host,
+    # 3-4x the real work of a small mincemeat job.  Where zipimport is
+    # already lazy the module only hands over to pyspark.daemon.  Only
+    # sessions built here get it; sessions built elsewhere (the
+    # external driver's, tools/driver_sim.py, tools/spill_probe.py,
+    # tests that build their own) keep the stock daemon.
+    here = os.path.dirname(os.path.abspath(__file__))
+    shim = os.path.join(here, "pbshim")
+    pyworker = os.path.join(here, "pyworker")
     builder = builder.config(
         "spark.executorEnv.PYTHONPATH",
-        shim + os.pathsep + os.environ.get("PYTHONPATH", ""),
-    )
+        os.pathsep.join([shim, pyworker, os.environ.get("PYTHONPATH", "")]),
+    ).config("spark.python.daemon.module", "mincemeatpy_daemon")
     if os.environ.get("SPARK_GRAFT_CBO_STATS") == "1":
         # CBO flags must be on BEFORE planning; the stats themselves
         # come from tables.bootstrap_cbo_statistics (same flag).

@@ -605,8 +605,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # <= 1e12 and each 64-term dot <= 6.4e13 — every partial sum is an
     # integer below 2^53, represented exactly in float64 regardless of
     # accumulation order.  The float64 Gram is bit-identical to the
-    # int64 one (probes/r14/embedding_cosine_probe.py verifies
-    # array_equal on the fixture).
+    # int64 one.
     bc = spark.sparkContext.broadcast((ids, mat.astype(np.float64), nrm))
 
     def pairs(batches):

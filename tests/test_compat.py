@@ -434,3 +434,55 @@ def test_client_conn_two_concurrent_clients(spark):
     finally:
         compat._SERVER_RUNS.pop(11236, None)
         run.done.set()
+
+
+def test_warm_worker_invalidation_reads_no_zip(spark):
+    # Like the reference's long-lived Client.conn (mincemeat.py:130-150),
+    # a warm worker should pay no per-task setup beyond the task's own
+    # work.  Task setup calls importlib.invalidate_caches(); with the
+    # session's worker daemon that re-reads no zip archive.
+    sc = spark.sparkContext
+    sc.parallelize(range(8), 4).count()
+
+    def invalidate_and_count_reads(_):
+        import importlib
+        import zipimport
+
+        reads = []
+        real = zipimport._read_directory
+
+        def counting(archive):
+            reads.append(archive)
+            return real(archive)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        return [len(reads)]
+
+    counts = sc.parallelize(range(4), 4).mapPartitions(invalidate_and_count_reads)
+    assert counts.collect() == [0, 0, 0, 0]
+
+
+def test_add_py_file_reaches_warm_workers(spark, tmp_path):
+    # A zip shipped after the workers are warm is a new sys.path entry
+    # with its own importer, so the next job can import from it.
+    import uuid
+    import zipfile
+
+    sc = spark.sparkContext
+    sc.parallelize(range(8), 4).count()
+    name = f"mm_addpy_{uuid.uuid4().hex}"
+    archive = tmp_path / f"{name}.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr(f"{name}.py", "VALUE = 42\n")
+    sc.addPyFile(str(archive))
+
+    def import_value(_):
+        import importlib
+
+        return [importlib.import_module(name).VALUE]
+
+    assert sc.parallelize(range(4), 4).mapPartitions(import_value).collect() == [42] * 4

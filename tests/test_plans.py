@@ -1555,3 +1555,21 @@ def test_fenced_filter_collision_safe(spark, sf_dir):
     assert out.columns == ["doc_id", "_fence"]
     vals = {r["_fence"] for r in out.limit(5).collect()}
     assert vals == {-7}, f"user _fence column was clobbered: {vals}"
+
+
+def test_fenced_filter_collision_case_insensitive(spark, sf_dir):
+    """Spark resolves column names case-insensitively, so a caller's
+    _FENCE column collides with the helper's _fence: it must survive
+    fenced_filter, and a lineage truncation after it, unchanged."""
+    from pyspark.sql import functions as F
+
+    from mincemeatpy_spark.lineage import fenced_filter, truncate_lazy
+    from mincemeatpy_spark.tables import t as tbl
+
+    docs = tbl(spark, sf_dir, "documents").select(
+        "doc_id", F.lit(-7).alias("_FENCE")
+    )
+    out = fenced_filter(docs, F.col("doc_id") >= 0).transform(truncate_lazy)
+    assert out.columns == ["doc_id", "_FENCE"]
+    vals = {r["_FENCE"] for r in out.limit(5).collect()}
+    assert vals == {-7}, f"user _FENCE column was clobbered: {vals}"

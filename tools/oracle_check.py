@@ -64,8 +64,10 @@ def main() -> int:
         # canonicalizer.  Column order is not part of the contract;
         # values-per-name are.  Duplicate column names would defeat that
         # canonicalization, so they are rejected loudly here.
-        assert len(set(s_cols)) == len(s_cols), f"{name}: duplicate spark columns {s_cols}"
-        assert len(set(d_cols)) == len(d_cols), f"{name}: duplicate oracle columns {d_cols}"
+        if len(set(s_cols)) != len(s_cols):
+            raise ValueError(f"{name}: duplicate spark columns {s_cols}")
+        if len(set(d_cols)) != len(d_cols):
+            raise ValueError(f"{name}: duplicate oracle columns {d_cols}")
         ok = (
             len(s_rows) == len(d_rows)
             and sorted(s_cols) == sorted(d_cols)

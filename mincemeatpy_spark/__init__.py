@@ -22,13 +22,23 @@ Layout:
 - ``functions/``  — scalar/JSON/array/vector function surfaces
 - ``text/``       — text analysis + deduplication operators
 - ``similarity/`` — embedding similarity search (exact + LSH)
-- ``multimodal/`` — opaque-binary column plumbing (decode stubs)
+- ``multimodal/`` — binary media columns and dependency-free codecs
+                    (image/audio/video encode -> decode round trips)
 - ``streaming/``  — Structured Streaming operators + batch equivalents
 """
 
-from mincemeatpy_spark.registry import QUERIES, Query, load_all_queries
-from mincemeatpy_spark.session import get_spark
-from mincemeatpy_spark.compat import Client, Server, mapreduce, pipeline
+import sys
+
+from pyspark import cloudpickle
+
+# Ship package code BY VALUE: a function entering a Python worker stage
+# carries every package helper it reaches, so executors need not have
+# ``mincemeatpy_spark`` on sys.path (SCALE.md rule 14).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+from mincemeatpy_spark.registry import QUERIES, Query, load_all_queries  # noqa: E402
+from mincemeatpy_spark.session import get_spark  # noqa: E402
+from mincemeatpy_spark.compat import Client, Server, mapreduce, pipeline  # noqa: E402
 
 # Server/Client at the top level make `import mincemeatpy_spark as
 # mincemeat` a drop-in for the reference's `import mincemeat` scripts

@@ -1,13 +1,12 @@
-"""Multimodal columns: image/audio/video as opaque ``binary`` + typed
-metadata.
+"""Multimodal columns: image/audio/video as ``binary`` + typed metadata,
+decoded by dependency-free codecs.
 
-The container has no image/audio codecs, so the DECODE step is a
-deterministic stub (and ``decode_image_real`` raises
-``NotImplementedError`` until a codec is present) — but the Spark-side
-plumbing is real and tested: binary columns, byte-length/digest
-metadata, Arrow-batched ``mapInPandas`` decode with an explicit output
-schema, and frame-index expansion.  Swapping the stub for PIL/ffmpeg
-changes ONE function body, not the pipeline.
+The ``*_stub`` queries keep a deterministic stand-in decoder the oracle
+mirrors in SQL.  The ``*_real`` queries write genuine PPM/BMP/PNG/JPEG/
+GIF/WebP/WAV/FLAC/AVI bytes per document and decode them back through
+the encode -> decode harness in ``roundtrip.py``, checking each decode
+against closed-form truth (Ogg/Vorbis lives in ``vorbis.py``, lossy
+WebP in ``vp8.py``).
 
 At 100 TB: binary payloads ride in parquet alongside metadata columns;
 filters on metadata prune row groups without touching payload bytes;
@@ -21,8 +20,25 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from mincemeatpy_spark.multimodal.roundtrip import (
+    _codec_roundtrip,
+    _encode_stage,
+    _WorkerMemo,
+)
 from mincemeatpy_spark.registry import register
 from mincemeatpy_spark.tables import t
+
+# Output schemas several round-trip queries share.
+_RGB_SUMS_SCHEMA = (
+    "doc_id long, fmt string, width long, height long, "
+    "sum_r long, sum_g long, sum_b long"
+)
+_PCM_META_SCHEMA = (
+    "doc_id long, sample_rate long, n_channels long, "
+    "n_samples long, sample_sum long, energy long"
+)
+# Exact source channel sums the lossy image codecs carry to decode.
+_TRUE_RGB = "true_r long, true_g long, true_b long"
 
 
 def decode_image_real(payload: bytes, placeholder_vp8_ok: bool = False) -> dict:
@@ -109,49 +125,16 @@ def decode_image_real(payload: bytes, placeholder_vp8_ok: bool = False) -> dict:
             "mean_b": sums[2] // (w * h),
         }
     if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        # driver-side dispatch only: when this function travels by value
-        # (_ship_by_value strips module globals) the PNG path must be
-        # shipped explicitly as decode_png_real, like the registered
-        # query does
-        try:
-            png = decode_png_real
-        except NameError as exc:
-            raise NotImplementedError(
-                "PNG dispatch needs decode_png_real shipped alongside"
-            ) from exc
-        return png(payload)
+        return decode_png_real(payload)
     if payload[:2] == b"\xff\xd8":
-        # same driver-side dispatch note as PNG above: ship
-        # decode_jpeg_real explicitly when traveling by value
-        try:
-            jpg = decode_jpeg_real
-        except NameError as exc:
-            raise NotImplementedError(
-                "JPEG dispatch needs decode_jpeg_real shipped alongside"
-            ) from exc
-        return jpg(payload)
+        return decode_jpeg_real(payload)
     if payload[:6] in (b"GIF87a", b"GIF89a"):
-        try:
-            gif = decode_gif_real
-        except NameError as exc:
-            raise NotImplementedError(
-                "GIF dispatch needs decode_gif_real shipped alongside"
-            ) from exc
-        return gif(payload)
+        return decode_gif_real(payload)
     if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        # same driver-side dispatch note as PNG above: ship
-        # decode_webp_real (and its _vp8l_* helpers, plus
-        # decode_vp8_real for lossy chunks) when traveling by value.
-        try:
-            webp = decode_webp_real
-        except NameError as exc:
-            raise NotImplementedError(
-                "WebP dispatch needs decode_webp_real shipped alongside"
-            ) from exc
         # lossless (VP8L) chunks decode unconditionally; lossy 'VP8 '
         # chunks require the caller's provenance opt-in while the token
         # tables are placeholders (ADVICE r10 fail-loud gate)
-        return webp(payload, placeholder_vp8_ok=placeholder_vp8_ok)
+        return decode_webp_real(payload, placeholder_vp8_ok=placeholder_vp8_ok)
     raise NotImplementedError(
         "unrecognized image container; PPM (P6), 24-bit BMP, RGB8 PNG, "
         "baseline+progressive JPEG, GIF (LZW incl. interlace + "
@@ -183,28 +166,10 @@ def decode_audio_real(payload: bytes) -> dict:
     """
     import struct
 
-    if payload[:4] == b"fLaC":
-        # same ship-alongside dispatch note as decode_image_real's PNG
-        try:
-            flac = decode_flac_real
-        except NameError as exc:
-            raise NotImplementedError(
-                "FLAC dispatch needs decode_flac_real shipped alongside"
-            ) from exc
-        meta = flac(payload)
-        meta.pop("fmt", None)
-        return meta
-    if payload[:4] == b"OggS":
-        # Ogg/Vorbis decodes natively since r9 (multimodal/vorbis.py);
-        # same ship-alongside dispatch note as the PNG path
-        try:
-            vorb = decode_vorbis_real
-        except NameError as exc:
-            raise NotImplementedError(
-                "Vorbis dispatch needs decode_vorbis_real (and its "
-                "helpers) shipped alongside"
-            ) from exc
-        meta = vorb(payload)
+    if payload[:4] in (b"fLaC", b"OggS"):
+        # FLAC, and Ogg/Vorbis since r9 (multimodal/vorbis.py)
+        dec = decode_flac_real if payload[:4] == b"fLaC" else decode_vorbis_real
+        meta = dec(payload)
         meta.pop("fmt", None)
         return meta
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
@@ -315,9 +280,6 @@ def multimodal_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
 
-    # NOTE: the decoder must be self-contained (no references to this
-    # module) so cloudpickle ships it by value — executors may not have
-    # the package on their sys.path.
     def _decode_one(payload: bytes) -> tuple[int, int, int, str]:
         n = len(payload)
         return n % 640 + 1, (n * 7) % 480 + 1, 3, ("png" if n % 2 == 0 else "jpg")
@@ -338,30 +300,6 @@ def multimodal_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.mapInPandas(
         decode, schema="doc_id long, width int, height int, channels int, fmt string"
     )
-
-
-def _ship_with(fn, **helpers):
-    """Rebind a module-level function onto plain builtins globals so
-    cloudpickle ships it BY VALUE into executor closures — the driver
-    contract does not put ``mincemeatpy_spark`` on worker sys.path, so a
-    by-reference pickle would die with ModuleNotFoundError worker-side.
-    The function body must be self-contained (imports inside the body,
-    otherwise builtins only), except for ``helpers``: other module-level
-    functions it calls (already shipped by value themselves), injected
-    into the rebound function's globals under their module names so the
-    whole call graph travels by value."""
-    import types
-
-    g = {"__builtins__": __builtins__}
-    g.update(helpers)
-    return types.FunctionType(
-        fn.__code__, g, fn.__name__, fn.__defaults__, fn.__closure__
-    )
-
-
-def _ship_by_value(fn):
-    """The zero-helper case of ``_ship_with`` (one contract, one body)."""
-    return _ship_with(fn)
 
 
 @register(
@@ -394,70 +332,32 @@ def _ship_by_value(fn):
     "never to the driver.",
 )
 def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+    import struct
 
-    d = t(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    def make_ppm(w, h, rgb):
+        return b"P6\n%d %d\n255\n" % (w, h) + bytes(rgb) * (w * h)
 
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    def make_bmp(w, h, rgb):
+        stride = (3 * w + 3) // 4 * 4
+        row = bytes((rgb[2], rgb[1], rgb[0])) * w + b"\x00" * (stride - 3 * w)
+        header = (
+            b"BM"
+            + struct.pack("<IHHI", 54 + h * stride, 0, 0, 54)
+            + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, h * stride, 0, 0, 0, 0)
+        )
+        return header + row * h
 
-        def make_ppm(w, h, rgb):
-            return b"P6\n%d %d\n255\n" % (w, h) + bytes(rgb) * (w * h)
+    def encode_row(doc_id, n_chars):
+        w, h = n_chars % 16 + 1, doc_id % 12 + 1
+        rgb = (doc_id % 256, (n_chars * 7) % 256, (doc_id * 31 + n_chars) % 256)
+        return (make_ppm if doc_id % 2 == 0 else make_bmp)(w, h, rgb)
 
-        def make_bmp(w, h, rgb):
-            stride = (3 * w + 3) // 4 * 4
-            row = bytes((rgb[2], rgb[1], rgb[0])) * w + b"\x00" * (stride - 3 * w)
-            header = (
-                b"BM"
-                + struct.pack("<IHHI", 54 + h * stride, 0, 0, 54)
-                + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, h * stride, 0, 0, 0, 0)
-            )
-            return header + row * h
-
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                w, h = n_chars % 16 + 1, doc_id % 12 + 1
-                rgb = (
-                    doc_id % 256,
-                    (n_chars * 7) % 256,
-                    (doc_id * 31 + n_chars) % 256,
-                )
-                payloads.append(
-                    make_ppm(w, h, rgb) if doc_id % 2 == 0 else make_bmp(w, h, rgb)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    encoded = d.mapInPandas(encode, schema="doc_id long, payload binary")
-
-    dec = _ship_by_value(decode_image_real)
-
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            metas = [dec(bytes(b)) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "fmt": [m["fmt"] for m in metas],
-                    "width": [m["width"] for m in metas],
-                    "height": [m["height"] for m in metas],
-                    "mean_r": [m["mean_r"] for m in metas],
-                    "mean_g": [m["mean_g"] for m in metas],
-                    "mean_b": [m["mean_b"] for m in metas],
-                }
-            )
-
-    return encoded.mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, fmt string, width long, height long, "
-            "mean_r long, mean_g long, mean_b long"
-        ),
+    return _codec_roundtrip(
+        t(spark, sf_dir, "documents").select("doc_id", "n_chars"),
+        encode_row,
+        lambda doc_id, payload: [decode_image_real(payload)],
+        "doc_id long, fmt string, width long, height long, "
+        "mean_r long, mean_g long, mean_b long",
     )
 
 
@@ -506,65 +406,30 @@ def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Arrow, never to the driver.",
 )
 def multimodal_decode_audio_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+    import struct
 
-    d = t(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    def make_wav(doc_id, n_chars):
+        ch = doc_id % 2 + 1
+        nfr = n_chars % 32 + 4
+        rate = 8000 + (doc_id % 4) * 4000
+        vals = [
+            ((doc_id * 131 + i * 17 + c * 7) % 4096) - 2048
+            for i in range(nfr)
+            for c in range(ch)
+        ]
+        data = struct.pack(f"<{len(vals)}h", *vals)
+        fmt = struct.pack("<HHIIHH", 1, ch, rate, rate * ch * 2, ch * 2, 16)
+        chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        if doc_id % 3 == 0:  # unknown chunk the parser must skip
+            chunks += b"LIST" + struct.pack("<I", 6) + b"INFOab"
+        chunks += b"data" + struct.pack("<I", len(data)) + data
+        return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
 
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-
-        import pandas as pd
-
-        def make_wav(doc_id, n_chars):
-            ch = doc_id % 2 + 1
-            nfr = n_chars % 32 + 4
-            rate = 8000 + (doc_id % 4) * 4000
-            vals = [
-                ((doc_id * 131 + i * 17 + c * 7) % 4096) - 2048
-                for i in range(nfr)
-                for c in range(ch)
-            ]
-            data = struct.pack(f"<{len(vals)}h", *vals)
-            fmt = struct.pack("<HHIIHH", 1, ch, rate, rate * ch * 2, ch * 2, 16)
-            chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            if doc_id % 3 == 0:  # unknown chunk the parser must skip
-                chunks += b"LIST" + struct.pack("<I", 6) + b"INFOab"
-            chunks += b"data" + struct.pack("<I", len(data)) + data
-            return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-        for pdf in batches:
-            payloads = [
-                make_wav(int(i), int(n))
-                for i, n in zip(pdf["doc_id"], pdf["n_chars"])
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    encoded = d.mapInPandas(encode, schema="doc_id long, payload binary")
-
-    dec = _ship_by_value(decode_audio_real)
-
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            metas = [dec(bytes(b)) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "sample_rate": [m["sample_rate"] for m in metas],
-                    "n_channels": [m["n_channels"] for m in metas],
-                    "n_samples": [m["n_samples"] for m in metas],
-                    "sample_sum": [m["sample_sum"] for m in metas],
-                    "energy": [m["energy"] for m in metas],
-                }
-            )
-
-    return encoded.mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, sample_rate long, n_channels long, "
-            "n_samples long, sample_sum long, energy long"
-        ),
+    return _codec_roundtrip(
+        t(spark, sf_dir, "documents").select("doc_id", "n_chars"),
+        make_wav,
+        lambda doc_id, payload: [decode_audio_real(payload)],
+        _PCM_META_SCHEMA,
     )
 
 
@@ -755,95 +620,62 @@ def _resize_bilinear_u8(img, out_w: int, out_h: int):
     "the decode and resample both real.",
 )
 def multimodal_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+    import math
 
-    d = (
+    import numpy as np
+
+    def encode_row(doc_id, n_chars):
+        w, h = n_chars % 14 + 4, doc_id % 10 + 4
+        x = np.arange(w)[None, :]
+        y = np.arange(h)[:, None]
+        v = doc_id * 23 + x * 5 + y * 11
+        img = np.stack(
+            [v % 256, (v + 77) % 256, (v + 154) % 256], axis=-1
+        ).astype(np.uint8)
+        return b"P6\n%d %d\n255\n" % (w, h) + img.tobytes()
+
+    def parse_ppm(b: bytes):
+        if not b.startswith(b"P6"):
+            raise ValueError("not a binary PPM")
+        fields, pos = [], 2
+        while len(fields) < 3:
+            while pos < len(b) and b[pos : pos + 1].isspace():
+                pos += 1
+            start = pos
+            while pos < len(b) and not b[pos : pos + 1].isspace():
+                pos += 1
+            fields.append(int(b[start:pos]))
+        pos += 1  # single whitespace after maxval
+        w, h, maxval = fields
+        if maxval != 255:
+            raise ValueError("PPM maxval must be 255")
+        data = np.frombuffer(b, dtype=np.uint8, count=w * h * 3, offset=pos)
+        return data.reshape(h, w, 3)
+
+    def decode_row(doc_id, payload):
+        img = parse_ppm(payload)
+        h, w = img.shape[:2]
+        scale = min(8.0 / w, 8.0 / h)
+        out_w = max(1, math.floor(w * scale + 0.5))
+        out_h = max(1, math.floor(h * scale + 0.5))
+        out = _resize_bilinear_u8(img, out_w, out_h)
+        return [
+            dict(
+                width=w, height=h, out_w=out_w, out_h=out_h,
+                sum_r=int(out[..., 0].sum()),
+                sum_g=int(out[..., 1].sum()),
+                sum_b=int(out[..., 2].sum()),
+            )
+        ]
+
+    return _codec_roundtrip(
         t(spark, sf_dir, "documents")
         .select("doc_id", "n_chars")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    resize = _ship_by_value(_resize_bilinear_u8)
-
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                w, h = n_chars % 14 + 4, doc_id % 10 + 4
-                x = np.arange(w)[None, :]
-                y = np.arange(h)[:, None]
-                v = doc_id * 23 + x * 5 + y * 11
-                img = np.stack(
-                    [v % 256, (v + 77) % 256, (v + 154) % 256], axis=-1
-                ).astype(np.uint8)
-                payloads.append(
-                    b"P6\n%d %d\n255\n" % (w, h) + img.tobytes()
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    encoded = d.mapInPandas(encode, schema="doc_id long, payload binary")
-
-    def decode_resize(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import math
-
-        import numpy as np
-        import pandas as pd
-
-        def parse_ppm(b: bytes):
-            if not b.startswith(b"P6"):
-                raise ValueError("not a binary PPM")
-            fields, pos = [], 2
-            while len(fields) < 3:
-                while pos < len(b) and b[pos : pos + 1].isspace():
-                    pos += 1
-                start = pos
-                while pos < len(b) and not b[pos : pos + 1].isspace():
-                    pos += 1
-                fields.append(int(b[start:pos]))
-            pos += 1  # single whitespace after maxval
-            w, h, maxval = fields
-            if maxval != 255:
-                raise ValueError("PPM maxval must be 255")
-            data = np.frombuffer(b, dtype=np.uint8, count=w * h * 3,
-                                 offset=pos)
-            return data.reshape(h, w, 3)
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                img = parse_ppm(bytes(payload))
-                h, w = img.shape[:2]
-                scale = min(8.0 / w, 8.0 / h)
-                out_w = max(1, math.floor(w * scale + 0.5))
-                out_h = max(1, math.floor(h * scale + 0.5))
-                out = resize(img, out_w, out_h)
-                rows.append(
-                    (
-                        int(doc_id), w, h, out_w, out_h,
-                        int(out[..., 0].sum()),
-                        int(out[..., 1].sum()),
-                        int(out[..., 2].sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "out_w", "out_h",
-                    "sum_r", "sum_g", "sum_b",
-                ],
-            )
-
-    return encoded.mapInPandas(
-        decode_resize,
-        schema=(
-            "doc_id long, width long, height long, out_w long, "
-            "out_h long, sum_r long, sum_g long, sum_b long"
-        ),
+        .repartition(spark.sparkContext.defaultParallelism),
+        encode_row,
+        decode_row,
+        "doc_id long, width long, height long, out_w long, "
+        "out_h long, sum_r long, sum_g long, sum_b long",
     )
 
 
@@ -1495,55 +1327,18 @@ def encode_png_rgb8(w: int, h: int, pixel) -> bytes:
     "through Arrow, never to the driver.",
 )
 def multimodal_decode_png_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+    def encode_row(doc_id, n_chars):
+        def pixel(x, y):
+            v = doc_id * 31 + x * 7 + y * 13
+            return (v % 256, (v + 101) % 256, (v + 202) % 256)
 
-    d = t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    enc = _ship_by_value(encode_png_rgb8)
-    dec = _ship_by_value(decode_png_real)
+        return encode_png_rgb8(n_chars % 16 + 1, doc_id % 12 + 1, pixel)
 
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                w, h = n_chars % 16 + 1, doc_id % 12 + 1
-
-                def pixel(x, y, _d=doc_id):
-                    v = _d * 31 + x * 7 + y * 13
-                    return (v % 256, (v + 101) % 256, (v + 202) % 256)
-
-                payloads.append(enc(w, h, pixel))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    encoded = d.mapInPandas(encode, schema="doc_id long, payload binary")
-
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            metas = [dec(bytes(b)) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "fmt": [m["fmt"] for m in metas],
-                    "width": [m["width"] for m in metas],
-                    "height": [m["height"] for m in metas],
-                    "sum_r": [m["sum_r"] for m in metas],
-                    "sum_g": [m["sum_g"] for m in metas],
-                    "sum_b": [m["sum_b"] for m in metas],
-                }
-            )
-
-    return encoded.mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, fmt string, width long, height long, "
-            "sum_r long, sum_g long, sum_b long"
-        ),
+    return _codec_roundtrip(
+        t(spark, sf_dir, "documents").select("doc_id", "n_chars"),
+        encode_row,
+        lambda doc_id, payload: [decode_png_real(payload)],
+        _RGB_SUMS_SCHEMA,
     )
 
 
@@ -1662,10 +1457,7 @@ def decode_avi_real(payload: bytes) -> dict:
     header) — into exact per-channel sums.  The declared frame count
     must match the frames actually present — a truncated movi is
     malformed, not silently short.  Other compressed fourccs
-    (H264/...) raise ``NotImplementedError``.  When shipped by value,
-    the MJPEG path needs ``decode_jpeg_real`` (and its ``_jpeg_*``
-    helpers) injected alongside — same dispatch convention as
-    ``decode_image_real``'s PNG/JPEG branches."""
+    (H264/...) raise ``NotImplementedError``."""
     import struct
 
     if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
@@ -1752,16 +1544,7 @@ def decode_avi_real(payload: bytes) -> dict:
                 else:
                     if fc2[2:] != b"dc":
                         continue
-                    # ship-alongside dispatch (decode_image_real's
-                    # convention): the JPEG decoder must travel with us
-                    try:
-                        jpg = decode_jpeg_real
-                    except NameError as exc:
-                        raise NotImplementedError(
-                            "MJPEG dispatch needs decode_jpeg_real "
-                            "shipped alongside"
-                        ) from exc
-                    m = jpg(bytes(payload[at2 : at2 + sz2]))
+                    m = decode_jpeg_real(bytes(payload[at2 : at2 + sz2]))
                     if m["width"] != w or m["height"] != h:
                         raise ValueError(
                             "MJPEG frame dimensions disagree with the "
@@ -1839,56 +1622,21 @@ def decode_avi_real(payload: bytes) -> dict:
 def multimodal_decode_video_real(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import pandas as pd
+    def encode_row(doc_id, n_chars):
+        w, h, nf = n_chars % 8 + 2, doc_id % 5 + 2, doc_id % 6 + 2
 
-    d = t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    enc = _ship_by_value(encode_avi_dib)
-    dec = _ship_by_value(decode_avi_real)
+        def pixel(f, x, y):
+            v = doc_id * 17 + f * 29 + x * 7 + y * 13
+            return (v % 256, (v + 101) % 256, (v + 202) % 256)
 
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+        return encode_avi_dib(w, h, nf, pixel)
 
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                w, h, nf = n_chars % 8 + 2, doc_id % 5 + 2, doc_id % 6 + 2
-
-                def pixel(f, x, y, _d=doc_id):
-                    v = _d * 17 + f * 29 + x * 7 + y * 13
-                    return (v % 256, (v + 101) % 256, (v + 202) % 256)
-
-                payloads.append(enc(w, h, nf, pixel))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    encoded = d.mapInPandas(encode, schema="doc_id long, payload binary")
-
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            metas = [dec(bytes(b)) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "fmt": [m["fmt"] for m in metas],
-                    "width": [m["width"] for m in metas],
-                    "height": [m["height"] for m in metas],
-                    "n_frames": [m["n_frames"] for m in metas],
-                    "sum_r": [m["sum_r"] for m in metas],
-                    "sum_g": [m["sum_g"] for m in metas],
-                    "sum_b": [m["sum_b"] for m in metas],
-                }
-            )
-
-    return encoded.mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, fmt string, width long, height long, "
-            "n_frames long, sum_r long, sum_g long, sum_b long"
-        ),
+    return _codec_roundtrip(
+        t(spark, sf_dir, "documents").select("doc_id", "n_chars"),
+        encode_row,
+        lambda doc_id, payload: [decode_avi_real(payload)],
+        "doc_id long, fmt string, width long, height long, "
+        "n_frames long, sum_r long, sum_g long, sum_b long",
     )
 
 
@@ -1928,30 +1676,9 @@ def multimodal_decode_video_real(
 def multimodal_decode_mjpeg_real(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import pandas as pd
+    import numpy as np
 
-    d = (
-        t(spark, sf_dir, "documents")
-        .select("doc_id", "n_chars")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    zzfn = _ship_by_value(_jpeg_zigzag)
-    dctfn = _ship_by_value(_jpeg_dct_mat)
-    jpeg_enc = _ship_with(
-        encode_jpeg_baseline, _jpeg_zigzag=zzfn, _jpeg_dct_mat=dctfn
-    )
-    jpeg_dec = _ship_with(
-        decode_jpeg_real,
-        _jpeg_zigzag=zzfn,
-        _jpeg_dct_mat=dctfn,
-        _JPEG_LUT_CACHE={},
-    )
-    enc = _ship_with(encode_avi_mjpeg, encode_jpeg_baseline=jpeg_enc)
-    dec = _ship_with(decode_avi_real, decode_jpeg_real=jpeg_dec)
-
-    def _src_rgb(doc_id: int, n_chars: int, f: int):
-        import numpy as np
-
+    def src_rgb(doc_id: int, n_chars: int, f: int):
         w = n_chars % 20 + 8
         h = doc_id % 10 + 8
         x = np.arange(w)[None, :]
@@ -1961,92 +1688,37 @@ def multimodal_decode_mjpeg_real(
         )
         cb = 128 + (((doc_id + f + (x // 16) * 3 + (y // 16) * 7) % 5) - 2) * 10
         cr = 128 + (((doc_id * 2 + f + (x // 16) * 5 + (y // 16) * 3) % 5) - 2) * 10
-        r = np.clip(np.round(Yt + 1.402 * (cr - 128)), 0, 255)
-        g = np.clip(
-            np.round(
-                Yt - 0.344136286 * (cb - 128) - 0.714136286 * (cr - 128)
-            ),
-            0,
-            255,
-        )
-        b = np.clip(np.round(Yt + 1.772 * (cb - 128)), 0, 255)
-        return np.stack([r, g, b], axis=-1).astype(np.uint8)
+        return _ycbcr_to_rgb8(Yt, cb, cr)
 
-    src = _ship_by_value(_src_rgb)
+    def encode_row(doc_id, n_chars):
+        w, h = n_chars % 20 + 8, doc_id % 10 + 8
+        nf = doc_id % 3 + 2
+        frames = [src_rgb(doc_id, n_chars, f) for f in range(nf)]
+        payload = encode_avi_mjpeg(w, h, nf, lambda f: frames[f])
+        return (payload, *_channel_sums(frames))
 
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            payloads, truths = [], []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                w, h = n_chars % 20 + 8, doc_id % 10 + 8
-                nf = doc_id % 3 + 2
-                frames = [src(doc_id, n_chars, f) for f in range(nf)]
-                payloads.append(enc(w, h, nf, lambda f: frames[f]))
-                truths.append(
-                    [
-                        sum(
-                            int(fr[..., c].astype("int64").sum())
-                            for fr in frames
-                        )
-                        for c in range(3)
-                    ]
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": payloads,
-                    "true_r": [tr[0] for tr in truths],
-                    "true_g": [tr[1] for tr in truths],
-                    "true_b": [tr[2] for tr in truths],
-                }
+    def decode_row(doc_id, payload, tr, tg, tb):
+        m = decode_avi_real(payload)
+        bound = 2 * m["width"] * m["height"] * m["n_frames"]
+        return [
+            dict(
+                m,
+                within_r=abs(m["sum_r"] - tr) <= bound,
+                within_g=abs(m["sum_g"] - tg) <= bound,
+                within_b=abs(m["sum_b"] - tb) <= bound,
             )
+        ]
 
-    encoded = d.mapInPandas(
-        encode,
-        schema=(
-            "doc_id long, payload binary, true_r long, true_g long, "
-            "true_b long"
-        ),
-    )
-
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload, tr, tg, tb in zip(
-                pdf["doc_id"], pdf["payload"], pdf["true_r"],
-                pdf["true_g"], pdf["true_b"],
-            ):
-                m = dec(bytes(payload))
-                bound = 2 * m["width"] * m["height"] * m["n_frames"]
-                rows.append(
-                    (
-                        int(doc_id), m["fmt"], m["width"], m["height"],
-                        m["n_frames"],
-                        abs(m["sum_r"] - int(tr)) <= bound,
-                        abs(m["sum_g"] - int(tg)) <= bound,
-                        abs(m["sum_b"] - int(tb)) <= bound,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "fmt", "width", "height", "n_frames",
-                    "within_r", "within_g", "within_b",
-                ],
-            )
-
-    return encoded.mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, fmt string, width long, height long, "
-            "n_frames long, within_r boolean, within_g boolean, "
-            "within_b boolean"
-        ),
+    return _codec_roundtrip(
+        t(spark, sf_dir, "documents")
+        .select("doc_id", "n_chars")
+        .repartition(spark.sparkContext.defaultParallelism),
+        encode_row,
+        decode_row,
+        "doc_id long, fmt string, width long, height long, "
+        "n_frames long, within_r boolean, within_g boolean, "
+        "within_b boolean",
+        carry=_TRUE_RGB,
     )
 
 
@@ -2103,31 +1775,18 @@ def multimodal_decode_mjpeg_real(
     "image-corpus prep DAG.",
 )
 def pipeline_multimodal_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+    def encode_row(doc_id):
+        cid = doc_id % 50
 
-    d = t(spark, sf_dir, "documents").select("doc_id")
-    enc = _ship_by_value(encode_png_rgb8)
-    dec = _ship_by_value(decode_png_real)
+        def pixel(x, y):
+            v = cid * 31 + x * 7 + y * 13
+            return (v % 256, (v + 101) % 256, (v + 202) % 256)
 
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+        return encode_png_rgb8(cid % 16 + 1, cid % 12 + 1, pixel)
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                cid = int(doc_id) % 50
-                w, h = cid % 16 + 1, cid % 12 + 1
-
-                def pixel(x, y, _c=cid):
-                    v = _c * 31 + x * 7 + y * 13
-                    return (v % 256, (v + 101) % 256, (v + 202) % 256)
-
-                payloads.append(enc(w, h, pixel))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    encoded = d.mapInPandas(encode, schema="doc_id long, payload binary")
+    encoded = _encode_stage(
+        t(spark, sf_dir, "documents").select("doc_id"), encode_row
+    )
 
     # content-addressed dedup FIRST: 16-byte digests shuffle, bytes stay
     # put; min_by picks the deterministic keeper and carries its payload
@@ -2145,7 +1804,7 @@ def pipeline_multimodal_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         import pandas as pd
 
         for pdf in batches:
-            metas = [dec(bytes(b)) for b in pdf["payload"]]
+            metas = [decode_png_real(bytes(b)) for b in pdf["payload"]]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"].values,
@@ -2243,31 +1902,15 @@ def pipeline_multimodal_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle as strings not pixels.",
 )
 def pipeline_video_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+    import numpy as np
 
     d = (
         t(spark, sf_dir, "documents")
         .select("doc_id")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    zzfn = _ship_by_value(_jpeg_zigzag)
-    dctfn = _ship_by_value(_jpeg_dct_mat)
-    jpeg_enc = _ship_with(
-        encode_jpeg_baseline, _jpeg_zigzag=zzfn, _jpeg_dct_mat=dctfn
-    )
-    jpeg_dec = _ship_with(
-        decode_jpeg_real,
-        _jpeg_zigzag=zzfn,
-        _jpeg_dct_mat=dctfn,
-        _JPEG_LUT_CACHE={},
-    )
-    enc_dib = _ship_by_value(encode_avi_dib)
-    enc_mjpeg = _ship_with(encode_avi_mjpeg, encode_jpeg_baseline=jpeg_enc)
-    dec = _ship_with(decode_avi_real, decode_jpeg_real=jpeg_dec)
 
-    def _mjpeg_frame(cid: int, f: int, w: int, h: int):
-        import numpy as np
-
+    def mjpeg_frame(cid: int, f: int, w: int, h: int):
         f2 = f % 2
         x = np.arange(w)[None, :]
         y = np.arange(h)[:, None]
@@ -2276,61 +1919,26 @@ def pipeline_video_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         cb = 128 + (((cid + f2 + (x // 16) * 3) % 5) - 2) * 10
         cr = 128 + (((cid * 2 + f2 + (y // 16) * 3) % 5) - 2) * 10
-        r = np.clip(np.round(Yt + 1.402 * (cr - 128)), 0, 255)
-        g = np.clip(
-            np.round(
-                Yt - 0.344136286 * (cb - 128) - 0.714136286 * (cr - 128)
-            ),
-            0,
-            255,
-        )
-        b = np.clip(np.round(Yt + 1.772 * (cb - 128)), 0, 255)
-        return np.stack([r, g, b], axis=-1).astype(np.uint8)
+        return _ycbcr_to_rgb8(Yt, cb, cr)
 
-    mj_src = _ship_by_value(_mjpeg_frame)
+    def encode_row(doc_id):
+        cid = doc_id % 120
+        if cid % 2 == 0:
+            w, h = cid % 6 + 2, cid % 4 + 2
 
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+            def pixel(f, x, y):
+                v = cid * 31 + (f % 2) * 41 + x * 7 + y * 13
+                return (v % 256, (v + 101) % 256, (v + 202) % 256)
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                cid = int(doc_id) % 120
-                if cid % 2 == 0:
-                    w, h = cid % 6 + 2, cid % 4 + 2
-                    nf = cid % 4 + 1
+            # lossless: the decoder emits exact sums, no truth needed
+            return encode_avi_dib(w, h, cid % 4 + 1, pixel), 0, 0, 0
+        w, h = cid % 10 + 8, cid % 6 + 8
+        nf = cid % 3 + 1
+        frames = [mjpeg_frame(cid, f, w, h) for f in range(nf)]
+        payload = encode_avi_mjpeg(w, h, nf, lambda f: frames[f])
+        return (payload, *_channel_sums(frames))
 
-                    def pixel(f, x, y, _c=cid):
-                        v = _c * 31 + (f % 2) * 41 + x * 7 + y * 13
-                        return (v % 256, (v + 101) % 256, (v + 202) % 256)
-
-                    payload = enc_dib(w, h, nf, pixel)
-                    tr = tg = tb = 0  # lossless: decoder emits exact sums
-                else:
-                    w, h = cid % 10 + 8, cid % 6 + 8
-                    nf = cid % 3 + 1
-                    frames = [mj_src(cid, f, w, h) for f in range(nf)]
-                    payload = enc_mjpeg(w, h, nf, lambda f: frames[f])
-                    tr, tg, tb = (
-                        sum(
-                            int(fr[..., c].astype("int64").sum())
-                            for fr in frames
-                        )
-                        for c in range(3)
-                    )
-                rows.append((int(doc_id), payload, tr, tg, tb))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "payload", "true_r", "true_g", "true_b"],
-            )
-
-    assets = d.mapInPandas(
-        encode,
-        schema=(
-            "doc_id long, payload binary, true_r long, true_g long, "
-            "true_b long"
-        ),
-    )
+    assets = _encode_stage(d, encode_row, carry=_TRUE_RGB)
     assets = assets.withColumn("digest", F.sha2(F.col("payload"), 256))
 
     # dedupe BEFORE decode: one representative payload per digest (the
@@ -2373,7 +1981,7 @@ def pipeline_video_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
                 pdf["true_g"], pdf["true_b"],
             ):
                 b = bytes(payload)
-                m = dec(b)
+                m = decode_avi_real(b)
                 if m["fmt"] == "avi":
                     ok = True
                     sr, sg, sb = m["sum_r"], m["sum_g"], m["sum_b"]
@@ -2432,11 +2040,8 @@ def pipeline_video_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The r6 judge's task 3: PNG (zlib + filters) and AVI already crossed the
 # "genuinely compressed" line, and baseline JFIF — Huffman entropy coding
 # + DCT + 4:2:0 chroma subsampling — is the dominant real-world
-# multimodal format.  Both halves below are self-contained (imports and
-# tables built inside) so they ship to executors BY VALUE (SCALE.md rule
-# 14), numpy-vectorized per 8x8 block.  The NotImplementedError gate now
-# honestly covers only progressive/arithmetic JPEG, GIF, WebP and the
-# compressed audio codecs.
+# multimodal format.  Both halves below are numpy-vectorized per 8x8
+# block.
 
 
 def _jpeg_zigzag() -> list:
@@ -2464,6 +2069,44 @@ def _jpeg_dct_mat():
         for x in range(8):
             A[u, x] = 0.5 * cu * np.cos((2 * x + 1) * u * np.pi / 16)
     return A
+
+
+def _ycbcr_to_rgb8(Yt, cb, cr):
+    """JFIF YCbCr -> RGB8 (rounded, clamped): the JPEG/MJPEG test
+    sources are specified in YCbCr so their chroma is block-structured."""
+    import numpy as np
+
+    r = np.clip(np.round(Yt + 1.402 * (cr - 128)), 0, 255)
+    g = np.clip(
+        np.round(Yt - 0.344136286 * (cb - 128) - 0.714136286 * (cr - 128)),
+        0,
+        255,
+    )
+    b = np.clip(np.round(Yt + 1.772 * (cb - 128)), 0, 255)
+    return np.stack([r, g, b], axis=-1).astype(np.uint8)
+
+
+def _jpeg_src_rgb(doc_id: int, n_chars: int):
+    """The baseline/progressive JPEG queries' closed-form source image:
+    gradient luma plus per-16x16 chroma tints."""
+    import numpy as np
+
+    w = n_chars % 24 + 8
+    h = doc_id % 12 + 8
+    x = np.arange(w)[None, :]
+    y = np.arange(h)[:, None]
+    Yt = ((doc_id * 31 + x * 7 + y * 13) % 200 + 28).astype(np.float64)
+    cb = 128 + (((doc_id + (x // 16) * 3 + (y // 16) * 7) % 5) - 2) * 10
+    cr = 128 + (((doc_id * 2 + (x // 16) * 5 + (y // 16) * 3) % 5) - 2) * 10
+    return _ycbcr_to_rgb8(Yt, cb, cr)
+
+
+def _channel_sums(frames) -> list:
+    """Exact per-channel sums over (h, w, 3) uint8 frames."""
+    return [
+        sum(int(fr[..., c].astype("int64").sum()) for fr in frames)
+        for c in range(3)
+    ]
 
 
 def encode_jpeg_baseline(rgb, restart_interval: int = 0) -> bytes:
@@ -2672,10 +2315,11 @@ def encode_jpeg_baseline(rgb, restart_interval: int = 0) -> bytes:
     )
 
 
-# Canonical-Huffman decode LUTs keyed on the DHT contents; per-process
-# (so per executor Python worker).  A corpus encoded with one table set
-# (e.g. the Annex-K defaults) builds each 64 KiB LUT exactly once.
-_JPEG_LUT_CACHE: dict = {}
+# Canonical-Huffman decode LUTs keyed on the DHT contents.  The memo
+# pickles empty, so a shipped decoder never carries the driver's LUTs;
+# a corpus encoded with one table set (e.g. the Annex-K defaults) builds
+# each 64 KiB LUT once per task.
+_JPEG_LUT_CACHE = _WorkerMemo()
 
 
 def decode_jpeg_real(payload: bytes) -> dict:
@@ -2771,16 +2415,8 @@ def decode_jpeg_real(payload: bytes) -> dict:
             frame = (hh, ww, comps)
         elif m == 0xC2:
             # progressive (SOF2): decoded for real since r8 — hand the
-            # whole stream to the multi-scan decoder (ship-alongside
-            # dispatch, the decode_image_real PNG/GIF convention)
-            try:
-                prog = decode_jpeg_progressive
-            except NameError as exc:
-                raise NotImplementedError(
-                    "progressive dispatch needs decode_jpeg_progressive "
-                    "shipped alongside"
-                ) from exc
-            return prog(payload)
+            # whole stream to the multi-scan decoder
+            return decode_jpeg_progressive(payload)
         elif m in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7,
                    0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise NotImplementedError(
@@ -3087,8 +2723,6 @@ def decode_jpeg_real(payload: bytes) -> dict:
     "compressed audio (MP3/AAC/FLAC).",
 )
 def multimodal_decode_jpeg_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     # The sf0.1 fixture is ONE parquet file -> one scan partition; the
     # codec stage is pure CPU per row, so a single task would serialize
     # the whole corpus through one core (measured: the repo's slowest
@@ -3101,100 +2735,19 @@ def multimodal_decode_jpeg_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "n_chars")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    zzfn = _ship_by_value(_jpeg_zigzag)
-    dctfn = _ship_by_value(_jpeg_dct_mat)
-    enc = _ship_with(
-        encode_jpeg_baseline, _jpeg_zigzag=zzfn, _jpeg_dct_mat=dctfn
-    )
-    dec = _ship_with(
-        decode_jpeg_real,
-        _jpeg_zigzag=zzfn,
-        _jpeg_dct_mat=dctfn,
-        # fresh per-ship Huffman-LUT cache: the decoder mutates it, so a
-        # by-value copy per executor process is exactly the cache scope
-        # we want (the module-level dict is unreachable once rebound)
-        _JPEG_LUT_CACHE={},
-    )
 
-    def _src_rgb(doc_id: int, n_chars: int):
-        import numpy as np
+    def encode_row(doc_id, n_chars):
+        rgb = _jpeg_src_rgb(doc_id, n_chars)
+        return (encode_jpeg_baseline(rgb), *_channel_sums([rgb]))
 
-        w = n_chars % 24 + 8
-        h = doc_id % 12 + 8
-        x = np.arange(w)[None, :]
-        y = np.arange(h)[:, None]
-        Yt = ((doc_id * 31 + x * 7 + y * 13) % 200 + 28).astype(np.float64)
-        cb = 128 + (((doc_id + (x // 16) * 3 + (y // 16) * 7) % 5) - 2) * 10
-        cr = 128 + (((doc_id * 2 + (x // 16) * 5 + (y // 16) * 3) % 5) - 2) * 10
-        r = np.clip(np.round(Yt + 1.402 * (cr - 128)), 0, 255)
-        g = np.clip(
-            np.round(
-                Yt - 0.344136286 * (cb - 128) - 0.714136286 * (cr - 128)
-            ),
-            0,
-            255,
-        )
-        b = np.clip(np.round(Yt + 1.772 * (cb - 128)), 0, 255)
-        return np.stack([r, g, b], axis=-1).astype(np.uint8)
-
-    src = _ship_by_value(_src_rgb)
-
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            payloads, truths = [], []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                rgb = src(int(doc_id), int(n_chars))
-                payloads.append(enc(rgb))
-                truths.append(
-                    [int(rgb[..., c].astype("int64").sum()) for c in range(3)]
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": payloads,
-                    "true_r": [tr[0] for tr in truths],
-                    "true_g": [tr[1] for tr in truths],
-                    "true_b": [tr[2] for tr in truths],
-                }
-            )
-
-    encoded = d.mapInPandas(
-        encode,
-        schema=(
-            "doc_id long, payload binary, true_r long, true_g long, "
-            "true_b long"
-        ),
-    )
-
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            metas = [dec(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "fmt": [m["fmt"] for m in metas],
-                    "width": [m["width"] for m in metas],
-                    "height": [m["height"] for m in metas],
-                    "sum_r": [m["sum_r"] for m in metas],
-                    "sum_g": [m["sum_g"] for m in metas],
-                    "sum_b": [m["sum_b"] for m in metas],
-                    "true_r": pdf["true_r"].values,
-                    "true_g": pdf["true_g"].values,
-                    "true_b": pdf["true_b"].values,
-                }
-            )
-
-    decoded = encoded.mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, fmt string, width long, height long, "
-            "sum_r long, sum_g long, sum_b long, "
-            "true_r long, true_g long, true_b long"
-        ),
+    decoded = _codec_roundtrip(
+        d,
+        encode_row,
+        lambda doc_id, payload, tr, tg, tb: [
+            dict(decode_jpeg_real(payload), true_r=tr, true_g=tg, true_b=tb)
+        ],
+        f"{_RGB_SUMS_SCHEMA}, {_TRUE_RGB}",
+        carry=_TRUE_RGB,
     )
     n_px = F.col("width") * F.col("height")
     return decoded.select(
@@ -3773,74 +3326,29 @@ def decode_gif_anim(payload: bytes) -> dict:
     "query's parallelism lesson).",
 )
 def multimodal_decode_gif_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+    def encode_row(doc_id, n_chars):
+        w, h = n_chars % 20 + 1, doc_id % 14 + 1
+        pal = [
+            (
+                (doc_id * 7 + i * 23) % 256,
+                (doc_id * 11 + i * 29) % 256,
+                (doc_id * 13 + i * 31) % 256,
+            )
+            for i in range(16)
+        ]
 
-    d = (
+        def idx(x, y):
+            return (doc_id + x * 3 + y * 5) % 16
+
+        return encode_gif_indexed(w, h, pal, idx, interlace=(doc_id % 3 == 0))
+
+    return _codec_roundtrip(
         t(spark, sf_dir, "documents")
         .select("doc_id", "n_chars")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    enc = _ship_with(
-        encode_gif_indexed,
-        _gif_lzw_compress=_ship_by_value(_gif_lzw_compress),
-    )
-    dec = _ship_with(
-        decode_gif_real,
-        _gif_lzw_decompress=_ship_by_value(_gif_lzw_decompress),
-    )
-
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                w, h = n_chars % 20 + 1, doc_id % 14 + 1
-                pal = [
-                    (
-                        (doc_id * 7 + i * 23) % 256,
-                        (doc_id * 11 + i * 29) % 256,
-                        (doc_id * 13 + i * 31) % 256,
-                    )
-                    for i in range(16)
-                ]
-
-                def idx(x, y, _d=doc_id):
-                    return (_d + x * 3 + y * 5) % 16
-
-                payloads.append(
-                    enc(w, h, pal, idx, interlace=(doc_id % 3 == 0))
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    encoded = d.mapInPandas(encode, schema="doc_id long, payload binary")
-
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            metas = [dec(bytes(b)) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "fmt": [m["fmt"] for m in metas],
-                    "width": [m["width"] for m in metas],
-                    "height": [m["height"] for m in metas],
-                    "sum_r": [m["sum_r"] for m in metas],
-                    "sum_g": [m["sum_g"] for m in metas],
-                    "sum_b": [m["sum_b"] for m in metas],
-                }
-            )
-
-    return encoded.mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, fmt string, width long, height long, "
-            "sum_r long, sum_g long, sum_b long"
-        ),
+        .repartition(spark.sparkContext.defaultParallelism),
+        encode_row,
+        lambda doc_id, payload: [decode_gif_real(payload)],
+        _RGB_SUMS_SCHEMA,
     )
 
 
@@ -3918,88 +3426,55 @@ def multimodal_decode_gif_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_decode_gif_anim(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import pandas as pd
+    def encode_row(cid, n_chars):
+        w, h = n_chars % 10 + 6, cid % 8 + 6
+        G = [
+            (
+                (cid * 37 + i * 29) % 256,
+                (cid * 37 + i * 29 + 85) % 256,
+                (cid * 37 + i * 29 + 170) % 256,
+            )
+            for i in range(8)
+        ]
+        L = [
+            (
+                (cid * 11 + i * 53) % 256,
+                (cid * 11 + i * 53 + 90) % 256,
+                (cid * 11 + i * 53 + 180) % 256,
+            )
+            for i in range(8)
+        ]
+        frames = [
+            dict(x=0, y=0, w=w, h=h,
+                 index_at=lambda u, v: (u + v) % 7 + 1,
+                 disposal=1, transparent_idx=None, palette=None),
+            dict(x=2, y=2, w=w - 4, h=h - 4,
+                 index_at=lambda u, v: (2 * u + v) % 8,
+                 disposal=2, transparent_idx=3, palette=None),
+            dict(x=1, y=1, w=w // 2, h=h // 2,
+                 index_at=lambda u, v: (u + 3 * v) % 8,
+                 disposal=3, transparent_idx=None, palette=None),
+            dict(x=0, y=0, w=w, h=2,
+                 index_at=lambda u, v: (5 * u + v) % 8,
+                 disposal=1, transparent_idx=6, palette=L),
+        ]
+        return encode_gif_anim(w, h, G, frames, bg_index=0)
 
-    d = (
+    def decode_row(doc_id, payload):
+        m = decode_gif_anim(payload)
+        return [
+            dict(frame_no=k, n_frames=m["n_frames"], sum_r=sr, sum_g=sg, sum_b=sb)
+            for k, (sr, sg, sb) in enumerate(m["frames"])
+        ]
+
+    return _codec_roundtrip(
         t(spark, sf_dir, "documents")
         .select("doc_id", "n_chars")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    lzw_c = _ship_by_value(_gif_lzw_compress)
-    lzw_d = _ship_by_value(_gif_lzw_decompress)
-    enc = _ship_with(encode_gif_anim, _gif_lzw_compress=lzw_c)
-    dec = _ship_with(decode_gif_anim, _gif_lzw_decompress=lzw_d)
-
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                cid, n_chars = int(doc_id), int(n_chars)
-                w, h = n_chars % 10 + 6, cid % 8 + 6
-                G = [
-                    (
-                        (cid * 37 + i * 29) % 256,
-                        (cid * 37 + i * 29 + 85) % 256,
-                        (cid * 37 + i * 29 + 170) % 256,
-                    )
-                    for i in range(8)
-                ]
-                L = [
-                    (
-                        (cid * 11 + i * 53) % 256,
-                        (cid * 11 + i * 53 + 90) % 256,
-                        (cid * 11 + i * 53 + 180) % 256,
-                    )
-                    for i in range(8)
-                ]
-                frames = [
-                    dict(x=0, y=0, w=w, h=h,
-                         index_at=lambda u, v: (u + v) % 7 + 1,
-                         disposal=1, transparent_idx=None, palette=None),
-                    dict(x=2, y=2, w=w - 4, h=h - 4,
-                         index_at=lambda u, v: (2 * u + v) % 8,
-                         disposal=2, transparent_idx=3, palette=None),
-                    dict(x=1, y=1, w=w // 2, h=h // 2,
-                         index_at=lambda u, v: (u + 3 * v) % 8,
-                         disposal=3, transparent_idx=None, palette=None),
-                    dict(x=0, y=0, w=w, h=2,
-                         index_at=lambda u, v: (5 * u + v) % 8,
-                         disposal=1, transparent_idx=6, palette=L),
-                ]
-                payloads.append(enc(w, h, G, frames, bg_index=0))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    encoded = d.mapInPandas(encode, schema="doc_id long, payload binary")
-
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                m = dec(bytes(payload))
-                for k, (sr, sg, sb) in enumerate(m["frames"]):
-                    rows.append(
-                        (int(doc_id), k, m["n_frames"], sr, sg, sb)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_no", "n_frames", "sum_r", "sum_g",
-                    "sum_b",
-                ],
-            )
-
-    return encoded.mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, frame_no long, n_frames long, sum_r long, "
-            "sum_g long, sum_b long"
-        ),
+        .repartition(spark.sparkContext.defaultParallelism),
+        encode_row,
+        decode_row,
+        "doc_id long, frame_no long, n_frames long, sum_r long, "
+        "sum_g long, sum_b long",
     )
 
 
@@ -4489,62 +3964,21 @@ def decode_flac_real(payload: bytes) -> dict:
     "the repartitioned 16-byte/row projection.",
 )
 def multimodal_decode_flac_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+    def encode_row(doc_id, n_chars):
+        nfr = n_chars % 40 + 8
+        chans = [
+            [((doc_id * 37 + i * 11 + c * 5) % 4000) - 2000 for i in range(nfr)]
+            for c in range(doc_id % 2 + 1)
+        ]
+        return encode_flac_subset(8000 + (doc_id % 3) * 8000, chans)
 
-    d = (
+    return _codec_roundtrip(
         t(spark, sf_dir, "documents")
         .select("doc_id", "n_chars")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    enc = _ship_by_value(encode_flac_subset)
-    dec = _ship_by_value(decode_flac_real)
-
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                nch = doc_id % 2 + 1
-                nfr = n_chars % 40 + 8
-                rate = 8000 + (doc_id % 3) * 8000
-                chans = [
-                    [
-                        ((doc_id * 37 + i * 11 + c * 5) % 4000) - 2000
-                        for i in range(nfr)
-                    ]
-                    for c in range(nch)
-                ]
-                payloads.append(enc(rate, chans))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    encoded = d.mapInPandas(encode, schema="doc_id long, payload binary")
-
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            metas = [dec(bytes(b)) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "sample_rate": [m["sample_rate"] for m in metas],
-                    "n_channels": [m["n_channels"] for m in metas],
-                    "n_samples": [m["n_samples"] for m in metas],
-                    "sample_sum": [m["sample_sum"] for m in metas],
-                    "energy": [m["energy"] for m in metas],
-                }
-            )
-
-    return encoded.mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, sample_rate long, n_channels long, "
-            "n_samples long, sample_sum long, energy long"
-        ),
+        .repartition(spark.sparkContext.defaultParallelism),
+        encode_row,
+        lambda doc_id, payload: [decode_flac_real(payload)],
+        _PCM_META_SCHEMA,
     )
 
 
@@ -5156,104 +4590,27 @@ def decode_jpeg_progressive(payload: bytes) -> dict:
 def multimodal_decode_jpeg_progressive(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import pandas as pd
-
     d = (
         t(spark, sf_dir, "documents")
         .select("doc_id", "n_chars")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    zzfn = _ship_by_value(_jpeg_zigzag)
-    dctfn = _ship_by_value(_jpeg_dct_mat)
-    enc = _ship_with(
-        encode_jpeg_progressive, _jpeg_zigzag=zzfn, _jpeg_dct_mat=dctfn
-    )
-    dec = _ship_with(
-        decode_jpeg_progressive,
-        _jpeg_zigzag=zzfn,
-        _jpeg_dct_mat=dctfn,
-        _JPEG_LUT_CACHE={},
-    )
 
-    def _src_rgb(doc_id: int, n_chars: int):
-        import numpy as np
+    def encode_row(doc_id, n_chars):
+        rgb = _jpeg_src_rgb(doc_id, n_chars)
+        return (encode_jpeg_progressive(rgb), *_channel_sums([rgb]))
 
-        w = n_chars % 24 + 8
-        h = doc_id % 12 + 8
-        x = np.arange(w)[None, :]
-        y = np.arange(h)[:, None]
-        Yt = ((doc_id * 31 + x * 7 + y * 13) % 200 + 28).astype(np.float64)
-        cb = 128 + (((doc_id + (x // 16) * 3 + (y // 16) * 7) % 5) - 2) * 10
-        cr = 128 + (((doc_id * 2 + (x // 16) * 5 + (y // 16) * 3) % 5) - 2) * 10
-        r = np.clip(np.round(Yt + 1.402 * (cr - 128)), 0, 255)
-        g = np.clip(
-            np.round(
-                Yt - 0.344136286 * (cb - 128) - 0.714136286 * (cr - 128)
-            ),
-            0,
-            255,
-        )
-        b = np.clip(np.round(Yt + 1.772 * (cb - 128)), 0, 255)
-        return np.stack([r, g, b], axis=-1).astype(np.uint8)
-
-    src = _ship_by_value(_src_rgb)
-
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            payloads, truths = [], []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                rgb = src(int(doc_id), int(n_chars))
-                payloads.append(enc(rgb))
-                truths.append(
-                    [int(rgb[..., c].astype("int64").sum()) for c in range(3)]
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": payloads,
-                    "true_r": [tr[0] for tr in truths],
-                    "true_g": [tr[1] for tr in truths],
-                    "true_b": [tr[2] for tr in truths],
-                }
+    decoded = _codec_roundtrip(
+        d,
+        encode_row,
+        lambda doc_id, payload, tr, tg, tb: [
+            dict(
+                decode_jpeg_progressive(payload),
+                true_r=tr, true_g=tg, true_b=tb,
             )
-
-    encoded = d.mapInPandas(
-        encode,
-        schema=(
-            "doc_id long, payload binary, true_r long, true_g long, "
-            "true_b long"
-        ),
-    )
-
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            metas = [dec(bytes(b)) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "fmt": [m["fmt"] for m in metas],
-                    "width": [m["width"] for m in metas],
-                    "height": [m["height"] for m in metas],
-                    "sum_r": [m["sum_r"] for m in metas],
-                    "sum_g": [m["sum_g"] for m in metas],
-                    "sum_b": [m["sum_b"] for m in metas],
-                    "true_r": pdf["true_r"].values,
-                    "true_g": pdf["true_g"].values,
-                    "true_b": pdf["true_b"].values,
-                }
-            )
-
-    decoded = encoded.mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, fmt string, width long, height long, "
-            "sum_r long, sum_g long, sum_b long, "
-            "true_r long, true_g long, true_b long"
-        ),
+        ],
+        f"{_RGB_SUMS_SCHEMA}, {_TRUE_RGB}",
+        carry=_TRUE_RGB,
     )
     npx = (F.col("width") * F.col("height")).cast("double")
     return decoded.select(
@@ -5923,8 +5280,8 @@ def decode_webp_real(
     / color-indexing transforms (with sub-byte bundle unpacking).
     Returns ``{fmt, width, height, sum_r, sum_g, sum_b}`` — exact
     integer channel sums (lossless codec => exact oracle).  Lossy VP8
-    chunks dispatch to ``decode_vp8_real`` (multimodal/vp8.py, shipped
-    alongside) and return YUV sums — but ONLY when the caller asserts
+    chunks dispatch to ``decode_vp8_real`` (multimodal/vp8.py) and
+    return YUV sums — but ONLY when the caller asserts
     self-encoded provenance via ``placeholder_vp8_ok=True``: with the
     documented placeholder token-probability tables, an externally
     encoded (libwebp) lossy stream would mis-decode silently, so the
@@ -5943,29 +5300,16 @@ def decode_webp_real(
             data = body
             break
         if fourcc == b"VP8 ":
-            # lossy VP8 decodes for real since r10 (multimodal/vp8.py);
-            # same ship-alongside dispatch convention as PNG/JPEG
-            try:
-                vp8 = decode_vp8_real
-            except NameError as exc:
-                raise NotImplementedError(
-                    "lossy WebP dispatch needs decode_vp8_real shipped "
-                    "alongside"
-                ) from exc
-            return vp8(
+            # lossy VP8 decodes for real since r10 (multimodal/vp8.py)
+            return decode_vp8_real(
                 body[:clen], placeholder_tables_ok=placeholder_vp8_ok
             )
         if fourcc == b"VP8X":
             # extended container: static alpha images decode for real
-            # since r10 (decode_webp_extended); ship-alongside
-            try:
-                ext = decode_webp_extended
-            except NameError as exc:
-                raise NotImplementedError(
-                    "VP8X dispatch needs decode_webp_extended shipped "
-                    "alongside"
-                ) from exc
-            return ext(payload, placeholder_vp8_ok=placeholder_vp8_ok)
+            # since r10 (decode_webp_extended)
+            return decode_webp_extended(
+                payload, placeholder_vp8_ok=placeholder_vp8_ok
+            )
         pos += 8 + clen + (clen & 1)
     if data is None:
         raise ValueError("malformed WebP: no VP8L chunk")
@@ -6418,8 +5762,7 @@ def decode_webp_extended(payload: bytes,
     and reading the green plane) — and the VP8 key frame through
     ``decode_vp8_real``.  Canvas dims are cross-checked against the
     frame.  Animated VP8X (ANIM flag / ANMF chunks) raises the honest
-    gate.  When shipped by value, needs decode_vp8_real and
-    decode_webp_real (with its _vp8l_* helpers) alongside."""
+    gate."""
     import struct
 
     if payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
@@ -6438,15 +5781,8 @@ def decode_webp_extended(payload: bytes,
             flags = body[0]
             if flags & 0x02:
                 # animations decode for real since r10 (ANMF with
-                # VP8L frames); same ship-alongside convention
-                try:
-                    anim = decode_webp_anim
-                except NameError as exc:
-                    raise NotImplementedError(
-                        "animated WebP needs decode_webp_anim shipped "
-                        "alongside"
-                    ) from exc
-                return anim(payload)
+                # VP8L frames)
+                return decode_webp_anim(payload)
             cw = 1 + (body[4] | (body[5] << 8) | (body[6] << 16))
             ch = 1 + (body[7] | (body[8] << 8) | (body[9] << 16))
             canvas = (cw, ch)
@@ -6466,15 +5802,7 @@ def decode_webp_extended(payload: bytes,
         raise ValueError("malformed VP8X: missing header chunk")
     if frame is None:
         raise ValueError("malformed VP8X: no VP8 frame")
-    try:
-        vp8 = decode_vp8_real
-        webp = decode_webp_real
-    except NameError as exc:
-        raise NotImplementedError(
-            "VP8X decode needs decode_vp8_real/decode_webp_real "
-            "shipped alongside"
-        ) from exc
-    m = vp8(
+    m = decode_vp8_real(
         frame,
         return_planes=return_planes,
         placeholder_tables_ok=placeholder_vp8_ok,
@@ -6520,7 +5848,7 @@ def decode_webp_extended(payload: bytes,
                 + struct.pack("<I", len(stream))
                 + stream
             )
-            lm = webp(cont, _pixels=True)
+            lm = decode_webp_real(cont, _pixels=True)
             filtered = [(p >> 8) & 0xFF for p in lm["argb"]]
         else:
             raise ValueError(f"malformed ALPH: compression {comp}")
@@ -6578,6 +5906,24 @@ def encode_webp_anim(cw: int, ch: int, bg_rgba: tuple, frames: list,
     return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WEBP" + body
 
 
+_WEBP_ANIM_SCHEMA = (
+    "doc_id long, frame_no long, n_frames long, sum_r long, "
+    "sum_g long, sum_b long, sum_a long"
+)
+
+
+def _webp_anim_frame_rows(doc_id: int, payload: bytes) -> list:
+    """The animated-WebP queries' decode rows: one per composited frame."""
+    m = decode_webp_anim(payload)
+    return [
+        dict(
+            frame_no=k, n_frames=m["n_frames"],
+            sum_r=sr, sum_g=sg, sum_b=sb, sum_a=sa,
+        )
+        for k, (sr, sg, sb, sa) in enumerate(m["frames"])
+    ]
+
+
 def decode_webp_anim(payload: bytes, return_frames: bool = False) -> dict:
     """Real ANIMATED WebP decode (the GIF-anim pattern applied to the
     VP8X container): VP8X + ANIM headers, then per ANMF chunk a real
@@ -6590,8 +5936,7 @@ def decode_webp_anim(payload: bytes, return_frames: bool = False) -> dict:
     with the background color.  Lossy VP8 sub-frames stay gated by
     name (their bound-assert semantics don't fit the exact compositing
     oracle).  Returns one exact (sum_r, sum_g, sum_b, sum_a) per
-    composited canvas state.  When shipped by value, needs
-    decode_webp_real (with its _vp8l_* helpers) alongside."""
+    composited canvas state."""
     import struct
 
     if payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
@@ -6599,14 +5944,6 @@ def decode_webp_anim(payload: bytes, return_frames: bool = False) -> dict:
 
     def u24(b: bytes) -> int:
         return b[0] | (b[1] << 8) | (b[2] << 16)
-
-    try:
-        webp = decode_webp_real
-    except NameError as exc:
-        raise NotImplementedError(
-            "animated WebP decode needs decode_webp_real shipped "
-            "alongside"
-        ) from exc
 
     pos = 12
     canvas_dims = None
@@ -6661,7 +5998,7 @@ def decode_webp_anim(payload: bytes, return_frames: bool = False) -> dict:
                         + struct.pack("<I", len(sdata))
                         + sdata
                     )
-                    m = webp(cont, _pixels=True)
+                    m = decode_webp_real(cont, _pixels=True)
                     if (m["width"], m["height"]) != (fw, fh):
                         raise ValueError(
                             "ANMF dims disagree with the sub-image"
@@ -6818,101 +6155,51 @@ def decode_webp_anim(payload: bytes, return_frames: bool = False) -> dict:
 def multimodal_decode_webp_anim(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import pandas as pd
+    def encode_row(cid, nc):
+        w, h = nc % 8 + 8, cid % 6 + 8
 
-    d = (
+        def G(i):
+            return (
+                (cid * 37 + i * 29) % 256,
+                (cid * 37 + i * 29 + 85) % 256,
+                (cid * 37 + i * 29 + 170) % 256,
+                255,
+            )
+
+        bg = (
+            (cid * 19) % 256, (cid * 19 + 60) % 256,
+            (cid * 19 + 120) % 256, 255,
+        )
+        f0 = dict(
+            x=0, y=0, blend=False, dispose=False,
+            pixels=[[G((x + y) % 7) for x in range(w)] for y in range(h)],
+        )
+        f1 = dict(
+            x=2, y=2, blend=True, dispose=True,
+            pixels=[
+                [
+                    G((2 * u + v) % 7)[:3] + ((255 if (u + v) % 2 else 0),)
+                    for u in range(w - 4)
+                ]
+                for v in range(h - 4)
+            ],
+        )
+        f2 = dict(
+            x=4, y=2, blend=False, dispose=False,
+            pixels=[
+                [G((u + 3 * v) % 7) for u in range(w // 2)]
+                for v in range(h // 2)
+            ],
+        )
+        return encode_webp_anim(w, h, bg, [f0, f1, f2])
+
+    return _codec_roundtrip(
         t(spark, sf_dir, "documents")
         .select("doc_id", "n_chars")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    vp8l_helpers = {
-        "_vp8l_predict": _ship_by_value(_vp8l_predict),
-        "_vp8l_cte_delta": _ship_by_value(_vp8l_cte_delta),
-        "_vp8l_dist_map": _ship_by_value(_vp8l_dist_map),
-    }
-    enc_lossless = _ship_with(encode_webp_lossless, **vp8l_helpers)
-    enc = _ship_with(encode_webp_anim, encode_webp_lossless=enc_lossless)
-    dec_webp = _ship_with(decode_webp_real, **vp8l_helpers)
-    dec = _ship_with(decode_webp_anim, decode_webp_real=dec_webp)
-
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                cid, nc = int(doc_id), int(n_chars)
-                w, h = nc % 8 + 8, cid % 6 + 8
-
-                def G(i, _c=cid):
-                    return (
-                        (_c * 37 + i * 29) % 256,
-                        (_c * 37 + i * 29 + 85) % 256,
-                        (_c * 37 + i * 29 + 170) % 256,
-                        255,
-                    )
-
-                bg = (
-                    (cid * 19) % 256, (cid * 19 + 60) % 256,
-                    (cid * 19 + 120) % 256, 255,
-                )
-                f0 = dict(
-                    x=0, y=0, blend=False, dispose=False,
-                    pixels=[
-                        [G((x + y) % 7) for x in range(w)]
-                        for y in range(h)
-                    ],
-                )
-                f1 = dict(
-                    x=2, y=2, blend=True, dispose=True,
-                    pixels=[
-                        [
-                            G((2 * u + v) % 7)[:3]
-                            + ((255 if (u + v) % 2 else 0),)
-                            for u in range(w - 4)
-                        ]
-                        for v in range(h - 4)
-                    ],
-                )
-                f2 = dict(
-                    x=4, y=2, blend=False, dispose=False,
-                    pixels=[
-                        [G((u + 3 * v) % 7) for u in range(w // 2)]
-                        for v in range(h // 2)
-                    ],
-                )
-                payloads.append(enc(w, h, bg, [f0, f1, f2]))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    encoded = d.mapInPandas(encode, schema="doc_id long, payload binary")
-
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                m = dec(bytes(payload))
-                for k, (sr, sg, sb, sa) in enumerate(m["frames"]):
-                    rows.append(
-                        (int(doc_id), k, m["n_frames"], sr, sg, sb, sa)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_no", "n_frames", "sum_r", "sum_g",
-                    "sum_b", "sum_a",
-                ],
-            )
-
-    return encoded.mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, frame_no long, n_frames long, sum_r long, "
-            "sum_g long, sum_b long, sum_a long"
-        ),
+        .repartition(spark.sparkContext.defaultParallelism),
+        encode_row,
+        _webp_anim_frame_rows,
+        _WEBP_ANIM_SCHEMA,
     )
 
 
@@ -7006,101 +6293,51 @@ def multimodal_decode_webp_anim(
 def multimodal_decode_webp_anim_fralpha(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import pandas as pd
+    def encode_row(cid, nc):
+        w, h = nc % 8 + 8, cid % 6 + 8
+        bg = (
+            (cid * 19) % 256, (cid * 19 + 60) % 256,
+            (cid * 19 + 120) % 256, (cid * 29 + 17) % 256,
+        )
+        f0 = dict(
+            x=0, y=0, blend=False, dispose=False,
+            pixels=[
+                [
+                    (
+                        (cid * 37 + ((x + 2 * y) % 7) * 29) % 256,
+                        (cid * 37 + ((x + 2 * y) % 7) * 29 + 85) % 256,
+                        (cid * 37 + ((x + 2 * y) % 7) * 29 + 170) % 256,
+                        255,
+                    )
+                    for x in range(w)
+                ]
+                for y in range(4)
+            ],
+        )
+        f1 = dict(
+            x=2, y=2, blend=True, dispose=False,
+            pixels=[
+                [
+                    (
+                        (cid * 41 + ((u + 2 * v) % 7) * 31) % 256,
+                        (cid * 41 + ((u + 2 * v) % 7) * 31 + 90) % 256,
+                        (cid * 41 + ((u + 2 * v) % 7) * 31 + 180) % 256,
+                        (cid * 13 + u * 7 + v * 11) % 256,
+                    )
+                    for u in range(w - 4)
+                ]
+                for v in range(h - 4)
+            ],
+        )
+        return encode_webp_anim(w, h, bg, [f0, f1])
 
-    d = (
+    return _codec_roundtrip(
         t(spark, sf_dir, "documents")
         .select("doc_id", "n_chars")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    vp8l_helpers = {
-        "_vp8l_predict": _ship_by_value(_vp8l_predict),
-        "_vp8l_cte_delta": _ship_by_value(_vp8l_cte_delta),
-        "_vp8l_dist_map": _ship_by_value(_vp8l_dist_map),
-    }
-    enc_lossless = _ship_with(encode_webp_lossless, **vp8l_helpers)
-    enc = _ship_with(encode_webp_anim, encode_webp_lossless=enc_lossless)
-    dec_webp = _ship_with(decode_webp_real, **vp8l_helpers)
-    dec = _ship_with(decode_webp_anim, decode_webp_real=dec_webp)
-
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                cid, nc = int(doc_id), int(n_chars)
-                w, h = nc % 8 + 8, cid % 6 + 8
-                bg = (
-                    (cid * 19) % 256, (cid * 19 + 60) % 256,
-                    (cid * 19 + 120) % 256, (cid * 29 + 17) % 256,
-                )
-                f0 = dict(
-                    x=0, y=0, blend=False, dispose=False,
-                    pixels=[
-                        [
-                            (
-                                (cid * 37 + ((x + 2 * y) % 7) * 29) % 256,
-                                (cid * 37 + ((x + 2 * y) % 7) * 29 + 85)
-                                % 256,
-                                (cid * 37 + ((x + 2 * y) % 7) * 29 + 170)
-                                % 256,
-                                255,
-                            )
-                            for x in range(w)
-                        ]
-                        for y in range(4)
-                    ],
-                )
-                f1 = dict(
-                    x=2, y=2, blend=True, dispose=False,
-                    pixels=[
-                        [
-                            (
-                                (cid * 41 + ((u + 2 * v) % 7) * 31) % 256,
-                                (cid * 41 + ((u + 2 * v) % 7) * 31 + 90)
-                                % 256,
-                                (cid * 41 + ((u + 2 * v) % 7) * 31 + 180)
-                                % 256,
-                                (cid * 13 + u * 7 + v * 11) % 256,
-                            )
-                            for u in range(w - 4)
-                        ]
-                        for v in range(h - 4)
-                    ],
-                )
-                payloads.append(enc(w, h, bg, [f0, f1]))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    encoded = d.mapInPandas(encode, schema="doc_id long, payload binary")
-
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                m = dec(bytes(payload))
-                for k, (sr, sg, sb, sa) in enumerate(m["frames"]):
-                    rows.append(
-                        (int(doc_id), k, m["n_frames"], sr, sg, sb, sa)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_no", "n_frames", "sum_r", "sum_g",
-                    "sum_b", "sum_a",
-                ],
-            )
-
-    return encoded.mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, frame_no long, n_frames long, sum_r long, "
-            "sum_g long, sum_b long, sum_a long"
-        ),
+        .repartition(spark.sparkContext.defaultParallelism),
+        encode_row,
+        _webp_anim_frame_rows,
+        _WEBP_ANIM_SCHEMA,
     )
 
 
@@ -7156,99 +6393,48 @@ def multimodal_decode_webp_anim_fralpha(
 def multimodal_decode_webp_real(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import pandas as pd
+    modes = [
+        {},
+        {"subtract_green": True, "predictor": "mixed"},
+        {"palette": True},
+        {"cache_bits": 4, "lz77": True},
+        {
+            "subtract_green": True,
+            "cross_color": (17, 203, 87),
+            "predictor": "mixed",
+            "cache_bits": 3,
+            "lz77": True,
+            "meta_split": True,
+        },
+    ]
 
-    d = (
+    def encode_row(doc_id, n_chars):
+        w, h = n_chars % 13 + 4, doc_id % 11 + 4
+        rows = [
+            [
+                (
+                    (doc_id * 3 + (x % 5) * 7 + (y % 3) * 11) % 256,
+                    (doc_id * 5 + (x % 5) * 13 + (y % 3) * 17) % 256,
+                    (doc_id * 7 + (x % 5) * 19 + (y % 3) * 23) % 256,
+                )
+                for x in range(w)
+            ]
+            for y in range(h)
+        ]
+        return encode_webp_lossless(rows, **modes[doc_id % 5])
+
+    return _codec_roundtrip(
         t(spark, sf_dir, "documents")
         .select("doc_id", "n_chars")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    pred = _ship_by_value(_vp8l_predict)
-    cte = _ship_by_value(_vp8l_cte_delta)
-    dmap = _ship_by_value(_vp8l_dist_map)
-    enc = _ship_with(
-        encode_webp_lossless,
-        _vp8l_predict=pred,
-        _vp8l_cte_delta=cte,
-        _vp8l_dist_map=dmap,
-    )
-    dec = _ship_with(
-        decode_webp_real,
-        _vp8l_predict=pred,
-        _vp8l_cte_delta=cte,
-        _vp8l_dist_map=dmap,
-    )
-
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        modes = [
-            {},
-            {"subtract_green": True, "predictor": "mixed"},
-            {"palette": True},
-            {"cache_bits": 4, "lz77": True},
-            {
-                "subtract_green": True,
-                "cross_color": (17, 203, 87),
-                "predictor": "mixed",
-                "cache_bits": 3,
-                "lz77": True,
-                "meta_split": True,
-            },
-        ]
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                w, h = n_chars % 13 + 4, doc_id % 11 + 4
-                rows = [
-                    [
-                        (
-                            (doc_id * 3 + (x % 5) * 7 + (y % 3) * 11) % 256,
-                            (doc_id * 5 + (x % 5) * 13 + (y % 3) * 17) % 256,
-                            (doc_id * 7 + (x % 5) * 19 + (y % 3) * 23) % 256,
-                        )
-                        for x in range(w)
-                    ]
-                    for y in range(h)
-                ]
-                payloads.append(enc(rows, **modes[doc_id % 5]))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    encoded = d.mapInPandas(encode, schema="doc_id long, payload binary")
-
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            metas = [dec(bytes(b)) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "fmt": [m["fmt"] for m in metas],
-                    "width": [m["width"] for m in metas],
-                    "height": [m["height"] for m in metas],
-                    "sum_r": [m["sum_r"] for m in metas],
-                    "sum_g": [m["sum_g"] for m in metas],
-                    "sum_b": [m["sum_b"] for m in metas],
-                }
-            )
-
-    return encoded.mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, fmt string, width long, height long, "
-            "sum_r long, sum_g long, sum_b long"
-        ),
+        .repartition(spark.sparkContext.defaultParallelism),
+        encode_row,
+        lambda doc_id, payload: [decode_webp_real(payload)],
+        _RGB_SUMS_SCHEMA,
     )
 
 
-# Late import: vorbis.py/vp8.py import _ship_with from this module, so
-# the audio/lossy-WebP dispatch symbols bind after both modules exist
-# (no cycle at import time — registry loads binary_ops first, which
-# triggers this).
+# The audio and WebP dispatchers above call into vorbis.py and vp8.py.
+# Imported last so this module's queries register first.
 from mincemeatpy_spark.multimodal.vorbis import decode_vorbis_real  # noqa: E402,F401
 from mincemeatpy_spark.multimodal.vp8 import (  # noqa: E402,F401
     decode_vp8_real,

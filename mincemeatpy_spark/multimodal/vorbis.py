@@ -61,16 +61,19 @@ codec surface; this is north-star multimodal-pipeline work.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 
+from mincemeatpy_spark.multimodal.roundtrip import (
+    _codec_roundtrip,
+    _encode_stage,
+    _WorkerMemo,
+)
 from mincemeatpy_spark.registry import register
 from mincemeatpy_spark.tables import t
 
-# NOTE: _ship_with/_ship_by_value are imported lazily inside the query
-# builder — binary_ops imports THIS module at its bottom for the audio
-# dispatch, so a top-level import here would be circular.
+# NOTE: binary_ops names are imported inside the query builders —
+# binary_ops imports THIS module at its bottom for the audio dispatch,
+# so a top-level import here would be circular.
 
 
 def _vorbis_ilog(x: int) -> int:
@@ -82,22 +85,23 @@ def _vorbis_ilog(x: int) -> int:
     return n
 
 
-def _ogg_crc(data: bytes, _tab: list = []) -> int:
+def _ogg_crc(data: bytes, _memo: dict = _WorkerMemo()) -> int:  # noqa: B008
     """Ogg page CRC-32: poly 0x04C11DB7, UNREFLECTED, init 0, xorout
-    0 — deliberately not zlib's reflected CRC.  Table-driven; the
-    mutable-default cache rebuilds once per (shipped-by-value)
-    function copy."""
-    if not _tab:
+    0 — deliberately not zlib's reflected CRC.  Table-driven; the table
+    is built on first use (the memo default pickles empty)."""
+    tab = _memo.get("tab")
+    if tab is None:
+        tab = _memo["tab"] = []
         for i in range(256):
             crc = i << 24
             for _ in range(8):
                 crc = (
                     (crc << 1) ^ 0x04C11DB7 if crc & 0x80000000 else crc << 1
                 ) & 0xFFFFFFFF
-            _tab.append(crc)
+            tab.append(crc)
     crc = 0
     for b in data:
-        crc = ((crc << 8) & 0xFFFFFFFF) ^ _tab[((crc >> 24) ^ b) & 0xFF]
+        crc = ((crc << 8) & 0xFFFFFFFF) ^ tab[((crc >> 24) ^ b) & 0xFF]
     return crc
 
 
@@ -174,7 +178,7 @@ def _ogg_unpages(payload: bytes) -> tuple:
     return packets, granule
 
 
-def _vorbis_codewords(lengths: list, _cache: dict = {}) -> list:  # noqa: B006
+def _vorbis_codewords(lengths: list, _cache: dict = _WorkerMemo()) -> list:  # noqa: B008
     """The Vorbis I codeword assignment: entries take the lowest
     available leaf at their depth IN ENTRY ORDER (spec 3.2.1 decision
     tree; libvorbis' marker algorithm).  NOT deflate-canonical — the
@@ -822,7 +826,7 @@ def _vorbis_floor_curve(
     range_: int,
     multiplier: int,
     half: int,
-    _cache: dict = {},  # noqa: B006 - per-copy precompute cache
+    _cache: dict = _WorkerMemo(),  # noqa: B008 - precompute memo
 ):
     """Floor-1 curve synthesis EXACTLY as the decoder performs it
     (spec 7.2.3-7.2.4): prediction + room folding to final Y values,
@@ -907,7 +911,7 @@ def _vorbis_floor_curve(
     return tab[q]
 
 
-def _vorbis_read_codebook(r, _lut_cache: dict = {}) -> dict:  # noqa: B006
+def _vorbis_read_codebook(r, _lut_cache: dict = _WorkerMemo()) -> dict:  # noqa: B008
     """Parse one codebook from a bit reader (sync, dims, entries,
     ordered/unordered/sparse length lists, lookup type 0/1 with the
     packed-float VQ lattice) and build its decode tables (8-bit LUT +
@@ -1026,7 +1030,9 @@ def _vorbis_read_codebook(r, _lut_cache: dict = {}) -> dict:  # noqa: B006
     return {"dims": dims, "lut": lut, "long": long_tab, "vq": vq}
 
 
-_VORBIS_MDCT_CACHE: dict = {}
+# (window, MDCT matrix) per block size; pickles empty, so a shipped
+# codec never carries the driver's matrices.
+_VORBIS_MDCT_CACHE = _WorkerMemo()
 
 
 def decode_vorbis_real(payload: bytes, _samples: bool = False) -> dict:
@@ -1433,114 +1439,36 @@ def _residue_partitions(r, rs, books, v) -> None:
 def multimodal_decode_vorbis_real(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import pandas as pd
+    import numpy as np
 
-    from mincemeatpy_spark.multimodal.binary_ops import (
-        _ship_by_value,
-        _ship_with,
-    )
+    def encode_row(doc_id, n_chars):
+        chans, rate = _vorbis_test_signal(doc_id, n_chars)
+        return encode_vorbis_subset(rate, chans)
 
-    d = (
+    def decode_row(doc_id, payload):
+        m = decode_vorbis_real(payload, _samples=True)
+        chans, _rate = _vorbis_test_signal(doc_id, 0, n_samples=m["n_samples"])
+        # vectorized bound check (r10): same max-abs semantics as the
+        # per-sample loop this replaced
+        orig = np.asarray(chans, dtype=np.int64)
+        amp = max(1, int(np.abs(orig).max()) if orig.size else 0)
+        bound = 0.5 * amp + 64
+        got = np.asarray(m["samples"], dtype=np.int64)
+        err = (
+            int(np.abs(got - orig).max())
+            if orig.size and got.shape == orig.shape
+            else (0 if not orig.size else amp * 10)
+        )
+        return [dict(m, within_err=bool(err <= bound))]
+
+    return _codec_roundtrip(
         t(spark, sf_dir, "documents")
         .select("doc_id", "n_chars")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    helpers = {
-        "_vorbis_ilog": _ship_by_value(_vorbis_ilog),
-        "_ogg_crc": _ship_by_value(_ogg_crc),
-        "_ogg_pages": _ship_with(_ogg_pages, _ogg_crc=_ship_by_value(_ogg_crc)),
-        "_ogg_unpages": _ship_with(_ogg_unpages, _ogg_crc=_ship_by_value(_ogg_crc)),
-        "_vorbis_codewords": _ship_by_value(_vorbis_codewords),
-        "_vorbis_float32_pack": _ship_by_value(_vorbis_float32_pack),
-        "_vorbis_float32_unpack": _ship_by_value(_vorbis_float32_unpack),
-        "_vorbis_inverse_db": _ship_by_value(_vorbis_inverse_db),
-        "_vorbis_render_line": _ship_by_value(_vorbis_render_line),
-        "_vorbis_render_point": _ship_by_value(_vorbis_render_point),
-        "_vorbis_window": _ship_by_value(_vorbis_window),
-        "_vorbis_mdct_mat": _ship_by_value(_vorbis_mdct_mat),
-        "_vorbis_neighbors": _ship_by_value(_vorbis_neighbors),
-        "_VORBIS_MDCT_CACHE": {},
-    }
-    helpers["_vorbis_floor_curve"] = _ship_with(
-        _vorbis_floor_curve,
-        _vorbis_render_point=helpers["_vorbis_render_point"],
-        _vorbis_render_line=helpers["_vorbis_render_line"],
-        _vorbis_inverse_db=helpers["_vorbis_inverse_db"],
-        _vorbis_neighbors=helpers["_vorbis_neighbors"],
-    )
-    helpers["_vorbis_read_codebook"] = _ship_with(
-        _vorbis_read_codebook,
-        _vorbis_float32_unpack=helpers["_vorbis_float32_unpack"],
-        _vorbis_codewords=helpers["_vorbis_codewords"],
-        _vorbis_ilog=helpers["_vorbis_ilog"],
-    )
-    helpers["_vorbis_enc_config"] = _ship_with(
-        _vorbis_enc_config, _vorbis_ilog=helpers["_vorbis_ilog"]
-    )
-    helpers["_residue_partitions"] = _ship_by_value(_residue_partitions)
-    enc = _ship_with(encode_vorbis_subset, **helpers)
-    dec = _ship_with(decode_vorbis_real, **helpers)
-    src = _ship_by_value(_vorbis_test_signal)
-
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                chans, rate = src(doc_id, n_chars)
-                payloads.append(enc(rate, chans))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    encoded = d.mapInPandas(encode, schema="doc_id long, payload binary")
-
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                m = dec(bytes(payload), _samples=True)
-                chans, _rate = src(int(doc_id), 0, n_samples=m["n_samples"])
-                # vectorized bound check (r10): same max-abs semantics
-                # as the per-sample loop this replaced
-                orig = np.asarray(chans, dtype=np.int64)
-                amp = max(1, int(np.abs(orig).max()) if orig.size else 0)
-                bound = 0.5 * amp + 64
-                got = np.asarray(m["samples"], dtype=np.int64)
-                err = (
-                    int(np.abs(got - orig).max())
-                    if orig.size and got.shape == orig.shape
-                    else (0 if not orig.size else amp * 10)
-                )
-                rows.append(
-                    (
-                        int(doc_id),
-                        m["fmt"],
-                        m["sample_rate"],
-                        m["n_channels"],
-                        m["n_samples"],
-                        bool(err <= bound),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "fmt", "sample_rate", "n_channels",
-                    "n_samples", "within_err",
-                ],
-            )
-
-    return encoded.mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, fmt string, sample_rate long, "
-            "n_channels long, n_samples long, within_err boolean"
-        ),
+        .repartition(spark.sparkContext.defaultParallelism),
+        encode_row,
+        decode_row,
+        "doc_id long, fmt string, sample_rate long, "
+        "n_channels long, n_samples long, within_err boolean",
     )
 
 
@@ -1620,12 +1548,11 @@ def _vorbis_test_signal(doc_id: int, n_chars: int, n_samples: int = 0):
     "decode is embarrassingly parallel.",
 )
 def pipeline_audio_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+    import struct
+
     from pyspark.sql import functions as F
 
     from mincemeatpy_spark.multimodal.binary_ops import (
-        _ship_by_value,
-        _ship_with,
         decode_flac_real,
         encode_flac_subset,
     )
@@ -1636,83 +1563,29 @@ def pipeline_audio_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    helpers = {
-        "_vorbis_ilog": _ship_by_value(_vorbis_ilog),
-        "_ogg_crc": _ship_by_value(_ogg_crc),
-        "_vorbis_codewords": _ship_by_value(_vorbis_codewords),
-        "_vorbis_float32_pack": _ship_by_value(_vorbis_float32_pack),
-        "_vorbis_float32_unpack": _ship_by_value(_vorbis_float32_unpack),
-        "_vorbis_inverse_db": _ship_by_value(_vorbis_inverse_db),
-        "_vorbis_render_line": _ship_by_value(_vorbis_render_line),
-        "_vorbis_render_point": _ship_by_value(_vorbis_render_point),
-        "_vorbis_window": _ship_by_value(_vorbis_window),
-        "_vorbis_mdct_mat": _ship_by_value(_vorbis_mdct_mat),
-        "_vorbis_neighbors": _ship_by_value(_vorbis_neighbors),
-        "_VORBIS_MDCT_CACHE": {},
-    }
-    helpers["_ogg_pages"] = _ship_with(_ogg_pages, _ogg_crc=helpers["_ogg_crc"])
-    helpers["_ogg_unpages"] = _ship_with(_ogg_unpages, _ogg_crc=helpers["_ogg_crc"])
-    helpers["_vorbis_floor_curve"] = _ship_with(
-        _vorbis_floor_curve,
-        _vorbis_render_point=helpers["_vorbis_render_point"],
-        _vorbis_render_line=helpers["_vorbis_render_line"],
-        _vorbis_inverse_db=helpers["_vorbis_inverse_db"],
-        _vorbis_neighbors=helpers["_vorbis_neighbors"],
-    )
-    helpers["_vorbis_read_codebook"] = _ship_with(
-        _vorbis_read_codebook,
-        _vorbis_float32_unpack=helpers["_vorbis_float32_unpack"],
-        _vorbis_codewords=helpers["_vorbis_codewords"],
-        _vorbis_ilog=helpers["_vorbis_ilog"],
-    )
-    helpers["_vorbis_enc_config"] = _ship_with(
-        _vorbis_enc_config, _vorbis_ilog=helpers["_vorbis_ilog"]
-    )
-    helpers["_residue_partitions"] = _ship_by_value(_residue_partitions)
-    enc_vorbis = _ship_with(encode_vorbis_subset, **helpers)
-    enc_flac = _ship_by_value(encode_flac_subset)
-    dec_flac = _ship_by_value(decode_flac_real)
-    dec_vorbis = _ship_with(decode_vorbis_real, **helpers)
-
-    def _signal(cid: int):
+    def signal(cid: int):
         L = cid % 300 + 60
         return [((cid * 31 + i * i * 7) % 4001) - 2000 for i in range(L)]
 
-    sig = _ship_by_value(_signal)
+    def wav(rate, samples):
+        data = struct.pack(f"<{len(samples)}h", *samples)
+        fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
+        chunks = (
+            b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", len(data)) + data
+        )
+        return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
 
-    def encode(batches) -> "pd.DataFrame":
-        import struct
+    def encode_row(doc_id):
+        cid = doc_id % 200
+        s = signal(cid)
+        rate = 8000 + (cid % 3) * 4000
+        if cid % 3 == 0:
+            return wav(rate, s)
+        enc = encode_flac_subset if cid % 3 == 1 else encode_vorbis_subset
+        return enc(rate, [s])
 
-        import pandas as pd
-
-        def wav(rate, samples):
-            data = struct.pack(f"<{len(samples)}h", *samples)
-            fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
-            chunks = (
-                b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                + b"data" + struct.pack("<I", len(data)) + data
-            )
-            return (
-                b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-            )
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                cid = int(doc_id) % 200
-                s = sig(cid)
-                rate = 8000 + (cid % 3) * 4000
-                k = cid % 3
-                if k == 0:
-                    payload = wav(rate, s)
-                elif k == 1:
-                    payload = enc_flac(rate, [s])
-                else:
-                    payload = enc_vorbis(rate, [s])
-                rows.append((int(doc_id), payload))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    assets = d.mapInPandas(encode, schema="doc_id long, payload binary")
+    assets = _encode_stage(d, encode_row)
     assets = assets.withColumn("digest", F.sha2(F.col("payload"), 256))
 
     # dedupe BEFORE decode: one representative payload per digest
@@ -1746,11 +1619,11 @@ def pipeline_audio_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
                             ssum, n = sum(vals), len(vals)
                         pos += 8 + size + (size & 1)
                 elif b[:4] == b"fLaC":
-                    m = dec_flac(b)
+                    m = decode_flac_real(b)
                     ssum, n = m["sample_sum"], m["n_samples"]
                     fmt = "flac"
                 else:
-                    m = dec_vorbis(b)
+                    m = decode_vorbis_real(b)
                     n = m["n_samples"]
                     ssum = 0  # lossy: excluded from the exact sum
                     fmt = "vorbis"

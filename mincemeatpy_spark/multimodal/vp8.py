@@ -63,15 +63,14 @@ codec surface; this is north-star multimodal-pipeline work.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 
+from mincemeatpy_spark.multimodal.roundtrip import _codec_roundtrip
 from mincemeatpy_spark.registry import register
 from mincemeatpy_spark.tables import t
 
-# NOTE: _ship_with/_ship_by_value are imported lazily inside the query
-# builder (binary_ops circular-import convention, vorbis.py precedent).
+# NOTE: binary_ops names are imported inside the query builders
+# (binary_ops imports THIS module at its bottom, vorbis.py precedent).
 
 # mode ids (RFC 6386 intra modes; B_PRED gated)
 _DC, _V, _H, _TM, _B = 0, 1, 2, 3, 4
@@ -1198,73 +1197,21 @@ def decode_vp8_real(
     return out
 
 
-def _vp8_ship_helpers() -> dict:
-    """The full by-value ship graph for the VP8 codec pair (the query
-    builders' shared plumbing — see binary_ops._ship_with)."""
-    from mincemeatpy_spark.multimodal.binary_ops import (
-        _ship_by_value,
-        _ship_with,
-    )
-
-    helpers = {
-        "_DC": _DC, "_V": _V, "_H": _H, "_TM": _TM, "_B": _B,
-        "_vp8_tables": _ship_with(
-            _vp8_tables, _DC=_DC, _V=_V, _H=_H, _TM=_TM, _B=_B
-        ),
-        "_vp8_bd_init": _ship_by_value(_vp8_bd_init),
-        "_vp8_bd_bool": _ship_by_value(_vp8_bd_bool),
-        "_vp8_idct4": _ship_by_value(_vp8_idct4),
-        "_vp8_iwht4": _ship_by_value(_vp8_iwht4),
-        "_vp8_quant_factors": _ship_by_value(_vp8_quant_factors),
-        "_vp8_tree_paths": _ship_by_value(_vp8_tree_paths),
-        "_vp8_be_init": _ship_by_value(_vp8_be_init),
-        "_vp8_be_bool": _ship_by_value(_vp8_be_bool),
-        "_vp8_be_finish": _ship_by_value(_vp8_be_finish),
+def _vp8_within(m: dict, qi: int, ty: int, tu: int, tv: int) -> dict:
+    """The lossy-VP8 bound check: decoded plane sums within (3 + qi/3)
+    per pixel of the source sums."""
+    per_px = 3 + qi // 3
+    ybound = per_px * m["width"] * m["height"]
+    cbound = per_px * ((m["width"] + 1) // 2) * ((m["height"] + 1) // 2)
+    return {
+        "within_y": abs(m["sum_y"] - ty) <= ybound,
+        "within_u": abs(m["sum_u"] - tu) <= cbound,
+        "within_v": abs(m["sum_v"] - tv) <= cbound,
     }
-    helpers["_vp8_bd_literal"] = _ship_with(
-        _vp8_bd_literal, _vp8_bd_bool=helpers["_vp8_bd_bool"]
-    )
-    helpers["_vp8_bd_signed"] = _ship_with(
-        _vp8_bd_signed,
-        _vp8_bd_literal=helpers["_vp8_bd_literal"],
-        _vp8_bd_bool=helpers["_vp8_bd_bool"],
-    )
-    helpers["_vp8_bd_tree"] = _ship_with(
-        _vp8_bd_tree, _vp8_bd_bool=helpers["_vp8_bd_bool"]
-    )
-    helpers["_vp8_be_literal"] = _ship_with(
-        _vp8_be_literal, _vp8_be_bool=helpers["_vp8_be_bool"]
-    )
-    helpers["_vp8_be_signed"] = _ship_with(
-        _vp8_be_signed,
-        _vp8_be_literal=helpers["_vp8_be_literal"],
-        _vp8_be_bool=helpers["_vp8_be_bool"],
-    )
-    helpers["_vp8_be_tree"] = _ship_with(
-        _vp8_be_tree, _vp8_be_bool=helpers["_vp8_be_bool"]
-    )
-    helpers["_vp8_predict_block"] = _ship_with(
-        _vp8_predict_block, _DC=_DC, _V=_V, _H=_H, _TM=_TM,
-    )
-    helpers["_vp8_decode_coeffs"] = _ship_with(
-        _vp8_decode_coeffs,
-        _vp8_bd_tree=helpers["_vp8_bd_tree"],
-        _vp8_bd_bool=helpers["_vp8_bd_bool"],
-    )
-    helpers["_vp8_encode_coeffs"] = _ship_with(
-        _vp8_encode_coeffs,
-        _vp8_be_tree=helpers["_vp8_be_tree"],
-        _vp8_be_bool=helpers["_vp8_be_bool"],
-    )
-    helpers["_vp8_simple_filter"] = _ship_by_value(_vp8_simple_filter)
-    helpers["_vp8_idct4_batch"] = _ship_by_value(_vp8_idct4_batch)
-    helpers["_vp8_dequant_mb"] = _ship_with(
-        _vp8_dequant_mb,
-        _vp8_iwht4=helpers["_vp8_iwht4"],
-        _vp8_idct4_batch=helpers["_vp8_idct4_batch"],
-    )
-    helpers["_vp8_add_residual"] = _ship_by_value(_vp8_add_residual)
-    return helpers
+
+
+def _vp8_plane_sums(*planes) -> list:
+    return [int(p.astype("int64").sum()) for p in planes]
 
 
 @register(
@@ -1310,31 +1257,11 @@ def _vp8_ship_helpers() -> dict:
 def multimodal_decode_vp8_real(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import pandas as pd
+    import numpy as np
 
-    from mincemeatpy_spark.multimodal.binary_ops import (
-        _ship_by_value,
-        _ship_with,
-        decode_webp_real,
-    )
+    from mincemeatpy_spark.multimodal.binary_ops import decode_webp_real
 
-    d = (
-        t(spark, sf_dir, "documents")
-        .select("doc_id", "n_chars")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    helpers = _vp8_ship_helpers()
-    enc_frame = _ship_with(encode_vp8_frame, **helpers)
-    enc = _ship_with(encode_webp_lossy, encode_vp8_frame=enc_frame)
-    dec_vp8 = _ship_with(decode_vp8_real, **helpers)
-    # container dispatch: VP8L helpers are never referenced on a pure
-    # 'VP8 '-chunk corpus, so only the lossy decoder travels along
-    dec = _ship_with(decode_webp_real, decode_vp8_real=dec_vp8)
-
-    def _src_planes(doc_id: int, n_chars: int):
-        import numpy as np
-
+    def src_planes(doc_id: int, n_chars: int):
         w = n_chars % 17 + 8
         h = doc_id % 13 + 8
         cw, ch = (w + 1) // 2, (h + 1) // 2
@@ -1353,89 +1280,33 @@ def multimodal_decode_vp8_real(
         V = (((doc_id * 2 + cx * 3 + cy * 5) % 64) + 96).astype(np.uint8)
         return Y, U, V
 
-    src = _ship_by_value(_src_planes)
+    def encode_row(doc_id, n_chars):
+        Y, U, V = src_planes(doc_id, n_chars)
+        qi = doc_id % 24
+        payload = encode_webp_lossy(
+            Y, U, V,
+            qi=qi,
+            filter_level=(doc_id % 3) * 2,
+            sharpness=(doc_id // 3) % 4,
+            mode_seed=doc_id,
+        )
+        return (payload, qi, *_vp8_plane_sums(Y, U, V))
 
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def decode_row(doc_id, payload, qi, ty, tu, tv):
+        # provenance-asserted: the corpus is self-encoded in the stage
+        # above, so the placeholder-table gate opts in
+        m = decode_webp_real(payload, placeholder_vp8_ok=True)
+        return [dict(m, **_vp8_within(m, qi, ty, tu, tv))]
 
-        for pdf in batches:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                Y, U, V = src(doc_id, n_chars)
-                qi = doc_id % 24
-                payload = enc(
-                    Y, U, V,
-                    qi=qi,
-                    filter_level=(doc_id % 3) * 2,
-                    sharpness=(doc_id // 3) % 4,
-                    mode_seed=doc_id,
-                )
-                rows.append(
-                    (
-                        doc_id, payload, qi,
-                        int(Y.astype("int64").sum()),
-                        int(U.astype("int64").sum()),
-                        int(V.astype("int64").sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "payload", "qi", "true_y", "true_u",
-                    "true_v",
-                ],
-            )
-
-    encoded = d.mapInPandas(
-        encode,
-        schema=(
-            "doc_id long, payload binary, qi long, true_y long, "
-            "true_u long, true_v long"
-        ),
-    )
-
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload, qi, ty, tu, tv in zip(
-                pdf["doc_id"], pdf["payload"], pdf["qi"],
-                pdf["true_y"], pdf["true_u"], pdf["true_v"],
-            ):
-                # provenance-asserted: the corpus is self-encoded in
-                # the stage above, so the placeholder-table gate opts in
-                m = dec(bytes(payload), placeholder_vp8_ok=True)
-                per_px = 3 + int(qi) // 3
-                ybound = per_px * m["width"] * m["height"]
-                cbound = (
-                    per_px
-                    * ((m["width"] + 1) // 2)
-                    * ((m["height"] + 1) // 2)
-                )
-                rows.append(
-                    (
-                        int(doc_id), m["fmt"], m["width"], m["height"],
-                        abs(m["sum_y"] - int(ty)) <= ybound,
-                        abs(m["sum_u"] - int(tu)) <= cbound,
-                        abs(m["sum_v"] - int(tv)) <= cbound,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "fmt", "width", "height", "within_y",
-                    "within_u", "within_v",
-                ],
-            )
-
-    return encoded.mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, fmt string, width long, height long, "
-            "within_y boolean, within_u boolean, within_v boolean"
-        ),
+    return _codec_roundtrip(
+        t(spark, sf_dir, "documents")
+        .select("doc_id", "n_chars")
+        .repartition(spark.sparkContext.defaultParallelism),
+        encode_row,
+        decode_row,
+        "doc_id long, fmt string, width long, height long, "
+        "within_y boolean, within_u boolean, within_v boolean",
+        carry="qi long, true_y long, true_u long, true_v long",
     )
 
 
@@ -1484,54 +1355,14 @@ def multimodal_decode_vp8_real(
 def multimodal_decode_vp8x_real(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import pandas as pd
+    import numpy as np
 
     from mincemeatpy_spark.multimodal.binary_ops import (
-        _ship_by_value,
-        _ship_with,
-        _vp8l_cte_delta,
-        _vp8l_dist_map,
-        _vp8l_predict,
-        _webp_alpha_filter,
         decode_webp_extended,
-        decode_webp_real,
         encode_webp_extended,
-        encode_webp_lossless,
     )
 
-    d = (
-        t(spark, sf_dir, "documents")
-        .select("doc_id", "n_chars")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    helpers = _vp8_ship_helpers()
-    vp8l_helpers = {
-        "_vp8l_predict": _ship_by_value(_vp8l_predict),
-        "_vp8l_cte_delta": _ship_by_value(_vp8l_cte_delta),
-        "_vp8l_dist_map": _ship_by_value(_vp8l_dist_map),
-    }
-    filt = _ship_by_value(_webp_alpha_filter)
-    enc_frame = _ship_with(encode_vp8_frame, **helpers)
-    enc_lossless = _ship_with(encode_webp_lossless, **vp8l_helpers)
-    enc = _ship_with(
-        encode_webp_extended,
-        encode_vp8_frame=enc_frame,
-        encode_webp_lossless=enc_lossless,
-        _webp_alpha_filter=filt,
-    )
-    dec_vp8 = _ship_with(decode_vp8_real, **helpers)
-    dec_webp = _ship_with(decode_webp_real, **vp8l_helpers)
-    dec = _ship_with(
-        decode_webp_extended,
-        decode_vp8_real=dec_vp8,
-        decode_webp_real=dec_webp,
-        _webp_alpha_filter=filt,
-    )
-
-    def _src(doc_id: int, n_chars: int):
-        import numpy as np
-
+    def src(doc_id: int, n_chars: int):
         w = n_chars % 17 + 8
         h = doc_id % 13 + 8
         cw, ch = (w + 1) // 2, (h + 1) // 2
@@ -1545,90 +1376,33 @@ def multimodal_decode_vp8x_real(
         A = ((doc_id * 13 + x * 3 + yy * 7) % 256).astype(np.uint8)
         return Y, U, V, A
 
-    src = _ship_by_value(_src)
+    def encode_row(doc_id, n_chars):
+        Y, U, V, A = src(doc_id, n_chars)
+        qi = (doc_id * 5) % 24
+        payload = encode_webp_extended(
+            Y, U, V, A,
+            qi=qi,
+            filter_level=(doc_id % 3) * 2,
+            mode_seed=doc_id,
+            alpha_filter=doc_id % 4,
+            alpha_compression=doc_id % 2,
+        )
+        return (payload, qi, *_vp8_plane_sums(Y, U, V))
 
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def decode_row(doc_id, payload, qi, ty, tu, tv):
+        # provenance-asserted: the corpus is self-encoded in the stage
+        # above, so the placeholder-table gate opts in
+        m = decode_webp_extended(payload, placeholder_vp8_ok=True)
+        return [dict(m, **_vp8_within(m, qi, ty, tu, tv))]
 
-        for pdf in batches:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                Y, U, V, A = src(doc_id, n_chars)
-                qi = (doc_id * 5) % 24
-                payload = enc(
-                    Y, U, V, A,
-                    qi=qi,
-                    filter_level=(doc_id % 3) * 2,
-                    mode_seed=doc_id,
-                    alpha_filter=doc_id % 4,
-                    alpha_compression=doc_id % 2,
-                )
-                rows.append(
-                    (
-                        doc_id, payload, qi,
-                        int(Y.astype("int64").sum()),
-                        int(U.astype("int64").sum()),
-                        int(V.astype("int64").sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "payload", "qi", "true_y", "true_u",
-                    "true_v",
-                ],
-            )
-
-    encoded = d.mapInPandas(
-        encode,
-        schema=(
-            "doc_id long, payload binary, qi long, true_y long, "
-            "true_u long, true_v long"
-        ),
-    )
-
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload, qi, ty, tu, tv in zip(
-                pdf["doc_id"], pdf["payload"], pdf["qi"],
-                pdf["true_y"], pdf["true_u"], pdf["true_v"],
-            ):
-                # provenance-asserted: the corpus is self-encoded in
-                # the stage above, so the placeholder-table gate opts in
-                m = dec(bytes(payload), placeholder_vp8_ok=True)
-                per_px = 3 + int(qi) // 3
-                ybound = per_px * m["width"] * m["height"]
-                cbound = (
-                    per_px
-                    * ((m["width"] + 1) // 2)
-                    * ((m["height"] + 1) // 2)
-                )
-                rows.append(
-                    (
-                        int(doc_id), m["fmt"], m["width"], m["height"],
-                        m["sum_a"],
-                        abs(m["sum_y"] - int(ty)) <= ybound,
-                        abs(m["sum_u"] - int(tu)) <= cbound,
-                        abs(m["sum_v"] - int(tv)) <= cbound,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "fmt", "width", "height", "sum_a",
-                    "within_y", "within_u", "within_v",
-                ],
-            )
-
-    return encoded.mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, fmt string, width long, height long, "
-            "sum_a long, within_y boolean, within_u boolean, "
-            "within_v boolean"
-        ),
+    return _codec_roundtrip(
+        t(spark, sf_dir, "documents")
+        .select("doc_id", "n_chars")
+        .repartition(spark.sparkContext.defaultParallelism),
+        encode_row,
+        decode_row,
+        "doc_id long, fmt string, width long, height long, "
+        "sum_a long, within_y boolean, within_u boolean, "
+        "within_v boolean",
+        carry="qi long, true_y long, true_u long, true_v long",
     )

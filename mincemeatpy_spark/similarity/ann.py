@@ -60,12 +60,7 @@ def _q6_i64(x):
     """Quantize doubles to int64 micro-units with HALF-AWAY-FROM-ZERO
     rounding, matching DuckDB ``round()`` and Spark ``ROUND`` exactly.
     ``np.round`` is banker's (half-to-even) and silently diverges
-    cross-engine whenever ``x * 1e6`` lands exactly on ``.5``.
-
-    DRIVER-SIDE ONLY: worker closures must define a local copy (pickled
-    by value) — a reference to this module function requires
-    ``mincemeatpy_spark`` on the executors' sys.path, which the driver
-    contract does not guarantee."""
+    cross-engine whenever ``x * 1e6`` lands exactly on ``.5``."""
     import numpy as np
 
     y = np.asarray(x, dtype=np.float64) * 1_000_000.0

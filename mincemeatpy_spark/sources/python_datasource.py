@@ -42,10 +42,7 @@ def _make_datasource_class():
         SimpleDataSourceStreamReader,
     )
 
-    # Local copy of the row generator: a module-level reference would be
-    # pickled by name and require mincemeatpy_spark on every executor's
-    # sys.path; a closure ships by value with the class (the same
-    # self-containment the reference demands of mapfn, README.md:93-96).
+    # The row generator ships by value with the class (SCALE.md rule 14).
     def _gen(i: int) -> tuple:
         return (i, f"w{i % 7} w{(i * 3) % 11} w{(i * 5) % 13}")
 

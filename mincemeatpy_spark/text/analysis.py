@@ -1921,14 +1921,9 @@ def _bpe_encode_word(word: str, ranks: dict, cache: dict) -> list[str]:
     "per-word token table and joins it to doc words — exact int64s.",
 )
 def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mincemeatpy_spark.multimodal.binary_ops import _ship_by_value
-
     table = _bpe_merge_table(spark, sf_dir)
     ranks = {pair: i for i, pair in enumerate(table)}
     bc = spark.sparkContext.broadcast(ranks)
-    # shipped BY VALUE: the driver contract does not put this package on
-    # worker sys.path (binary_ops._ship_with documents the contract)
-    enc = _ship_by_value(_bpe_encode_word)
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
 
     def encode_docs(pdfs):
@@ -1943,7 +1938,7 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             ids, n_words, n_tokens, n_distinct = [], [], [], []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 words = [w for w in ws.split(text or "") if w]
-                toks_per_word = [enc(w, r, cache) for w in words]
+                toks_per_word = [_bpe_encode_word(w, r, cache) for w in words]
                 ids.append(doc_id)
                 n_words.append(len(words))
                 n_tokens.append(sum(len(ts) for ts in toks_per_word))
@@ -1987,12 +1982,9 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(not just counts) against the oracle's s3 token table.",
 )
 def bpe_encode_vocab_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mincemeatpy_spark.multimodal.binary_ops import _ship_by_value
-
     table = _bpe_merge_table(spark, sf_dir)
     ranks = {pair: i for i, pair in enumerate(table)}
     bc = spark.sparkContext.broadcast(ranks)
-    enc = _ship_by_value(_bpe_encode_word)
     docs = t(spark, sf_dir, "documents")
     wc = (
         docs.select(F.explode(F.split("text", _WS)).alias("word"))
@@ -2009,7 +2001,7 @@ def bpe_encode_vocab_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in pdfs:
             words, cnts, toks = [], [], []
             for word, cnt in zip(pdf["word"], pdf["cnt"]):
-                for tok in enc(word, r, cache):
+                for tok in _bpe_encode_word(word, r, cache):
                     words.append(word)
                     cnts.append(cnt)
                     toks.append(tok)

@@ -1412,16 +1412,32 @@ def test_video_corpus_dedupes_before_decode(spark, sf_dir):
 
 
 def test_vp8_and_mjpeg_are_two_narrow_python_stages(spark, sf_dir):
-    # codec queries: exactly encode + decode mapInPandas stages over a
-    # repartitioned 16-byte/row projection — no extra Python hops, no
-    # joins, no cartesian anything.
-    for name in ("multimodal_decode_vp8_real", "multimodal_decode_mjpeg_real",
-                 "multimodal_resize_real"):
+    # every round-trip codec query: exactly the encode + decode
+    # mapInPandas stages — no extra Python hops, no joins, no cartesian
+    # anything; all but the first four run over a repartitioned
+    # 16-byte/row projection.
+    unpartitioned = (
+        "multimodal_decode_real", "multimodal_decode_audio_real",
+        "multimodal_decode_png_real", "multimodal_decode_video_real",
+    )
+    repartitioned = (
+        "multimodal_decode_mjpeg_real", "multimodal_decode_jpeg_real",
+        "multimodal_decode_jpeg_progressive", "multimodal_decode_gif_real",
+        "multimodal_decode_gif_anim", "multimodal_decode_flac_real",
+        "multimodal_decode_webp_real", "multimodal_decode_webp_anim",
+        "multimodal_decode_webp_anim_fralpha",
+        "multimodal_decode_vorbis_real", "multimodal_decode_vp8_real",
+        "multimodal_decode_vp8x_real", "multimodal_resize_real",
+    )
+    for name in unpartitioned + repartitioned:
         df = QUERIES[name].fn(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("MapInPandas") == 2, name
+        assert "MapInPandas encode" in plan, name
+        assert "MapInPandas decode" in plan, name
         assert "Join" not in plan, name
-        assert "Exchange" in plan, name  # the parallelism repartition
+        if name in repartitioned:
+            assert "Exchange" in plan, name  # the parallelism repartition
 
 
 def test_html_extract_is_scan_side(spark, sf_dir):

@@ -324,12 +324,12 @@ def multimodal_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     "actual headers and pixel arrays and emits per-channel means.  "
     "The oracle recomputes the expected metadata in closed form from "
     "the SAME base columns, so a decoder that mis-parses a header, "
-    "stride or channel order goes red.  PNG, baseline JPEG and AVI "
+    "stride or channel order goes red.  PNG, JPEG, GIF, WebP and AVI "
     "decode for real in their own registered queries; the "
     "NotImplementedError gate here covers only formats that genuinely "
-    "need an external codec (GIF/WebP).  Both stages are narrow "
-    "mapInPandas passes — bytes stream batch-wise through Arrow, "
-    "never to the driver.",
+    "need an external codec (arithmetic, extended and lossless JPEG).  "
+    "Both stages are narrow mapInPandas passes — bytes stream "
+    "batch-wise through Arrow, never to the driver.",
 )
 def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     import struct
@@ -1320,11 +1320,11 @@ def encode_png_rgb8(w: int, h: int, pixel) -> bytes:
     "and demands exact integer channel sums — a decoder that skips "
     "un-filtering, mis-handles the left/up/diagonal predecessors at "
     "row edges, or mis-walks chunks goes red on nearly every "
-    "document.  The NotImplementedError gate now covers only "
-    "GIF/WebP and progressive/arithmetic JPEG (r7 added baseline "
-    "JPEG); PPM, BMP, WAV/PCM16 and PNG all decode natively.  Both "
-    "stages are narrow mapInPandas passes — bytes stream batch-wise "
-    "through Arrow, never to the driver.",
+    "document.  Among images the NotImplementedError gate now covers "
+    "only arithmetic, extended and lossless JPEG; PPM, BMP, PNG, "
+    "baseline and progressive JPEG, GIF and WebP all decode natively.  "
+    "Both stages are narrow mapInPandas passes — bytes stream "
+    "batch-wise through Arrow, never to the driver.",
 )
 def multimodal_decode_png_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     def encode_row(doc_id, n_chars):
@@ -2109,29 +2109,16 @@ def _channel_sums(frames) -> list:
     ]
 
 
-def encode_jpeg_baseline(rgb, restart_interval: int = 0) -> bytes:
-    """Spec-correct baseline JFIF encoder for the fixture stage:
-    RGB->YCbCr (BT.601/JFIF), edge-replicated padding to the 16x16 MCU
-    grid, 4:2:0 box-averaged chroma, level-shifted orthonormal DCT,
-    all-ones quantization tables (so the roundtrip error is bounded by
-    coefficient rounding alone), DC-difference + run-length/magnitude
-    AC coding, byte stuffing, and DHT-declared canonical Huffman tables
-    (all symbols at 8 bits — a legal degenerate prefix code; a decoder
-    must honor whatever canonical tables DHT declares).
+# ---- shared JPEG encoder pieces (baseline and progressive) -----------
 
-    ``rgb`` is an (h, w, 3) uint8 numpy array.
-    """
-    import struct
 
+def _jpeg_ycbcr_planes(rgb, mcu: int) -> list:
+    """RGB -> JFIF YCbCr planes (BT.601, rounded, clamped), each
+    edge-replicated to a multiple of ``mcu`` pixels both ways."""
     import numpy as np
 
     h, w = rgb.shape[:2]
-    A = _jpeg_dct_mat()
-    zz = _jpeg_zigzag()
-
-    r = rgb[..., 0].astype(np.float64)
-    g = rgb[..., 1].astype(np.float64)
-    b = rgb[..., 2].astype(np.float64)
+    r, g, b = (rgb[..., i].astype(np.float64) for i in range(3))
     Y = np.clip(np.round(0.299 * r + 0.587 * g + 0.114 * b), 0, 255)
     Cb = np.clip(
         np.round(128.0 - 0.168735892 * r - 0.331264108 * g + 0.5 * b), 0, 255
@@ -2139,130 +2126,204 @@ def encode_jpeg_baseline(rgb, restart_interval: int = 0) -> bytes:
     Cr = np.clip(
         np.round(128.0 + 0.5 * r - 0.418687589 * g - 0.081312411 * b), 0, 255
     )
+    pad = ((0, -h % mcu), (0, -w % mcu))
+    return [np.pad(p, pad, mode="edge") for p in (Y, Cb, Cr)]
 
-    H = (h + 15) // 16 * 16
-    W = (w + 15) // 16 * 16
 
-    def pad(p):
-        return np.pad(p, ((0, H - h), (0, W - w)), mode="edge")
+def _jpeg_fdct_zigzag(planes) -> list:
+    """Batched level-shifted orthonormal FDCT of every 8x8 block of each
+    plane, rounded to int64 (all-ones quantization): one (nb, 8, 8)
+    matmul chain and one fancy-index zigzag per plane, giving (nb, 64)
+    rows in raster block order."""
+    import numpy as np
 
-    Yp, Cbp, Crp = pad(Y), pad(Cb), pad(Cr)
-    Cb2 = Cbp.reshape(H // 2, 2, W // 2, 2).mean(axis=(1, 3))
-    Cr2 = Crp.reshape(H // 2, 2, W // 2, 2).mean(axis=(1, 3))
-
-    DC_SYMS = list(range(12))
-    AC_SYMS = sorted(
-        {(rr << 4) | ss for rr in range(16) for ss in range(1, 11)}
-        | {0x00, 0xF0}
-    )
-
-    def table_spec(syms):
-        bits = [0] * 16
-        bits[7] = len(syms)  # every symbol at 8 bits, canonical order
-        return bits, syms, {s: (i, 8) for i, s in enumerate(syms)}
-
-    dc_bits, dc_vals, dc_code = table_spec(DC_SYMS)
-    ac_bits, ac_vals, ac_code = table_spec(AC_SYMS)
-
-    # Symbol-level emission (r8): gather (code, length) pairs and pack
-    # once at the end — the pre-r8 encoder appended individual bits to a
-    # Python list (one call per BIT), which profiled as the fixture
-    # stage's bottleneck alongside per-block 8x8 matmuls.
-    sym_codes: list = []
-    sym_lens: list = []
-    emit = sym_codes.append
-    emitl = sym_lens.append
-
-    def encode_block(zzc: list, pred: int) -> int:
-        """zzc: the block's 64 zigzag-ordered int coefficients."""
-        diff = zzc[0] - pred
-        s = (diff if diff >= 0 else -diff).bit_length()
-        c, L = dc_code[s]
-        emit(c)
-        emitl(L)
-        if s:
-            emit(diff + (1 << s) - 1 if diff < 0 else diff)
-            emitl(s)
-        last_nz = 0
-        for k in range(63, 0, -1):
-            if zzc[k]:
-                last_nz = k
-                break
-        run = 0
-        for k in range(1, last_nz + 1):
-            v = zzc[k]
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                c, L = ac_code[0xF0]
-                emit(c)
-                emitl(L)
-                run -= 16
-            s = (v if v >= 0 else -v).bit_length()
-            c, L = ac_code[(run << 4) | s]
-            emit(c)
-            emitl(L)
-            emit(v + (1 << s) - 1 if v < 0 else v)
-            emitl(s)
-            run = 0
-        if last_nz != 63:
-            c, L = ac_code[0x00]
-            emit(c)
-            emitl(L)
-        return zzc[0]
-
-    # Batched FDCT + quantize + zigzag per component: blockify each
-    # plane into (nb, 8, 8) raster order, one (nb,8,8) matmul chain,
-    # one fancy-index zigzag — then reorder Y blocks into MCU order.
-    zz_arr = np.array(zz, dtype=np.int64)
-
-    def dct_zigzag(plane):
+    A = _jpeg_dct_mat()
+    zz = np.array(_jpeg_zigzag(), dtype=np.int64)
+    out = []
+    for plane in planes:
         gh, gw = plane.shape[0] // 8, plane.shape[1] // 8
         blocks = (
             plane.reshape(gh, 8, gw, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
         )
         q = np.round(A @ (blocks - 128.0) @ A.T).astype(np.int64)
-        return q.reshape(-1, 64)[:, zz_arr], gw
+        out.append(q.reshape(-1, 64)[:, zz])
+    return out
 
-    Yzz, gyc = dct_zigzag(Yp)
-    Cbzz, _ = dct_zigzag(Cb2)
-    Crzz, _ = dct_zigzag(Cr2)
-    # Y raster (r, c) -> MCU order (my, mx, by, bx): r = 2*my+by etc.
-    y_order = [
-        (my * 2 + by) * gyc + (mx * 2 + bx)
-        for my in range(H // 16)
-        for mx in range(W // 16)
-        for by in range(2)
-        for bx in range(2)
-    ]
-    Yl = Yzz[np.array(y_order)].tolist()
+
+def _jpeg_table_spec(syms: list) -> tuple:
+    """``(bits, vals, code)`` for one encoder Huffman table, with
+    ``code[symbol] = (codeword, length)``: every symbol at 8 bits in
+    canonical order — a legal degenerate prefix code; a decoder must
+    honor whatever canonical tables DHT declares."""
+    bits = [0] * 16
+    bits[7] = len(syms)
+    return bits, syms, {s: (i, 8) for i, s in enumerate(syms)}
+
+
+# The encoders' DC and AC tables (all 8-bit DC categories; every AC
+# run/size symbol plus EOB and ZRL).
+_JPEG_DC_SPEC = _jpeg_table_spec(list(range(12)))
+_JPEG_AC_SPEC = _jpeg_table_spec(
+    sorted(
+        {(rr << 4) | ss for rr in range(16) for ss in range(1, 11)}
+        | {0x00, 0xF0}
+    )
+)
+
+
+# Symbol-level emission: encoders gather (codeword, length) pairs through
+# two list appenders and pack once per scan — the pre-r8 encoder appended
+# individual bits (one call per BIT), its fixture-stage bottleneck.
+
+
+def _jpeg_emit_dc(diff: int, dc_code: dict, emit, emitl) -> None:
+    """One DC difference: magnitude-category symbol + its raw bits."""
+    s = (diff if diff >= 0 else -diff).bit_length()
+    c, L = dc_code[s]
+    emit(c)
+    emitl(L)
+    if s:
+        emit(diff + (1 << s) - 1 if diff < 0 else diff)
+        emitl(s)
+
+
+def _jpeg_emit_band(coefs: list, k0: int, ac_code: dict, emit, emitl) -> None:
+    """Run-length code the AC band ``coefs[k0:]``: (run, size) symbols
+    with their raw bits, ZRL per 16 zeros, and EOB unless the last
+    coefficient is nonzero."""
+    end = len(coefs) - 1
+    last = end
+    while last >= k0 and not coefs[last]:
+        last -= 1
+    run = 0
+    for k in range(k0, last + 1):
+        v = coefs[k]
+        if v == 0:
+            run += 1
+            continue
+        while run > 15:
+            c, L = ac_code[0xF0]
+            emit(c)
+            emitl(L)
+            run -= 16
+        s = (v if v >= 0 else -v).bit_length()
+        c, L = ac_code[(run << 4) | s]
+        emit(c)
+        emitl(L)
+        emit(v + (1 << s) - 1 if v < 0 else v)
+        emitl(s)
+        run = 0
+    if last != end:
+        c, L = ac_code[0x00]
+        emit(c)
+        emitl(L)
+
+
+def _jpeg_pack(codes: list, lens: list) -> bytes:
+    """Pack the gathered symbols MSB-first, one loop per SYMBOL flushing
+    whole bytes from an int accumulator: 0xFF byte stuffing and
+    1-padding to the byte boundary per the spec.  Clears both lists."""
+    out = bytearray()
+    buf = 0
+    nbuf = 0
+    for c, L in zip(codes, lens):
+        buf = (buf << L) | c
+        nbuf += L
+        while nbuf >= 8:
+            nbuf -= 8
+            byte = (buf >> nbuf) & 0xFF
+            out.append(byte)
+            if byte == 0xFF:
+                out.append(0x00)  # byte stuffing
+        buf &= (1 << nbuf) - 1
+    if nbuf:
+        byte = ((buf << (8 - nbuf)) | ((1 << (8 - nbuf)) - 1)) & 0xFF
+        out.append(byte)
+        if byte == 0xFF:
+            out.append(0x00)
+    codes.clear()
+    lens.clear()
+    return bytes(out)
+
+
+def _jpeg_seg(marker: int, data: bytes) -> bytes:
+    import struct
+
+    return bytes([0xFF, marker]) + struct.pack(">H", len(data) + 2) + data
+
+
+def _jpeg_header(sof: int, h: int, w: int, comps: list, dri: int = 0) -> bytes:
+    """SOI, the JFIF APP0, an all-ones DQT per quant table id the frame
+    uses, DRI when ``dri``, the SOF segment (``comps``: (id, sampling
+    byte, quant table id)), then the 8-bit DC and AC DHT pair under
+    each of those ids (the encoders pair quant and Huffman table ids)."""
+    import struct
+
+    tids = sorted({tq for _cid, _samp, tq in comps})
+    jfif = b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
+    out = b"\xff\xd8" + _jpeg_seg(0xE0, jfif)
+    for tq in tids:
+        out += _jpeg_seg(0xDB, bytes([tq]) + bytes([1] * 64))
+    if dri:
+        out += _jpeg_seg(0xDD, struct.pack(">H", dri))
+    sof_body = struct.pack(">BHHB", 8, h, w, len(comps))
+    out += _jpeg_seg(sof, sof_body + b"".join(bytes(c) for c in comps))
+    for tid in tids:
+        for cls, spec in enumerate((_JPEG_DC_SPEC, _JPEG_AC_SPEC)):
+            bits, vals, _code = spec
+            out += _jpeg_seg(0xC4, bytes([(cls << 4) | tid, *bits, *vals]))
+    return out
+
+
+def _jpeg_luma_mcu_order(mcys: int, mcxs: int):
+    """Raster indices of the 4:2:0 luma blocks in MCU order: block
+    (2*my+by, 2*mx+bx) is the (by, bx) block of MCU (my, mx)."""
+    import numpy as np
+
+    at = np.arange(4 * mcys * mcxs).reshape(mcys, 2, mcxs, 2)
+    return at.transpose(0, 2, 1, 3).reshape(-1)
+
+
+def _jpeg_sos(specs: list, ss: int, se: int, ah: int, al: int) -> bytes:
+    """SOS segment; ``specs`` are (component id, DC table, AC table)."""
+    body = bytes([len(specs)])
+    for cid, td, ta in specs:
+        body += bytes([cid, (td << 4) | ta])
+    return _jpeg_seg(0xDA, body + bytes([ss, se, (ah << 4) | al]))
+
+
+def encode_jpeg_baseline(rgb, restart_interval: int = 0) -> bytes:
+    """Spec-correct baseline JFIF encoder for the fixture stage:
+    RGB->YCbCr (BT.601/JFIF), edge-replicated padding to the 16x16 MCU
+    grid, 4:2:0 box-averaged chroma, level-shifted orthonormal DCT,
+    all-ones quantization tables (so the roundtrip error is bounded by
+    coefficient rounding alone), DC-difference + run-length/magnitude
+    AC coding, byte stuffing, and DHT-declared canonical Huffman tables
+    (``_jpeg_table_spec``).
+
+    ``rgb`` is an (h, w, 3) uint8 numpy array.
+    """
+    h, w = rgb.shape[:2]
+    Yp, Cbp, Crp = _jpeg_ycbcr_planes(rgb, 16)
+    H, W = Yp.shape
+    Cb2 = Cbp.reshape(H // 2, 2, W // 2, 2).mean(axis=(1, 3))
+    Cr2 = Crp.reshape(H // 2, 2, W // 2, 2).mean(axis=(1, 3))
+    dc_code, ac_code = _JPEG_DC_SPEC[2], _JPEG_AC_SPEC[2]
+
+    Yzz, Cbzz, Crzz = _jpeg_fdct_zigzag([Yp, Cb2, Cr2])
+    Yl = Yzz[_jpeg_luma_mcu_order(H // 16, W // 16)].tolist()
     Cbl, Crl = Cbzz.tolist(), Crzz.tolist()
 
-    # pack: one loop per SYMBOL, flushing whole bytes from an int
-    # accumulator; 1-padding to the byte boundary per the spec.
-    def pack_pending() -> bytes:
-        out_ = bytearray()
-        buf = 0
-        nbuf = 0
-        for c, L in zip(sym_codes, sym_lens):
-            buf = (buf << L) | c
-            nbuf += L
-            while nbuf >= 8:
-                nbuf -= 8
-                byte = (buf >> nbuf) & 0xFF
-                out_.append(byte)
-                if byte == 0xFF:
-                    out_.append(0x00)  # byte stuffing
-            buf &= (1 << nbuf) - 1
-        if nbuf:
-            byte = ((buf << (8 - nbuf)) | ((1 << (8 - nbuf)) - 1)) & 0xFF
-            out_.append(byte)
-            if byte == 0xFF:
-                out_.append(0x00)
-        sym_codes.clear()
-        sym_lens.clear()
-        return bytes(out_)
+    codes: list = []
+    lens: list = []
+    emit = codes.append
+    emitl = lens.append
+
+    def encode_block(zzc: list, pred: int) -> int:
+        """zzc: the block's 64 zigzag-ordered int coefficients."""
+        _jpeg_emit_dc(zzc[0] - pred, dc_code, emit, emitl)
+        _jpeg_emit_band(zzc, 1, ac_code, emit, emitl)
+        return zzc[0]
 
     scan = bytearray()
     preds = [0, 0, 0]
@@ -2270,50 +2331,26 @@ def encode_jpeg_baseline(rgb, restart_interval: int = 0) -> bytes:
         if restart_interval and i and i % restart_interval == 0:
             # restart boundary: byte-align this segment, emit the RSTn
             # marker (n cycles 0..7), reset DC prediction
-            scan += pack_pending()
-            scan += bytes(
-                [0xFF, 0xD0 + ((i // restart_interval - 1) & 7)]
-            )
+            scan += _jpeg_pack(codes, lens)
+            scan += bytes([0xFF, 0xD0 + ((i // restart_interval - 1) & 7)])
             preds = [0, 0, 0]
         for j in range(4):
             preds[0] = encode_block(Yl[4 * i + j], preds[0])
         preds[1] = encode_block(Cbl[i], preds[1])
         preds[2] = encode_block(Crl[i], preds[2])
-    scan += pack_pending()
+    scan += _jpeg_pack(codes, lens)
 
-    def seg(marker, data):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(data) + 2) + data
-
-    def dht(cls, tid, bits, vals):
-        return bytes([(cls << 4) | tid]) + bytes(bits) + bytes(vals)
-
-    sof = struct.pack(">BHHB", 8, h, w, 3)
-    sof += bytes([1, 0x22, 0])  # Y: 2x2 sampling, quant table 0
-    sof += bytes([2, 0x11, 1])  # Cb: 1x1, quant table 1
-    sof += bytes([3, 0x11, 1])  # Cr
-    sos = bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0])
-    jfif = b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    dri = (
-        seg(0xDD, bytes([restart_interval >> 8, restart_interval & 0xFF]))
-        if restart_interval
-        else b""
-    )
+    # Y: 2x2 sampling, tables 0; Cb, Cr: 1x1, tables 1
+    comps = [(1, 0x22, 0), (2, 0x11, 1), (3, 0x11, 1)]
     return (
-        b"\xff\xd8"
-        + seg(0xE0, jfif)
-        + seg(0xDB, bytes([0]) + bytes([1] * 64))
-        + seg(0xDB, bytes([1]) + bytes([1] * 64))
-        + dri
-        + seg(0xC0, sof)
-        + seg(0xC4, dht(0, 0, dc_bits, dc_vals))
-        + seg(0xC4, dht(1, 0, ac_bits, ac_vals))
-        + seg(0xC4, dht(0, 1, dc_bits, dc_vals))
-        + seg(0xC4, dht(1, 1, ac_bits, ac_vals))
-        + seg(0xDA, sos)
+        _jpeg_header(0xC0, h, w, comps, restart_interval)
+        + _jpeg_sos([(1, 0, 0), (2, 1, 1), (3, 1, 1)], 0, 63, 0, 0)
         + bytes(scan)
         + b"\xff\xd9"
     )
 
+
+# ---- shared JPEG decoder pieces (baseline and progressive) -----------
 
 # Canonical-Huffman decode LUTs keyed on the DHT contents.  The memo
 # pickles empty, so a shipped decoder never carries the driver's LUTs;
@@ -2322,21 +2359,25 @@ def encode_jpeg_baseline(rgb, restart_interval: int = 0) -> bytes:
 _JPEG_LUT_CACHE = _WorkerMemo()
 
 
-def decode_jpeg_real(payload: bytes) -> dict:
-    """Real, dependency-free baseline JPEG decode: full marker walk
-    (APPn/COM skipped by declared length), DQT and generic canonical
-    Huffman construction from DHT (any legal table, not just the ones
-    our encoder writes), SOF0 frame parse (4:2:0 and 4:4:4), entropy
-    decode with byte unstuffing, DC prediction, run-length AC with
-    ZRL/EOB, dequantization, dezigzag, orthonormal IDCT, chroma
-    upsampling, edge crop and YCbCr->RGB with clamping.
+def _jpeg_parse(payload: bytes) -> tuple:
+    """The one JPEG segment parser both decoders use: the full marker
+    walk (APPn/COM skipped by declared length) with bounds checks on
+    every marker and segment, DQT, generic canonical Huffman tables
+    from DHT, SOF0/SOF2 (each component's sampling factors and quant
+    table), DRI and every SOS.  Each scan keeps a snapshot of the DC/AC
+    tables it references AT SOS-PARSE TIME: a later DHT may legally
+    redefine a table id between scans (libjpeg's optimized output
+    does), and resolving tables after the walk would decode earlier
+    scans with the last scan's tables.  DHT binds a fresh dict per
+    table, so holding references is a true snapshot.
 
-    Returns ``{fmt, width, height, sum_r, sum_g, sum_b}`` — integer
-    channel sums over the reconstructed pixels.  Honest gates:
-    progressive/extended/lossless/arithmetic SOFs, restart intervals,
-    16-bit quant tables and non-3-component frames raise
-    ``NotImplementedError``; structural damage raises ``ValueError``
-    (same clamp discipline as the WAV/AVI/PNG walkers).
+    Returns ``(sof, frame, qtables, restart_interval, scans)``:
+    ``frame`` is ``(height, width, [(id, h, v, tq), ...])`` or None,
+    each scan ``(specs, ss, se, ah, al, segments, tables)`` with specs
+    ``(id, dc table, ac table)`` and ``segments`` its unstuffed entropy
+    data split at RSTn.  Other SOF types, 16-bit quant tables and
+    non-8-bit precision raise ``NotImplementedError``; structural
+    damage raises ``ValueError``.
     """
     import struct
 
@@ -2344,18 +2385,14 @@ def decode_jpeg_real(payload: bytes) -> dict:
 
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
-
-    zz = _jpeg_zigzag()
-    A = _jpeg_dct_mat()
-
     qtables, htables = {}, {}
-    frame = None
-    scan_comps = None
-    data_start = None
-    restart_interval = 0
+    sof = frame = None
+    restart = 0
+    scans = []
+    n = len(payload)
     pos = 2
-    while pos < len(payload):
-        if pos + 2 > len(payload):
+    while pos < n:
+        if pos + 2 > n:
             raise ValueError("malformed JPEG: truncated marker")
         if payload[pos] != 0xFF:
             raise ValueError("malformed JPEG: expected marker")
@@ -2365,22 +2402,21 @@ def decode_jpeg_real(payload: bytes) -> dict:
             break
         if m == 0x01 or 0xD0 <= m <= 0xD7:
             continue
-        if pos + 2 > len(payload):
+        if pos + 2 > n:
             raise ValueError("malformed JPEG: truncated segment header")
         (seglen,) = struct.unpack_from(">H", payload, pos)
-        if seglen < 2 or pos + seglen > len(payload):
+        if seglen < 2 or pos + seglen > n:
             raise ValueError("malformed JPEG: truncated segment")
         data = payload[pos + 2 : pos + seglen]
-        end = pos + seglen
+        pos += seglen
         if m == 0xDB:
             p = 0
             while p < len(data):
-                pq, tq = data[p] >> 4, data[p] & 0xF
-                if pq != 0:
+                if data[p] >> 4:
                     raise NotImplementedError("16-bit quant tables not supported")
                 if p + 65 > len(data):
                     raise ValueError("malformed JPEG: truncated DQT")
-                qtables[tq] = np.array(
+                qtables[data[p] & 0xF] = np.array(
                     list(data[p + 1 : p + 65]), dtype=np.int32
                 )
                 p += 65
@@ -2389,12 +2425,11 @@ def decode_jpeg_real(payload: bytes) -> dict:
             while p < len(data):
                 if p + 17 > len(data):
                     raise ValueError("malformed JPEG: truncated DHT")
-                cls, tid = data[p] >> 4, data[p] & 0xF
-                counts = list(data[p + 1 : p + 17])
+                counts = data[p + 1 : p + 17]
                 nsym = sum(counts)
                 if p + 17 + nsym > len(data):
                     raise ValueError("malformed JPEG: truncated DHT")
-                syms = list(data[p + 17 : p + 17 + nsym])
+                syms = data[p + 17 : p + 17 + nsym]
                 table, code, k = {}, 0, 0
                 for length in range(1, 17):
                     for _ in range(counts[length - 1]):
@@ -2402,21 +2437,22 @@ def decode_jpeg_real(payload: bytes) -> dict:
                         code += 1
                         k += 1
                     code <<= 1
-                htables[(cls, tid)] = table
+                htables[(data[p] >> 4, data[p] & 0xF)] = table
                 p += 17 + nsym
-        elif m == 0xC0:
+        elif m in (0xC0, 0xC2):
+            if len(data) < 6 or len(data) < 6 + 3 * data[5]:
+                raise ValueError("malformed JPEG: truncated SOF")
             prec, hh, ww, nc = struct.unpack_from(">BHHB", data, 0)
             if prec != 8:
                 raise NotImplementedError("only 8-bit sample precision")
-            comps = []
-            for i in range(nc):
-                cid, samp, tq = data[6 + 3 * i : 9 + 3 * i]
-                comps.append((cid, samp >> 4, samp & 0xF, tq))
-            frame = (hh, ww, comps)
-        elif m == 0xC2:
-            # progressive (SOF2): decoded for real since r8 — hand the
-            # whole stream to the multi-scan decoder
-            return decode_jpeg_progressive(payload)
+            comps = [
+                (data[6 + 3 * i], data[7 + 3 * i] >> 4, data[7 + 3 * i] & 0xF,
+                 data[8 + 3 * i])
+                for i in range(nc)
+            ]
+            if len({c[0] for c in comps}) != nc:
+                raise ValueError("malformed JPEG: duplicate component id")
+            sof, frame = m, (hh, ww, comps)
         elif m in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7,
                    0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise NotImplementedError(
@@ -2426,121 +2462,109 @@ def decode_jpeg_real(payload: bytes) -> dict:
         elif m == 0xDD:
             if len(data) < 2:
                 raise ValueError("malformed JPEG: truncated DRI")
-            restart_interval = (data[0] << 8) | data[1]
+            restart = (data[0] << 8) | data[1]
         elif m == 0xDA:
-            ns = data[0]
-            scan_comps = []
-            for i in range(ns):
-                scan_comps.append(
-                    (data[1 + 2 * i], data[2 + 2 * i] >> 4,
-                     data[2 + 2 * i] & 0xF)
+            if frame is None:
+                raise ValueError("malformed JPEG: SOS before SOF")
+            ns = data[0] if data else 0
+            if ns == 0 or len(data) < 4 + 2 * ns:
+                raise ValueError("malformed JPEG: truncated SOS")
+            specs = [
+                (data[1 + 2 * i], data[2 + 2 * i] >> 4, data[2 + 2 * i] & 0xF)
+                for i in range(ns)
+            ]
+            ids = [sc[0] for sc in specs]
+            frame_ids = {c[0] for c in frame[2]}
+            if len(set(ids)) != ns or not frame_ids.issuperset(ids):
+                raise ValueError(
+                    "malformed JPEG: scan components do not match the frame"
                 )
-            data_start = end
-            break
-        pos = end
+            ss, se, ahal = data[1 + 2 * ns : 4 + 2 * ns]
+            if not ss <= se <= 63:
+                raise ValueError("malformed JPEG: bad spectral selection")
+            tables = {
+                ref: htables[ref]
+                for _cid, td, ta in specs
+                for ref in ((0, td), (1, ta))
+                if ref in htables
+            }
+            segments, pos = _jpeg_entropy_segments(payload, pos, restart)
+            scans.append(
+                (specs, ss, se, ahal >> 4, ahal & 0xF, segments, tables)
+            )
+    return sof, frame, qtables, restart, scans
 
-    if frame is None or scan_comps is None or data_start is None:
-        raise ValueError("malformed JPEG: missing SOF0/SOS")
-    hh, ww, comps = frame
-    if len(comps) != 3 or len(scan_comps) != 3:
-        raise NotImplementedError("only 3-component YCbCr supported")
-    samps = [(c[1], c[2]) for c in comps]
-    if samps not in ([(2, 2), (1, 1), (1, 1)], [(1, 1), (1, 1), (1, 1)]):
-        raise NotImplementedError("only 4:2:0 or 4:4:4 sampling supported")
-    sub = samps[0] == (2, 2)
 
-    # Scan extraction, restart-aware (r8): RSTn markers split the
-    # entropy data into independently decodable segments — the decoder
-    # verifies the n = 0..7 modulo sequence, re-aligns to a byte
-    # boundary and resets DC prediction at each one (the mechanism that
-    # makes JPEG scan data PARALLELIZABLE and error-recoverable, i.e.
-    # the format's own answer to "split points inside compressed data").
+def _jpeg_entropy_segments(payload: bytes, p: int, restart: int) -> tuple:
+    """One scan's entropy-coded data from ``p`` to the next marker:
+    unstuffed (FF00 -> FF) and split at RSTn markers into independently
+    decodable segments — the decoder verifies the n = 0..7 modulo
+    sequence, and each segment restarts byte-aligned with DC prediction
+    reset (the format's own answer to "split points inside compressed
+    data").  Returns ``(segments, position of the ending marker)``."""
     segments = []
-    scan_bytes = bytearray()
+    cur = bytearray()
     expected_rst = 0
-    p = data_start
-    while p < len(payload) - 1:
-        byte = payload[p]
-        if byte == 0xFF:
-            nxt = payload[p + 1]
-            if nxt == 0x00:
-                scan_bytes.append(0xFF)
-                p += 2
-                continue
-            if nxt == 0xD9:
-                break
-            if 0xD0 <= nxt <= 0xD7:
-                if restart_interval == 0:
-                    raise ValueError(
-                        "malformed JPEG: RST marker without DRI"
-                    )
-                if nxt - 0xD0 != expected_rst:
-                    raise ValueError(
-                        "malformed JPEG: RST marker out of sequence"
-                    )
-                expected_rst = (expected_rst + 1) & 7
-                segments.append(bytes(scan_bytes))
-                scan_bytes = bytearray()
-                p += 2
-                continue
-            raise ValueError("malformed JPEG: stray marker in scan data")
-        scan_bytes.append(byte)
-        p += 1
-    else:
-        raise ValueError("malformed JPEG: scan data missing EOI")
-    segments.append(bytes(scan_bytes))
+    n = len(payload)
+    while True:
+        q = payload.find(b"\xff", p)
+        if q < 0 or q + 1 >= n:
+            raise ValueError("malformed JPEG: scan data missing EOI")
+        cur += payload[p:q]
+        nxt = payload[q + 1]
+        p = q + 2
+        if nxt == 0x00:
+            cur.append(0xFF)
+            continue
+        if not 0xD0 <= nxt <= 0xD7:
+            segments.append(bytes(cur))
+            return segments, q
+        if restart == 0:
+            raise ValueError("malformed JPEG: RST marker without DRI")
+        if nxt - 0xD0 != expected_rst:
+            raise ValueError("malformed JPEG: RST marker out of sequence")
+        expected_rst = (expected_rst + 1) & 7
+        segments.append(bytes(cur))
+        cur = bytearray()
 
-    # --- entropy decode, LUT form (r8: VERDICT r7 task 4) -------------
-    # The pre-r8 decoder walked the scan bit-by-bit through Python
-    # closures (one function call + dict probe PER BIT) and ran a tiny
-    # 8x8 numpy IDCT PER BLOCK — profiled as the repo's most expensive
-    # query by 10x.  This form does the same math with:
-    #   * a per-byte 32-bit big-endian window table (plain Python list;
-    #     list indexing beats numpy scalar indexing here), so any
-    #     16-bit peek is two shifts + a mask,
-    #   * a canonical-Huffman 2^16 lookup table per DHT (packed
-    #     (length << 8) | symbol, cached process-wide keyed on the
-    #     table contents — the standard Annex-K tables repeat across
-    #     every image of a corpus, so the build cost amortizes to
-    #     zero), decoding one symbol per probe instead of per bit,
-    #   * batched dequant + dezigzag + IDCT over ALL blocks of a
-    #     component at once (one (nb,8,8) matmul chain), the same
-    #     whole-array discipline as the PNG unfilter loop (:1188).
-    nbits = 0
-    b32: list = []
+
+def _lut_for(table: dict) -> list:
+    """Canonical-Huffman 2^16 lookup table for one DHT table, packed
+    ``(length << 8) | symbol`` so any 16-bit peek decodes one symbol
+    per probe (length 0 = invalid code); memoized on the contents."""
+    import numpy as np
+
+    key = tuple(sorted(table.items()))
+    lut = _JPEG_LUT_CACHE.get(key)
+    if lut is None:
+        arr = np.zeros(1 << 16, dtype=np.uint16)
+        for (length, code), sym in table.items():
+            lo = code << (16 - length)
+            arr[lo : lo + (1 << (16 - length))] = (length << 8) | sym
+        lut = arr.tolist()
+        _JPEG_LUT_CACHE[key] = lut
+    return lut
+
+
+def _jpeg_bits(segment: bytes) -> tuple:
+    """Bit reader over one unstuffed entropy segment, as closures
+    ``(huff, receive, receive_extend)``: a per-byte 32-bit big-endian
+    window table (plain Python list — list indexing beats numpy scalar
+    indexing here), so any read of up to 25 bits is two shifts and a
+    mask.  ``huff(lut)`` decodes one Huffman symbol; ``receive(n)``
+    reads n raw bits; ``receive_extend(s)`` reads an s-bit magnitude and
+    sign-extends it (F.2.2.1 EXTEND).  Reading past the segment raises
+    ``ValueError``."""
+    import numpy as np
+
+    nbits = len(segment) * 8
+    a = np.frombuffer(segment + b"\x00" * 6, dtype=np.uint8).astype(np.uint32)
+    b32 = ((a[:-3] << 24) | (a[1:-2] << 16) | (a[2:-1] << 8) | a[3:]).tolist()
     bitpos = 0
-
-    def _load_segment(i: int) -> None:
-        nonlocal nbits, b32, bitpos
-        if i >= len(segments):
-            raise ValueError("malformed JPEG: missing restart segment")
-        seg_ = segments[i]
-        nbits = len(seg_) * 8
-        _sb = seg_ + b"\x00\x00\x00\x00\x00\x00"
-        _a = np.frombuffer(_sb, dtype=np.uint8).astype(np.uint32)
-        b32 = (
-            (_a[:-3] << 24) | (_a[1:-2] << 16) | (_a[2:-1] << 8) | _a[3:]
-        ).tolist()
-        bitpos = 0
-
-    _load_segment(0)
-
-    def _lut_for(table: dict) -> list:
-        key = tuple(sorted(table.items()))
-        lut = _JPEG_LUT_CACHE.get(key)
-        if lut is None:
-            arr = np.zeros(1 << 16, dtype=np.uint16)
-            for (length, code), sym in table.items():
-                lo = code << (16 - length)
-                arr[lo : lo + (1 << (16 - length))] = (length << 8) | sym
-            lut = arr.tolist()
-            _JPEG_LUT_CACHE[key] = lut
-        return lut
 
     def huff(lut) -> int:
         nonlocal bitpos
-        w = (b32[bitpos >> 3] >> (16 - (bitpos & 7))) & 0xFFFF
-        packed = lut[w]
+        packed = lut[(b32[bitpos >> 3] >> (16 - (bitpos & 7))) & 0xFFFF]
         length = packed >> 8
         if length == 0:
             raise ValueError("malformed JPEG: invalid Huffman code")
@@ -2549,7 +2573,15 @@ def decode_jpeg_real(payload: bytes) -> dict:
             raise ValueError("malformed JPEG: scan data exhausted")
         return packed & 0xFF
 
-    def recv_extend(s: int) -> int:
+    def receive(n: int) -> int:
+        nonlocal bitpos
+        v = (b32[bitpos >> 3] >> (32 - (bitpos & 7) - n)) & ((1 << n) - 1)
+        bitpos += n
+        if bitpos > nbits:
+            raise ValueError("malformed JPEG: scan data exhausted")
+        return v
+
+    def receive_extend(s: int) -> int:
         nonlocal bitpos
         v = (b32[bitpos >> 3] >> (32 - (bitpos & 7) - s)) & ((1 << s) - 1)
         bitpos += s
@@ -2557,13 +2589,113 @@ def decode_jpeg_real(payload: bytes) -> dict:
             raise ValueError("malformed JPEG: scan data exhausted")
         return v - (1 << s) + 1 if v < (1 << (s - 1)) else v
 
+    return huff, receive, receive_extend
+
+
+def _jpeg_pixels(fmt: str, frame: tuple, qtables: dict, coefs: list) -> dict:
+    """The shared decode back end.  ``coefs`` holds, per frame component
+    (Y, Cb, Cr), ``(rows, gh, gw)``: zigzag coefficient rows in raster
+    block order over a gh x gw block grid.  Batched dequant -> dezigzag
+    -> orthonormal IDCT per component (one (nb, 8, 8) matmul chain),
+    block placement by reshape, 2x chroma upsampling when the chroma
+    grid is half the luma grid, edge crop, YCbCr->RGB with clamping.
+    Returns ``{fmt, width, height, sum_r, sum_g, sum_b}``."""
+    import numpy as np
+
+    hh, ww, comps = frame
+    A = _jpeg_dct_mat()
+    zz = np.array(_jpeg_zigzag(), dtype=np.int64)
+    planes = []
+    for c, (rows, gh, gw) in zip(comps, coefs):
+        if c[3] not in qtables:
+            raise ValueError("malformed JPEG: undeclared quant table")
+        C = np.array(rows, dtype=np.int64).reshape(-1, 64) * qtables[c[3]]
+        flat = np.zeros((gh * gw, 64))
+        flat[:, zz] = C.astype(np.float64)
+        blocks = A.T @ flat.reshape(-1, 8, 8) @ A + 128.0
+        blocks = blocks.reshape(gh, gw, 8, 8).transpose(0, 2, 1, 3)
+        planes.append(blocks.reshape(gh * 8, gw * 8))
+    Y, Cb, Cr = planes
+    if Cb.shape != Y.shape:
+        Cb = np.repeat(np.repeat(Cb, 2, axis=0), 2, axis=1)
+        Cr = np.repeat(np.repeat(Cr, 2, axis=0), 2, axis=1)
+    rgb = _ycbcr_to_rgb8(Y[:hh, :ww], Cb[:hh, :ww], Cr[:hh, :ww])
+    sum_r, sum_g, sum_b = _channel_sums([rgb])
+    return {
+        "fmt": fmt,
+        "width": int(ww),
+        "height": int(hh),
+        "sum_r": sum_r,
+        "sum_g": sum_g,
+        "sum_b": sum_b,
+    }
+
+
+def decode_jpeg_real(payload: bytes) -> dict:
+    """Real, dependency-free JPEG decode.  ``_jpeg_parse`` walks the
+    stream; an SOF2 (progressive) frame goes to the multi-scan decoder
+    (``decode_jpeg_progressive``), an SOF0 frame is decoded here:
+    sequential entropy decode over 4:2:0 or 4:4:4 MCUs (DC prediction,
+    run-length AC with ZRL/EOB, restart intervals with DC-predictor
+    reset), then the shared back end (``_jpeg_pixels``): dequant,
+    dezigzag, orthonormal IDCT, chroma upsampling, edge crop and
+    YCbCr->RGB with clamping.
+
+    Returns ``{fmt, width, height, sum_r, sum_g, sum_b}`` — integer
+    channel sums over the reconstructed pixels.  Honest gates:
+    extended/lossless/arithmetic SOFs, 16-bit quant tables, frames
+    that are not 3-component 4:2:0/4:4:4 YCbCr raise
+    ``NotImplementedError``; structural damage raises ``ValueError``
+    (same clamp discipline as the WAV/AVI/PNG walkers).
+    """
+    import numpy as np
+
+    parsed = _jpeg_parse(payload)
+    sof, frame, qtables, restart_interval, scans = parsed
+    if sof == 0xC2:
+        return _jpeg_progressive(parsed)
+    if frame is None or not scans:
+        raise ValueError("malformed JPEG: missing SOF0/SOS")
+    hh, ww, comps = frame
+    scan_comps, _ss, _se, _ah, _al, segments, scan_tables = scans[0]
+    if len(comps) != 3 or len(scan_comps) != 3:
+        raise NotImplementedError("only 3-component YCbCr supported")
+    if len(scans) > 1:
+        raise ValueError("malformed JPEG: second scan in a baseline frame")
+    samps = [(c[1], c[2]) for c in comps]
+    if samps not in ([(2, 2), (1, 1), (1, 1)], [(1, 1), (1, 1), (1, 1)]):
+        raise NotImplementedError("only 4:2:0 or 4:4:4 sampling supported")
+    sub = samps[0] == (2, 2)
+
+    missing = [
+        (cls, tid)
+        for sc in scan_comps
+        for cls, tid in ((0, sc[1]), (1, sc[2]))
+        if (cls, tid) not in scan_tables
+    ]
+    if missing:
+        raise ValueError(f"malformed JPEG: undeclared Huffman tables {missing}")
+    tabs = {
+        cid: (_lut_for(scan_tables[(0, td)]), _lut_for(scan_tables[(1, ta)]))
+        for cid, td, ta in scan_comps
+    }
+
+    # --- sequential entropy decode, LUT form (r8: VERDICT r7 task 4) --
+    # The pre-r8 decoder walked the scan bit-by-bit through Python
+    # closures (one function call + dict probe PER BIT) and ran a tiny
+    # 8x8 numpy IDCT PER BLOCK — profiled as the repo's most expensive
+    # query by 10x.  Now one Huffman LUT probe decodes a symbol
+    # (``_jpeg_bits``) and the IDCT runs batched over all blocks of a
+    # component (``_jpeg_pixels``).
     def decode_block(dc_lut, ac_lut, pred: int):
         """One block's 64 zigzag coefficients (plain int list) + new
         DC predictor; dequant/IDCT happen batched afterwards."""
         coefs = [0] * 64
         s = huff(dc_lut)
         if s:
-            pred += recv_extend(s)
+            if s > 11:
+                raise ValueError("malformed JPEG: bad DC magnitude")
+            pred += receive_extend(s)
         coefs[0] = pred
         k = 1
         while k < 64:
@@ -2579,112 +2711,38 @@ def decode_jpeg_real(payload: bytes) -> dict:
             k += run
             if k > 63:
                 raise ValueError("malformed JPEG: AC index overflow")
-            coefs[k] = recv_extend(size)
+            coefs[k] = receive_extend(size)
             k += 1
         return coefs, pred
 
-    if sub:
-        H, W = (hh + 15) // 16 * 16, (ww + 15) // 16 * 16
-        Yp = np.zeros((H, W))
-        Cbp = np.zeros((H // 2, W // 2))
-        Crp = np.zeros((H // 2, W // 2))
-        mcys, mcxs = H // 16, W // 16
-    else:
-        H, W = (hh + 7) // 8 * 8, (ww + 7) // 8 * 8
-        Yp = np.zeros((H, W))
-        Cbp = np.zeros((H, W))
-        Crp = np.zeros((H, W))
-        mcys, mcxs = H // 8, W // 8
-
-    missing = [
-        (cls, tid)
-        for sc in scan_comps
-        for cls, tid in ((0, sc[1]), (1, sc[2]))
-        if (cls, tid) not in htables
-    ]
-    if missing:
-        raise ValueError(f"malformed JPEG: undeclared Huffman tables {missing}")
-    tabs = {
-        sc[0]: (_lut_for(htables[(0, sc[1])]), _lut_for(htables[(1, sc[2])]))
-        for sc in scan_comps
-    }
-    for c in comps:
-        if c[3] not in qtables:
-            raise ValueError("malformed JPEG: undeclared quant table")
-    qts = {c[0]: qtables[c[3]] for c in comps}
+    # Pass 1: entropy-decode every block per component in MCU order —
+    # pure int work, no numpy in the loop.
+    mcu = 16 if sub else 8
+    mcys, mcxs = -(-hh // mcu), -(-ww // mcu)
     ids = [c[0] for c in comps]
-    preds = dict.fromkeys(ids, 0)
+    per_mcu = [(ids[0], 4 if sub else 1), (ids[1], 1), (ids[2], 1)]
+    rows: dict = {cid: [] for cid in ids}
+    for i in range(mcys * mcxs):
+        if i == 0 or (restart_interval and i % restart_interval == 0):
+            # each restart interval is its own entropy segment
+            # (byte-aligned by construction), DC predictors reset
+            seg_no = i // restart_interval if restart_interval else 0
+            if seg_no >= len(segments):
+                raise ValueError("malformed JPEG: missing restart segment")
+            huff, _receive, receive_extend = _jpeg_bits(segments[seg_no])
+            preds = dict.fromkeys(ids, 0)
+        for cid, nblk in per_mcu:
+            for _ in range(nblk):
+                coefs, preds[cid] = decode_block(*tabs[cid], preds[cid])
+                rows[cid].append(coefs)
 
-    # Pass 1: entropy-decode every block into (coefficient list, plane
-    # position) per component — pure int work, no numpy in the loop.
-    coef_rows: dict = {cid: [] for cid in ids}
-    pos_rows: dict = {cid: [] for cid in ids}
-    _mcu = 0
-    for my in range(mcys):
-        for mx in range(mcxs):
-            if restart_interval and _mcu and _mcu % restart_interval == 0:
-                # restart boundary: next entropy segment (byte-aligned
-                # by construction), DC predictors reset
-                _load_segment(_mcu // restart_interval)
-                preds = dict.fromkeys(ids, 0)
-            _mcu += 1
-            if sub:
-                for by in range(2):
-                    for bx in range(2):
-                        coefs, preds[ids[0]] = decode_block(
-                            *tabs[ids[0]], preds[ids[0]]
-                        )
-                        coef_rows[ids[0]].append(coefs)
-                        pos_rows[ids[0]].append(
-                            (my * 16 + by * 8, mx * 16 + bx * 8)
-                        )
-                for cid in (ids[1], ids[2]):
-                    coefs, preds[cid] = decode_block(*tabs[cid], preds[cid])
-                    coef_rows[cid].append(coefs)
-                    pos_rows[cid].append((my * 8, mx * 8))
-            else:
-                for cid in ids:
-                    coefs, preds[cid] = decode_block(*tabs[cid], preds[cid])
-                    coef_rows[cid].append(coefs)
-                    pos_rows[cid].append((my * 8, mx * 8))
-
-    # Pass 2: batched dequant -> dezigzag -> orthonormal IDCT per
-    # component (one (nb,8,8) matmul chain), then slice-place blocks.
-    zz_arr = np.array(zz, dtype=np.int64)
-    planes = {ids[0]: Yp, ids[1]: Cbp, ids[2]: Crp}
-    for cid in ids:
-        if not coef_rows[cid]:
-            continue
-        C = np.array(coef_rows[cid], dtype=np.int64) * qts[cid][None, :]
-        nb = C.shape[0]
-        flat = np.zeros((nb, 64))
-        flat[:, zz_arr] = C.astype(np.float64)
-        blocks = A.T @ flat.reshape(nb, 8, 8) @ A + 128.0
-        plane = planes[cid]
-        for i, (y, x) in enumerate(pos_rows[cid]):
-            plane[y : y + 8, x : x + 8] = blocks[i]
-
+    # Pass 2: the shared back end, on luma blocks in raster order.
+    ygh, ygw = mcys * (mcu // 8), mcxs * (mcu // 8)
+    Yrows = np.array(rows[ids[0]], dtype=np.int64).reshape(-1, 64)
     if sub:
-        Cbu = np.repeat(np.repeat(Cbp, 2, axis=0), 2, axis=1)
-        Cru = np.repeat(np.repeat(Crp, 2, axis=0), 2, axis=1)
-    else:
-        Cbu, Cru = Cbp, Crp
-    Yc = Yp[:hh, :ww]
-    Cbc = Cbu[:hh, :ww] - 128.0
-    Crc = Cru[:hh, :ww] - 128.0
-    r = np.clip(np.round(Yc + 1.402 * Crc), 0, 255).astype(np.int64)
-    g = np.clip(
-        np.round(Yc - 0.344136286 * Cbc - 0.714136286 * Crc), 0, 255
-    ).astype(np.int64)
-    b = np.clip(np.round(Yc + 1.772 * Cbc), 0, 255).astype(np.int64)
-    return {
-        "fmt": "jpeg",
-        "width": int(ww),
-        "height": int(hh),
-        "sum_r": int(r.sum()),
-        "sum_g": int(g.sum()),
-        "sum_b": int(b.sum()),
-    }
+        Yrows[_jpeg_luma_mcu_order(mcys, mcxs)] = Yrows.copy()
+    coefs = [(Yrows, ygh, ygw)] + [(rows[cid], mcys, mcxs) for cid in ids[1:]]
+    return _jpeg_pixels("jpeg", frame, qtables, coefs)
 
 
 @register(
@@ -2718,9 +2776,9 @@ def decode_jpeg_real(payload: bytes) -> dict:
     "~5x slack yet any structural decoder bug (wrong dequant, skipped "
     "un-zigzag, bad predictor, mis-walked MCUs) blows it by orders of "
     "magnitude on nearly every document.  The oracle emits the exact "
-    "dimensions and literal TRUEs.  The NotImplementedError gate now "
-    "honestly covers only progressive/arithmetic JPEG, GIF, WebP and "
-    "compressed audio (MP3/AAC/FLAC).",
+    "dimensions and literal TRUEs.  SOF2 streams go to the progressive "
+    "decoder; the NotImplementedError gate covers only arithmetic, "
+    "extended and lossless JPEG.",
 )
 def multimodal_decode_jpeg_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The sf0.1 fixture is ONE parquet file -> one scan partition; the
@@ -2773,36 +2831,30 @@ def encode_gif_indexed(
     (r, g, b); ``index_at(x, y)`` returns the palette index."""
     import struct
 
-    npal = len(palette)
-    bits = max(2, (npal - 1).bit_length())  # GIF minimum code size >= 2
-    size = 1 << bits
-
+    bits, table = _gif_palette(palette)
     out = bytearray(b"GIF89a")
     out += struct.pack("<HH", w, h)
-    out += bytes([0x80 | ((bits - 1) << 4) | (bits - 1), 0, 0])
-    for i in range(size):
-        r, g, b = palette[i] if i < npal else (0, 0, 0)
-        out += bytes([r, g, b])
+    out += bytes([0x80 | ((bits - 1) << 4) | (bits - 1), 0, 0]) + table
 
     out += b"\x2c" + struct.pack("<HHHH", 0, 0, w, h)
     out += bytes([0x40 if interlace else 0x00])
 
     # row order (interlace reorders rows across the four passes)
-    if interlace:
-        rows = (
-            list(range(0, h, 8))
-            + list(range(4, h, 8))
-            + list(range(2, h, 4))
-            + list(range(1, h, 2))
-        )
-    else:
-        rows = list(range(h))
+    rows = _gif_interlace_rows(h) if interlace else list(range(h))
     data = bytes(index_at(x, y) for y in rows for x in range(w))
 
     out += bytes([bits])
     out += _gif_lzw_compress(data, bits)
     out += b"\x00\x3b"
     return bytes(out)
+
+
+def _gif_palette(palette: list) -> tuple:
+    """``(bits, color table bytes)``: the palette zero-padded to 2^bits
+    entries, bits >= 2 (GIF's minimum LZW code size)."""
+    bits = max(2, (len(palette) - 1).bit_length())
+    pad = [(0, 0, 0)] * ((1 << bits) - len(palette))
+    return bits, b"".join(bytes(c) for c in list(palette) + pad)
 
 
 def _gif_lzw_compress(data: bytes, mcs: int) -> bytes:
@@ -2921,6 +2973,116 @@ def _gif_lzw_decompress(data: bytes, mcs: int, npix: int) -> bytearray:
     return out
 
 
+def _gif_interlace_rows(h: int) -> list:
+    """Row order of an interlaced GIF image: the 8/8/4/2 four passes."""
+    return (
+        list(range(0, h, 8))
+        + list(range(4, h, 8))
+        + list(range(2, h, 4))
+        + list(range(1, h, 2))
+    )
+
+
+def _gif_indices(data: bytes, mcs: int, w: int, h: int, interlaced: bool):
+    """One image's w*h palette indices in display row order: LZW
+    decompression, then interlace de-scrambling."""
+    out = _gif_lzw_decompress(data, mcs, w * h)
+    if not interlaced:
+        return out
+    rows = [None] * h
+    for i, y in enumerate(_gif_interlace_rows(h)):
+        rows[y] = out[i * w : (i + 1) * w]
+    return bytearray().join(bytes(r) for r in rows)
+
+
+def _gif_walk(payload: bytes) -> tuple:
+    """The one GIF block walk both decoders use.  Parses the signature,
+    the logical screen descriptor and the global color table, and
+    returns ``(sw, sh, bg_index, gct, images)``.  ``images`` is a
+    generator over the image descriptors in stream order: it skips
+    extension blocks, tracks the Graphics Control Extension that
+    precedes each image, and yields ``(x, y, w, h, palette, gce,
+    indices)`` — ``palette`` the local table or else the global one
+    (None if neither), ``gce`` ``{disposal, tidx}`` or None, and
+    ``indices()`` the image's de-interlaced LZW indices.  The trailer
+    ends the generator; structural damage raises ``ValueError``."""
+    import struct
+    from functools import partial
+
+    if payload[:6] not in (b"GIF87a", b"GIF89a"):
+        raise ValueError("not a GIF (bad signature)")
+    if len(payload) < 13:
+        raise ValueError("malformed GIF: truncated screen descriptor")
+    n = len(payload)
+
+    def color_table(pos: int, packed: int, what: str) -> tuple:
+        if not packed & 0x80:
+            return None, pos
+        k = 2 << (packed & 0x07)
+        if pos + 3 * k > n:
+            raise ValueError(f"malformed GIF: truncated {what}")
+        table = [
+            tuple(payload[pos + 3 * i : pos + 3 * i + 3]) for i in range(k)
+        ]
+        return table, pos + 3 * k
+
+    def subblocks(pos: int) -> tuple:
+        data = bytearray()
+        while True:
+            if pos >= n:
+                raise ValueError("malformed GIF: unterminated sub-blocks")
+            k = payload[pos]
+            pos += 1
+            if k == 0:
+                return data, pos
+            data += payload[pos : pos + k]
+            pos += k
+
+    def images(pos: int, gct):
+        gce = None
+        while True:
+            if pos >= n:
+                raise ValueError("malformed GIF: missing trailer")
+            intro = payload[pos]
+            pos += 1
+            if intro == 0x3B:
+                return
+            if intro == 0x21:  # extension: label + sub-blocks
+                if pos >= n:
+                    raise ValueError("malformed GIF: truncated extension")
+                if payload[pos] == 0xF9:
+                    if pos + 7 > n or payload[pos + 1] != 4:
+                        raise ValueError("malformed GIF: bad GCE block")
+                    gpk = payload[pos + 2]
+                    gce = {
+                        "disposal": (gpk >> 2) & 7,
+                        "tidx": payload[pos + 5] if gpk & 1 else None,
+                    }
+                _, pos = subblocks(pos + 1)
+                continue
+            if intro != 0x2C:
+                raise ValueError(f"malformed GIF: unknown block 0x{intro:02x}")
+            if pos + 9 > n:
+                raise ValueError("malformed GIF: truncated image descriptor")
+            x, y, w, h = struct.unpack_from("<HHHH", payload, pos)
+            ipacked = payload[pos + 8]
+            pal, pos = color_table(pos + 9, ipacked, "local color table")
+            if pos >= n:
+                raise ValueError("malformed GIF: missing LZW code size")
+            mcs = payload[pos]
+            if not 2 <= mcs <= 11:
+                raise ValueError("malformed GIF: bad LZW minimum code size")
+            data, pos = subblocks(pos + 1)
+            interlaced = bool(ipacked & 0x40)
+            indices = partial(_gif_indices, bytes(data), mcs, w, h, interlaced)
+            yield x, y, w, h, pal or gct, gce, indices
+            gce = None
+
+    sw, sh = struct.unpack_from("<HH", payload, 6)
+    gct, pos = color_table(13, payload[10], "color table")
+    return sw, sh, payload[11], gct, images(pos, gct)
+
+
 def decode_gif_real(payload: bytes) -> dict:
     """Real, dependency-free GIF decode: header + logical screen
     descriptor, global/local color tables, extension-block skipping
@@ -2929,107 +3091,21 @@ def decode_gif_real(payload: bytes) -> dict:
     ``decode_gif_anim`` since r10), optional interlace
     de-scrambling, and a full variable-width LZW decompressor
     (LSB-first, CLEAR/EOI, KwKwK self-reference case, width growth at
-    table size 2^n, 12-bit cap).
+    table size 2^n, 12-bit cap).  The walk (``_gif_walk``) stops at the
+    first image: nothing after it is read.
 
     Returns ``{fmt, width, height, sum_r, sum_g, sum_b}`` — exact
     integer channel sums (GIF is lossless).  Structural damage raises
     ``ValueError``; sort-of-supported-but-not features raise
     ``NotImplementedError`` (the WAV/PNG/JPEG gate discipline)."""
-    import struct
-
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF (bad signature)")
-    if len(payload) < 13:
-        raise ValueError("malformed GIF: truncated screen descriptor")
-    sw, sh = struct.unpack_from("<HH", payload, 6)
-    packed = payload[10]
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        if pos + 3 * n > len(payload):
-            raise ValueError("malformed GIF: truncated color table")
-        gct = [
-            tuple(payload[pos + 3 * i : pos + 3 * i + 3]) for i in range(n)
-        ]
-        pos += 3 * n
-
-    def skip_subblocks(p: int) -> int:
-        while True:
-            if p >= len(payload):
-                raise ValueError("malformed GIF: unterminated sub-blocks")
-            n = payload[p]
-            p += 1
-            if n == 0:
-                return p
-            p += n
-
-    while True:
-        if pos >= len(payload):
-            raise ValueError("malformed GIF: missing trailer")
-        intro = payload[pos]
-        pos += 1
-        if intro == 0x3B:
-            raise ValueError("malformed GIF: no image data")
-        if intro == 0x21:  # extension: label + sub-blocks
-            if pos >= len(payload):
-                raise ValueError("malformed GIF: truncated extension")
-            pos = skip_subblocks(pos + 1)
-            continue
-        if intro == 0x2C:
-            break
-        raise ValueError(f"malformed GIF: unknown block 0x{intro:02x}")
-
-    if pos + 9 > len(payload):
-        raise ValueError("malformed GIF: truncated image descriptor")
-    _lx, _ly, w, h = struct.unpack_from("<HHHH", payload, pos)
-    ipacked = payload[pos + 8]
-    pos += 9
-    interlaced = bool(ipacked & 0x40)
-    pal = gct
-    if ipacked & 0x80:
-        n = 2 << (ipacked & 0x07)
-        if pos + 3 * n > len(payload):
-            raise ValueError("malformed GIF: truncated local color table")
-        pal = [
-            tuple(payload[pos + 3 * i : pos + 3 * i + 3]) for i in range(n)
-        ]
-        pos += 3 * n
+    _sw, _sh, _bg, _gct, images = _gif_walk(payload)
+    first = next(images, None)
+    if first is None:
+        raise ValueError("malformed GIF: no image data")
+    _x, _y, w, h, pal, _gce, indices = first
     if pal is None:
         raise ValueError("malformed GIF: no color table")
-
-    if pos >= len(payload):
-        raise ValueError("malformed GIF: missing LZW code size")
-    mcs = payload[pos]
-    pos += 1
-    if not 2 <= mcs <= 11:
-        raise ValueError("malformed GIF: bad LZW minimum code size")
-
-    data = bytearray()
-    while True:
-        if pos >= len(payload):
-            raise ValueError("malformed GIF: unterminated image data")
-        n = payload[pos]
-        pos += 1
-        if n == 0:
-            break
-        data += payload[pos : pos + n]
-        pos += n
-
-    out = _gif_lzw_decompress(data, mcs, w * h)
-
-    if interlaced:
-        order = (
-            list(range(0, h, 8))
-            + list(range(4, h, 8))
-            + list(range(2, h, 4))
-            + list(range(1, h, 2))
-        )
-        rows = [None] * h
-        for i, y in enumerate(order):
-            rows[y] = out[i * w : (i + 1) * w]
-        out = bytearray().join(bytes(r) for r in rows)
-
+    out = indices()
     npal = len(pal)
     sr = sg = sb = 0
     for idx in out:
@@ -3061,16 +3137,11 @@ def encode_gif_anim(sw: int, sh: int, gpalette: list, frames: list,
     None for global), delay}``."""
     import struct
 
-    npal = len(gpalette)
-    gbits = max(2, (npal - 1).bit_length())
-    gsize = 1 << gbits
-
+    gbits, gtable = _gif_palette(gpalette)
     out = bytearray(b"GIF89a")
     out += struct.pack("<HH", sw, sh)
     out += bytes([0x80 | ((gbits - 1) << 4) | (gbits - 1), bg_index, 0])
-    for i in range(gsize):
-        r, g, b = gpalette[i] if i < npal else (0, 0, 0)
-        out += bytes([r, g, b])
+    out += gtable
 
     # NETSCAPE looping extension
     out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01" + struct.pack("<H", loop)
@@ -3090,13 +3161,8 @@ def encode_gif_anim(sw: int, sh: int, gpalette: list, frames: list,
             "<HHHH", fr["x"], fr["y"], fr["w"], fr["h"]
         )
         if pal is not None:
-            lbits = max(2, (len(pal) - 1).bit_length())
-            lsize = 1 << lbits
-            out += bytes([0x80 | (lbits - 1)])
-            for i in range(lsize):
-                r, g, b = pal[i] if i < len(pal) else (0, 0, 0)
-                out += bytes([r, g, b])
-            bits = lbits
+            bits, table = _gif_palette(pal)
+            out += bytes([0x80 | (bits - 1)]) + table
         else:
             out += b"\x00"
             bits = gbits
@@ -3113,130 +3179,31 @@ def encode_gif_anim(sw: int, sh: int, gpalette: list, frames: list,
 
 
 def decode_gif_anim(payload: bytes) -> dict:
-    """Real ANIMATED GIF decode: the full block walk (every image
-    descriptor, not just the first), Graphics Control Extensions
-    driving per-frame compositing — transparency indices skip pixels,
-    disposal 0/1 keeps the canvas, disposal 2 restores the frame's
-    rectangle to the background color, disposal 3 restores the
-    pre-frame canvas — with sub-rectangle frames, local color tables
-    and the same real LZW decompressor as the single-frame path.  The
-    canvas starts filled with the logical screen's background color.
-    Returns ``{fmt, width, height, n_frames, frames}`` where frames is
-    one (sum_r, sum_g, sum_b) triple per composited canvas state —
-    exact integers (GIF is lossless)."""
-    import struct
-
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF (bad signature)")
-    if len(payload) < 13:
-        raise ValueError("malformed GIF: truncated screen descriptor")
-    sw, sh = struct.unpack_from("<HH", payload, 6)
-    packed = payload[10]
-    bg_index = payload[11]
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        if pos + 3 * n > len(payload):
-            raise ValueError("malformed GIF: truncated color table")
-        gct = [
-            tuple(payload[pos + 3 * i : pos + 3 * i + 3]) for i in range(n)
-        ]
-        pos += 3 * n
+    """Real ANIMATED GIF decode: every image of the block walk
+    (``_gif_walk``, shared with the single-frame decoder, as are the
+    LZW decompressor and interlace handling), with Graphics Control
+    Extensions driving per-frame compositing — transparency indices
+    skip pixels, disposal 0/1 keeps the canvas, disposal 2 restores the
+    frame's rectangle to the background color, disposal 3 restores the
+    pre-frame canvas — with sub-rectangle frames and local color
+    tables.  The canvas starts filled with the logical screen's
+    background color; screens over 2^24 pixels raise
+    ``NotImplementedError``.  Returns ``{fmt, width, height, n_frames,
+    frames}`` where frames is one (sum_r, sum_g, sum_b) triple per
+    composited canvas state — exact integers (GIF is lossless)."""
+    sw, sh, bg_index, gct, images = _gif_walk(payload)
     if gct is None:
         raise ValueError("malformed GIF: animation needs a global table")
+    if sw * sh > 1 << 24:
+        raise NotImplementedError("GIF canvas over 2^24 pixels not supported")
     bg = gct[bg_index] if bg_index < len(gct) else (0, 0, 0)
 
     canvas = [bg] * (sw * sh)
     frames = []
-    gce = None
-
-    def skip_subblocks(p: int) -> int:
-        while True:
-            if p >= len(payload):
-                raise ValueError("malformed GIF: unterminated sub-blocks")
-            n = payload[p]
-            p += 1
-            if n == 0:
-                return p
-            p += n
-
-    while True:
-        if pos >= len(payload):
-            raise ValueError("malformed GIF: missing trailer")
-        intro = payload[pos]
-        pos += 1
-        if intro == 0x3B:
-            break
-        if intro == 0x21:
-            if pos >= len(payload):
-                raise ValueError("malformed GIF: truncated extension")
-            label = payload[pos]
-            pos += 1
-            if label == 0xF9:
-                if pos + 6 > len(payload) or payload[pos] != 4:
-                    raise ValueError("malformed GIF: bad GCE block")
-                gpk = payload[pos + 1]
-                tr = payload[pos + 4]
-                gce = {
-                    "disposal": (gpk >> 2) & 7,
-                    "tidx": tr if gpk & 1 else None,
-                }
-                pos = skip_subblocks(pos)
-            else:
-                pos = skip_subblocks(pos)
-            continue
-        if intro != 0x2C:
-            raise ValueError(f"malformed GIF: unknown block 0x{intro:02x}")
-
-        if pos + 9 > len(payload):
-            raise ValueError("malformed GIF: truncated image descriptor")
-        lx, ly, w, h = struct.unpack_from("<HHHH", payload, pos)
-        ipacked = payload[pos + 8]
-        pos += 9
+    for lx, ly, w, h, pal, gce, indices in images:
         if lx + w > sw or ly + h > sh:
             raise ValueError("malformed GIF: frame exceeds the screen")
-        interlaced = bool(ipacked & 0x40)
-        pal = gct
-        if ipacked & 0x80:
-            n = 2 << (ipacked & 0x07)
-            if pos + 3 * n > len(payload):
-                raise ValueError("malformed GIF: truncated local table")
-            pal = [
-                tuple(payload[pos + 3 * i : pos + 3 * i + 3])
-                for i in range(n)
-            ]
-            pos += 3 * n
-
-        if pos >= len(payload):
-            raise ValueError("malformed GIF: missing LZW code size")
-        mcs = payload[pos]
-        pos += 1
-        if not 2 <= mcs <= 11:
-            raise ValueError("malformed GIF: bad LZW minimum code size")
-        data = bytearray()
-        while True:
-            if pos >= len(payload):
-                raise ValueError("malformed GIF: unterminated image data")
-            n = payload[pos]
-            pos += 1
-            if n == 0:
-                break
-            data += payload[pos : pos + n]
-            pos += n
-        out = _gif_lzw_decompress(data, mcs, w * h)
-        if interlaced:
-            order = (
-                list(range(0, h, 8))
-                + list(range(4, h, 8))
-                + list(range(2, h, 4))
-                + list(range(1, h, 2))
-            )
-            rows = [None] * h
-            for i, y in enumerate(order):
-                rows[y] = out[i * w : (i + 1) * w]
-            out = bytearray().join(bytes(r) for r in rows)
-
+        out = indices()
         disposal = gce["disposal"] if gce else 0
         tidx = gce["tidx"] if gce else None
         prev_canvas = list(canvas) if disposal == 3 else None
@@ -3267,7 +3234,6 @@ def decode_gif_anim(payload: bytes) -> dict:
                     canvas[row + u] = bg
         elif disposal == 3:
             canvas = prev_canvas
-        gce = None
 
     if not frames:
         raise ValueError("malformed GIF: no image data")
@@ -3319,11 +3285,9 @@ def decode_gif_anim(payload: bytes) -> dict:
     "palette mapping.  GIF is LOSSLESS, so the oracle enumerates the "
     "same palette/index arithmetic in SQL and demands EXACT channel "
     "sums — any LZW width bug, interlace mis-order or palette slip "
-    "goes red on nearly every document.  The NotImplementedError "
-    "gate now honestly covers only WebP, progressive/arithmetic JPEG "
-    "and compressed audio.  Both stages are narrow mapInPandas "
-    "passes over a repartitioned 16-byte/row projection (the JPEG "
-    "query's parallelism lesson).",
+    "goes red on nearly every document.  Both stages are narrow "
+    "mapInPandas passes over a repartitioned 16-byte/row projection "
+    "(the JPEG query's parallelism lesson).",
 )
 def multimodal_decode_gif_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     def encode_row(doc_id, n_chars):
@@ -3992,191 +3956,71 @@ def encode_jpeg_progressive(rgb) -> bytes:
     per-component AC refinement scans (Ah=1 -> Al=0: newly-significant
     +-1 coefficients with correction bits for previously significant
     ones, libjpeg's encode_mcu_AC_refine algorithm).  EOB runs are
-    emitted as EOB0 per block (run length 1 — legal).
+    emitted as EOB0 per block (run length 1 — legal).  Colour
+    conversion, FDCT, tables, band coding, bit packing and headers are
+    the baseline encoder's.
 
     ``rgb`` is an (h, w, 3) uint8 numpy array."""
-    import struct
-
-    import numpy as np
-
     h, w = rgb.shape[:2]
-    A = _jpeg_dct_mat()
-    zz = _jpeg_zigzag()
-    zz_arr = np.array(zz, dtype=np.int64)
-
-    r = rgb[..., 0].astype(np.float64)
-    g = rgb[..., 1].astype(np.float64)
-    b = rgb[..., 2].astype(np.float64)
-    Y = np.clip(np.round(0.299 * r + 0.587 * g + 0.114 * b), 0, 255)
-    Cb = np.clip(
-        np.round(128.0 - 0.168735892 * r - 0.331264108 * g + 0.5 * b), 0, 255
-    )
-    Cr = np.clip(
-        np.round(128.0 + 0.5 * r - 0.418687589 * g - 0.081312411 * b), 0, 255
-    )
-
-    H = (h + 7) // 8 * 8
-    W = (w + 7) // 8 * 8
-
-    def pad(p):
-        return np.pad(p, ((0, H - h), (0, W - w)), mode="edge")
-
-    # batched FDCT + zigzag per component, raster block order (= MCU
-    # order at 4:4:4)
-    comps_zz = []
-    for plane in (pad(Y), pad(Cb), pad(Cr)):
-        gh, gw = H // 8, W // 8
-        blocks = (
-            plane.reshape(gh, 8, gw, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
-        )
-        q = np.round(A @ (blocks - 128.0) @ A.T).astype(np.int64)
-        comps_zz.append(q.reshape(-1, 64)[:, zz_arr].tolist())
+    # raster block order = MCU order at 4:4:4
+    comps_zz = [
+        q.tolist() for q in _jpeg_fdct_zigzag(_jpeg_ycbcr_planes(rgb, 8))
+    ]
     nblocks = len(comps_zz[0])
+    dc_code, ac_code = _JPEG_DC_SPEC[2], _JPEG_AC_SPEC[2]
 
-    DC_SYMS = list(range(12))
-    AC_SYMS = sorted(
-        {(rr << 4) | ss for rr in range(16) for ss in range(1, 11)}
-        | {0x00, 0xF0}
+    codes: list = []
+    lens: list = []
+    emit = codes.append
+    emitl = lens.append
+
+    out = bytearray(
+        _jpeg_header(0xC2, h, w, [(1, 0x11, 0), (2, 0x11, 0), (3, 0x11, 0)])
     )
-
-    def table_spec(syms):
-        bits = [0] * 16
-        bits[7] = len(syms)
-        return bits, syms, {s: (i, 8) for i, s in enumerate(syms)}
-
-    dc_bits, dc_vals, dc_code = table_spec(DC_SYMS)
-    ac_bits, ac_vals, ac_code = table_spec(AC_SYMS)
-
-    sym_codes: list = []
-    sym_lens: list = []
-
-    def emit(code: int, length: int) -> None:
-        sym_codes.append(code)
-        sym_lens.append(length)
-
-    def flush_scan() -> bytes:
-        scan = bytearray()
-        buf = 0
-        nbuf = 0
-        for c, L in zip(sym_codes, sym_lens):
-            buf = (buf << L) | c
-            nbuf += L
-            while nbuf >= 8:
-                nbuf -= 8
-                byte = (buf >> nbuf) & 0xFF
-                scan.append(byte)
-                if byte == 0xFF:
-                    scan.append(0x00)
-            buf &= (1 << nbuf) - 1
-        if nbuf:
-            byte = ((buf << (8 - nbuf)) | ((1 << (8 - nbuf)) - 1)) & 0xFF
-            scan.append(byte)
-            if byte == 0xFF:
-                scan.append(0x00)
-        sym_codes.clear()
-        sym_lens.clear()
-        return bytes(scan)
-
-    def seg(marker, data):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(data) + 2) + data
-
-    def dht(cls, tid, bits, vals):
-        return bytes([(cls << 4) | tid]) + bytes(bits) + bytes(vals)
-
-    def sos_header(comp_specs, ss, se, ah, al) -> bytes:
-        body = bytes([len(comp_specs)])
-        for cid, dc_t, ac_t in comp_specs:
-            body += bytes([cid, (dc_t << 4) | ac_t])
-        body += bytes([ss, se, (ah << 4) | al])
-        return seg(0xDA, body)
-
-    out = bytearray(b"\xff\xd8")
-    jfif = b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    out += seg(0xE0, jfif)
-    out += seg(0xDB, bytes([0]) + bytes([1] * 64))
-    sof = struct.pack(">BHHB", 8, h, w, 3)
-    for cid in (1, 2, 3):
-        sof += bytes([cid, 0x11, 0])  # 1x1 sampling, quant table 0
-    out += seg(0xC2, sof)  # SOF2 = progressive
-    out += seg(0xC4, dht(0, 0, dc_bits, dc_vals))
-    out += seg(0xC4, dht(1, 0, ac_bits, ac_vals))
 
     # ---- scan 1: DC first, interleaved, Al=1 ------------------------
-    out += sos_header([(1, 0, 0), (2, 0, 0), (3, 0, 0)], 0, 0, 0, 1)
+    out += _jpeg_sos([(1, 0, 0), (2, 0, 0), (3, 0, 0)], 0, 0, 0, 1)
     preds = [0, 0, 0]
     for bi in range(nblocks):
         for ci in range(3):
             v = comps_zz[ci][bi][0] >> 1  # DC point transform floors
-            diff = v - preds[ci]
+            _jpeg_emit_dc(v - preds[ci], dc_code, emit, emitl)
             preds[ci] = v
-            s = (diff if diff >= 0 else -diff).bit_length()
-            c, L = dc_code[s]
-            emit(c, L)
-            if s:
-                emit(diff + (1 << s) - 1 if diff < 0 else diff, s)
-    out += flush_scan()
+    out += _jpeg_pack(codes, lens)
 
     # ---- AC first scans, Al=1 (comp0 split into two bands) ----------
-    def ac_first(ci: int, ss: int, se: int, al: int) -> None:
-        for bi in range(nblocks):
-            zzc = comps_zz[ci][bi]
-            band = []
-            for k in range(ss, se + 1):
-                v = zzc[k]
-                band.append(
-                    (v >> al) if v >= 0 else -((-v) >> al)
-                )  # AC point transform truncates toward zero
-            last_nz = -1
-            for i in range(len(band) - 1, -1, -1):
-                if band[i]:
-                    last_nz = i
-                    break
-            run = 0
-            for i in range(last_nz + 1):
-                v = band[i]
-                if v == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    c, L = ac_code[0xF0]
-                    emit(c, L)
-                    run -= 16
-                s = (v if v >= 0 else -v).bit_length()
-                c, L = ac_code[(run << 4) | s]
-                emit(c, L)
-                emit(v + (1 << s) - 1 if v < 0 else v, s)
-                run = 0
-            if last_nz != len(band) - 1:
-                c, L = ac_code[0x00]  # EOB0: run length 1
-                emit(c, L)
-
     for ci, bands in ((0, [(1, 5), (6, 63)]), (1, [(1, 63)]), (2, [(1, 63)])):
         for ss, se in bands:
-            out += sos_header([(ci + 1, 0, 0)], ss, se, 0, 1)
-            ac_first(ci, ss, se, 1)
-            out += flush_scan()
+            out += _jpeg_sos([(ci + 1, 0, 0)], ss, se, 0, 1)
+            for zzc in comps_zz[ci]:
+                # AC point transform truncates toward zero
+                band = [
+                    (v >> 1) if v >= 0 else -((-v) >> 1)
+                    for v in zzc[ss : se + 1]
+                ]
+                _jpeg_emit_band(band, 0, ac_code, emit, emitl)
+            out += _jpeg_pack(codes, lens)
 
     # ---- DC refinement: Ah=1, Al=0 (one raw bit per block) ----------
-    out += sos_header([(1, 0, 0), (2, 0, 0), (3, 0, 0)], 0, 0, 1, 0)
+    out += _jpeg_sos([(1, 0, 0), (2, 0, 0), (3, 0, 0)], 0, 0, 1, 0)
     for bi in range(nblocks):
         for ci in range(3):
-            emit(comps_zz[ci][bi][0] & 1, 1)
-    out += flush_scan()
+            emit(comps_zz[ci][bi][0] & 1)
+            emitl(1)
+    out += _jpeg_pack(codes, lens)
 
     # ---- AC refinement scans: Ah=1 -> Al=0 ---------------------------
-    def ac_refine(ci: int, ss: int, se: int, al: int) -> None:
-        # libjpeg's encode_mcu_AC_refine algorithm: ZRLs are emitted on
-        # ENCOUNTERING any nonzero value while the zero-history run
-        # exceeds 15 (and only up to the last newly-significant index,
-        # EOB — runs beyond it fold into the EOB code), with pending
-        # correction bits flushed after every emitted symbol so the
-        # decoder's skip loop reads them in positional order.
-        for bi in range(nblocks):
-            zzc = comps_zz[ci][bi]
-            absv = [
-                (zzc[k] >> al) if zzc[k] >= 0 else ((-zzc[k]) >> al)
-                for k in range(ss, se + 1)
-            ]
+    # libjpeg's encode_mcu_AC_refine algorithm: ZRLs are emitted on
+    # ENCOUNTERING any nonzero value while the zero-history run exceeds
+    # 15 (and only up to the last newly-significant index, EOB — runs
+    # beyond it fold into the EOB code), with pending correction bits
+    # flushed after every emitted symbol so the decoder's skip loop
+    # reads them in positional order.
+    zrl, sym1, eob0 = ac_code[0xF0], ac_code[0x01], ac_code[0x00]
+    for ci in range(3):
+        out += _jpeg_sos([(ci + 1, 0, 0)], 1, 63, 1, 0)
+        for zzc in comps_zz[ci]:
+            absv = [v if v >= 0 else -v for v in zzc[1:64]]
             eob = -1
             for i in range(len(absv) - 1, -1, -1):
                 if absv[i] == 1:
@@ -4189,33 +4033,34 @@ def encode_jpeg_progressive(rgb) -> bytes:
                     run += 1
                     continue
                 while run > 15 and i <= eob:
-                    c, L = ac_code[0xF0]
-                    emit(c, L)
+                    emit(zrl[0])
+                    emitl(zrl[1])
                     run -= 16
                     for bit in br:
-                        emit(bit, 1)
+                        emit(bit)
+                        emitl(1)
                     br = []
                 if a > 1:
                     br.append(a & 1)
                     continue
                 # newly significant +-1 at this precision
                 c, L = ac_code[(run << 4) | 1]
-                emit(c, L)
-                emit(1 if zzc[ss + i] > 0 else 0, 1)
+                emit(c)
+                emitl(L)
+                emit(1 if zzc[1 + i] > 0 else 0)
+                emitl(1)
                 for bit in br:
-                    emit(bit, 1)
+                    emit(bit)
+                    emitl(1)
                 br = []
                 run = 0
             if run > 0 or br:
-                c, L = ac_code[0x00]  # EOB0
-                emit(c, L)
+                emit(eob0[0])  # EOB0
+                emitl(eob0[1])
                 for bit in br:
-                    emit(bit, 1)
-
-    for ci in range(3):
-        out += sos_header([(ci + 1, 0, 0)], 1, 63, 1, 0)
-        ac_refine(ci, 1, 63, 0)
-        out += flush_scan()
+                    emit(bit)
+                    emitl(1)
+        out += _jpeg_pack(codes, lens)
 
     out += b"\xff\xd9"
     return bytes(out)
@@ -4227,188 +4072,53 @@ def decode_jpeg_progressive(payload: bytes) -> dict:
     DC first + refinement scans (interleaved), per-component AC first
     scans (any band split), AC refinement scans (newly-significant
     coefficients, correction bits, EOB runs, ZRL-with-corrections — the
-    libjpeg decode_mcu_AC_refine algorithm), then one batched
-    dequant/dezigzag/IDCT over the accumulated coefficients.  Uses the
-    same Huffman-LUT fast path as the baseline decoder.
+    libjpeg decode_mcu_AC_refine algorithm).  The segment parser, the
+    Huffman LUTs, the bit reader and the dequant/IDCT/colour back end
+    are the ones ``decode_jpeg_real`` uses; only the entropy loop is
+    this decoder's own.
 
-    Honest gates: 4:2:0 progressive (subsampled MCU interleaving) and
-    restart intervals raise ``NotImplementedError``; structural damage
-    (bad band limits, stream desync, undefined tables) raises
-    ``ValueError``.  Returns the baseline decoder's
+    Honest gates: 4:2:0 progressive (subsampled MCU interleaving),
+    restart intervals and non-3-component frames raise
+    ``NotImplementedError``; structural damage (bad band limits, stream
+    desync, undefined tables, an AC scan before its component's DC
+    first scan) raises ``ValueError``.  Returns the baseline decoder's
     ``{fmt, width, height, sum_r, sum_g, sum_b}`` contract."""
-    import struct
+    return _jpeg_progressive(_jpeg_parse(payload))
 
-    import numpy as np
 
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-
-    zz = _jpeg_zigzag()
-    A = _jpeg_dct_mat()
-
-    qtables, htables = {}, {}
-    frame = None
-    pos = 2
-    # (comp_specs, ss, se, ah, al, data_start, data_end, table_snapshot)
-    # table_snapshot captures the DC/AC tables the scan references AT
-    # SOS-PARSE TIME: a later DHT segment may legally redefine a table
-    # id between scans (libjpeg's optimized output does), and resolving
-    # htables after the walk would decode earlier scans with the last
-    # scan's tables (r8 ADVICE, medium).  DHT rebinds a fresh dict per
-    # table, so holding references here is a true snapshot.
-    scans = []
-    while pos < len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("malformed JPEG: expected marker")
-        m = payload[pos + 1]
-        pos += 2
-        if m == 0xD9:
-            break
-        if m == 0x01 or 0xD0 <= m <= 0xD7:
-            continue
-        if pos + 2 > len(payload):
-            raise ValueError("malformed JPEG: truncated segment header")
-        (seglen,) = struct.unpack_from(">H", payload, pos)
-        if seglen < 2 or pos + seglen > len(payload):
-            raise ValueError("malformed JPEG: truncated segment")
-        data = payload[pos + 2 : pos + seglen]
-        end = pos + seglen
-        if m == 0xDB:
-            p = 0
-            while p < len(data):
-                pq, tq = data[p] >> 4, data[p] & 0xF
-                if pq != 0:
-                    raise NotImplementedError("16-bit quant tables")
-                qtables[tq] = np.array(
-                    list(data[p + 1 : p + 65]), dtype=np.int32
-                )
-                p += 65
-        elif m == 0xC4:
-            p = 0
-            while p < len(data):
-                cls, tid = data[p] >> 4, data[p] & 0xF
-                counts = list(data[p + 1 : p + 17])
-                nsym = sum(counts)
-                syms = list(data[p + 17 : p + 17 + nsym])
-                table, code, k = {}, 0, 0
-                for length in range(1, 17):
-                    for _ in range(counts[length - 1]):
-                        table[(length, code)] = syms[k]
-                        code += 1
-                        k += 1
-                    code <<= 1
-                htables[(cls, tid)] = table
-                p += 17 + nsym
-        elif m == 0xC2:
-            prec, hh, ww, nc = struct.unpack_from(">BHHB", data, 0)
-            if prec != 8:
-                raise NotImplementedError("only 8-bit precision")
-            comps = []
-            for i in range(nc):
-                cid, samp, tq = data[6 + 3 * i : 9 + 3 * i]
-                if samp != 0x11:
-                    raise NotImplementedError(
-                        "subsampled progressive JPEG not supported"
-                    )
-                comps.append((cid, tq))
-            frame = (hh, ww, comps)
-        elif m == 0xC0:
-            raise ValueError(
-                "baseline SOF0 stream passed to the progressive decoder"
-            )
-        elif m == 0xDD:
-            raise NotImplementedError("restart intervals not supported")
-        elif m == 0xDA:
-            ns = data[0]
-            specs = [
-                (data[1 + 2 * i], data[2 + 2 * i] >> 4, data[2 + 2 * i] & 0xF)
-                for i in range(ns)
-            ]
-            ss, se, ahal = data[1 + 2 * ns : 4 + 2 * ns]
-            # scan data runs to the next un-stuffed marker
-            p = end
-            while p < len(payload) - 1:
-                if payload[p] == 0xFF and payload[p + 1] not in (0x00,):
-                    if 0xD0 <= payload[p + 1] <= 0xD7:
-                        raise NotImplementedError("restart markers")
-                    break
-                p += 1
-            snap = {}
-            for _cid, _dct, _act in specs:
-                for ref in ((0, _dct), (1, _act)):
-                    if ref in htables:
-                        snap[ref] = htables[ref]
-            scans.append(
-                (specs, ss, se, ahal >> 4, ahal & 0xF, end, p, snap)
-            )
-            pos = p
-            continue
-        pos = end
-
+def _jpeg_progressive(parsed: tuple) -> dict:
+    """The progressive entropy loop over a ``_jpeg_parse`` result."""
+    sof, frame, qtables, restart_interval, scans = parsed
+    if sof == 0xC0:
+        raise ValueError(
+            "baseline SOF0 stream passed to the progressive decoder"
+        )
     if frame is None or not scans:
         raise ValueError("malformed JPEG: missing SOF2/SOS")
     hh, ww, comps = frame
-    H, W = (hh + 7) // 8 * 8, (ww + 7) // 8 * 8
-    gh, gw = H // 8, W // 8
+    if any((c[1], c[2]) != (1, 1) for c in comps):
+        raise NotImplementedError("subsampled progressive JPEG not supported")
+    if restart_interval:
+        raise NotImplementedError("restart intervals not supported")
+    if len(comps) != 3:
+        raise NotImplementedError("only 3-component YCbCr supported")
+    gh, gw = -(-hh // 8), -(-ww // 8)
     nblocks = gh * gw
-    coef = {
-        cid: [[0] * 64 for _ in range(nblocks)] for cid, _tq in comps
-    }
+    # A component's coefficients are allocated at its DC first scan,
+    # which must precede its other scans and codes >= 1 bit per block —
+    # so a corrupt frame size cannot allocate more than the data holds.
+    coef: dict = {}
 
-    def _lut_for(table: dict) -> list:
-        key = tuple(sorted(table.items()))
-        lut = _JPEG_LUT_CACHE.get(key)
-        if lut is None:
-            arr = np.zeros(1 << 16, dtype=np.uint16)
-            for (length, code), sym in table.items():
-                lo = code << (16 - length)
-                arr[lo : lo + (1 << (16 - length))] = (length << 8) | sym
-            lut = arr.tolist()
-            _JPEG_LUT_CACHE[key] = lut
-        return lut
-
-    for specs, ss, se, ah, al, d0, d1, scan_tables in scans:
-        # unstuff
-        raw = bytearray()
-        p = d0
-        while p < d1:
-            byte = payload[p]
-            raw.append(byte)
-            p += 2 if (byte == 0xFF and p + 1 < d1) else 1
-        nbits = len(raw) * 8
-        _sb = bytes(raw) + b"\x00" * 6
-        _a = np.frombuffer(_sb, dtype=np.uint8).astype(np.uint32)
-        b32 = (
-            (_a[:-3] << 24) | (_a[1:-2] << 16) | (_a[2:-1] << 8) | _a[3:]
-        ).tolist()
-        bitpos = 0
-
-        def rd(n: int) -> int:
-            nonlocal bitpos
-            if n == 0:
-                return 0
-            v = (b32[bitpos >> 3] >> (32 - (bitpos & 7) - n)) & (
-                (1 << n) - 1
-            )
-            bitpos += n
-            if bitpos > nbits:
-                raise ValueError("malformed JPEG: scan exhausted")
-            return v
-
-        def huff(lut) -> int:
-            nonlocal bitpos
-            w16 = (b32[bitpos >> 3] >> (16 - (bitpos & 7))) & 0xFFFF
-            packed = lut[w16]
-            length = packed >> 8
-            if length == 0:
-                raise ValueError("malformed JPEG: invalid Huffman code")
-            bitpos += length
-            if bitpos > nbits:
-                raise ValueError("malformed JPEG: scan exhausted")
-            return packed & 0xFF
-
-        def extend(v: int, s: int) -> int:
-            return v - (1 << s) + 1 if s and v < (1 << (s - 1)) else v
+    for specs, ss, se, ah, al, segments, scan_tables in scans:
+        huff, receive, receive_extend = _jpeg_bits(segments[0])
+        if ss == 0 and ah == 0:
+            if nblocks * len(specs) > 8 * len(segments[0]):
+                raise ValueError("malformed JPEG: scan data exhausted")
+            for cid, _dct, _act in specs:
+                if cid not in coef:
+                    coef[cid] = [[0] * 64 for _ in range(nblocks)]
+        if any(cid not in coef for cid, _dct, _act in specs):
+            raise ValueError("malformed JPEG: scan before its DC first scan")
 
         if ss == 0:  # DC scan (interleaved over the scan's components)
             if se != 0:
@@ -4423,13 +4133,16 @@ def decode_jpeg_progressive(payload: bytes) -> dict:
                 for bi in range(nblocks):
                     for cid, _dct, _act in specs:
                         s = huff(luts[cid])
-                        diff = extend(rd(s), s) if s else 0
-                        preds[cid] += diff
+                        if s > 11:
+                            raise ValueError(
+                                "malformed JPEG: bad DC magnitude"
+                            )
+                        preds[cid] += receive_extend(s) if s else 0
                         coef[cid][bi][0] = preds[cid] << al
             else:
                 for bi in range(nblocks):
                     for cid, _dct, _act in specs:
-                        if rd(1):
+                        if receive(1):
                             coef[cid][bi][0] |= 1 << al
         else:  # AC scan: exactly one component
             if len(specs) != 1:
@@ -4454,12 +4167,12 @@ def decode_jpeg_progressive(payload: bytes) -> dict:
                             if r == 15:
                                 k += 16
                                 continue
-                            eobrun = (1 << r) + (rd(r) if r else 0) - 1
+                            eobrun = (1 << r) + receive(r) - 1
                             break
                         k += r
                         if k > se:
                             raise ValueError("malformed JPEG: band overrun")
-                        zzc[k] = extend(rd(s), s) << al
+                        zzc[k] = receive_extend(s) << al
                         k += 1
             else:  # refinement pass
                 p1, m1 = 1 << al, -1 << al
@@ -4474,20 +4187,18 @@ def decode_jpeg_progressive(payload: bytes) -> dict:
                             val = 0
                             if s == 0:
                                 if r != 15:
-                                    eobrun = (1 << r) + (
-                                        rd(r) if r else 0
-                                    )
+                                    eobrun = (1 << r) + receive(r)
                                     break
                                 # ZRL: skip 16 zero-history positions
                             elif s == 1:
-                                val = p1 if rd(1) else m1
+                                val = p1 if receive(1) else m1
                             else:
                                 raise ValueError(
                                     "malformed JPEG: bad refine symbol"
                                 )
                             while k <= se:
                                 if zzc[k] != 0:
-                                    if rd(1) and not (
+                                    if receive(1) and not (
                                         zzc[k] & p1
                                         if zzc[k] > 0
                                         else (-zzc[k]) & p1
@@ -4506,7 +4217,7 @@ def decode_jpeg_progressive(payload: bytes) -> dict:
                         # remaining nonzero positions
                         while k <= se:
                             if zzc[k] != 0:
-                                if rd(1) and not (
+                                if receive(1) and not (
                                     zzc[k] & p1
                                     if zzc[k] > 0
                                     else (-zzc[k]) & p1
@@ -4515,38 +4226,10 @@ def decode_jpeg_progressive(payload: bytes) -> dict:
                             k += 1
                         eobrun -= 1
 
-    # batched dequant -> dezigzag -> IDCT, then 4:4:4 assembly
-    zz_arr = np.array(zz, dtype=np.int64)
-    planes = []
-    for cid, tq in comps:
-        if tq not in qtables:
-            raise ValueError("malformed JPEG: undeclared quant table")
-        C = np.array(coef[cid], dtype=np.int64) * qtables[tq][None, :]
-        flat = np.zeros((nblocks, 64))
-        flat[:, zz_arr] = C.astype(np.float64)
-        blocks = A.T @ flat.reshape(nblocks, 8, 8) @ A + 128.0
-        plane = np.zeros((H, W))
-        for i in range(nblocks):
-            y, x = (i // gw) * 8, (i % gw) * 8
-            plane[y : y + 8, x : x + 8] = blocks[i]
-        planes.append(plane)
-
-    Yc = planes[0][:hh, :ww]
-    Cbc = planes[1][:hh, :ww] - 128.0
-    Crc = planes[2][:hh, :ww] - 128.0
-    r = np.clip(np.round(Yc + 1.402 * Crc), 0, 255).astype(np.int64)
-    g = np.clip(
-        np.round(Yc - 0.344136286 * Cbc - 0.714136286 * Crc), 0, 255
-    ).astype(np.int64)
-    b = np.clip(np.round(Yc + 1.772 * Cbc), 0, 255).astype(np.int64)
-    return {
-        "fmt": "jpeg-progressive",
-        "width": int(ww),
-        "height": int(hh),
-        "sum_r": int(r.sum()),
-        "sum_g": int(g.sum()),
-        "sum_b": int(b.sum()),
-    }
+    if any(c[0] not in coef for c in comps):
+        raise ValueError("malformed JPEG: component without a DC first scan")
+    coefs = [(coef[c[0]], gh, gw) for c in comps]
+    return _jpeg_pixels("jpeg-progressive", frame, qtables, coefs)
 
 
 @register(

@@ -56,3 +56,15 @@ def oracle_decsum(expr: str) -> str:
 def oracle_decavg(expr: str) -> str:
     """DuckDB SQL mirror of :func:`decavg`."""
     return f"({oracle_decsum(expr)} / COUNT(*))"
+
+
+def q6_i64(x):
+    """numpy twin of the per-row micro-unit step: doubles to int64
+    micro-units with HALF-AWAY-FROM-ZERO rounding, matching DuckDB
+    ``round()`` and Spark ``ROUND`` exactly.  ``np.round`` is banker's
+    (half-to-even) and silently diverges cross-engine whenever
+    ``x * 1e6`` lands exactly on ``.5``."""
+    import numpy as np
+
+    y = np.asarray(x, dtype=np.float64) * 1_000_000.0
+    return (np.sign(y) * np.floor(np.abs(y) + 0.5)).astype(np.int64)

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as Wnd, functions as F
 
 from mincemeatpy_spark.lineage import truncate_eager, truncate_lazy
+from mincemeatpy_spark.operators._util import q6_i64
 from mincemeatpy_spark.registry import QUERIES, register
 from mincemeatpy_spark.tables import t
 
@@ -54,17 +55,6 @@ def _pq_queries(e: DataFrame) -> DataFrame:
         (F.col("vec_id") % _PQ_QMOD == 0)
         & (F.col("vec_id") < _PQ_QMOD * _PQ_QCAP)
     )
-
-
-def _q6_i64(x):
-    """Quantize doubles to int64 micro-units with HALF-AWAY-FROM-ZERO
-    rounding, matching DuckDB ``round()`` and Spark ``ROUND`` exactly.
-    ``np.round`` is banker's (half-to-even) and silently diverges
-    cross-engine whenever ``x * 1e6`` lands exactly on ``.5``."""
-    import numpy as np
-
-    y = np.asarray(x, dtype=np.float64) * 1_000_000.0
-    return (np.sign(y) * np.floor(np.abs(y) + 0.5)).astype(np.int64)
 
 
 def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -484,7 +474,7 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mincemeatpy_spark.tables import fan_out
 
     def gram_partials(batches):
-        import numpy as np  # self-contained: closure ships by value
+        import numpy as np
 
         acc = np.zeros((64, 64), dtype=np.int64)
         seen = False
@@ -496,10 +486,7 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             if len(flat) == 0:
                 continue
-            vecs = flat.astype(np.float64).reshape(-1, 64)
-            # half-away-from-zero, matching the oracle's round()
-            y = vecs * 1_000_000.0
-            q = (np.sign(y) * np.floor(np.abs(y) + 0.5)).astype(np.int64)
+            q = q6_i64(flat.reshape(-1, 64))
             acc += q.T @ q
             seen = True
         if seen:
@@ -810,12 +797,12 @@ def similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     rows = e.filter(F.col("vec_id") < 16).collect()
     # half-away-from-zero micro-quantization (matches the oracle's round())
-    cent = _q6_i64(
+    cent = q6_i64(
         [r["embedding"] for r in sorted(rows, key=lambda r: r["vec_id"])]
     )  # [16][64]
     qrows = _pq_queries(e).collect()  # <= _PQ_QCAP rows at any corpus size
     q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    q_mat = _q6_i64([r["embedding"] for r in qrows])
+    q_mat = q6_i64([r["embedding"] for r in qrows])
     # Per-subspace query→codeword distance tables: [8][nq][16]
     qtab = np.stack(
         [
@@ -829,7 +816,7 @@ def similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     bc = spark.sparkContext.broadcast((cent, q_ids, qtab))
 
     def adc(batches):
-        import numpy as np  # self-contained: closure ships by value
+        import numpy as np
 
         c, qi, qt = bc.value
         for batch in batches:
@@ -837,8 +824,7 @@ def similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             flat = batch.column("embedding").flatten().to_numpy(
                 zero_copy_only=False
             )
-            y = flat.astype(np.float64).reshape(-1, 64) * 1_000_000.0
-            mat = (np.sign(y) * np.floor(np.abs(y) + 0.5)).astype(np.int64)
+            mat = q6_i64(flat.reshape(-1, 64))
             n = len(ids)
             total = np.zeros((len(qi), n), dtype=np.int64)
             for s in range(8):
@@ -956,11 +942,11 @@ def similarity_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     qrows = _pq_queries(e).collect()  # <= _PQ_QCAP rows at any corpus size
     q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
     # half-away-from-zero micro-quantization (matches the oracle's round())
-    q_mat = _q6_i64([r["embedding"] for r in qrows])
+    q_mat = q6_i64([r["embedding"] for r in qrows])
     bc = spark.sparkContext.broadcast((q_ids, q_mat))
 
     def exact_dists(batches):
-        import numpy as np  # self-contained: closure ships by value
+        import numpy as np
 
         qi, qm = bc.value
         for batch in batches:
@@ -968,8 +954,7 @@ def similarity_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             flat = batch.column("embedding").flatten().to_numpy(
                 zero_copy_only=False
             )
-            y = flat.astype(np.float64).reshape(-1, 64) * 1_000_000.0
-            mat = (np.sign(y) * np.floor(np.abs(y) + 0.5)).astype(np.int64)
+            mat = q6_i64(flat.reshape(-1, 64))
             # ||q-v||^2 = q.q - 2 q.v + v.v — exact int64 (terms <= ~4e13)
             d = (
                 (qm * qm).sum(axis=1)[:, None]
@@ -1485,7 +1470,7 @@ def embedding_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()
     ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
     labs = np.array([r["label"] for r in rows], dtype=np.int64)
-    mat = _q6_i64([r["embedding"] for r in rows])
+    mat = q6_i64([r["embedding"] for r in rows])
     order = np.argsort(ids, kind="stable")
     ids, labs, mat = ids[order], labs[order], mat[order]
     nrm = np.sqrt((mat * mat).sum(axis=1).astype(np.float64))
@@ -1493,11 +1478,7 @@ def embedding_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     bc = spark.sparkContext.broadcast((ids, labs, mat, nrm))
 
     def knn(batches):
-        import numpy as np  # self-contained: closure ships by value
-
-        def q6(x):  # half-away-from-zero micro-quantize (matches oracle)
-            y = np.asarray(x, dtype=np.float64) * 1_000_000.0
-            return (np.sign(y) * np.floor(np.abs(y) + 0.5)).astype(np.int64)
+        import numpy as np
 
         b_ids, b_labs, b_mat, b_nrm = bc.value
         for batch in batches:
@@ -1506,7 +1487,7 @@ def embedding_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             flat = batch.column("embedding").flatten().to_numpy(
                 zero_copy_only=False
             )
-            a_mat = q6(flat.astype(np.float64).reshape(-1, 64))
+            a_mat = q6_i64(flat.reshape(-1, 64))
             a_nrm = np.sqrt((a_mat * a_mat).sum(axis=1).astype(np.float64))
             gram = a_mat @ b_mat.T  # exact int64
             cos = gram.astype(np.float64) / np.outer(a_nrm, b_nrm)
@@ -1599,7 +1580,7 @@ def embedding_label_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()
     ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
     labs = np.array([r["label"] for r in rows], dtype=np.int64)
-    mat = _q6_i64([r["embedding"] for r in rows])
+    mat = q6_i64([r["embedding"] for r in rows])
     order = np.argsort(ids, kind="stable")
     ids, labs, mat = ids[order], labs[order], mat[order]
     nrm = np.sqrt((mat * mat).sum(axis=1).astype(np.float64))
@@ -1607,11 +1588,7 @@ def embedding_label_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     bc = spark.sparkContext.broadcast((ids, labs, mat, nrm, uniq))
 
     def partials(batches):
-        import numpy as np  # self-contained: closure ships by value
-
-        def q6(x):  # half-away-from-zero micro-quantize (matches oracle)
-            y = np.asarray(x, dtype=np.float64) * 1_000_000.0
-            return (np.sign(y) * np.floor(np.abs(y) + 0.5)).astype(np.int64)
+        import numpy as np
 
         b_ids, b_labs, b_mat, b_nrm, u = bc.value
         masks = {int(l): b_labs == l for l in u}
@@ -1621,7 +1598,7 @@ def embedding_label_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
             flat = batch.column("embedding").flatten().to_numpy(
                 zero_copy_only=False
             )
-            a_mat = q6(flat.astype(np.float64).reshape(-1, 64))
+            a_mat = q6_i64(flat.reshape(-1, 64))
             a_nrm = np.sqrt((a_mat * a_mat).sum(axis=1).astype(np.float64))
             gram = a_mat @ b_mat.T  # exact int64
             cq = np.floor(
@@ -1952,7 +1929,7 @@ def similarity_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One bounded collect: the 8 coarse centroids are a prefix slice of
     # the 16 codebook seeds.
     rows16 = e.filter(F.col("vec_id") < 16).collect()
-    m16 = _q6_i64(
+    m16 = q6_i64(
         [r["embedding"] for r in sorted(rows16, key=lambda r: r["vec_id"])]
     )  # [16][64]
     cc = m16[:8]  # [8][64] coarse centroids
@@ -1966,7 +1943,7 @@ def similarity_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_ids = np.array(
         sorted(r["vec_id"] for r in qrows), dtype=np.int64
     )
-    q_mat = _q6_i64(
+    q_mat = q6_i64(
         [r["embedding"] for r in sorted(qrows, key=lambda r: r["vec_id"])]
     )
     # nprobe=2 nearest lists per query (stable argsort -> lowest id ties).
@@ -1991,7 +1968,7 @@ def similarity_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     bc = spark.sparkContext.broadcast((cc, book, q_ids, probes, qtab))
 
     def adc(batches):
-        import numpy as np  # self-contained: closure ships by value
+        import numpy as np
 
         c, bk, qi, pr, qt = bc.value
         nq = len(qi)
@@ -2000,8 +1977,7 @@ def similarity_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             flat = batch.column("embedding").flatten().to_numpy(
                 zero_copy_only=False
             )
-            y = flat.astype(np.float64).reshape(-1, 64) * 1_000_000.0
-            mat = (np.sign(y) * np.floor(np.abs(y) + 0.5)).astype(np.int64)
+            mat = q6_i64(flat.reshape(-1, 64))
             n = len(ids)
             lst = ((mat[:, None, :] - c[None, :, :]) ** 2).sum(axis=2).argmin(
                 axis=1
@@ -2202,11 +2178,11 @@ def similarity_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     qrows = _pq_queries(e).collect()  # <= _PQ_QCAP rows at any corpus size
     q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    q_mat = _q6_i64([r["embedding"] for r in qrows])
+    q_mat = q6_i64([r["embedding"] for r in qrows])
     bc = spark.sparkContext.broadcast((q_ids, q_mat))
 
     def exact_dists(batches):
-        import numpy as np  # self-contained: closure ships by value
+        import numpy as np
 
         qi, qm = bc.value
         for batch in batches:
@@ -2214,8 +2190,7 @@ def similarity_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             flat = batch.column("embedding").flatten().to_numpy(
                 zero_copy_only=False
             )
-            y = flat.astype(np.float64).reshape(-1, 64) * 1_000_000.0
-            mat = (np.sign(y) * np.floor(np.abs(y) + 0.5)).astype(np.int64)
+            mat = q6_i64(flat.reshape(-1, 64))
             d = (
                 (qm * qm).sum(axis=1)[:, None]
                 - 2 * (qm @ mat.T)
@@ -2783,14 +2758,14 @@ def similarity_ann_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     mn, span = _sq8_stats(e)
     qrows = _sq8_queries(e).collect()  # <= _SQ8_QCAP rows at any scale
     q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    q_mat = _q6_i64([r["embedding"] for r in qrows])
+    q_mat = q6_i64([r["embedding"] for r in qrows])
     bc = spark.sparkContext.broadcast(
         (q_ids, q_mat, np.array(mn, dtype=np.int64),
          np.array(span, dtype=np.int64))
     )
 
     def sq_adc(batches):
-        import numpy as np  # self-contained: closure ships by value
+        import numpy as np
 
         qi, qm, mnv, spv = bc.value
         safe = np.where(spv > 0, spv, 1)
@@ -2800,8 +2775,7 @@ def similarity_ann_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
             flat = batch.column("embedding").flatten().to_numpy(
                 zero_copy_only=False
             )
-            y = flat.astype(np.float64).reshape(-1, 64) * 1_000_000.0
-            mat = (np.sign(y) * np.floor(np.abs(y) + 0.5)).astype(np.int64)
+            mat = q6_i64(flat.reshape(-1, 64))
             codes = np.where(spv > 0, ((mat - mnv) * 255) // safe, 0)
             recon = mnv + (codes * spv) // 255
             d = (
@@ -2894,11 +2868,11 @@ def similarity_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     qrows = _sq8_queries(e).collect()  # <= _SQ8_QCAP rows at any scale
     q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    q_mat = _q6_i64([r["embedding"] for r in qrows])
+    q_mat = q6_i64([r["embedding"] for r in qrows])
     bc = spark.sparkContext.broadcast((q_ids, q_mat))
 
     def exact_dists(batches):
-        import numpy as np  # self-contained: closure ships by value
+        import numpy as np
 
         qi, qm = bc.value
         for batch in batches:
@@ -2906,8 +2880,7 @@ def similarity_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             flat = batch.column("embedding").flatten().to_numpy(
                 zero_copy_only=False
             )
-            y = flat.astype(np.float64).reshape(-1, 64) * 1_000_000.0
-            mat = (np.sign(y) * np.floor(np.abs(y) + 0.5)).astype(np.int64)
+            mat = q6_i64(flat.reshape(-1, 64))
             d = (
                 (qm * qm).sum(axis=1)[:, None]
                 - 2 * (qm @ mat.T)

@@ -27,7 +27,7 @@ from mincemeatpy_spark.registry import register
 
 
 def _row_words(i: int) -> list[str]:
-    """The three words of document ``i`` — shared by reader and tests."""
+    """The three words of document ``i`` — shared by both row generators."""
     return [f"w{i % 7}", f"w{(i * 3) % 11}", f"w{(i * 5) % 13}"]
 
 
@@ -44,7 +44,7 @@ def _make_datasource_class():
 
     # The row generator ships by value with the class (SCALE.md rule 14).
     def _gen(i: int) -> tuple:
-        return (i, f"w{i % 7} w{(i * 3) % 11} w{(i * 5) % 13}")
+        return (i, " ".join(_row_words(i)))
 
     class _Part(InputPartition):
         def __init__(self, start: int, end: int) -> None:
@@ -1225,7 +1225,7 @@ def _make_partitioned_stream_class():
     )
 
     def _gen(i: int) -> tuple:
-        return (i, f"w{i % 7} w{(i * 3) % 11} w{(i * 5) % 13}")
+        return (i, " ".join(_row_words(i)))
 
     class _Slice(InputPartition):
         def __init__(self, lo: int, hi: int) -> None:

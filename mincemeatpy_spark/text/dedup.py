@@ -26,6 +26,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
 from mincemeatpy_spark.lineage import truncate_eager, truncate_lazy
+from mincemeatpy_spark.operators._util import q6_i64
 from mincemeatpy_spark.registry import QUERIES, register
 from mincemeatpy_spark.tables import fan_out, t
 
@@ -587,14 +588,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
 
     # HALF-AWAY-FROM-ZERO micro-quantization, matching DuckDB round()
-    # and Spark F.round (the semdedup cluster path) exactly — np.round
-    # is banker's half-to-even and diverges whenever x*1e6 lands on .5
-    # (e.g. any odd multiple of 2^-7, exactly representable in floats).
-    def _q6(x):
-        y = np.asarray(x, dtype=np.float64) * 1_000_000.0
-        return (np.sign(y) * np.floor(np.abs(y) + 0.5)).astype(np.int64)
-
-    mat = _q6([r["embedding"] for r in rows])
+    # and Spark F.round (the semdedup cluster path) exactly.
+    mat = q6_i64([r["embedding"] for r in rows])
     order = np.argsort(ids, kind="stable")
     ids, mat = ids[order], mat[order]
     nrm = np.sqrt((mat * mat).sum(axis=1).astype(np.float64))
@@ -609,11 +604,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     bc = spark.sparkContext.broadcast((ids, mat.astype(np.float64), nrm))
 
     def pairs(batches):
-        import numpy as np  # self-contained: closure ships by value
-
-        def q6(x):
-            y = np.asarray(x, dtype=np.float64) * 1_000_000.0
-            return (np.sign(y) * np.floor(np.abs(y) + 0.5)).astype(np.int64)
+        import numpy as np
 
         b_ids, b_mat, b_nrm = bc.value
         for batch in batches:
@@ -621,7 +612,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             flat = batch.column("embedding").flatten().to_numpy(
                 zero_copy_only=False
             )
-            a_mat = q6(flat.astype(np.float64).reshape(-1, 64))
+            a_mat = q6_i64(flat.reshape(-1, 64))
             a_nrm = np.sqrt((a_mat * a_mat).sum(axis=1).astype(np.float64))
             # float64 BLAS matmul of exact integers — bit-identical to
             # the int64 product (dot <= 6.4e13 < 2^53; see driver-side

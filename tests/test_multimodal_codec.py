@@ -1170,3 +1170,110 @@ def test_gif_anim_single_frame_matches_single_decoder():
     a = decode_gif_real(single)
     b = decode_gif_anim(anim)
     assert (a["sum_r"], a["sum_g"], a["sum_b"]) == b["frames"][0]
+
+
+# ------------------------------------------- malformed-input sweep
+
+
+def _sweep_streams():
+    """Four encode/decode pairs, each as (decoder, good stream)."""
+    from mincemeatpy_spark.multimodal.binary_ops import (
+        decode_gif_real,
+        decode_jpeg_progressive,
+        decode_jpeg_real,
+        encode_gif_indexed,
+        encode_jpeg_baseline,
+        encode_jpeg_progressive,
+    )
+
+    x = np.arange(16)[None, :]
+    y = np.arange(24)[:, None]
+    rgb = np.stack(
+        [(x * 7 + y * 3) % 256, (x * 5 + y * 11) % 256, (x * 13 + y) % 256],
+        axis=-1,
+    ).astype(np.uint8)
+    pal = _anim_pal(5)
+    frames = [
+        dict(x=0, y=0, w=16, h=24, index_at=lambda u, v: (u + v) % 7 + 1,
+             disposal=1, transparent_idx=None, palette=None),
+        dict(x=2, y=2, w=8, h=8, index_at=lambda u, v: (2 * u + v) % 8,
+             disposal=2, transparent_idx=3, palette=None),
+        dict(x=0, y=0, w=16, h=2, index_at=lambda u, v: (5 * u + v) % 8,
+             disposal=3, transparent_idx=None, palette=_anim_pal(77)),
+    ]
+    return {
+        "jpeg_baseline": (decode_jpeg_real, encode_jpeg_baseline(rgb)),
+        "jpeg_progressive": (
+            decode_jpeg_progressive,
+            encode_jpeg_progressive(rgb),
+        ),
+        "gif_interlaced": (
+            decode_gif_real,
+            encode_gif_indexed(
+                16, 24, pal, lambda u, v: (u * 3 + v * 5) % 8, interlace=True
+            ),
+        ),
+        "gif_anim": (
+            decode_gif_anim,
+            encode_gif_anim(16, 24, pal, frames, bg_index=2),
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "case", ["jpeg_baseline", "jpeg_progressive", "gif_interlaced", "gif_anim"]
+)
+def test_malformed_streams_raise_only_valueerror(case):
+    """Every prefix of a good stream and 1,000 seeded 1-3 byte
+    overwrites of it: each decode returns, or raises ValueError
+    (structural damage) or NotImplementedError (an honest gate) —
+    never IndexError/KeyError from reading past a short segment."""
+    import random
+
+    decode, good = _sweep_streams()[case]
+    rng = random.Random(1)
+    inputs = [good[:i] for i in range(len(good))]
+    for _ in range(1000):
+        bad = bytearray(good)
+        for _ in range(rng.randint(1, 3)):
+            bad[rng.randrange(len(bad))] = rng.randrange(256)
+        inputs.append(bytes(bad))
+    escapes = []
+    for i, b in enumerate(inputs):
+        try:
+            decode(b)
+        except (ValueError, NotImplementedError):
+            pass
+        except Exception as e:  # noqa: BLE001 - the sweep's subject
+            escapes.append((i, type(e).__name__, str(e)))
+    assert not escapes, (len(escapes), escapes[:5])
+
+
+def test_oversized_frame_headers_fail_before_allocating():
+    """A corrupt size field must not make a decoder allocate for the
+    claimed frame: the JPEG decoders size their coefficient storage by
+    the entropy data, and an animated GIF refuses a canvas over 2^24
+    pixels (a 65535 x 65535 screen is a 4-gigapixel list)."""
+    from mincemeatpy_spark.multimodal.binary_ops import (
+        decode_jpeg_progressive,
+        decode_jpeg_real,
+        encode_jpeg_baseline,
+        encode_jpeg_progressive,
+    )
+
+    huge = struct.pack(">HH", 65535, 65535)
+    for decode, good, sof in (
+        (decode_jpeg_real, encode_jpeg_baseline(_gradient_rgb(16, 8)),
+         b"\xff\xc0"),
+        (decode_jpeg_progressive,
+         encode_jpeg_progressive(_gradient_rgb(16, 8)), b"\xff\xc2"),
+    ):
+        at = good.index(sof) + 5  # marker, length, precision
+        with pytest.raises(ValueError):
+            decode(good[:at] + huge + good[at + 4 :])
+
+    frames = [dict(x=0, y=0, w=4, h=4, index_at=lambda u, v: 1, disposal=0,
+                   transparent_idx=None, palette=None)]
+    good = encode_gif_anim(4, 4, _anim_pal(3), frames)
+    with pytest.raises(NotImplementedError, match="canvas"):
+        decode_gif_anim(good[:6] + b"\xff\xff\xff\xff" + good[10:])

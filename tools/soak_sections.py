@@ -38,7 +38,8 @@ def main() -> None:
     spark = get_spark("mincemeatpy-soak-sections")
     queries = load_all_queries()
     missing = [n for n in names if n not in queries]
-    assert not missing, f"unknown queries: {missing}"
+    if missing:
+        raise ValueError(f"unknown queries: {missing}")
 
     def best_of(name: str, sf_dir: str, runs: int = 2) -> float:
         best = float("inf")

@@ -39,7 +39,8 @@ NON_STREAMING_EXTENDED = [
 def main() -> None:
     sf_small = os.environ.get("SOAK_BASE_DIR", "/root/testdata/sf0.1")
     sf_big = os.environ.get("SOAK_BIG_DIR", "/tmp/sfscale/sf1")
-    assert set(NON_STREAMING_EXTENDED) <= set(EXTENDED)
+    if not set(NON_STREAMING_EXTENDED) <= set(EXTENDED):
+        raise ValueError("NON_STREAMING_EXTENDED names a query outside EXTENDED")
     names = HEADLINE + NON_STREAMING_EXTENDED
 
     spark = get_spark("mincemeatpy-soak")

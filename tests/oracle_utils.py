@@ -43,7 +43,7 @@ def normalize(columns: list[str], rows: list[tuple]) -> list[tuple]:
     return out
 
 
-def assert_driver_canon_compatible(spark_df) -> None:
+def assert_driver_canon_compatible(schema) -> None:
     """Registry-wide guard (VERDICT r10 task 1): the driver's pandas
     canonicalizer does ``sort_values`` over ALL output columns, which
     raises ``TypeError: unhashable type`` on any ArrayType/MapType cell
@@ -51,14 +51,14 @@ def assert_driver_canon_compatible(spark_df) -> None:
     ``orders_nested_export`` went red in CORRECTNESS_r10 despite
     value-correct output.  Every driver-facing FINAL schema must
     therefore be flat (atomic columns only); nested types are fine in
-    intermediate plans.  Checked on the schema (cheap, pre-collect) for
+    intermediate plans.  Checked on the schema for
     every registered query via test_oracle.py's full-registry
     parametrization."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
     nested = [
         f.name
-        for f in spark_df.schema.fields
+        for f in schema.fields
         if isinstance(f.dataType, (ArrayType, MapType, StructType))
     ]
     assert not nested, (
@@ -71,9 +71,16 @@ def assert_driver_canon_compatible(spark_df) -> None:
 
 def compare_to_oracle(spark_df, duck, oracle_sql: str) -> None:
     """Assert the Spark result and the DuckDB oracle result match."""
-    assert_driver_canon_compatible(spark_df)
-    s_cols = list(spark_df.columns)
-    s_rows = [tuple(r) for r in spark_df.collect()]
+    compare_rows_to_oracle(
+        spark_df.schema, [tuple(r) for r in spark_df.collect()], duck, oracle_sql
+    )
+
+
+def compare_rows_to_oracle(schema, s_rows: list[tuple], duck, oracle_sql: str) -> None:
+    """Assert already-collected Spark rows (with their schema) match the
+    DuckDB oracle result."""
+    assert_driver_canon_compatible(schema)
+    s_cols = list(schema.names)
 
     rel = duck.execute(oracle_sql)
     d_cols = [c[0] for c in rel.description]

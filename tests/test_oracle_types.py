@@ -7,7 +7,8 @@ every value is identical (the round-3 red rows).  The local comparison in
 ``oracle_utils.normalize`` deliberately erases type differences, so this
 audit is the only local guard: for EVERY registered oracle, bind the SQL
 in DuckDB (no fetch needed — binding resolves result types) and assert
-its result types are hash-compatible with the Spark schema.
+its result types are hash-compatible with the Spark schema, which
+comes from the session's one registry pass (no second build).
 
 Rules (mirroring what the driver's pandas/Arrow conversion preserves):
 - HUGEINT/UHUGEINT anywhere is an immediate failure — Spark has no int128.
@@ -19,12 +20,6 @@ Rules (mirroring what the driver's pandas/Arrow conversion preserves):
 from __future__ import annotations
 
 import pytest
-
-
-# r14 slow lane (VERDICT r13 task 2): type-compat shadow of test_oracle (~260 s); the default
-# `pytest tests/` run must fit the driver verify window — run with
-# --runslow or SPARK_GRAFT_FULL_TESTS=1.
-pytestmark = pytest.mark.slow
 
 from mincemeatpy_spark.registry import load_all_queries
 
@@ -38,12 +33,11 @@ _QUERIES = [q for q in load_all_queries().values() if q.oracle is not None]
 
 
 @pytest.mark.parametrize("query", _QUERIES, ids=lambda q: q.name)
-def test_oracle_types_hash_compatible(query, spark, duck, sf_dir):
+def test_oracle_types_hash_compatible(query, registry_run, duck):
     rel = duck.sql(query.oracle)
     duck_types = {c: str(t).upper() for c, t in zip(rel.columns, rel.types)}
 
-    sdf = query.fn(spark, sf_dir)
-    spark_types = dict(sdf.dtypes)
+    spark_types = dict(registry_run(query.name).checked().dtypes)
 
     for col, dt in duck_types.items():
         assert "HUGEINT" not in dt, (

@@ -5,16 +5,17 @@ Usage:
 
 With no names: headline + extended bench queries (streaming *_e2e
 entries are skipped — their fn() executes a stream, which is a run,
-not a plan).  Writes plans/<tag>/<name>_<suffix>.txt plus a one-line
-summary (Exchange count, join nodes, python-eval nodes) per query to
-stdout so the round notes can quote plan shapes without re-running.
+not a plan).  Writes plans/<tag>/<name>_<suffix>.txt plus the query's
+``plan_facts`` (exchanges, joins and Python operators by kind, expensive
+calls) on one stdout line, so notes can quote plan shapes without
+re-running.
 """
 
 from __future__ import annotations
 
 import io
+import json
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -30,28 +31,11 @@ def plan_text(df) -> str:
     )
 
 
-def summarize(plan: str) -> str:
-    ex = len(re.findall(r"\bExchange ", plan))
-    joins = re.findall(
-        r"\b(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|"
-        r"BroadcastNestedLoopJoin|CartesianProduct)\b",
-        plan,
-    )
-    py = len(
-        re.findall(r"\b(BatchEvalPython|ArrowEvalPython|MapInArrow|FlatMapGroupsInPandas|MapInPandas)\b", plan)
-    )
-    agg = len(re.findall(r"\bHashAggregate\b", plan))
-    from collections import Counter
-
-    jc = Counter(joins)
-    js = ",".join(f"{k}:{v}" for k, v in sorted(jc.items())) or "-"
-    return f"exchanges={ex} joins={js} pyeval={py} hashagg={agg}"
-
-
 def main() -> None:
     tag, suffix = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
     import bench
+    from mincemeatpy_spark.plans import executed_plan, plan_facts
     from mincemeatpy_spark.registry import load_all_queries
     from mincemeatpy_spark.session import get_spark
 
@@ -74,6 +58,7 @@ def main() -> None:
         try:
             df = queries[name].fn(spark, sf_dir)
             plan = plan_text(df)
+            facts = plan_facts(executed_plan(df))
         except Exception as ex:  # noqa: BLE001
             print(f"{name}: ERROR {type(ex).__name__}: {ex}")
             continue
@@ -81,7 +66,7 @@ def main() -> None:
             os.path.join(outdir, f"{name}_{suffix}.txt"), "w"
         ) as f:
             f.write(plan)
-        print(f"{name}: {summarize(plan)}")
+        print(f"{name}: {json.dumps(facts, sort_keys=True)}")
 
 
 if __name__ == "__main__":

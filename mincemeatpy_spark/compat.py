@@ -30,6 +30,31 @@ mincemeat.py:284-290, README.md:93-96) — captures closures and referenced
 globals, so ``import`` inside the function body is supported but no longer
 required.
 
+Dataflow: the reference's two plain-dict passes, one per side of a
+Spark shuffle.
+
+1. Map side, one ``mapPartitions``: ``mapfn`` runs over the partition's
+   items and its pairs group into a plain ``{k: [v, ...]}`` dict in the
+   same pass.  With ``collectfn`` each key ships as ``[collectfn(k, vs)]``,
+   once per key per partition; without it the value list ships as is.
+2. Shuffle: ``partitionBy(n)`` with Spark's default ``portable_hash``,
+   which hashes ``None`` and tuples holding it alike in every worker.
+3. Reduce side, one ``mapPartitions``: the shipped lists extend-merge into
+   a plain dict (reference mincemeat.py:344-347) and each key yields
+   ``(k, reducefn(k, vs))`` with ``vs`` a real ``list``.
+
+Spill: both dicts check the worker's memory every batch of inserts, the
+way ``pyspark.shuffle.ExternalMerger`` batches its own checks.  Past
+``spark.python.worker.memory`` (read on the driver when the job is built)
+a side hands its dict to an ``ExternalMerger`` — the spilling merger on
+``groupByKey``'s map side — and streams the rest of its input through
+it, so a partition larger than worker memory spills to disk instead of
+failing.  The reduce side uses it too, not ``groupByKey``'s
+``ExternalGroupBy``: that one sorts the keys of a spill holding fewer
+than 1000 of them, which raises on keys of mixed types such as ``None``
+and ``str``.  Below the limit, each value costs one dict insert and no
+Python call beyond ``mapfn``.
+
 Scale note: ``mapreduce`` collects the final dict to the driver because
 that IS the reference's sink contract.  For 100 TB pipelines use the
 DataFrame operators in ``operators/`` and write to parquet; this API is
@@ -50,16 +75,56 @@ parallelize as items directly.
 from __future__ import annotations
 
 from collections.abc import Callable, Iterable, Mapping
+from itertools import chain, starmap
 from typing import Any
 
+from pyspark.shuffle import Aggregator, ExternalMerger, get_used_memory
 from pyspark.sql import SparkSession
 
 
-def _items(datasource: Any) -> list[tuple[Any, Any]]:
-    """Materialize the dict-like contract: iter() -> keys, [k] -> value."""
-    if isinstance(datasource, Mapping):
-        return list(datasource.items())
-    return [(k, datasource[k]) for k in datasource]
+def _append(vs: list[Any], v: Any) -> list[Any]:
+    vs.append(v)
+    return vs
+
+
+def _extend(vs: list[Any], ws: list[Any]) -> list[Any]:
+    vs.extend(ws)
+    return vs
+
+
+def _grouped(
+    pairs: Iterable[tuple[Any, Any]], limit: float, lists: bool
+) -> Iterable[tuple[Any, list[Any]]]:
+    """Group ``(k, x)`` pairs into a plain ``{k: [v, ...]}``; return its items.
+
+    Each ``x`` is one value to append, or with ``lists`` a list to
+    extend-merge.  The worker's memory is checked after 1000 inserts and
+    then after every 1.5x more, as ``ExternalMerger.mergeValues`` does.
+    Past ``limit`` MiB the dict becomes the in-memory data of an
+    ``ExternalMerger`` that takes the rest of ``pairs``, spills as it
+    needs, and yields the merged items.
+    """
+    groups: dict[Any, Any] = {}
+    get = groups.get
+    it = iter(pairs)
+    n, batch = 0, 1000
+    for k, x in it:
+        vs = get(k)
+        if vs is None:
+            groups[k] = x if lists else [x]
+        elif lists:
+            vs.extend(x)
+        else:
+            vs.append(x)
+        n += 1
+        if n >= batch:
+            if get_used_memory() >= limit:
+                merger = ExternalMerger(Aggregator(lambda v: [v], _append, _extend), limit)
+                merger.data = groups
+                (merger.mergeCombiners if lists else merger.mergeValues)(it)
+                return merger.items()
+            batch *= 1.5
+    return groups.items()
 
 
 def mapreduce(
@@ -95,32 +160,31 @@ def mapreduce(
         ds = datasource  # cloudpickled once per task; __getitem__ runs there
         rdd = sc.parallelize(keys, n_part).map(lambda k: (k, ds[k]))
     else:
-        items = _items(datasource)
+        if isinstance(datasource, Mapping):
+            items = list(datasource.items())
+        else:
+            items = [(k, datasource[k]) for k in datasource]
         n_part = num_partitions or min(max(1, len(items)), sc.defaultParallelism)
         rdd = sc.parallelize(items, n_part)
 
-    mapped = rdd.flatMap(lambda kv: mapfn(kv[0], kv[1]))
+    memory = rdd._memory_limit()  # spark.python.worker.memory, MiB
 
-    if collectfn is not None:
-        # Map-side combine: group per partition, apply collectfn once per
-        # key per partition (the reference's per-map-task combine,
-        # mincemeat.py:174-176).
-        cfn = collectfn
+    def map_side(part: Iterable[tuple[Any, Any]]) -> Iterable[tuple[Any, list[Any]]]:
+        # 0.9 of the limit, as groupByKey's map side, leaves room for
+        # partitionBy's buckets.
+        pairs = chain.from_iterable(starmap(mapfn, part))
+        groups = _grouped(pairs, memory * 0.9, False)
+        if collectfn is None:
+            return groups
+        # The reference's per-map-task combine, re-wrapped in a list
+        # (mincemeat.py:174-176).
+        return ((k, [collectfn(k, vs)]) for k, vs in groups)
 
-        def _local_combine(part: Iterable[tuple[Any, Any]]):
-            acc: dict[Any, list[Any]] = {}
-            for k, v in part:
-                acc.setdefault(k, []).append(v)
-            for k, vs in acc.items():
-                yield k, cfn(k, vs)
+    def reduce_side(part: Iterable[tuple[Any, list[Any]]]) -> Iterable[tuple[Any, Any]]:
+        for k, vs in _grouped(part, memory, True):
+            yield k, reducefn(k, vs)
 
-        mapped = mapped.mapPartitions(_local_combine, preservesPartitioning=False)
-
-    rfn = reducefn
-    reduced = (
-        mapped.groupByKey(numPartitions=n_part)
-        .map(lambda kv: (kv[0], rfn(kv[0], list(kv[1]))))
-    )
+    reduced = rdd.mapPartitions(map_side).partitionBy(n_part).mapPartitions(reduce_side)
     return dict(reduced.collect())
 
 
@@ -154,7 +218,6 @@ def compat_mapreduce_wordcount(spark: SparkSession, sf_dir: str):
     the exact shape of the reference's ``dict(enumerate(lines))`` fixture
     (reference example.py:9-10), at table scale.
     """
-    from pyspark.sql import functions as F  # noqa: F401
     from mincemeatpy_spark.tables import t
 
     docs = {

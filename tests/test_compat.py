@@ -5,6 +5,8 @@ compared order-insensitively (FIXTURES.md Fixture 0).
 
 from __future__ import annotations
 
+import contextlib
+
 from mincemeatpy_spark.compat import mapreduce
 
 CORPUS = {
@@ -108,6 +110,51 @@ def test_reducefn_sees_all_values_of_key(spark):
 
     result = mapreduce(spark, {i: i for i in range(30)}, mapfn, reducefn, num_partitions=7)
     assert result == {0: 10, 1: 10, 2: 10}
+
+
+def test_collectfn_once_per_key_per_partition(spark):
+    # The reference applies collectfn once per key per map task
+    # (mincemeat.py:174-176); a map task here is one partition.  And
+    # reducefn gets a real list, as the master's merged dict holds
+    # (mincemeat.py:344-347), so in-place list methods work on it.
+    def mfn(k, v):
+        yield "x", k  # "x" appears in every partition
+
+    def rfn(k, vs):
+        is_list = isinstance(vs, list)
+        vs.sort()
+        return is_list, vs
+
+    ds = {i: i for i in range(9)}
+    out = mapreduce(spark, ds, mfn, rfn, collectfn=lambda k, vs: len(vs), num_partitions=3)
+    is_list, counts = out["x"]
+    assert is_list
+    assert len(counts) == 3 and sum(counts) == len(ds)
+
+
+def test_none_and_tuple_keys_reach_one_reducer(spark):
+    # Keys holding None hash alike in every Python process only through
+    # portable_hash; a per-process hash would split a key across
+    # reducers, and the collected dict would keep one partial list.
+    # Workers forked from one daemon share hash(None), so the check on
+    # the reduce partition is what tells portable_hash from hash here.
+    from pyspark.rdd import portable_hash
+
+    keys = [None, (None, 1), ("a", None)]
+
+    def mfn(k, v):
+        for key in keys:
+            yield key, k
+
+    def rfn(k, vs):
+        from pyspark import TaskContext
+
+        return sorted(vs), TaskContext.get().partitionId()
+
+    out = mapreduce(spark, {i: i for i in range(16)}, mfn, rfn, num_partitions=4)
+    # portable_hash needs the workers' PYTHONHASHSEED, so it runs there.
+    parts = spark.sparkContext.parallelize(keys, 1).map(lambda k: portable_hash(k) % 4)
+    assert out == {key: (list(range(16)), p) for key, p in zip(keys, parts.collect())}
 
 
 def test_non_dict_datasource(spark):
@@ -486,3 +533,105 @@ def test_add_py_file_reaches_warm_workers(spark, tmp_path):
         return [importlib.import_module(name).VALUE]
 
     assert sc.parallelize(range(4), 4).mapPartitions(import_value).collect() == [42] * 4
+
+
+_WORKER_MEMORY = "spark.python.worker.memory"
+
+
+@contextlib.contextmanager
+def _worker_memory(sc, value: str):
+    """Set ``spark.python.worker.memory`` for the block, then restore it.
+    ``mapreduce`` reads it on the driver when it builds a job."""
+    saved = sc._conf.get(_WORKER_MEMORY)
+    sc._conf.set(_WORKER_MEMORY, value)
+    try:
+        yield
+    finally:
+        if saved is None:
+            sc._conf._jconf.remove(_WORKER_MEMORY)
+        else:
+            sc._conf.set(_WORKER_MEMORY, saved)
+
+
+def _stage_spills(sc, group: str) -> dict[str, int]:
+    """``{"map": bytes, "reduce": bytes}`` of disk spill in the jobs of
+    ``group``, read from the AppStatusStore.  The map stage is the one
+    that writes shuffle output, the reduce stage the one that reads it."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jvm = sc._jvm
+    store = sc._jsc.sc().statusStore()
+    spills = {"map": 0, "reduce": 0}
+    for jid in sc.statusTracker().getJobIdsForGroup(group):
+        sids = store.job(jid).stageIds()
+        for i in range(sids.size()):
+            attempts = store.stageData(
+                sids.apply(i), False, jvm.java.util.ArrayList(), False,
+                sc._gateway.new_array(jvm.double, 0),
+            )
+            for a in range(attempts.size()):
+                sd = attempts.apply(a)
+                if sd.shuffleWriteBytes() > 0:
+                    spills["map"] += sd.diskBytesSpilled()
+                if sd.shuffleReadBytes() > 0:
+                    spills["reduce"] += sd.diskBytesSpilled()
+    return spills
+
+
+def test_spill_fallback_keeps_results(spark):
+    # Past spark.python.worker.memory both sides hand their dicts to
+    # pyspark's spilling mergers; results must not change.  2m is below
+    # any worker's RSS, so every partition of a few thousand words
+    # spills on both sides of the shuffle.
+    import random
+    from collections import Counter
+
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(3000)]
+    ds = {i: " ".join(rng.choice(vocab) for _ in range(20)) for i in range(600)}
+    counts = dict(Counter(w for text in ds.values() for w in text.split()))
+    index: dict = {}
+    for k, text in ds.items():
+        for w in set(text.split()):
+            index.setdefault(w, []).append(k)
+
+    def idx_map(k, v):
+        for w in set(v.split()):
+            yield w, k
+
+    def idx_reduce(k, vs):
+        return sorted(vs)
+
+    jobs = {
+        "wordcount": (mapfn, reducefn, None, counts),
+        "wordcount_collect": (mapfn, reducefn, reducefn, counts),
+        "inverted_index": (idx_map, idx_reduce, None, {w: sorted(ks) for w, ks in index.items()}),
+    }
+    sc = spark.sparkContext
+    with _worker_memory(sc, "2m"):
+        for name, (mfn, rfn, cfn, expected) in jobs.items():
+            group = f"spill-{name}"
+            sc.setJobGroup(group, name)
+            try:
+                out = mapreduce(spark, ds, mfn, rfn, collectfn=cfn)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            assert out == expected, name
+            spills = _stage_spills(sc, group)
+            assert spills["map"] > 0 and spills["reduce"] > 0, (name, spills)
+
+
+def test_spill_fallback_takes_mixed_type_keys(spark):
+    # Each of 16 partitions holds all 1200 str keys and None, so every
+    # reduce partition takes 1200 lists for about 75 keys: a spill of
+    # fewer than 1000 keys, which a key-sorting merger cannot order.
+    n_part, n_keys = 16, 1200
+    ds = {i: i for i in range(n_part * n_keys)}
+
+    def mfn(k, v):
+        yield f"w{v % n_keys}", 1
+        yield None, 1
+
+    with _worker_memory(spark.sparkContext, "2m"):
+        out = mapreduce(spark, ds, mfn, reducefn, num_partitions=n_part)
+    assert out == {None: len(ds), **{f"w{i}": n_part for i in range(n_keys)}}

@@ -20,6 +20,7 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from mincemeatpy_spark.multimodal import riff
 from mincemeatpy_spark.multimodal.roundtrip import (
     _codec_roundtrip,
     _encode_stage,
@@ -130,7 +131,7 @@ def decode_image_real(payload: bytes, placeholder_vp8_ok: bool = False) -> dict:
         return decode_jpeg_real(payload)
     if payload[:6] in (b"GIF87a", b"GIF89a"):
         return decode_gif_real(payload)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
+    if riff.form(payload) == b"WEBP":
         # lossless (VP8L) chunks decode unconditionally; lossy 'VP8 '
         # chunks require the caller's provenance opt-in while the token
         # tables are placeholders (ADVICE r10 fail-loud gate)
@@ -172,22 +173,16 @@ def decode_audio_real(payload: bytes) -> dict:
         meta = dec(payload)
         meta.pop("fmt", None)
         return meta
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
+    if riff.form(payload) != b"WAVE":
         raise NotImplementedError(
             "MP3/AAC/Opus need the ISO/transform DSP tables not "
             "reproducible from first principles; RIFF/WAVE PCM16, "
             "FLAC and Ogg/Vorbis (subset) decode natively here"
         )
-    pos, fmt, data = 12, None, None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (size,) = struct.unpack_from("<I", payload, pos + 4)
-        if pos + 8 + size > len(payload):
-            # declared size runs past the buffer: truncated container —
-            # a clean malformed error, never a struct crash (the same
-            # clamp rule as the AVI walker)
+    fmt = data = None
+    for cid, body, cut in riff.top(payload):
+        if cut:
             raise ValueError("malformed WAVE: truncated chunk")
-        body = payload[pos + 8 : pos + 8 + size]
         if cid == b"fmt ":
             if len(body) < 16:
                 raise ValueError("malformed WAVE: short fmt chunk")
@@ -201,7 +196,6 @@ def decode_audio_real(payload: bytes) -> dict:
             fmt = (ch, rate)
         elif cid == b"data":
             data = body
-        pos += 8 + size + (size & 1)  # RIFF chunks are word-aligned
     if fmt is None or data is None:
         raise ValueError("malformed WAVE: missing fmt/data chunk")
     if len(data) % 2:
@@ -217,15 +211,18 @@ def decode_audio_real(payload: bytes) -> dict:
     }
 
 
-def fake_decode_meta(payload: bytes) -> tuple[int, int, int, str]:
-    """Deterministic stand-in for an image decoder: metadata derived
-    purely from the byte content, so tests and oracles are stable."""
-    n = len(payload)
-    width = n % 640 + 1
-    height = (n * 7) % 480 + 1
-    channels = 3
-    fmt = "png" if n % 2 == 0 else "jpg"
-    return width, height, channels, fmt
+def encode_wav_pcm16(
+    rate: int, ch: int, samples: list, extra: bytes = b""
+) -> bytes:
+    """RIFF/WAVE PCM16 from interleaved int16 ``samples``; ``extra``
+    holds whole chunks written between ``fmt `` and ``data``."""
+    import struct
+
+    fmt = struct.pack("<HHIIHH", 1, ch, rate, rate * ch * 2, ch * 2, 16)
+    data = struct.pack(f"<{len(samples)}h", *samples)
+    return riff.file(
+        b"WAVE", riff.chunk(b"fmt ", fmt) + extra + riff.chunk(b"data", data)
+    )
 
 
 @register(
@@ -269,7 +266,7 @@ def multimodal_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     category="multimodal",
     doc="Decode stage via mapInPandas: Arrow-batched binary in, typed "
     "metadata out.  The decoder body is the deterministic stub "
-    "(fake_decode_meta) so the oracle can mirror it in SQL; a real "
+    "(_decode_one) so the oracle can mirror it in SQL; a real "
     "codec swaps in without touching the pipeline (explicit output "
     "schema, per-batch iteration, no driver collect).",
 )
@@ -406,24 +403,17 @@ def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Arrow, never to the driver.",
 )
 def multimodal_decode_audio_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import struct
-
     def make_wav(doc_id, n_chars):
         ch = doc_id % 2 + 1
         nfr = n_chars % 32 + 4
-        rate = 8000 + (doc_id % 4) * 4000
         vals = [
             ((doc_id * 131 + i * 17 + c * 7) % 4096) - 2048
             for i in range(nfr)
             for c in range(ch)
         ]
-        data = struct.pack(f"<{len(vals)}h", *vals)
-        fmt = struct.pack("<HHIIHH", 1, ch, rate, rate * ch * 2, ch * 2, 16)
-        chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        if doc_id % 3 == 0:  # unknown chunk the parser must skip
-            chunks += b"LIST" + struct.pack("<I", 6) + b"INFOab"
-        chunks += b"data" + struct.pack("<I", len(data)) + data
-        return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+        # an unknown chunk the parser must skip
+        extra = riff.chunk(b"LIST", b"INFOab") if doc_id % 3 == 0 else b""
+        return encode_wav_pcm16(8000 + (doc_id % 4) * 4000, ch, vals, extra)
 
     return _codec_roundtrip(
         t(spark, sf_dir, "documents").select("doc_id", "n_chars"),
@@ -1342,15 +1332,47 @@ def multimodal_decode_png_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def encode_avi_dib(w: int, h: int, n_frames: int, pixel) -> bytes:
-    """Minimal but STRUCTURALLY CORRECT AVI writer for uncompressed DIB
-    ('00db') frames: RIFF/'AVI ' with a LIST-hdrl (avih main header +
-    LIST-strl with a 'vids'/DIB strh and a BITMAPINFOHEADER strf) and a
-    LIST-movi holding one word-aligned '00db' chunk per frame, rows
-    bottom-up BGR with 4-byte stride padding (the DIB convention).
-    ``pixel(f, x, y)`` returns (r, g, b) for frame f."""
+def _avi_file(w: int, h: int, handler: bytes, compression: bytes,
+              chunk_id: bytes, frames: list, frame_bytes: int) -> bytes:
+    """RIFF/'AVI ' with a LIST-hdrl (avih main header + LIST-strl with a
+    'vids' strh naming ``handler`` and a 24-bit BITMAPINFOHEADER strf
+    whose biCompression is ``compression``) and a LIST-movi holding one
+    word-aligned ``chunk_id`` chunk per frame.  ``frame_bytes`` is the
+    largest frame, which the headers quote as the suggested buffer."""
     import struct
 
+    n = len(frames)
+    avih = struct.pack(
+        "<IIIIIIIIIIIIII",
+        40000,              # microseconds per frame (25 fps)
+        frame_bytes * 25,   # max bytes per second
+        0,                  # padding granularity
+        0,                  # flags: no idx1 chunk is written, so no
+                            # AVIF_HASINDEX claim
+        n, 0, 1, frame_bytes, w, h, 0, 0, 0, 0,
+    )
+    strh = (
+        b"vids" + handler
+        + struct.pack("<IHHIIIIIIIII", 0, 0, 0, 0, 1, 25, 0, n,
+                      frame_bytes, 0, 0, 0)
+        + struct.pack("<hhhh", 0, 0, w, h)
+    )
+    strf = struct.pack(
+        "<IiiHH4sIiiII", 40, w, h, 1, 24, compression, frame_bytes,
+        0, 0, 0, 0,
+    )
+    strl = riff.chunk(b"strh", strh) + riff.chunk(b"strf", strf)
+    hdrl = riff.chunk(b"avih", avih) + riff.chunk(b"LIST", b"strl" + strl)
+    movi = b"".join(riff.chunk(chunk_id, fr) for fr in frames)
+    hdrl = riff.chunk(b"LIST", b"hdrl" + hdrl)
+    return riff.file(b"AVI ", hdrl + riff.chunk(b"LIST", b"movi" + movi))
+
+
+def encode_avi_dib(w: int, h: int, n_frames: int, pixel) -> bytes:
+    """Minimal but STRUCTURALLY CORRECT AVI writer for uncompressed DIB
+    ('00db') frames: a 'DIB ' strh, biCompression 0, rows bottom-up BGR
+    with 4-byte stride padding (the DIB convention).
+    ``pixel(f, x, y)`` returns (r, g, b) for frame f."""
     stride = (3 * w + 3) // 4 * 4
     frames = []
     for f in range(n_frames):
@@ -1363,41 +1385,7 @@ def encode_avi_dib(w: int, h: int, n_frames: int, pixel) -> bytes:
             line.extend(b"\x00" * (stride - 3 * w))
             rows.append(bytes(line))
         frames.append(b"".join(rows))
-
-    def chunk(fourcc: bytes, data: bytes) -> bytes:
-        pad = b"\x00" if len(data) % 2 else b""
-        return fourcc + struct.pack("<I", len(data)) + data + pad
-
-    def lst(four: bytes, data: bytes) -> bytes:
-        return chunk(b"LIST", four + data)
-
-    frame_bytes = stride * h
-    avih = struct.pack(
-        "<IIIIIIIIIIIIII",
-        40000,              # microseconds per frame (25 fps)
-        frame_bytes * 25,   # max bytes per second
-        0,                  # padding granularity
-        0,                  # flags: no idx1 chunk is written, so no
-                            # AVIF_HASINDEX claim
-        n_frames, 0, 1, frame_bytes, w, h, 0, 0, 0, 0,
-    )
-    strh = (
-        b"vids" + b"DIB "
-        + struct.pack("<IHHIIIIIIIII", 0, 0, 0, 0, 1, 25, 0, n_frames,
-                      frame_bytes, 0, 0, 0)
-        + struct.pack("<hhhh", 0, 0, w, h)
-    )
-    strf = struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, frame_bytes, 0, 0, 0, 0
-    )
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih)
-        + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi = lst(b"movi", b"".join(chunk(b"00db", fr) for fr in frames))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _avi_file(w, h, b"DIB ", bytes(4), b"00db", frames, stride * h)
 
 
 def encode_avi_mjpeg(w: int, h: int, n_frames: int, rgb_for_frame) -> bytes:
@@ -1409,40 +1397,9 @@ def encode_avi_mjpeg(w: int, h: int, n_frames: int, rgb_for_frame) -> bytes:
     — which is exactly what legacy MJPEG capture hardware emits (each
     frame an independent JPEG, no inter-frame prediction).
     ``rgb_for_frame(f)`` returns the (h, w, 3) uint8 frame."""
-    import struct
-
     frames = [encode_jpeg_baseline(rgb_for_frame(f)) for f in range(n_frames)]
-
-    def chunk(fourcc: bytes, data: bytes) -> bytes:
-        pad = b"\x00" if len(data) % 2 else b""
-        return fourcc + struct.pack("<I", len(data)) + data + pad
-
-    def lst(four: bytes, data: bytes) -> bytes:
-        return chunk(b"LIST", four + data)
-
     max_frame = max(len(fr) for fr in frames) if frames else 0
-    avih = struct.pack(
-        "<IIIIIIIIIIIIII",
-        40000, max_frame * 25, 0, 0,
-        n_frames, 0, 1, max_frame, w, h, 0, 0, 0, 0,
-    )
-    strh = (
-        b"vids" + b"MJPG"
-        + struct.pack("<IHHIIIIIIIII", 0, 0, 0, 0, 1, 25, 0, n_frames,
-                      max_frame, 0, 0, 0)
-        + struct.pack("<hhhh", 0, 0, w, h)
-    )
-    strf = struct.pack(
-        "<Iii HH", 40, w, h, 1, 24
-    ) + b"MJPG" + struct.pack("<IiiII", max_frame, 0, 0, 0, 0)
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih)
-        + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi = lst(b"movi", b"".join(chunk(b"00dc", fr) for fr in frames))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _avi_file(w, h, b"MJPG", b"MJPG", b"00dc", frames, max_frame)
 
 
 def decode_avi_real(payload: bytes) -> dict:
@@ -1460,48 +1417,34 @@ def decode_avi_real(payload: bytes) -> dict:
     (H264/...) raise ``NotImplementedError``."""
     import struct
 
-    if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
+    if riff.form(payload) != b"AVI ":
         raise ValueError("not a RIFF/AVI container")
 
-    def chunks(buf: bytes, pos: int, end: int):
-        # clamp to the real buffer: a truncated container must surface
-        # as missing chunks (-> clean frame-count mismatch), not as an
-        # out-of-bounds struct crash
-        end = min(end, len(buf))
-        while pos + 8 <= end:
-            fourcc = buf[pos : pos + 4]
-            (size,) = struct.unpack_from("<I", buf, pos + 4)
-            if pos + 8 + size > end:
-                # truncated tail: walk the bytes that exist, then stop —
-                # inner consumers see fewer/short chunks and raise their
-                # own specific malformed-ness errors
-                size = end - pos - 8
-                if size > 0:
-                    yield fourcc, pos + 8, size
-                break
-            yield fourcc, pos + 8, size
-            pos += 8 + size + (size % 2)
-
-    MJPG = struct.unpack("<I", b"MJPG")[0]
-    w = h = total = bpp = comp = None
+    w = h = total = None
     codec = None  # 'dib' | 'mjpeg', fixed by the strh handler fourcc
     sums = [0, 0, 0]
     n_seen = 0
-    for fourcc, at, size in chunks(payload, 12, 8 + struct.unpack_from("<I", payload, 4)[0]):
+    # cut chunks are walked as far as their bytes go: a truncated movi
+    # surfaces as missing frames, caught by the frame-count check
+    for fourcc, body, _ in riff.top(payload):
         if fourcc != b"LIST":
             continue
-        kind = payload[at : at + 4]
+        kind = body[:4]
         if kind == b"hdrl":
-            for fc2, at2, sz2 in chunks(payload, at + 4, at + size):
+            for fc2, b2, _ in riff.chunks(body, 4):
                 if fc2 == b"avih":
-                    vals = struct.unpack_from("<IIIIIIIIII", payload, at2)
+                    if len(b2) < 40:
+                        raise ValueError("malformed AVI: short avih")
+                    vals = struct.unpack_from("<IIIIIIIIII", b2)
                     total, w, h = vals[4], vals[8], vals[9]
-                elif fc2 == b"LIST" and payload[at2 : at2 + 4] == b"strl":
-                    for fc3, at3, sz3 in chunks(payload, at2 + 4, at2 + sz2):
+                elif fc2 == b"LIST" and b2[:4] == b"strl":
+                    for fc3, b3, _ in riff.chunks(b2, 4):
                         if fc3 == b"strh":
-                            if payload[at3 : at3 + 4] != b"vids":
+                            if len(b3) < 8:
+                                raise ValueError("malformed AVI: short strh")
+                            if b3[:4] != b"vids":
                                 continue
-                            handler = payload[at3 + 4 : at3 + 8]
+                            handler = b3[4:8]
                             if handler in (b"DIB ", b"\x00\x00\x00\x00"):
                                 codec = "dib"
                             elif handler == b"MJPG":
@@ -1512,15 +1455,16 @@ def decode_avi_real(payload: bytes) -> dict:
                                     "needs a codec library"
                                 )
                         elif fc3 == b"strf":
-                            hdr = struct.unpack_from("<IiiHHI", payload, at3)
-                            bpp, comp = hdr[4], hdr[5]
+                            if len(b3) < 20:
+                                raise ValueError("malformed AVI: short strf")
+                            bpp, comp = struct.unpack_from("<H4s", b3, 14)
                             if codec == "mjpeg":
-                                if comp != MJPG:
+                                if comp != b"MJPG":
                                     raise ValueError(
                                         "MJPG stream with non-MJPG "
                                         "biCompression"
                                     )
-                            elif bpp != 24 or comp != 0:
+                            elif bpp != 24 or comp != bytes(4):
                                 raise NotImplementedError(
                                     "only uncompressed 24-bit DIB frames"
                                 )
@@ -1528,15 +1472,14 @@ def decode_avi_real(payload: bytes) -> dict:
             if w is None or codec is None:
                 raise ValueError("movi before hdrl")
             stride = (3 * w + 3) // 4 * 4
-            for fc2, at2, sz2 in chunks(payload, at + 4, at + size):
+            for fc2, b2, _ in riff.chunks(body, 4):
                 if codec == "dib":
                     if fc2[2:] != b"db":
                         continue
-                    if sz2 != stride * h:
+                    if len(b2) != stride * h:
                         raise ValueError("frame chunk size mismatch")
                     for row in range(h):
-                        base = at2 + row * stride
-                        line = payload[base : base + 3 * w]
+                        line = b2[row * stride : row * stride + 3 * w]
                         sums[2] += sum(line[0::3])  # B
                         sums[1] += sum(line[1::3])  # G
                         sums[0] += sum(line[2::3])  # R
@@ -1544,7 +1487,7 @@ def decode_avi_real(payload: bytes) -> dict:
                 else:
                     if fc2[2:] != b"dc":
                         continue
-                    m = decode_jpeg_real(bytes(payload[at2 : at2 + sz2]))
+                    m = decode_jpeg_real(bytes(b2))
                     if m["width"] != w or m["height"] != h:
                         raise ValueError(
                             "MJPEG frame dimensions disagree with the "
@@ -1953,26 +1896,19 @@ def pipeline_video_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import hashlib
-        import struct as _struct
 
         import pandas as pd
 
         def frame_digests(payload: bytes) -> list:
-            # walk the single movi LIST's word-aligned chunks and
-            # content-address each frame's raw bytes ('db' DIB rows or
-            # 'dc' JPEG payloads — both deterministic per source frame)
-            at = payload.index(b"movi")
-            (lst_size,) = _struct.unpack_from("<I", payload, at - 4)
-            end = min(at + lst_size, len(payload))
-            pos, out = at + 4, []
-            while pos + 8 <= end:
-                four = payload[pos : pos + 4]
-                (size,) = _struct.unpack_from("<I", payload, pos + 4)
-                data = payload[pos + 8 : pos + 8 + size]
-                if four[2:] in (b"db", b"dc"):
-                    out.append(hashlib.sha256(data).hexdigest())
-                pos += 8 + size + (size % 2)
-            return out
+            # content-address each movi frame's raw bytes ('db' DIB rows
+            # or 'dc' JPEG payloads — both deterministic per source frame)
+            return [
+                hashlib.sha256(data).hexdigest()
+                for four, movi, _ in riff.top(payload)
+                if four == b"LIST" and movi[:4] == b"movi"
+                for fc, data, _ in riff.chunks(movi, 4)
+                if fc[2:] in (b"db", b"dc")
+            ]
 
         for pdf in batches:
             rows = []
@@ -4430,7 +4366,13 @@ def _vp8l_cte_delta(t: int, c: int) -> int:
     return (t * c) >> 5
 
 
-def encode_webp_lossless(
+def encode_webp_lossless(pixels, **features) -> bytes:
+    """RIFF/WEBP file holding one VP8L chunk (see ``_vp8l_encode``)."""
+    stream = _vp8l_encode(pixels, **features)
+    return riff.file(b"WEBP", riff.chunk(b"VP8L", stream))
+
+
+def _vp8l_encode(
     pixels,
     subtract_green: bool = False,
     predictor=None,
@@ -4439,18 +4381,19 @@ def encode_webp_lossless(
     cache_bits: int = 0,
     lz77: bool = False,
     meta_split: bool = False,
+    header: bool = True,
 ) -> bytes:
-    """Spec-correct VP8L writer.  ``pixels`` is h rows of (r, g, b[, a])
-    tuples.  Each keyword turns on one bitstream feature so the decoder
-    paths are all exercised by real encodes: subtract-green / cross
-    -color (g2r, g2b, r2b) / predictor (int mode 0-13 or "mixed" for a
-    per-tile spread) transforms, color-indexing with sub-byte bundling
-    (``palette=True``), a color cache, greedy LZ77 over the neighbor
-    -map distances, and a two-group meta prefix split.  Every prefix
-    code goes through the real machinery: simple two-symbol codes where
-    legal, else full code-length coding with 16/17/18 RLE."""
-    import struct
-
+    """Spec-correct VP8L bitstream writer.  ``pixels`` is h rows of
+    (r, g, b[, a]) tuples.  Each keyword turns on one bitstream feature
+    so the decoder paths are all exercised by real encodes: subtract
+    -green / cross-color (g2r, g2b, r2b) / predictor (int mode 0-13 or
+    "mixed" for a per-tile spread) transforms, color-indexing with
+    sub-byte bundling (``palette=True``), a color cache, greedy LZ77
+    over the neighbor-map distances, and a two-group meta prefix split.
+    Every prefix code goes through the real machinery: simple
+    two-symbol codes where legal, else full code-length coding with
+    16/17/18 RLE.  ``header=False`` leaves out the 40-bit signature and
+    dimensions header (the ALPH chunk's headerless form)."""
     h = len(pixels)
     w = len(pixels[0])
     if not (1 <= w <= 1 << 14 and 1 <= h <= 1 << 14):
@@ -4801,12 +4744,12 @@ def encode_webp_lossless(
                 if dnb:
                     put(dv, dnb)
 
-    # ---- header ----
-    put(0x2F, 8)
-    put(w - 1, 14)
-    put(h - 1, 14)
-    put(1 if has_alpha else 0, 1)
-    put(0, 3)  # version
+    if header:
+        put(0x2F, 8)
+        put(w - 1, 14)
+        put(h - 1, 14)
+        put(1 if has_alpha else 0, 1)
+        put(0, 3)  # version
 
     cur_w = w
 
@@ -4943,49 +4886,38 @@ def encode_webp_lossless(
 
     if acc[1]:
         out.append(acc[0] & 0xFF)
-    payload = bytes(out)
-    chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
-    if len(payload) & 1:
-        chunk += b"\x00"
-    return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
+    return bytes(out)
 
 
-def decode_webp_real(
-    payload: bytes,
-    _pixels: bool = False,
-    placeholder_vp8_ok: bool = False,
-) -> dict:
+def decode_webp_real(payload: bytes, placeholder_vp8_ok: bool = False) -> dict:
     """Real VP8L (WebP lossless) decoder: RIFF walk to the VP8L chunk,
-    then the full bitstream — prefix codes (simple + normal with
-    code-length RLE and max_symbol), color cache, meta prefix groups,
-    LZ77 over the 40-code distance alphabet with the short-distance
-    neighbor map, and inverse predictor / cross-color / subtract-green
-    / color-indexing transforms (with sub-byte bundle unpacking).
-    Returns ``{fmt, width, height, sum_r, sum_g, sum_b}`` — exact
-    integer channel sums (lossless codec => exact oracle).  Lossy VP8
-    chunks dispatch to ``decode_vp8_real`` (multimodal/vp8.py) and
-    return YUV sums — but ONLY when the caller asserts
-    self-encoded provenance via ``placeholder_vp8_ok=True``: with the
-    documented placeholder token-probability tables, an externally
-    encoded (libwebp) lossy stream would mis-decode silently, so the
-    default raises decode_vp8_real's honest gate (ADVICE r10).  VP8X
-    dispatches to decode_webp_extended with the same flag."""
-    import struct
-
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
+    then the full bitstream (``_vp8l_decode``).  Returns ``{fmt,
+    width, height, sum_r, sum_g, sum_b}`` — exact integer channel sums
+    (lossless codec => exact oracle).  Lossy VP8 chunks dispatch to
+    ``decode_vp8_real`` (multimodal/vp8.py) and return YUV sums — but
+    ONLY when the caller asserts self-encoded provenance via
+    ``placeholder_vp8_ok=True``: with the documented placeholder
+    token-probability tables, an externally encoded (libwebp) lossy
+    stream would mis-decode silently, so the default raises
+    decode_vp8_real's honest gate (ADVICE r10).  VP8X dispatches to
+    decode_webp_extended with the same flag."""
+    if riff.form(payload) != b"WEBP":
         raise ValueError("not a WebP stream (missing RIFF/WEBP)")
-    pos, data = 12, None
-    while pos + 8 <= len(payload):
-        fourcc = payload[pos : pos + 4]
-        (clen,) = struct.unpack_from("<I", payload, pos + 4)
-        body = payload[pos + 8 : pos + 8 + clen]
+    for fourcc, body, _ in riff.top(payload):
         if fourcc == b"VP8L":
-            data = body
-            break
+            w, h, argb = _vp8l_decode(body)
+            return {
+                "fmt": "webp-lossless",
+                "width": w,
+                "height": h,
+                "sum_r": sum((p >> 16) & 0xFF for p in argb),
+                "sum_g": sum((p >> 8) & 0xFF for p in argb),
+                "sum_b": sum(p & 0xFF for p in argb),
+            }
         if fourcc == b"VP8 ":
             # lossy VP8 decodes for real since r10 (multimodal/vp8.py)
             return decode_vp8_real(
-                body[:clen], placeholder_tables_ok=placeholder_vp8_ok
+                body, placeholder_tables_ok=placeholder_vp8_ok
             )
         if fourcc == b"VP8X":
             # extended container: static alpha images decode for real
@@ -4993,10 +4925,18 @@ def decode_webp_real(
             return decode_webp_extended(
                 payload, placeholder_vp8_ok=placeholder_vp8_ok
             )
-        pos += 8 + clen + (clen & 1)
-    if data is None:
-        raise ValueError("malformed WebP: no VP8L chunk")
+    raise ValueError("malformed WebP: no VP8L chunk")
 
+
+def _vp8l_decode(data: bytes, dims: tuple | None = None) -> tuple:
+    """Decode a VP8L bitstream to ``(width, height, argb)``, argb being
+    one ARGB int per pixel in raster order: prefix codes (simple +
+    normal with code-length RLE and max_symbol), color cache, meta
+    prefix groups, LZ77 over the 40-code distance alphabet with the
+    short-distance neighbor map, and inverse predictor / cross-color /
+    subtract-green / color-indexing transforms (with sub-byte bundle
+    unpacking).  With ``dims`` = (w, h) the stream has no 40-bit
+    header (the ALPH chunk's headerless form)."""
     bpos = [0]
     nbits_total = len(data) * 8
     # Precomputed 32-bit little-endian windows: any <=25-bit field is
@@ -5019,13 +4959,16 @@ def decode_webp_real(
         bpos[0] = p + n
         return (b32[p >> 3] >> (p & 7)) & ((1 << n) - 1)
 
-    if bits(8) != 0x2F:
-        raise ValueError("malformed VP8L: bad signature")
-    w = bits(14) + 1
-    h = bits(14) + 1
-    bits(1)  # alpha hint
-    if bits(3) != 0:
-        raise ValueError("malformed VP8L: unknown version")
+    if dims is None:
+        if bits(8) != 0x2F:
+            raise ValueError("malformed VP8L: bad signature")
+        w = bits(14) + 1
+        h = bits(14) + 1
+        bits(1)  # alpha hint
+        if bits(3) != 0:
+            raise ValueError("malformed VP8L: unknown version")
+    else:
+        w, h = dims
 
     _CL_ORDER = [17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12,
                  13, 14, 15]
@@ -5061,6 +5004,8 @@ def decode_webp_real(
             return code[1]
         lut, long_table = code[1]
         p = bpos[0]
+        if p >= nbits_total:
+            raise ValueError("malformed VP8L: bitstream exhausted")
         hit = lut[(b32[p >> 3] >> (p & 7)) & 0xFF]
         if hit is not None:
             s, ln = hit
@@ -5333,20 +5278,7 @@ def decode_webp_real(
     argb = read_image(w, h, True)
     if len(argb) != w * h:
         raise ValueError("malformed VP8L: pixel count mismatch")
-    sum_r = sum((p >> 16) & 0xFF for p in argb)
-    sum_g = sum((p >> 8) & 0xFF for p in argb)
-    sum_b = sum(p & 0xFF for p in argb)
-    out = {
-        "fmt": "webp-lossless",
-        "width": w,
-        "height": h,
-        "sum_r": sum_r,
-        "sum_g": sum_g,
-        "sum_b": sum_b,
-    }
-    if _pixels:  # ARGB ints; the VP8X ALPH path reads the green plane
-        out["argb"] = argb
-    return out
+    return w, h, argb
 
 
 def _webp_alpha_filter(plane: list, w: int, h: int, f: int,
@@ -5391,9 +5323,7 @@ def encode_webp_extended(y, u, v, alpha, qi: int = 4,
     VP8X chunk (alpha flag, 24-bit canvas dims), ALPH chunk — the
     alpha plane run through a prediction filter, then either raw
     (C=0) or compressed as a HEADERLESS VP8L stream of alpha-as-green
-    (C=1; the VP8L header is exactly 40 bits, so stripping the first
-    5 bytes of a real lossless encode yields the spec's headerless
-    form) — and the VP8 key frame from ``encode_vp8_frame``."""
+    (C=1) — and the VP8 key frame from ``encode_vp8_frame``."""
     import struct
 
     import numpy as np
@@ -5409,10 +5339,7 @@ def encode_webp_extended(y, u, v, alpha, qi: int = 4,
             [(0, filtered[yy * w + xx], 0) for xx in range(w)]
             for yy in range(h)
         ]
-        lossless = encode_webp_lossless(rows)
-        # RIFF(8) WEBP(4) VP8L+size(8) = 20-byte container prefix,
-        # then the 5-byte (40-bit) VP8L header
-        adata = lossless[20 + 5 :]
+        adata = _vp8l_encode(rows, header=False)
     alph = bytes([(alpha_filter << 2) | alpha_compression]) + adata
 
     frame = encode_vp8_frame(
@@ -5420,18 +5347,13 @@ def encode_webp_extended(y, u, v, alpha, qi: int = 4,
         mode_seed=mode_seed,
     )
 
-    def chunk(four: bytes, data: bytes) -> bytes:
-        c = four + struct.pack("<I", len(data)) + data
-        if len(data) % 2:
-            c += b"\x00"
-        return c
-
     vp8x = bytes([0x10, 0, 0, 0])  # flags: ALPHA
     vp8x += struct.pack("<I", w - 1)[:3] + struct.pack("<I", h - 1)[:3]
-    body = chunk(b"VP8X", vp8x) + chunk(b"ALPH", alph) + chunk(
-        b"VP8 ", frame
+    return riff.file(
+        b"WEBP",
+        riff.chunk(b"VP8X", vp8x) + riff.chunk(b"ALPH", alph)
+        + riff.chunk(b"VP8 ", frame),
     )
-    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WEBP" + body
 
 
 def decode_webp_extended(payload: bytes,
@@ -5441,25 +5363,16 @@ def decode_webp_extended(payload: bytes,
     header (flags + 24-bit canvas dims), the ALPH chunk — header byte
     (preprocessing informational, filter method inverted for real,
     compression 0 = raw or 1 = headerless VP8L alpha-as-green, decoded
-    by re-framing the stream under a synthesized 40-bit VP8L header
-    and reading the green plane) — and the VP8 key frame through
-    ``decode_vp8_real``.  Canvas dims are cross-checked against the
-    frame.  Animated VP8X (ANIM flag / ANMF chunks) raises the honest
-    gate."""
-    import struct
-
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
+    at the canvas dims and read off the green plane) — and the VP8 key
+    frame through ``decode_vp8_real``.  Canvas dims are cross-checked
+    against the frame.  The ANIM flag routes to ``decode_webp_anim``;
+    an ANMF chunk without it is malformed."""
+    if riff.form(payload) != b"WEBP":
         raise ValueError("not a WebP stream (missing RIFF/WEBP)")
-    pos = 12
-    canvas = None
-    alph = None
-    frame = None
-    while pos + 8 <= len(payload):
-        fourcc = payload[pos : pos + 4]
-        (clen,) = struct.unpack_from("<I", payload, pos + 4)
-        body = payload[pos + 8 : pos + 8 + clen]
+    canvas = alph = frame = None
+    for fourcc, body, _ in riff.top(payload):
         if fourcc == b"VP8X":
-            if clen < 10:
+            if len(body) < 10:
                 raise ValueError("malformed VP8X: short header")
             flags = body[0]
             if flags & 0x02:
@@ -5480,7 +5393,6 @@ def decode_webp_extended(payload: bytes,
                 "malformed VP8X: ANMF chunk without the ANIM flag"
             )
         # ICCP/EXIF/XMP chunks: metadata, skipped
-        pos += 8 + clen + (clen & 1)
     if canvas is None:
         raise ValueError("malformed VP8X: missing header chunk")
     if frame is None:
@@ -5517,22 +5429,8 @@ def decode_webp_extended(payload: bytes,
                 raise ValueError("malformed ALPH: raw size mismatch")
             filtered = list(alph[1:])
         elif comp == 1:
-            # re-frame the headerless stream under a synthesized
-            # 40-bit VP8L header (byte-aligned by construction)
-            head = bytearray([0x2F])
-            dims = (w - 1) | ((h - 1) << 14)  # +1 alpha hint, +3 version = 0
-            head += struct.pack("<I", dims)
-            stream = bytes(head) + alph[1:]
-            cont = (
-                b"RIFF"
-                + struct.pack("<I", 12 + len(stream))
-                + b"WEBP"
-                + b"VP8L"
-                + struct.pack("<I", len(stream))
-                + stream
-            )
-            lm = decode_webp_real(cont, _pixels=True)
-            filtered = [(p >> 8) & 0xFF for p in lm["argb"]]
+            _, _, argb = _vp8l_decode(alph[1:], dims=(w, h))
+            filtered = [(p >> 8) & 0xFF for p in argb]
         else:
             raise ValueError(f"malformed ALPH: compression {comp}")
         plane = _webp_alpha_filter(filtered, w, h, f, True)
@@ -5560,23 +5458,17 @@ def encode_webp_anim(cw: int, ch: int, bg_rgba: tuple, frames: list,
     def u24(v: int) -> bytes:
         return struct.pack("<I", v)[:3]
 
-    def chunk(four: bytes, data: bytes) -> bytes:
-        c = four + struct.pack("<I", len(data)) + data
-        if len(data) % 2:
-            c += b"\x00"
-        return c
-
     vp8x = bytes([0x12, 0, 0, 0])  # flags: ALPHA | ANIM
     vp8x += u24(cw - 1) + u24(ch - 1)
     r, g, b, a = bg_rgba
     anim = bytes([b, g, r, a]) + struct.pack("<H", loop)
-    body = chunk(b"VP8X", vp8x) + chunk(b"ANIM", anim)
+    body = riff.chunk(b"VP8X", vp8x) + riff.chunk(b"ANIM", anim)
     for fr in frames:
         if fr["x"] % 2 or fr["y"] % 2:
             raise ValueError("ANMF frame offsets must be even")
         px = fr["pixels"]
         fh, fw = len(px), len(px[0])
-        sub = encode_webp_lossless(px)[12:]  # the VP8L chunk bytes
+        sub = riff.chunk(b"VP8L", _vp8l_encode(px))
         flags = (0 if fr.get("blend", True) else 2) | (
             1 if fr.get("dispose", False) else 0
         )
@@ -5585,8 +5477,8 @@ def encode_webp_anim(cw: int, ch: int, bg_rgba: tuple, frames: list,
             + u24(fw - 1) + u24(fh - 1)
             + u24(fr.get("duration", 40)) + bytes([flags])
         )
-        body += chunk(b"ANMF", hdr + sub)
-    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WEBP" + body
+        body += riff.chunk(b"ANMF", hdr + sub)
+    return riff.file(b"WEBP", body)
 
 
 _WEBP_ANIM_SCHEMA = (
@@ -5619,33 +5511,30 @@ def decode_webp_anim(payload: bytes, return_frames: bool = False) -> dict:
     with the background color.  Lossy VP8 sub-frames stay gated by
     name (their bound-assert semantics don't fit the exact compositing
     oracle).  Returns one exact (sum_r, sum_g, sum_b, sum_a) per
-    composited canvas state."""
-    import struct
-
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
+    composited canvas state.  Canvases over 2^24 pixels raise
+    ``NotImplementedError`` before anything is allocated."""
+    if riff.form(payload) != b"WEBP":
         raise ValueError("not a WebP stream (missing RIFF/WEBP)")
 
     def u24(b: bytes) -> int:
         return b[0] | (b[1] << 8) | (b[2] << 16)
 
-    pos = 12
-    canvas_dims = None
-    bg = None
+    canvas_dims = bg = canvas = None
     frames_out = []
-    canvas = None
     cw = ch = 0
-    while pos + 8 <= len(payload):
-        fourcc = payload[pos : pos + 4]
-        (clen,) = struct.unpack_from("<I", payload, pos + 4)
-        body = payload[pos + 8 : pos + 8 + clen]
+    for fourcc, body, _ in riff.top(payload):
         if fourcc == b"VP8X":
-            if clen < 10:
+            if len(body) < 10:
                 raise ValueError("malformed VP8X: short header")
             cw = 1 + u24(body[4:7])
             ch = 1 + u24(body[7:10])
+            if cw * ch > 1 << 24:
+                raise NotImplementedError(
+                    "WebP canvas over 2^24 pixels not supported"
+                )
             canvas_dims = (cw, ch)
         elif fourcc == b"ANIM":
-            if clen < 6:
+            if len(body) < 6:
                 raise ValueError("malformed ANIM: short chunk")
             bg = (body[2], body[1], body[0], body[3])  # BGRA stored
             if canvas_dims is None:
@@ -5654,7 +5543,7 @@ def decode_webp_anim(payload: bytes, return_frames: bool = False) -> dict:
         elif fourcc == b"ANMF":
             if canvas is None:
                 raise ValueError("malformed: ANMF before ANIM")
-            if clen < 16:
+            if len(body) < 16:
                 raise ValueError("malformed ANMF: short header")
             fx = u24(body[0:3]) * 2
             fy = u24(body[3:6]) * 2
@@ -5666,34 +5555,20 @@ def decode_webp_anim(payload: bytes, return_frames: bool = False) -> dict:
             if fx + fw > cw or fy + fh > ch:
                 raise ValueError("ANMF frame exceeds the canvas")
             # frame data: sub-chunks; the subset takes one VP8L image
-            sp = 16
             argb = None
-            while sp + 8 <= len(body):
-                sf = body[sp : sp + 4]
-                (sl,) = struct.unpack_from("<I", body, sp + 4)
-                sdata = body[sp + 8 : sp + 8 + sl]
+            for sf, sdata, _ in riff.chunks(body, 16):
                 if sf == b"VP8L":
-                    cont = (
-                        b"RIFF"
-                        + struct.pack("<I", 12 + len(sdata))
-                        + b"WEBP"
-                        + b"VP8L"
-                        + struct.pack("<I", len(sdata))
-                        + sdata
-                    )
-                    m = decode_webp_real(cont, _pixels=True)
-                    if (m["width"], m["height"]) != (fw, fh):
+                    sw, sh, argb = _vp8l_decode(sdata)
+                    if (sw, sh) != (fw, fh):
                         raise ValueError(
                             "ANMF dims disagree with the sub-image"
                         )
-                    argb = m["argb"]
                 elif sf in (b"VP8 ", b"ALPH"):
                     raise NotImplementedError(
                         "lossy VP8 sub-frames in animations not in "
                         "the subset (exact compositing needs lossless "
                         "frames); VP8L sub-images decode natively"
                     )
-                sp += 8 + sl + (sl & 1)
             if argb is None:
                 raise ValueError("malformed ANMF: no sub-image")
             for v in range(fh):
@@ -5750,7 +5625,6 @@ def decode_webp_anim(payload: bytes, return_frames: bool = False) -> dict:
                     row = (fy + v) * cw + fx
                     for u in range(fw):
                         canvas[row + u] = bg
-        pos += 8 + clen + (clen & 1)
     if canvas_dims is None:
         raise ValueError("malformed VP8X: missing header chunk")
     if not frames_out:
@@ -5826,8 +5700,8 @@ def decode_webp_anim(payload: bytes, return_frames: bool = False) -> dict:
     "dispose-to-background, sub-rectangle frames with even-offset "
     "encoding, each frame a REAL VP8L lossless sub-image carrying its "
     "own alpha; stage 2 runs decode_webp_anim: header walk, per-ANMF "
-    "VP8L decode through the full lossless machinery (re-framed under "
-    "a synthesized header), dims cross-checks, and the compositing "
+    "VP8L decode through the full lossless machinery, dims "
+    "cross-checks, and the compositing "
     "state machine.  Frames are LOSSLESS and the compositing rules "
     "deterministic, so the oracle folds draw/blend/dispose into "
     "closed-form per-pixel CASE logic and per-frame channel sums "

@@ -1548,13 +1548,12 @@ def _vorbis_test_signal(doc_id: int, n_chars: int, n_samples: int = 0):
     "decode is embarrassingly parallel.",
 )
 def pipeline_audio_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import struct
-
     from pyspark.sql import functions as F
 
     from mincemeatpy_spark.multimodal.binary_ops import (
-        decode_flac_real,
+        decode_audio_real,
         encode_flac_subset,
+        encode_wav_pcm16,
     )
 
     d = (
@@ -1567,21 +1566,12 @@ def pipeline_audio_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         L = cid % 300 + 60
         return [((cid * 31 + i * i * 7) % 4001) - 2000 for i in range(L)]
 
-    def wav(rate, samples):
-        data = struct.pack(f"<{len(samples)}h", *samples)
-        fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
-        chunks = (
-            b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data
-        )
-        return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
     def encode_row(doc_id):
         cid = doc_id % 200
         s = signal(cid)
         rate = 8000 + (cid % 3) * 4000
         if cid % 3 == 0:
-            return wav(rate, s)
+            return encode_wav_pcm16(rate, 1, s)
         enc = encode_flac_subset if cid % 3 == 1 else encode_vorbis_subset
         return enc(rate, [s])
 
@@ -1603,30 +1593,11 @@ def pipeline_audio_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
                 pdf["digest"], pdf["n_assets"], pdf["payload"]
             ):
                 b = bytes(payload)
-                if b[:4] == b"RIFF":
-                    fmt = "wav"
-                    import struct
-
-                    # minimal WAV read (the pipeline's own assets)
-                    pos, ssum, n = 12, 0, 0
-                    while pos + 8 <= len(b):
-                        cid4 = b[pos : pos + 4]
-                        (size,) = struct.unpack_from("<I", b, pos + 4)
-                        if cid4 == b"data":
-                            vals = struct.unpack_from(
-                                f"<{size // 2}h", b, pos + 8
-                            )
-                            ssum, n = sum(vals), len(vals)
-                        pos += 8 + size + (size & 1)
-                elif b[:4] == b"fLaC":
-                    m = decode_flac_real(b)
-                    ssum, n = m["sample_sum"], m["n_samples"]
-                    fmt = "flac"
-                else:
-                    m = decode_vorbis_real(b)
-                    n = m["n_samples"]
-                    ssum = 0  # lossy: excluded from the exact sum
-                    fmt = "vorbis"
+                m = decode_audio_real(b)
+                n = m["n_samples"]
+                fmt = {b"fLaC": "flac", b"OggS": "vorbis"}.get(b[:4], "wav")
+                # lossy Vorbis is excluded from the exact sum
+                ssum = 0 if fmt == "vorbis" else m["sample_sum"]
                 rows.append(
                     (digest, int(n_assets), fmt, n, ssum, bool(n >= 60))
                 )

@@ -65,6 +65,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mincemeatpy_spark.multimodal import riff
 from mincemeatpy_spark.multimodal.roundtrip import _codec_roundtrip
 from mincemeatpy_spark.registry import register
 from mincemeatpy_spark.tables import t
@@ -258,11 +259,6 @@ def _vp8_be_bool(st: list, bit: int, prob: int) -> None:
 def _vp8_be_literal(st: list, v: int, n: int) -> None:
     for k in range(n - 1, -1, -1):
         _vp8_be_bool(st, (v >> k) & 1, 128)
-
-
-def _vp8_be_signed(st: list, v: int, n: int) -> None:
-    _vp8_be_literal(st, abs(v), n)
-    _vp8_be_bool(st, 1 if v < 0 else 0, 128)
 
 
 def _vp8_tree_paths(tree: list) -> dict:
@@ -945,16 +941,11 @@ def encode_webp_lossy(y, u, v, qi: int = 4, filter_level: int = 0,
                       sharpness: int = 0, mode_seed: int = 0) -> bytes:
     """Wrap a VP8 key frame in the RIFF/WEBP container ('VP8 ' chunk,
     word-aligned)."""
-    import struct
-
     frame = encode_vp8_frame(
         y, u, v, qi=qi, filter_level=filter_level, sharpness=sharpness,
         mode_seed=mode_seed,
     )
-    chunk = b"VP8 " + struct.pack("<I", len(frame)) + frame
-    if len(frame) % 2:
-        chunk += b"\x00"
-    return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
+    return riff.file(b"WEBP", riff.chunk(b"VP8 ", frame))
 
 
 # --- frame decode ---------------------------------------------------------
@@ -1345,8 +1336,8 @@ def multimodal_decode_vp8_real(
     "usual quantizer/mode rotation); stage 2 runs "
     "decode_webp_extended: header parse, animation gate, filter "
     "inversion against the reconstructed plane, the headerless VP8L "
-    "stream re-framed under a synthesized 40-bit header and decoded "
-    "by the REAL lossless machinery, dims cross-checked against the "
+    "stream decoded at the canvas dims by the REAL lossless "
+    "machinery, dims cross-checked against the "
     "VP8 frame.  The alpha channel is LOSSLESS => sum_a hash-matches "
     "exactly; the color planes follow the VP8 bound-assert convention "
     "(within (3+qi/3)/px of the closed-form source).  At 100 TB: "

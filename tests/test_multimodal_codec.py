@@ -1176,15 +1176,25 @@ def test_gif_anim_single_frame_matches_single_decoder():
 
 
 def _sweep_streams():
-    """Four encode/decode pairs, each as (decoder, good stream)."""
+    """Eleven encode/decode pairs, each as (decoder, good stream): JPEG
+    and GIF, and the RIFF family (WAVE, AVI, the WebP flavours)."""
+    from functools import partial
+
     from mincemeatpy_spark.multimodal.binary_ops import (
         decode_gif_real,
         decode_jpeg_progressive,
         decode_jpeg_real,
+        decode_webp_anim,
+        decode_webp_extended,
+        decode_webp_real,
+        encode_avi_mjpeg,
         encode_gif_indexed,
         encode_jpeg_baseline,
         encode_jpeg_progressive,
+        encode_webp_extended,
+        encode_webp_lossless,
     )
+    from mincemeatpy_spark.multimodal.vp8 import encode_webp_lossy
 
     x = np.arange(16)[None, :]
     y = np.arange(24)[:, None]
@@ -1217,12 +1227,78 @@ def _sweep_streams():
             decode_gif_anim,
             encode_gif_anim(16, 24, pal, frames, bg_index=2),
         ),
+        "wav_list": (
+            decode_audio_real,
+            _wav(2, 8000, list(range(-40, 40, 3)), extra_chunk=True),
+        ),
+        "avi_dib": (decode_avi_real, encode_avi_dib(4, 3, 3, _vpx)),
+        "avi_mjpeg": (
+            decode_avi_real,
+            encode_avi_mjpeg(8, 8, 2, lambda f: rgb[f : f + 8, :8]),
+        ),
+        "webp_lossless": (
+            decode_webp_real,
+            encode_webp_lossless(
+                [[tuple(int(c) for c in rgb[v, u]) for u in range(8)]
+                 for v in range(6)],
+                subtract_green=True, predictor="mixed", cache_bits=3,
+                lz77=True,
+            ),
+        ),
+        "webp_lossy": (
+            partial(decode_webp_real, placeholder_vp8_ok=True),
+            encode_webp_lossy(*_yuva(16, 16)[:3]),
+        ),
+        "vp8x_alpha": (
+            partial(decode_webp_extended, placeholder_vp8_ok=True),
+            encode_webp_extended(*_yuva(16, 16), alpha_filter=1),
+        ),
+        "webp_anim": (decode_webp_anim, _webp_anim_stream(8, 8)),
     }
 
 
-@pytest.mark.parametrize(
-    "case", ["jpeg_baseline", "jpeg_progressive", "gif_interlaced", "gif_anim"]
-)
+def _yuva(w, h):
+    """Deterministic Y, U, V (4:2:0) and alpha planes."""
+    x = np.arange(w)[None, :]
+    y = np.arange(h)[:, None]
+    cx = np.arange((w + 1) // 2)[None, :]
+    cy = np.arange((h + 1) // 2)[:, None]
+    return (
+        ((x * 7 + y * 13) % 200 + 28).astype(np.uint8),
+        ((cx * 5 + cy * 3) % 64 + 96).astype(np.uint8),
+        ((cx * 3 + cy * 5) % 64 + 96).astype(np.uint8),
+        ((x * 3 + y * 7) % 256).astype(np.uint8),
+    )
+
+
+def _webp_anim_stream(w, h):
+    """Three frames: overwrite, alpha blend with dispose, sub-rect."""
+    from mincemeatpy_spark.multimodal.binary_ops import encode_webp_anim
+
+    def rgba(i, a=255):
+        return ((i * 37) % 256, (i * 37 + 85) % 256, (i * 37 + 170) % 256, a)
+
+    return encode_webp_anim(w, h, rgba(11, 200), [
+        dict(x=0, y=0, blend=False, dispose=False,
+             pixels=[[rgba((u + v) % 7) for u in range(w)]
+                     for v in range(h)]),
+        dict(x=2, y=2, blend=True, dispose=True,
+             pixels=[[rgba(u + 2 * v, (u * 90 + v * 40) % 256)
+                      for u in range(w - 4)] for v in range(h - 4)]),
+        dict(x=4, y=2, blend=False, dispose=False,
+             pixels=[[rgba(3 * u + v) for u in range(w // 2)]
+                     for v in range(h // 2)]),
+    ])
+
+
+_SWEEP_CASES = [
+    "jpeg_baseline", "jpeg_progressive", "gif_interlaced", "gif_anim",
+    "wav_list", "avi_dib", "avi_mjpeg", "webp_lossless", "webp_lossy",
+    "vp8x_alpha", "webp_anim",
+]
+
+
+@pytest.mark.parametrize("case", _SWEEP_CASES)
 def test_malformed_streams_raise_only_valueerror(case):
     """Every prefix of a good stream and 1,000 seeded 1-3 byte
     overwrites of it: each decode returns, or raises ValueError
@@ -1252,11 +1328,12 @@ def test_malformed_streams_raise_only_valueerror(case):
 def test_oversized_frame_headers_fail_before_allocating():
     """A corrupt size field must not make a decoder allocate for the
     claimed frame: the JPEG decoders size their coefficient storage by
-    the entropy data, and an animated GIF refuses a canvas over 2^24
-    pixels (a 65535 x 65535 screen is a 4-gigapixel list)."""
+    the entropy data, and an animated GIF or WebP refuses a canvas over
+    2^24 pixels (a 65535 x 65535 screen is a 4-gigapixel list)."""
     from mincemeatpy_spark.multimodal.binary_ops import (
         decode_jpeg_progressive,
         decode_jpeg_real,
+        decode_webp_anim,
         encode_jpeg_baseline,
         encode_jpeg_progressive,
     )
@@ -1277,3 +1354,78 @@ def test_oversized_frame_headers_fail_before_allocating():
     good = encode_gif_anim(4, 4, _anim_pal(3), frames)
     with pytest.raises(NotImplementedError, match="canvas"):
         decode_gif_anim(good[:6] + b"\xff\xff\xff\xff" + good[10:])
+
+    good = _webp_anim_stream(8, 8)
+    at = good.index(b"VP8X") + 8 + 4  # flags(4), then two 24-bit dims
+    with pytest.raises(NotImplementedError, match="canvas"):
+        decode_webp_anim(good[:at] + b"\xff" * 6 + good[at + 6 :])
+
+
+# ------------------------------------------- RIFF writers' bytes, pinned
+
+
+def _riff_writer_outputs():
+    """Every RIFF writer on fixed inputs, keyed by case name."""
+    from mincemeatpy_spark.multimodal.binary_ops import (
+        encode_avi_mjpeg,
+        encode_webp_extended,
+        encode_webp_lossless,
+    )
+    from mincemeatpy_spark.multimodal.vp8 import encode_webp_lossy
+
+    rows = [
+        [((x % 5) * 7 + y * 11, (x % 5) * 13 + y * 17, x * 19 % 256)
+         for x in range(11)]
+        for y in range(6)
+    ]
+    # multimodal_decode_webp_real's five feature sets
+    modes = [
+        {},
+        {"subtract_green": True, "predictor": "mixed"},
+        {"palette": True},
+        {"cache_bits": 4, "lz77": True},
+        {"subtract_green": True, "cross_color": (17, 203, 87),
+         "predictor": "mixed", "cache_bits": 3, "lz77": True,
+         "meta_split": True},
+    ]
+    out = {
+        "avi_dib": encode_avi_dib(5, 3, 4, _vpx),
+        "avi_mjpeg": encode_avi_mjpeg(
+            16, 8, 2, lambda f: _gradient_rgb(16, 8, seed=4 * f + 1)
+        ),
+        "webp_lossy": encode_webp_lossy(*_yuva(20, 12)[:3], mode_seed=5),
+        "webp_anim": _webp_anim_stream(12, 10),
+    }
+    for k, kw in enumerate(modes):
+        out[f"webp_lossless_{k}"] = encode_webp_lossless(rows, **kw)
+    for comp in (0, 1):
+        out[f"vp8x_alpha_c{comp}"] = encode_webp_extended(
+            *_yuva(16, 12), alpha_filter=2, alpha_compression=comp
+        )
+    return out
+
+
+_RIFF_WRITER_SHA256 = {
+    "avi_dib": "1daa5642bff854f1c5b349f312094d75c34215315d5e7f3bb9ad273e50004f99",
+    "avi_mjpeg": "7c63566d10936aabcad9d874f775d504d50d6342e58a2e0f14d61841e6280110",
+    "vp8x_alpha_c0": "3b4c5f3601d9cf987a3ea28d349a106b5aab29b6fe2f3360b5574c072062110d",
+    "vp8x_alpha_c1": "91b27381424bc099868ca5cb6fc5b63e2ee157a672aedfcfca3a8681379d3ff1",
+    "webp_anim": "eb86ce6649badee04516a59ed9a55ee208e3aca1ef7188436bacc89cbcf9a6c5",
+    "webp_lossless_0": "de075430191592dbc8382aa8bdc28386d37d123e2294765eeddb3eeb73be6cbb",
+    "webp_lossless_1": "f950b539ffbfab64ceb9f689ade658177ed99cb63da3186b9ff8613aadf195f4",
+    "webp_lossless_2": "e230727b895a5a420a9d2d9fcca2b76d34f854ec6387e35fd39d683a62bcfd93",
+    "webp_lossless_3": "23bae27f75f21f53341932895fc7aac84f9ab4b67abed2adb5f4bc68b92ff9ff",
+    "webp_lossless_4": "4e3a77992bdb2e4096d953138c72a528c881923899b85f3239dccee9e8af1078",
+    "webp_lossy": "af5480c1c756969920e77c657c0e18b721101474714d0fc38a1e729d31671747",
+}
+
+
+@pytest.mark.parametrize("case", sorted(_RIFF_WRITER_SHA256))
+def test_riff_writers_bytes_pinned(case):
+    """The container writers' bytes are pinned by digest: a change to
+    the chunk framing, the pad byte or a header field shows here even
+    where the matching decoder would still read the stream back."""
+    import hashlib
+
+    got = hashlib.sha256(_riff_writer_outputs()[case]).hexdigest()
+    assert got == _RIFF_WRITER_SHA256[case]

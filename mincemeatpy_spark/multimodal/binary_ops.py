@@ -3114,6 +3114,65 @@ def encode_gif_anim(sw: int, sh: int, gpalette: list, frames: list,
     return bytes(out)
 
 
+class _Canvas:
+    """The canvas both animated decoders composite onto: ``w`` x ``h``
+    pixels that read as ``bg`` until a frame writes them.  Only written
+    pixels are stored, in a dict from flat index to pixel tuple, and
+    ``sums`` (one exact total per channel) moves by the new values minus
+    the old ones for each rectangle written — so a frame costs its
+    rectangle, not the canvas.  ``fmt`` names the format in errors."""
+
+    def __init__(self, fmt: str, w: int, h: int, bg: tuple):
+        if w * h > 1 << 24:
+            raise NotImplementedError(
+                f"{fmt} canvas over 2^24 pixels not supported"
+            )
+        self.fmt, self.w, self.h, self.bg = fmt, w, h, bg
+        self.px = {}
+        self.sums = [c * w * h for c in bg]
+
+    def rect(self, x: int, y: int, w: int, h: int) -> list:
+        """The flat indices of a frame's rectangle in raster order; a
+        rectangle reaching past the canvas is malformed."""
+        if x + w > self.w or y + h > self.h:
+            raise ValueError(f"malformed {self.fmt}: frame exceeds the canvas")
+        rows = [(y + v) * self.w + x for v in range(h)]
+        return [i for r in rows for i in range(r, r + w)]
+
+    def read(self, keys: list) -> list:
+        get, bg = self.px.get, self.bg
+        return [get(i, bg) for i in keys]
+
+    def write(self, keys: list, new: list) -> list:
+        """Set the pixels at ``keys`` to ``new`` and return their old
+        values: ``write(keys, old)`` restores the previous canvas."""
+        old = self.read(keys)
+        self.px.update(zip(keys, new))
+        if keys:
+            self.sums = [
+                s + sum(n) - sum(o)
+                for s, n, o in zip(self.sums, zip(*new), zip(*old))
+            ]
+        return old
+
+    def dispose(self, keys: list) -> None:
+        """Restore the pixels at ``keys`` to the background."""
+        self.write(keys, [self.bg] * len(keys))
+
+
+def _anim_frame_rows(m: dict) -> list:
+    """An animated decode as query rows, one per composited frame:
+    ``frame_no``, ``n_frames`` and the frame's channel sums, named
+    ``sum_r``, ``sum_g``, ``sum_b`` and, when it has alpha, ``sum_a``."""
+    return [
+        dict(
+            zip(("sum_r", "sum_g", "sum_b", "sum_a"), sums),
+            frame_no=k, n_frames=m["n_frames"],
+        )
+        for k, sums in enumerate(m["frames"])
+    ]
+
+
 def decode_gif_anim(payload: bytes) -> dict:
     """Real ANIMATED GIF decode: every image of the block walk
     (``_gif_walk``, shared with the single-frame decoder, as are the
@@ -3121,55 +3180,40 @@ def decode_gif_anim(payload: bytes) -> dict:
     Extensions driving per-frame compositing — transparency indices
     skip pixels, disposal 0/1 keeps the canvas, disposal 2 restores the
     frame's rectangle to the background color, disposal 3 restores the
-    pre-frame canvas — with sub-rectangle frames and local color
-    tables.  The canvas starts filled with the logical screen's
-    background color; screens over 2^24 pixels raise
+    frame's rectangle to what it was before the frame — with
+    sub-rectangle frames and local color tables.  Compositing runs on
+    ``_Canvas``: every pixel no frame has written reads as the logical
+    screen's background color; screens over 2^24 pixels raise
     ``NotImplementedError``.  Returns ``{fmt, width, height, n_frames,
     frames}`` where frames is one (sum_r, sum_g, sum_b) triple per
     composited canvas state — exact integers (GIF is lossless)."""
+    from itertools import compress
+
     sw, sh, bg_index, gct, images = _gif_walk(payload)
     if gct is None:
         raise ValueError("malformed GIF: animation needs a global table")
-    if sw * sh > 1 << 24:
-        raise NotImplementedError("GIF canvas over 2^24 pixels not supported")
     bg = gct[bg_index] if bg_index < len(gct) else (0, 0, 0)
 
-    canvas = [bg] * (sw * sh)
+    canvas = _Canvas("GIF", sw, sh, bg)
     frames = []
     for lx, ly, w, h, pal, gce, indices in images:
-        if lx + w > sw or ly + h > sh:
-            raise ValueError("malformed GIF: frame exceeds the screen")
+        rect = canvas.rect(lx, ly, w, h)
         out = indices()
         disposal = gce["disposal"] if gce else 0
         tidx = gce["tidx"] if gce else None
-        prev_canvas = list(canvas) if disposal == 3 else None
-        npal = len(pal)
-        for v in range(h):
-            row = (ly + v) * sw + lx
-            src = v * w
-            for u in range(w):
-                idx = out[src + u]
-                if idx == tidx:
-                    continue
-                if idx >= npal:
-                    raise ValueError(
-                        "malformed GIF: palette index out of range"
-                    )
-                canvas[row + u] = pal[idx]
-        frames.append(
-            (
-                sum(c[0] for c in canvas),
-                sum(c[1] for c in canvas),
-                sum(c[2] for c in canvas),
-            )
-        )
+        keys = rect
+        if tidx is not None:
+            drawn = [i != tidx for i in out]
+            keys = list(compress(rect, drawn))
+            out = bytes(compress(out, drawn))
+        if max(out, default=0) >= len(pal):
+            raise ValueError("malformed GIF: palette index out of range")
+        prev = canvas.write(keys, [pal[i] for i in out])
+        frames.append(tuple(canvas.sums))
         if disposal == 2:
-            for v in range(h):
-                row = (ly + v) * sw + lx
-                for u in range(w):
-                    canvas[row + u] = bg
+            canvas.dispose(rect)
         elif disposal == 3:
-            canvas = prev_canvas
+            canvas.write(keys, prev)
 
     if not frames:
         raise ValueError("malformed GIF: no image data")
@@ -3360,19 +3404,12 @@ def multimodal_decode_gif_anim(
         ]
         return encode_gif_anim(w, h, G, frames, bg_index=0)
 
-    def decode_row(doc_id, payload):
-        m = decode_gif_anim(payload)
-        return [
-            dict(frame_no=k, n_frames=m["n_frames"], sum_r=sr, sum_g=sg, sum_b=sb)
-            for k, (sr, sg, sb) in enumerate(m["frames"])
-        ]
-
     return _codec_roundtrip(
         t(spark, sf_dir, "documents")
         .select("doc_id", "n_chars")
         .repartition(spark.sparkContext.defaultParallelism),
         encode_row,
-        decode_row,
+        lambda _doc_id, payload: _anim_frame_rows(decode_gif_anim(payload)),
         "doc_id long, frame_no long, n_frames long, sum_r long, "
         "sum_g long, sum_b long",
     )
@@ -5315,6 +5352,25 @@ def _webp_alpha_filter(plane: list, w: int, h: int, f: int,
     return out
 
 
+def _vp8x_chunk(flags: int, w: int, h: int) -> bytes:
+    """The VP8X chunk: the flags byte, three reserved zero bytes, then
+    the canvas width and height less one as 24-bit little-endian
+    fields."""
+    dims = (w - 1).to_bytes(3, "little") + (h - 1).to_bytes(3, "little")
+    return riff.chunk(b"VP8X", bytes([flags, 0, 0, 0]) + dims)
+
+
+def _vp8x_read(body: bytes) -> tuple:
+    """``(flags, width, height)`` from a VP8X chunk body."""
+    if len(body) < 10:
+        raise ValueError("malformed VP8X: short header")
+    return (
+        body[0],
+        1 + int.from_bytes(body[4:7], "little"),
+        1 + int.from_bytes(body[7:10], "little"),
+    )
+
+
 def encode_webp_extended(y, u, v, alpha, qi: int = 4,
                          filter_level: int = 0, sharpness: int = 0,
                          mode_seed: int = 0, alpha_filter: int = 0,
@@ -5324,8 +5380,6 @@ def encode_webp_extended(y, u, v, alpha, qi: int = 4,
     alpha plane run through a prediction filter, then either raw
     (C=0) or compressed as a HEADERLESS VP8L stream of alpha-as-green
     (C=1) — and the VP8 key frame from ``encode_vp8_frame``."""
-    import struct
-
     import numpy as np
 
     a = np.asarray(alpha, dtype=np.int64)
@@ -5347,12 +5401,10 @@ def encode_webp_extended(y, u, v, alpha, qi: int = 4,
         mode_seed=mode_seed,
     )
 
-    vp8x = bytes([0x10, 0, 0, 0])  # flags: ALPHA
-    vp8x += struct.pack("<I", w - 1)[:3] + struct.pack("<I", h - 1)[:3]
     return riff.file(
         b"WEBP",
-        riff.chunk(b"VP8X", vp8x) + riff.chunk(b"ALPH", alph)
-        + riff.chunk(b"VP8 ", frame),
+        _vp8x_chunk(0x10, w, h)  # flags: ALPHA
+        + riff.chunk(b"ALPH", alph) + riff.chunk(b"VP8 ", frame),
     )
 
 
@@ -5372,15 +5424,11 @@ def decode_webp_extended(payload: bytes,
     canvas = alph = frame = None
     for fourcc, body, _ in riff.top(payload):
         if fourcc == b"VP8X":
-            if len(body) < 10:
-                raise ValueError("malformed VP8X: short header")
-            flags = body[0]
+            flags, cw, ch = _vp8x_read(body)
             if flags & 0x02:
                 # animations decode for real since r10 (ANMF with
                 # VP8L frames)
                 return decode_webp_anim(payload)
-            cw = 1 + (body[4] | (body[5] << 8) | (body[6] << 16))
-            ch = 1 + (body[7] | (body[8] << 8) | (body[9] << 16))
             canvas = (cw, ch)
         elif fourcc == b"ALPH":
             alph = bytes(body)
@@ -5453,16 +5501,10 @@ def encode_webp_anim(cw: int, ch: int, bg_rgba: tuple, frames: list,
     False = overwrite), dispose (True = restore rect to background),
     duration}``; x and y must be even (the container stores them
     halved)."""
-    import struct
-
-    def u24(v: int) -> bytes:
-        return struct.pack("<I", v)[:3]
-
-    vp8x = bytes([0x12, 0, 0, 0])  # flags: ALPHA | ANIM
-    vp8x += u24(cw - 1) + u24(ch - 1)
     r, g, b, a = bg_rgba
-    anim = bytes([b, g, r, a]) + struct.pack("<H", loop)
-    body = riff.chunk(b"VP8X", vp8x) + riff.chunk(b"ANIM", anim)
+    anim = bytes([b, g, r, a]) + loop.to_bytes(2, "little")
+    body = _vp8x_chunk(0x12, cw, ch)  # flags: ALPHA | ANIM
+    body += riff.chunk(b"ANIM", anim)
     for fr in frames:
         if fr["x"] % 2 or fr["y"] % 2:
             raise ValueError("ANMF frame offsets must be even")
@@ -5472,12 +5514,10 @@ def encode_webp_anim(cw: int, ch: int, bg_rgba: tuple, frames: list,
         flags = (0 if fr.get("blend", True) else 2) | (
             1 if fr.get("dispose", False) else 0
         )
-        hdr = (
-            u24(fr["x"] // 2) + u24(fr["y"] // 2)
-            + u24(fw - 1) + u24(fh - 1)
-            + u24(fr.get("duration", 40)) + bytes([flags])
-        )
-        body += riff.chunk(b"ANMF", hdr + sub)
+        fields = (fr["x"] // 2, fr["y"] // 2, fw - 1, fh - 1,
+                  fr.get("duration", 40))
+        hdr = b"".join(f.to_bytes(3, "little") for f in fields)
+        body += riff.chunk(b"ANMF", hdr + bytes([flags]) + sub)
     return riff.file(b"WEBP", body)
 
 
@@ -5487,73 +5527,68 @@ _WEBP_ANIM_SCHEMA = (
 )
 
 
-def _webp_anim_frame_rows(doc_id: int, payload: bytes) -> list:
-    """The animated-WebP queries' decode rows: one per composited frame."""
-    m = decode_webp_anim(payload)
-    return [
-        dict(
-            frame_no=k, n_frames=m["n_frames"],
-            sum_r=sr, sum_g=sg, sum_b=sb, sum_a=sa,
-        )
-        for k, (sr, sg, sb, sa) in enumerate(m["frames"])
-    ]
+def _webp_over(src: tuple, dst: tuple) -> tuple:
+    """Alpha-blend pixel ``src`` over ``dst`` (both (r, g, b, a)): the
+    container spec's over-operator in EXACT integer form,
+        A = sa + da*(255-sa)/255
+    scaled by 255:
+        A_num = 255*sa + da*(255-sa)
+        RGB   = (255*src*sa + dst*da*(255-sa)) / A_num
+    with floor rounding (deterministic; the oracle replicates it with
+    integer //); A_num > 0 whenever sa > 0."""
+    sa = src[3]
+    if sa == 255:
+        return src
+    if sa == 0:
+        return dst  # fully transparent: keep the canvas
+    da = dst[3]
+    a_num = 255 * sa + da * (255 - sa)
+    keep = da * (255 - sa)
+    return tuple(
+        (255 * s * sa + d * keep) // a_num for s, d in zip(src[:3], dst)
+    ) + (a_num // 255,)
 
 
-def decode_webp_anim(payload: bytes, return_frames: bool = False) -> dict:
+def decode_webp_anim(payload: bytes) -> dict:
     """Real ANIMATED WebP decode (the GIF-anim pattern applied to the
     VP8X container): VP8X + ANIM headers, then per ANMF chunk a real
     VP8L sub-image decode (alpha-capable), composited onto the canvas
     — blend flag 'do not blend' overwrites the rect; alpha blending
-    implements the container spec's over-operator in exact integer
-    arithmetic (floor rounding; fractional alpha included since r11 —
-    it is pure arithmetic, no empirical tables), disposal restores the
-    frame rect to the ANIM background color.  The canvas starts filled
-    with the background color.  Lossy VP8 sub-frames stay gated by
-    name (their bound-assert semantics don't fit the exact compositing
-    oracle).  Returns one exact (sum_r, sum_g, sum_b, sum_a) per
-    composited canvas state.  Canvases over 2^24 pixels raise
-    ``NotImplementedError`` before anything is allocated."""
+    is ``_webp_over`` (fractional alpha included since r11 — it is pure
+    arithmetic, no empirical tables), disposal restores the frame rect
+    to the ANIM background color.  Compositing runs on ``_Canvas``:
+    every pixel no frame has written reads as the background color.
+    Lossy VP8 sub-frames stay gated by name (their bound-assert
+    semantics don't fit the exact compositing oracle).  Returns one
+    exact (sum_r, sum_g, sum_b, sum_a) per composited canvas state.
+    Canvases over 2^24 pixels raise ``NotImplementedError``."""
     if riff.form(payload) != b"WEBP":
         raise ValueError("not a WebP stream (missing RIFF/WEBP)")
 
-    def u24(b: bytes) -> int:
-        return b[0] | (b[1] << 8) | (b[2] << 16)
-
-    canvas_dims = bg = canvas = None
+    canvas_dims = canvas = None
     frames_out = []
-    cw = ch = 0
     for fourcc, body, _ in riff.top(payload):
         if fourcc == b"VP8X":
-            if len(body) < 10:
-                raise ValueError("malformed VP8X: short header")
-            cw = 1 + u24(body[4:7])
-            ch = 1 + u24(body[7:10])
-            if cw * ch > 1 << 24:
-                raise NotImplementedError(
-                    "WebP canvas over 2^24 pixels not supported"
-                )
-            canvas_dims = (cw, ch)
+            canvas_dims = _vp8x_read(body)[1:]
         elif fourcc == b"ANIM":
             if len(body) < 6:
                 raise ValueError("malformed ANIM: short chunk")
             bg = (body[2], body[1], body[0], body[3])  # BGRA stored
             if canvas_dims is None:
                 raise ValueError("malformed: ANIM before VP8X")
-            canvas = [bg] * (cw * ch)
+            canvas = _Canvas("WebP", *canvas_dims, bg)
         elif fourcc == b"ANMF":
             if canvas is None:
                 raise ValueError("malformed: ANMF before ANIM")
             if len(body) < 16:
                 raise ValueError("malformed ANMF: short header")
-            fx = u24(body[0:3]) * 2
-            fy = u24(body[3:6]) * 2
-            fw = 1 + u24(body[6:9])
-            fh = 1 + u24(body[9:12])
+            fx, fy, fw, fh = (
+                int.from_bytes(body[i : i + 3], "little")
+                for i in (0, 3, 6, 9)
+            )
+            fx, fy, fw, fh = 2 * fx, 2 * fy, fw + 1, fh + 1
             flags = body[15]
-            blend = not (flags & 2)
-            dispose = bool(flags & 1)
-            if fx + fw > cw or fy + fh > ch:
-                raise ValueError("ANMF frame exceeds the canvas")
+            rect = canvas.rect(fx, fy, fw, fh)
             # frame data: sub-chunks; the subset takes one VP8L image
             argb = None
             for sf, sdata, _ in riff.chunks(body, 16):
@@ -5571,72 +5606,28 @@ def decode_webp_anim(payload: bytes, return_frames: bool = False) -> dict:
                     )
             if argb is None:
                 raise ValueError("malformed ANMF: no sub-image")
-            for v in range(fh):
-                row = (fy + v) * cw + fx
-                src = v * fw
-                for u in range(fw):
-                    p = argb[src + u]
-                    pa = (p >> 24) & 0xFF
-                    rgba = (
-                        (p >> 16) & 0xFF, (p >> 8) & 0xFF, p & 0xFF, pa,
-                    )
-                    if blend:
-                        if pa == 255:
-                            canvas[row + u] = rgba
-                        elif pa == 0:
-                            pass  # fully transparent: keep canvas
-                        else:
-                            # fractional alpha (r11, closing the last
-                            # anim-WebP gate): the container spec's
-                            # over-operator in EXACT integer form.
-                            #   A = pa + ca*(255-pa)/255
-                            # scaled by 255:
-                            #   A_num = 255*pa + ca*(255-pa)
-                            #   RGB   = (255*src*pa + dst*ca*(255-pa))
-                            #           / A_num
-                            # floor rounding (deterministic; the
-                            # oracle replicates it with integer //).
-                            cr, cg, cb, ca = canvas[row + u]
-                            a_num = 255 * pa + ca * (255 - pa)
-                            if a_num == 0:
-                                canvas[row + u] = (0, 0, 0, 0)
-                            else:
-                                canvas[row + u] = (
-                                    (255 * rgba[0] * pa
-                                     + cr * ca * (255 - pa)) // a_num,
-                                    (255 * rgba[1] * pa
-                                     + cg * ca * (255 - pa)) // a_num,
-                                    (255 * rgba[2] * pa
-                                     + cb * ca * (255 - pa)) // a_num,
-                                    a_num // 255,
-                                )
-                    else:
-                        canvas[row + u] = rgba
-            frames_out.append(
-                (
-                    sum(c[0] for c in canvas),
-                    sum(c[1] for c in canvas),
-                    sum(c[2] for c in canvas),
-                    sum(c[3] for c in canvas),
-                )
-            )
-            if dispose:
-                for v in range(fh):
-                    row = (fy + v) * cw + fx
-                    for u in range(fw):
-                        canvas[row + u] = bg
+            pixels = [
+                ((p >> 16) & 0xFF, (p >> 8) & 0xFF, p & 0xFF, p >> 24 & 0xFF)
+                for p in argb
+            ]
+            if not flags & 2:  # blend
+                pixels = list(map(_webp_over, pixels, canvas.read(rect)))
+            canvas.write(rect, pixels)
+            frames_out.append(tuple(canvas.sums))
+            if flags & 1:
+                canvas.dispose(rect)
     if canvas_dims is None:
         raise ValueError("malformed VP8X: missing header chunk")
     if not frames_out:
         raise ValueError("malformed animation: no ANMF frames")
-    out = {
+    cw, ch = canvas_dims
+    return {
         "fmt": "webp-anim",
         "width": cw,
         "height": ch,
         "n_frames": len(frames_out),
         "frames": frames_out,
     }
-    return out
 
 
 @register(
@@ -5755,7 +5746,7 @@ def multimodal_decode_webp_anim(
         .select("doc_id", "n_chars")
         .repartition(spark.sparkContext.defaultParallelism),
         encode_row,
-        _webp_anim_frame_rows,
+        lambda _doc_id, p: _anim_frame_rows(decode_webp_anim(p)),
         _WEBP_ANIM_SCHEMA,
     )
 
@@ -5893,7 +5884,7 @@ def multimodal_decode_webp_anim_fralpha(
         .select("doc_id", "n_chars")
         .repartition(spark.sparkContext.defaultParallelism),
         encode_row,
-        _webp_anim_frame_rows,
+        lambda _doc_id, p: _anim_frame_rows(decode_webp_anim(p)),
         _WEBP_ANIM_SCHEMA,
     )
 

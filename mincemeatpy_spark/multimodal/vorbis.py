@@ -1413,13 +1413,13 @@ def _residue_partitions(r, rs, books, v) -> None:
         """,
     category="multimodal",
     doc="The first TRANSFORM audio codec under the correctness gate "
-    "(r9 — the audio gate list shrinks to MP3/AAC/Opus): stage 1 "
-    "synthesizes a deterministic two-tone signal per document and "
+    "(r9 — the audio gate list shrinks to MP3/AAC/Opus): the roundtrip "
+    "pass synthesizes a deterministic two-tone signal per document and "
     "encodes it as a real Ogg/Vorbis-subset stream — MDCT frames, "
     "floor-1 posts fit in the dB domain, residue VQ entries, Huffman "
     "codebooks built from the frame's real histograms and written "
-    "into the setup header; stage 2 runs decode_vorbis_real: Ogg "
-    "unpage with CRC verification, full header/codebook parse, floor "
+    "into the setup header; the same pass then runs decode_vorbis_real: "
+    "Ogg unpage with CRC verification, full header/codebook parse, floor "
     "curve synthesis (render_point prediction + Bresenham), residue "
     "classword/VQ decode, IMDCT and windowed overlap-add.  Vorbis is "
     "LOSSY, so this follows the repo's bound-assert convention "
@@ -1432,7 +1432,7 @@ def _residue_partitions(r, rs, books, v) -> None:
     "blows it on nearly every document.  tests/test_vorbis.py "
     "additionally pins the tight property: decoded PCM equals the "
     "independent numpy reconstruction of floor*residue to float "
-    "precision.  Both stages are narrow mapInPandas passes over a "
+    "precision.  Encode and decode share one narrow mapInArrow pass over a "
     "repartitioned projection (the JPEG parallelism lesson); at "
     "100 TB this is embarrassingly parallel per-row CPU.",
 )

@@ -1219,18 +1219,18 @@ def _vp8_plane_sums(*planes) -> list:
         """,
     category="multimodal",
     doc="Lossy WebP (VP8 key frames) decoded FOR REAL (r9 judge task 1 "
-    "— the last derivable image-gate entry falls): stage 1 encodes a "
-    "genuine RIFF/WEBP/'VP8 ' stream per document — boolean "
+    "— the last derivable image-gate entry falls): the roundtrip pass "
+    "encodes a genuine RIFF/WEBP/'VP8 ' stream per document — boolean "
     "arithmetic coder, keyframe header with token-probability update "
     "flags, per-MB mode coding on the keyframe trees (DC/V/H/TM "
     "rotated per macroblock AND per doc), Y2 walsh-hadamard + 4x4 DCT "
     "token partition with CAT1..6 extra bits, quantizer rotation "
     "doc_id%24, SIMPLE loop-filter level/sharpness rotation, and an "
     "all-skip flat document every 7th doc so the mb_no_coeff_skip "
-    "path carries data; stage 2 routes through decode_webp_real's "
-    "container dispatch into decode_vp8_real: header parse, mode "
-    "decode, detokenization with band/context tracking, dequant, "
-    "exact integer IWHT+IDCT, intra prediction with 127/129 edge "
+    "path carries data; the same pass then routes through "
+    "decode_webp_real's container dispatch into decode_vp8_real: header "
+    "parse, mode decode, detokenization with band/context tracking, "
+    "dequant, exact integer IWHT+IDCT, intra prediction with 127/129 edge "
     "fills, loop filter.  VP8 is LOSSY => the bound-assert "
     "convention: width/height hash-match exactly and within_{y,u,v} "
     "assert decoded plane sums sit within (3 + qi/3)/pixel of the "
@@ -1240,9 +1240,9 @@ def _vp8_plane_sums(*planes) -> list:
     "Table provenance is documented in the module docstring: the two "
     "empirical 1056-entry probability tables are deterministic "
     "placeholders (the stream machinery is exactly self-consistent); "
-    "everything else is spec-transcribed and KAT-pinned.  Both stages "
-    "are narrow mapInPandas passes over a repartitioned 16-byte/row "
-    "projection.  At 100 TB: pure per-row CPU, embarrassingly "
+    "everything else is spec-transcribed and KAT-pinned.  Encode and "
+    "decode share one narrow mapInArrow pass over a repartitioned "
+    "16-byte/row projection.  At 100 TB: pure per-row CPU, embarrassingly "
     "parallel, no shuffle.",
 )
 def multimodal_decode_vp8_real(
@@ -1328,12 +1328,12 @@ def multimodal_decode_vp8_real(
         """,
     category="multimodal",
     doc="EXTENDED WebP (VP8X) decoded for real — the most common "
-    "real-world WebP shape, lossy color + alpha: stage 1 writes a "
-    "genuine VP8X container per document (flags + 24-bit canvas dims, "
+    "real-world WebP shape, lossy color + alpha: the roundtrip pass writes "
+    "a genuine VP8X container per document (flags + 24-bit canvas dims, "
     "an ALPH chunk whose alpha plane rotates through all four "
     "prediction filters and BOTH compression methods — raw and "
     "headerless-VP8L alpha-as-green — and a VP8 key frame with the "
-    "usual quantizer/mode rotation); stage 2 runs "
+    "usual quantizer/mode rotation); the same pass then runs "
     "decode_webp_extended: header parse, animation gate, filter "
     "inversion against the reconstructed plane, the headerless VP8L "
     "stream decoded at the canvas dims by the REAL lossless "
@@ -1341,7 +1341,7 @@ def multimodal_decode_vp8_real(
     "VP8 frame.  The alpha channel is LOSSLESS => sum_a hash-matches "
     "exactly; the color planes follow the VP8 bound-assert convention "
     "(within (3+qi/3)/px of the closed-form source).  At 100 TB: "
-    "pure per-row CPU in two narrow Arrow stages, no shuffle.",
+    "pure per-row CPU in one narrow mapInArrow pass, no shuffle.",
 )
 def multimodal_decode_vp8x_real(
     spark: SparkSession, sf_dir: str

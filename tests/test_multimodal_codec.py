@@ -1502,3 +1502,51 @@ def test_riff_writers_bytes_pinned(case):
 
     got = hashlib.sha256(_riff_writer_outputs()[case]).hexdigest()
     assert got == _RIFF_WRITER_SHA256[case]
+
+
+# ------------------------------------------- round-trip harness contract
+
+
+def test_codec_roundtrip_harness_contract(spark):
+    """_codec_roundtrip's per-row contract on a small frame: an empty
+    input partition, a decode that emits 0, 1 or 3 rows per document,
+    and an encode that carries truth values past the payload.  The
+    decode sees the payload as ``bytes`` and the carried values
+    unchanged; the output keeps the declared schema and names."""
+    from pyspark.sql.types import StructType
+
+    from mincemeatpy_spark.multimodal.roundtrip import _codec_roundtrip
+
+    # doc_ids 1..5 in 6 slices: slice 0 is empty
+    rdd = spark.sparkContext.parallelize(
+        [(d, "ab" * d) for d in range(1, 6)], 6
+    )
+    assert rdd.glom().map(len).collect() == [0, 1, 1, 1, 1, 1]
+    src = spark.createDataFrame(rdd, "doc_id long, tag string")
+
+    def encode_row(doc_id, tag):
+        return tag.encode(), doc_id * 10, f"t{doc_id}"
+
+    def decode_row(doc_id, payload, true_n, true_s):
+        return [
+            {"i": i, "kind": type(payload).__name__,
+             "text": payload.decode(), "truth": true_n, "label": true_s}
+            for i in range((0, 1, 3)[doc_id % 3])
+        ]
+
+    schema = "doc_id long, i int, kind string, text string, truth long, label string"
+    df = _codec_roundtrip(
+        src, encode_row, decode_row, schema,
+        carry="true_n long, true_s string",
+    )
+    assert df.schema == StructType.fromDDL(schema)
+    assert sorted(map(tuple, df.collect())) == [
+        (1, 0, "bytes", "ab", 10, "t1"),
+        (2, 0, "bytes", "abab", 20, "t2"),
+        (2, 1, "bytes", "abab", 20, "t2"),
+        (2, 2, "bytes", "abab", 20, "t2"),
+        (4, 0, "bytes", "abababab", 40, "t4"),
+        (5, 0, "bytes", "ababababab", 50, "t5"),
+        (5, 1, "bytes", "ababababab", 50, "t5"),
+        (5, 2, "bytes", "ababababab", 50, "t5"),
+    ]

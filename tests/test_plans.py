@@ -1348,11 +1348,11 @@ def test_video_corpus_dedupes_before_decode(registry_run):
     assert d < x < e, "digest dedupe is not between encode and decode"
 
 
-def test_vp8_and_mjpeg_are_two_narrow_python_stages(registry_run):
-    # every round-trip codec query: exactly the encode + decode
-    # mapInPandas stages — no extra Python hops, no joins, no cartesian
-    # anything; all but the first four run over a repartitioned
-    # 16-byte/row projection.
+def test_codec_roundtrips_are_one_narrow_python_stage(registry_run):
+    # every round-trip codec query: exactly one mapInArrow stage that
+    # encodes and decodes each row in the same pass — no second Python
+    # hop, no joins, no cartesian anything; all but the first four run
+    # over a repartitioned 16-byte/row projection.
     unpartitioned = (
         "multimodal_decode_real", "multimodal_decode_audio_real",
         "multimodal_decode_png_real", "multimodal_decode_video_real",
@@ -1369,9 +1369,8 @@ def test_vp8_and_mjpeg_are_two_narrow_python_stages(registry_run):
     for name in unpartitioned + repartitioned:
         plan = _plan(registry_run, name)
         facts = plan_facts(plan)
-        assert facts["python"] == {"MapInPandas": 2}, name
-        assert "MapInPandas encode" in plan, name
-        assert "MapInPandas decode" in plan, name
+        assert facts["python"] == {"MapInArrow": 1}, name
+        assert "MapInArrow roundtrip" in plan, name
         assert not facts["joins"], name
         if name in repartitioned:
             assert facts["exchanges"], name  # the parallelism repartition

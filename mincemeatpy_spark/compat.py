@@ -134,38 +134,32 @@ def mapreduce(
     reducefn: Callable[[Any, list[Any]], Any],
     collectfn: Callable[[Any, list[Any]], Any] | None = None,
     num_partitions: int | None = None,
-    lazy: bool | None = None,
 ) -> dict[Any, Any]:
     """Run one mincemeat-style map/reduce job; return ``{key: result}``.
 
     ``reducefn`` is mandatory, as in the reference (a worker with
     ``reducefn=None`` would crash at reference mincemeat.py:181).
 
-    ``lazy`` controls where ``datasource[k]`` runs: ``True`` ships the
-    dict-like to executors (keys only through the driver — the
-    reference's streaming-``__getitem__`` contract, mincemeat.py:313-316,
-    README.md:76); ``False`` materializes driver-side; ``None`` (default)
-    picks lazy for any non-Mapping dict-like, eager for plain Mappings
-    (whose values are already in driver memory).
+    The datasource's type decides where ``datasource[k]`` runs.  A plain
+    ``Mapping`` already holds its values in driver memory, so its items
+    are parallelized.  Any other dict-like ships to the executors, which
+    run ``datasource[k]`` there; only its keys pass through the driver
+    (the reference's streaming-``__getitem__`` contract,
+    mincemeat.py:313-316, README.md:76).
     """
     if reducefn is None:
         raise TypeError("reducefn is required (reference mincemeat.py:181)")
 
     sc = spark.sparkContext
-    if lazy is None:
-        lazy = not isinstance(datasource, Mapping)
-    if lazy:
+    if isinstance(datasource, Mapping):
+        items = list(datasource.items())
+        n_part = num_partitions or min(max(1, len(items)), sc.defaultParallelism)
+        rdd = sc.parallelize(items, n_part)
+    else:
         keys = list(iter(datasource))
         n_part = num_partitions or min(max(1, len(keys)), sc.defaultParallelism)
         ds = datasource  # cloudpickled once per task; __getitem__ runs there
         rdd = sc.parallelize(keys, n_part).map(lambda k: (k, ds[k]))
-    else:
-        if isinstance(datasource, Mapping):
-            items = list(datasource.items())
-        else:
-            items = [(k, datasource[k]) for k in datasource]
-        n_part = num_partitions or min(max(1, len(items)), sc.defaultParallelism)
-        rdd = sc.parallelize(items, n_part)
 
     memory = rdd._memory_limit()  # spark.python.worker.memory, MiB
 

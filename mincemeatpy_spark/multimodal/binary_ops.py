@@ -10,21 +10,19 @@ pass per row batch), checking each decode against closed-form truth
 
 At 100 TB: binary payloads ride in parquet alongside metadata columns;
 filters on metadata prune row groups without touching payload bytes;
-decode runs in narrow Python map stages (``mapInArrow`` for the round
-trips, ``mapInPandas`` for the stubs and the composites) so bytes stream
-batch-wise through Arrow and never materialize on the driver.
+decode runs in narrow Python map stages (one ``mapInArrow`` row stage
+each, ``roundtrip._row_stage``) so bytes stream batch-wise through Arrow
+and never materialize on the driver.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mincemeatpy_spark.multimodal import riff
 from mincemeatpy_spark.multimodal.roundtrip import (
     _codec_roundtrip,
-    _encode_stage,
+    _row_stage,
     _WorkerMemo,
 )
 from mincemeatpy_spark.registry import register
@@ -265,38 +263,27 @@ def multimodal_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         """,
     category="multimodal",
-    doc="Decode stage via mapInPandas: Arrow-batched binary in, typed "
-    "metadata out.  The decoder body is the deterministic stub "
-    "(_decode_one) so the oracle can mirror it in SQL; a real "
+    doc="Decode stage as one mapInArrow row stage: Arrow-batched binary "
+    "in, typed metadata out.  The decoder body is the deterministic "
+    "stub (decode) so the oracle can mirror it in SQL; a real "
     "codec swaps in without touching the pipeline (explicit output "
     "schema, per-batch iteration, no driver collect).",
 )
 def multimodal_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     d = t(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
 
-    def _decode_one(payload: bytes) -> tuple[int, int, int, str]:
+    def decode(doc_id, payload):
         n = len(payload)
-        return n % 640 + 1, (n * 7) % 480 + 1, 3, ("png" if n % 2 == 0 else "jpg")
+        fmt = "png" if n % 2 == 0 else "jpg"
+        return [
+            dict(doc_id=doc_id, width=n % 640 + 1, height=(n * 7) % 480 + 1,
+                 channels=3, fmt=fmt)
+        ]
 
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            metas = [_decode_one(bytes(b)) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "width": [m[0] for m in metas],
-                    "height": [m[1] for m in metas],
-                    "channels": [m[2] for m in metas],
-                    "fmt": [m[3] for m in metas],
-                }
-            )
-
-    return d.mapInPandas(
-        decode, schema="doc_id long, width int, height int, channels int, fmt string"
+    return _row_stage(
+        d, decode, "doc_id long, width int, height int, channels int, fmt string"
     )
 
 
@@ -462,38 +449,31 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         """,
     category="multimodal",
-    doc="Decode+resize fused in ONE mapInPandas pass (one Arrow round "
+    doc="Decode+resize fused in ONE mapInArrow pass (one Arrow round "
     "trip, the shape a real PIL/opencv stage uses): stub-decode dims, "
     "then fit-to-224-box scaling.  floor(x + 0.5) keeps the rounding "
     "identical across engines (python round() is banker's; SQL round() "
     "is half-up).",
 )
 def multimodal_resize_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+    import math
 
     d = t(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
 
-    def decode_resize(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import math
+    def decode_resize(doc_id, payload):
+        n = len(payload)
+        w, h = n % 640 + 1, (n * 7) % 480 + 1
+        scale = min(224.0 / w, 224.0 / h)
+        return [
+            dict(doc_id=doc_id, width=w, height=h,
+                 out_w=math.floor(w * scale + 0.5),
+                 out_h=math.floor(h * scale + 0.5))
+        ]
 
-        for pdf in batches:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                n = len(bytes(b))
-                w, h = n % 640 + 1, (n * 7) % 480 + 1
-                scale = min(224.0 / w, 224.0 / h)
-                rows.append(
-                    (doc_id, w, h, math.floor(w * scale + 0.5), math.floor(h * scale + 0.5))
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "out_w", "out_h"]
-            )
-
-    return d.mapInPandas(
-        decode_resize,
-        schema="doc_id long, width int, height int, out_w int, out_h int",
+    return _row_stage(
+        d, decode_resize, "doc_id long, width int, height int, out_w int, out_h int"
     )
 
 
@@ -693,45 +673,28 @@ def multimodal_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     category="multimodal",
     doc="Audio feature-extract plumbing: payload bytes framed into 256-"
     "sample windows, per-frame energy (sum of sample values) via numpy "
-    "over Arrow batches in mapInPandas — the exact shape of a real "
+    "over Arrow batches in mapInArrow — the exact shape of a real "
     "spectral/DSP stage (frombuffer -> per-window reduce -> one row per "
     "frame).  The oracle is BYTE-exact (hex(encode(text)) slicing, not "
     "character functions), so non-ASCII payloads hash identically in "
     "both engines.",
 )
 def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+    import numpy as np
 
     d = t(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
 
-    def energy(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
+    def energy(doc_id, payload):
+        samples = np.frombuffer(payload, dtype=np.uint8)
+        for f in range(0, samples.size, 256):
+            win = samples[f : f + 256]
+            yield dict(doc_id=doc_id, frame_no=f // 256,
+                       energy=int(win.sum()), n_samples=win.size)
 
-        for pdf in batches:
-            out_doc, out_frame, out_energy, out_n = [], [], [], []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                samples = np.frombuffer(bytes(b), dtype=np.uint8)
-                if samples.size == 0:
-                    continue
-                for f in range(0, (samples.size + 255) // 256):
-                    win = samples[f * 256 : (f + 1) * 256]
-                    out_doc.append(doc_id)
-                    out_frame.append(f)
-                    out_energy.append(int(win.sum()))
-                    out_n.append(int(win.size))
-            yield pd.DataFrame(
-                {
-                    "doc_id": out_doc,
-                    "frame_no": out_frame,
-                    "energy": out_energy,
-                    "n_samples": out_n,
-                }
-            )
-
-    return d.mapInPandas(
-        energy, schema="doc_id long, frame_no int, energy bigint, n_samples int"
+    return _row_stage(
+        d, energy, "doc_id long, frame_no int, energy bigint, n_samples int"
     )
 
 
@@ -841,7 +804,7 @@ def multimodal_dedup_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the image-dedup stage of a multimodal pipeline: a 60-bit "
     "blockwise-mean hash (60 byte-range chunks, bit k set iff chunk "
     "mean > global mean — the aHash construction over the stubbed "
-    "decode, numpy over Arrow batches in mapInPandas), then 4x15-bit "
+    "decode, numpy over Arrow batches in mapInArrow), then 4x15-bit "
     "band LSH for candidates, then exact Hamming verification "
     "(bit_count(xor)) at threshold 6.  All-integer compare (sum*count "
     "cross-multiplication, no float means) makes even this pipeline "
@@ -850,11 +813,11 @@ def multimodal_dedup_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "non-ASCII payloads.  Work scales with assets + band "
     "collisions, never pairs; payload bytes die at the hash step, so "
     "at 100 TB the shuffle carries one int64 per asset.  A real "
-    "decoder swaps into the same mapInPandas slot "
+    "decoder swaps into the same mapInArrow slot "
     "(multimodal_decode_stub convention).",
 )
 def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+    import numpy as np
 
     d = (
         t(spark, sf_dir, "documents")
@@ -862,23 +825,18 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.col("text").cast("binary").alias("payload"))
     )
 
-    def phash_batch(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
+    def phash_batch(doc_id, payload):
+        arr = np.frombuffer(payload, dtype=np.uint8)
+        n = len(arr)
+        k = (np.arange(n) * 60) // n
+        sums = np.bincount(k, weights=arr, minlength=60)
+        cnts = np.bincount(k, minlength=60)
+        # integer cross-multiply (exact in float64 below 2^53)
+        bits = sums * n > arr.sum() * cnts
+        phash = int(np.sum(np.where(bits, 1 << np.arange(60, dtype=np.uint64), 0)))
+        return [dict(doc_id=doc_id, phash=phash)]
 
-        for pdf in batches:
-            out = []
-            for b in pdf["payload"]:
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
-                n = len(arr)
-                k = (np.arange(n) * 60) // n
-                sums = np.bincount(k, weights=arr, minlength=60)
-                cnts = np.bincount(k, minlength=60)
-                # integer cross-multiply (exact in float64 below 2^53)
-                bits = sums * n > arr.sum() * cnts
-                out.append(int(np.sum(np.where(bits, 1 << np.arange(60, dtype=np.uint64), 0))))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "phash": out})
-
-    ph = d.mapInPandas(phash_batch, "doc_id long, phash long")
+    ph = _row_stage(d, phash_batch, "doc_id long, phash long")
     # Band rows carry the full hash (+8 bytes), so the self-join emits
     # both hashes and the Hamming verify is a scan-side popcount — no
     # joins back to the asset-count-sized hash table, and no forced
@@ -1002,8 +960,8 @@ def multimodal_text_embedding_align(spark: SparkSession, sf_dir: str) -> DataFra
     "payload splits into fixed 64-byte frames whose digests are "
     "deduplicated PER ASSET (static scenes, repeated intro frames), "
     "reporting the duplicate-frame mass and reclaimable bytes.  "
-    "Frames digest scan-side in the mapInPandas decode slot (numpy "
-    "byte slicing over Arrow batches — a real codec's frame iterator "
+    "Frames digest scan-side in the mapInArrow decode slot (byte "
+    "slicing over Arrow batches — a real codec's frame iterator "
     "drops into the same loop); only (doc, 16-byte digest) rows "
     "shuffle, aggregated twice (per-asset, then corpus totals).  The "
     "byte-level oracle slices the hex encoding, so non-ASCII payloads "
@@ -1011,7 +969,7 @@ def multimodal_text_embedding_align(spark: SparkSession, sf_dir: str) -> DataFra
     "sides.",
 )
 def multimodal_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+    import hashlib
 
     d = (
         t(spark, sf_dir, "documents")
@@ -1019,31 +977,16 @@ def multimodal_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.col("text").cast("binary").alias("payload"))
     )
 
-    def frame_stats(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import hashlib
+    def frame_stats(doc_id, payload):
+        n_full = len(payload) // 64
+        fps = {
+            hashlib.md5(payload[f * 64 : (f + 1) * 64]).hexdigest()
+            for f in range(n_full)
+        }
+        return [dict(doc_id=doc_id, n_frames=n_full, n_unique=len(fps))]
 
-        for pdf in batches:
-            out_doc, out_frames, out_unique = [], [], []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(b)
-                n_full = len(raw) // 64
-                fps = {
-                    hashlib.md5(raw[f * 64 : (f + 1) * 64]).hexdigest()
-                    for f in range(n_full)
-                }
-                out_doc.append(doc_id)
-                out_frames.append(n_full)
-                out_unique.append(len(fps))
-            yield pd.DataFrame(
-                {
-                    "doc_id": out_doc,
-                    "n_frames": out_frames,
-                    "n_unique": out_unique,
-                }
-            )
-
-    per_doc = d.mapInPandas(
-        frame_stats, schema="doc_id long, n_frames long, n_unique long"
+    per_doc = _row_stage(
+        d, frame_stats, "doc_id long, n_frames long, n_unique long"
     )
     return per_doc.agg(
         F.count(F.lit(1)).alias("n_assets"),
@@ -1662,7 +1605,6 @@ def multimodal_decode_mjpeg_real(
         "doc_id long, fmt string, width long, height long, "
         "n_frames long, within_r boolean, within_g boolean, "
         "within_b boolean",
-        carry=_TRUE_RGB,
     )
 
 
@@ -1719,17 +1661,20 @@ def multimodal_decode_mjpeg_real(
     "image-corpus prep DAG.",
 )
 def pipeline_multimodal_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def encode_row(doc_id):
+    def encode(doc_id):
         cid = doc_id % 50
 
         def pixel(x, y):
             v = cid * 31 + x * 7 + y * 13
             return (v % 256, (v + 101) % 256, (v + 202) % 256)
 
-        return encode_png_rgb8(cid % 16 + 1, cid % 12 + 1, pixel)
+        payload = encode_png_rgb8(cid % 16 + 1, cid % 12 + 1, pixel)
+        return [dict(doc_id=doc_id, payload=payload)]
 
-    encoded = _encode_stage(
-        t(spark, sf_dir, "documents").select("doc_id"), encode_row
+    encoded = _row_stage(
+        t(spark, sf_dir, "documents").select("doc_id"),
+        encode,
+        "doc_id long, payload binary",
     )
 
     # content-addressed dedup FIRST: 16-byte digests shuffle, bytes stay
@@ -1744,29 +1689,14 @@ def pipeline_multimodal_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def decode(digest, doc_id, n_dupes, payload):
+        return [dict(decode_png_real(payload), doc_id=doc_id, n_dupes=n_dupes)]
 
-        for pdf in batches:
-            metas = [decode_png_real(bytes(b)) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "n_dupes": pdf["n_dupes"].values,
-                    "width": [m["width"] for m in metas],
-                    "height": [m["height"] for m in metas],
-                    "sum_r": [m["sum_r"] for m in metas],
-                    "sum_g": [m["sum_g"] for m in metas],
-                    "sum_b": [m["sum_b"] for m in metas],
-                }
-            )
-
-    decoded = reps.mapInPandas(
+    decoded = _row_stage(
+        reps,
         decode,
-        schema=(
-            "doc_id long, n_dupes long, width long, height long, "
-            "sum_r long, sum_g long, sum_b long"
-        ),
+        "doc_id long, n_dupes long, width long, height long, "
+        "sum_r long, sum_g long, sum_b long",
     )
     return decoded.filter(F.col("width") * F.col("height") >= 24).select(
         "doc_id", "width", "height", "n_dupes", "sum_r", "sum_g", "sum_b"
@@ -1846,6 +1776,8 @@ def pipeline_multimodal_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle as strings not pixels.",
 )
 def pipeline_video_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import hashlib
+
     import numpy as np
 
     d = (
@@ -1865,7 +1797,7 @@ def pipeline_video_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         cr = 128 + (((cid * 2 + f2 + (y // 16) * 3) % 5) - 2) * 10
         return _ycbcr_to_rgb8(Yt, cb, cr)
 
-    def encode_row(doc_id):
+    def encode(doc_id):
         cid = doc_id % 120
         if cid % 2 == 0:
             w, h = cid % 6 + 2, cid % 4 + 2
@@ -1875,14 +1807,18 @@ def pipeline_video_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
                 return (v % 256, (v + 101) % 256, (v + 202) % 256)
 
             # lossless: the decoder emits exact sums, no truth needed
-            return encode_avi_dib(w, h, cid % 4 + 1, pixel), 0, 0, 0
-        w, h = cid % 10 + 8, cid % 6 + 8
-        nf = cid % 3 + 1
-        frames = [mjpeg_frame(cid, f, w, h) for f in range(nf)]
-        payload = encode_avi_mjpeg(w, h, nf, lambda f: frames[f])
-        return (payload, *_channel_sums(frames))
+            payload = encode_avi_dib(w, h, cid % 4 + 1, pixel)
+            tr = tg = tb = 0
+        else:
+            w, h = cid % 10 + 8, cid % 6 + 8
+            nf = cid % 3 + 1
+            frames = [mjpeg_frame(cid, f, w, h) for f in range(nf)]
+            payload = encode_avi_mjpeg(w, h, nf, lambda f: frames[f])
+            tr, tg, tb = _channel_sums(frames)
+        return [dict(doc_id=doc_id, payload=payload,
+                     true_r=tr, true_g=tg, true_b=tb)]
 
-    assets = _encode_stage(d, encode_row, carry=_TRUE_RGB)
+    assets = _row_stage(d, encode, f"doc_id long, payload binary, {_TRUE_RGB}")
     assets = assets.withColumn("digest", F.sha2(F.col("payload"), 256))
 
     # dedupe BEFORE decode: one representative payload per digest (the
@@ -1895,61 +1831,41 @@ def pipeline_video_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.first("true_b").alias("true_b"),
     )
 
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import hashlib
+    def frame_digests(payload: bytes) -> list:
+        # content-address each movi frame's raw bytes ('db' DIB rows
+        # or 'dc' JPEG payloads — both deterministic per source frame)
+        return [
+            hashlib.sha256(data).hexdigest()
+            for four, movi, _ in riff.top(payload)
+            if four == b"LIST" and movi[:4] == b"movi"
+            for fc, data, _ in riff.chunks(movi, 4)
+            if fc[2:] in (b"db", b"dc")
+        ]
 
-        import pandas as pd
-
-        def frame_digests(payload: bytes) -> list:
-            # content-address each movi frame's raw bytes ('db' DIB rows
-            # or 'dc' JPEG payloads — both deterministic per source frame)
-            return [
-                hashlib.sha256(data).hexdigest()
-                for four, movi, _ in riff.top(payload)
-                if four == b"LIST" and movi[:4] == b"movi"
-                for fc, data, _ in riff.chunks(movi, 4)
-                if fc[2:] in (b"db", b"dc")
-            ]
-
-        for pdf in batches:
-            rows = []
-            for n_assets, payload, tr, tg, tb in zip(
-                pdf["n_assets"], pdf["payload"], pdf["true_r"],
-                pdf["true_g"], pdf["true_b"],
-            ):
-                b = bytes(payload)
-                m = decode_avi_real(b)
-                if m["fmt"] == "avi":
-                    ok = True
-                    sr, sg, sb = m["sum_r"], m["sum_g"], m["sum_b"]
-                else:
-                    bound = 2 * m["width"] * m["height"] * m["n_frames"]
-                    ok = (
-                        abs(m["sum_r"] - int(tr)) <= bound
-                        and abs(m["sum_g"] - int(tg)) <= bound
-                        and abs(m["sum_b"] - int(tb)) <= bound
-                    )
-                    sr = sg = sb = 0
-                rows.append(
-                    (
-                        m["fmt"], int(n_assets), m["n_frames"],
-                        sr, sg, sb, ok, frame_digests(b),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "fmt", "n_assets", "nf", "sum_r", "sum_g", "sum_b",
-                    "ok", "frame_digests",
-                ],
+    def decode(digest, n_assets, payload, tr, tg, tb):
+        m = decode_avi_real(payload)
+        if m["fmt"] == "avi":
+            ok = True
+            sr, sg, sb = m["sum_r"], m["sum_g"], m["sum_b"]
+        else:
+            bound = 2 * m["width"] * m["height"] * m["n_frames"]
+            ok = (
+                abs(m["sum_r"] - tr) <= bound
+                and abs(m["sum_g"] - tg) <= bound
+                and abs(m["sum_b"] - tb) <= bound
             )
+            sr = sg = sb = 0
+        return [
+            dict(fmt=m["fmt"], n_assets=n_assets, nf=m["n_frames"],
+                 sum_r=sr, sum_g=sg, sum_b=sb, ok=ok,
+                 frame_digests=frame_digests(payload))
+        ]
 
-    decoded = reps.mapInPandas(
+    decoded = _row_stage(
+        reps,
         decode,
-        schema=(
-            "fmt string, n_assets long, nf long, sum_r long, sum_g long, "
-            "sum_b long, ok boolean, frame_digests array<string>"
-        ),
+        "fmt string, n_assets long, nf long, sum_r long, sum_g long, "
+        "sum_b long, ok boolean, frame_digests array<string>",
     ).cache()
 
     manifest = decoded.groupBy("fmt").agg(
@@ -2742,7 +2658,6 @@ def multimodal_decode_jpeg_real(spark: SparkSession, sf_dir: str) -> DataFrame:
             dict(decode_jpeg_real(payload), true_r=tr, true_g=tg, true_b=tb)
         ],
         f"{_RGB_SUMS_SCHEMA}, {_TRUE_RGB}",
-        carry=_TRUE_RGB,
     )
     n_px = F.col("width") * F.col("height")
     return decoded.select(
@@ -4267,7 +4182,6 @@ def multimodal_decode_jpeg_progressive(
             )
         ],
         f"{_RGB_SUMS_SCHEMA}, {_TRUE_RGB}",
-        carry=_TRUE_RGB,
     )
     npx = (F.col("width") * F.col("height")).cast("double")
     return decoded.select(

@@ -1,16 +1,16 @@
-"""The encode -> decode skeleton the codec round-trip queries share.
+"""The one row stage every multimodal Python stage runs on.
 
-Each round-trip query synthesizes a payload per document and decodes it
-in the same narrow ``mapInArrow`` pass (``roundtrip``), checking the
-decode against closed-form truth.  The payload never leaves the Python
-worker: the pass reads the input Arrow batch's columns as Python values,
-runs encode then decode per row and writes one Arrow batch in the output
-schema.  A query supplies only its per-row source/encode and per-row
-decode.
+A codec stage is the reference's ``mapfn`` applied to one row: one
+document in, 0..n rows out (mincemeat.py:167-173).  ``_row_stage`` is
+that map as one narrow ``mapInArrow`` pass: it reads each input Arrow
+batch's columns as Python values, calls the per-row function on every
+row and writes one Arrow batch in the output schema.
 
-``_encode_stage`` is the encode half alone, as its own ``mapInPandas``
-stage, for the composites whose decode sits behind a shuffle (a
-digest-keyed dedupe of the payloads).
+``_codec_roundtrip`` is the encode -> decode skeleton the codec
+round-trip queries share, on top of it: each row's payload is
+synthesized and decoded in the same pass (``roundtrip``), checked
+against closed-form truth, and never leaves the Python worker.  A query
+supplies only its per-row source/encode and per-row decode.
 
 Shipping: the package is registered with cloudpickle's pickle-by-value
 (``mincemeatpy_spark/__init__.py``), so the per-row functions and every
@@ -20,7 +20,7 @@ need not have the package on ``sys.path``.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -36,31 +36,32 @@ class _WorkerMemo(dict):
         return type(self), ()
 
 
-def _ddl_names(ddl: str) -> list[str]:
-    return [col.split()[0] for col in ddl.split(",")]
-
-
-def _encode_stage(
-    src: DataFrame, encode_row: Callable, carry: str = ""
+def _row_stage(
+    src: DataFrame, row_fn: Callable[..., Iterable[dict]], schema: str
 ) -> DataFrame:
-    """Stage ``encode``: ``encode_row(*row)`` per ``src`` row (first
-    column ``doc_id``) returns the payload bytes, or ``(payload,
-    *truths)`` when ``carry`` declares truth columns (``"true_r long,
-    ..."``) for the decode stage to check against."""
-    schema = "doc_id long, payload binary" + (f", {carry}" if carry else "")
-    cols = _ddl_names(schema)
+    """One ``mapInArrow`` pass named after ``row_fn``.  Per ``src`` row,
+    ``row_fn(*row)`` gets the row's Python values and returns its output
+    rows as dicts (0..n of them); the stage reads each dict by the
+    output ``schema``'s column names."""
+    out_schema = to_arrow_schema(StructType.fromDDL(schema))
+    names = out_schema.names
 
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def stage(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        import pyarrow as pa
 
-        for pdf in batches:
-            rows = []
-            for row in zip(*(pdf[c] for c in pdf.columns)):
-                out = encode_row(*row)
-                rows.append((row[0], *out) if carry else (row[0], out))
-            yield pd.DataFrame(rows, columns=cols)
+        for batch in batches:
+            cols: list[list] = [[] for _ in names]
+            for row in zip(*(c.to_pylist() for c in batch.columns)):
+                for m in row_fn(*row):
+                    for col, c in zip(cols, names):
+                        col.append(m[c])
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(col, f.type) for col, f in zip(cols, out_schema)],
+                schema=out_schema,
+            )
 
-    return src.mapInPandas(encode, schema=schema)
+    stage.__name__ = row_fn.__name__
+    return src.mapInArrow(stage, schema)
 
 
 def _codec_roundtrip(
@@ -68,35 +69,20 @@ def _codec_roundtrip(
     encode_row: Callable,
     decode_row: Callable,
     schema: str,
-    carry: str = "",
 ) -> DataFrame:
     """One ``roundtrip`` pass.  Per ``src`` row (first column
-    ``doc_id``), ``encode_row(*row)`` returns the payload bytes, or
-    ``(payload, *truths)`` when ``carry`` declares truth columns; then
-    ``decode_row(doc_id, payload, *truths)`` returns the document's
-    output rows as a list of dicts (0..n of them — an animation emits
-    one per frame).  The harness reads the output ``schema``'s columns
-    after ``doc_id`` from each by name."""
-    out_schema = to_arrow_schema(StructType.fromDDL(schema))
-    out_cols = out_schema.names[1:]
+    ``doc_id``), ``encode_row(*row)`` returns the payload bytes, or a
+    tuple ``(payload, *truths)``; then ``decode_row(doc_id, payload,
+    *truths)`` returns the document's output rows as dicts (0..n of
+    them — an animation emits one per frame), each written with the
+    row's ``doc_id``."""
 
-    def roundtrip(
-        batches: Iterator["pa.RecordBatch"],
-    ) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
+    def roundtrip(doc_id, *cols):
+        out = encode_row(doc_id, *cols)
+        payload, *truths = out if isinstance(out, tuple) else (out,)
+        return [
+            {**m, "doc_id": doc_id}
+            for m in decode_row(doc_id, bytes(payload), *truths)
+        ]
 
-        for batch in batches:
-            cols: list[list] = [[] for _ in out_schema]
-            for row in zip(*(c.to_pylist() for c in batch.columns)):
-                out = encode_row(*row)
-                payload, *truths = out if carry else (out,)
-                for m in decode_row(row[0], bytes(payload), *truths):
-                    cols[0].append(row[0])
-                    for col, c in zip(cols[1:], out_cols):
-                        col.append(m[c])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(col, f.type) for col, f in zip(cols, out_schema)],
-                schema=out_schema,
-            )
-
-    return src.mapInArrow(roundtrip, schema)
+    return _row_stage(src, roundtrip, schema)

@@ -65,7 +65,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from mincemeatpy_spark.multimodal.roundtrip import (
     _codec_roundtrip,
-    _encode_stage,
+    _row_stage,
     _WorkerMemo,
 )
 from mincemeatpy_spark.registry import register
@@ -1566,16 +1566,18 @@ def pipeline_audio_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         L = cid % 300 + 60
         return [((cid * 31 + i * i * 7) % 4001) - 2000 for i in range(L)]
 
-    def encode_row(doc_id):
+    def encode(doc_id):
         cid = doc_id % 200
         s = signal(cid)
         rate = 8000 + (cid % 3) * 4000
         if cid % 3 == 0:
-            return encode_wav_pcm16(rate, 1, s)
-        enc = encode_flac_subset if cid % 3 == 1 else encode_vorbis_subset
-        return enc(rate, [s])
+            payload = encode_wav_pcm16(rate, 1, s)
+        else:
+            enc = encode_flac_subset if cid % 3 == 1 else encode_vorbis_subset
+            payload = enc(rate, [s])
+        return [dict(doc_id=doc_id, payload=payload)]
 
-    assets = _encode_stage(d, encode_row)
+    assets = _row_stage(d, encode, "doc_id long, payload binary")
     assets = assets.withColumn("digest", F.sha2(F.col("payload"), 256))
 
     # dedupe BEFORE decode: one representative payload per digest
@@ -1584,37 +1586,22 @@ def pipeline_audio_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.first("payload").alias("payload"),
     )
 
-    def decode(batches) -> "pd.DataFrame":
-        import pandas as pd
+    def decode(digest, n_assets, payload):
+        m = decode_audio_real(payload)
+        n = m["n_samples"]
+        fmt = {b"fLaC": "flac", b"OggS": "vorbis"}.get(payload[:4], "wav")
+        # lossy Vorbis is excluded from the exact sum
+        ssum = 0 if fmt == "vorbis" else m["sample_sum"]
+        return [
+            dict(digest=digest, n_assets=n_assets, fmt=fmt, n_samples=n,
+                 ssum=ssum, ok=n >= 60)
+        ]
 
-        for pdf in batches:
-            rows = []
-            for digest, n_assets, payload in zip(
-                pdf["digest"], pdf["n_assets"], pdf["payload"]
-            ):
-                b = bytes(payload)
-                m = decode_audio_real(b)
-                n = m["n_samples"]
-                fmt = {b"fLaC": "flac", b"OggS": "vorbis"}.get(b[:4], "wav")
-                # lossy Vorbis is excluded from the exact sum
-                ssum = 0 if fmt == "vorbis" else m["sample_sum"]
-                rows.append(
-                    (digest, int(n_assets), fmt, n, ssum, bool(n >= 60))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "digest", "n_assets", "fmt", "n_samples", "ssum",
-                    "ok",
-                ],
-            )
-
-    decoded = reps.mapInPandas(
+    decoded = _row_stage(
+        reps,
         decode,
-        schema=(
-            "digest string, n_assets long, fmt string, n_samples long,"
-            " ssum long, ok boolean"
-        ),
+        "digest string, n_assets long, fmt string, n_samples long, "
+        "ssum long, ok boolean",
     )
     return decoded.groupBy("fmt").agg(
         F.sum("n_assets").cast("bigint").alias("n_assets"),

@@ -1297,7 +1297,6 @@ def multimodal_decode_vp8_real(
         decode_row,
         "doc_id long, fmt string, width long, height long, "
         "within_y boolean, within_u boolean, within_v boolean",
-        carry="qi long, true_y long, true_u long, true_v long",
     )
 
 
@@ -1395,5 +1394,4 @@ def multimodal_decode_vp8x_real(
         "doc_id long, fmt string, width long, height long, "
         "sum_a long, within_y boolean, within_u boolean, "
         "within_v boolean",
-        carry="qi long, true_y long, true_u long, true_v long",
     )

@@ -237,7 +237,7 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sum; the oracle computes the same from the source table, proving "
     "content-lossless ingest.  At scale this reader is how image/audio "
     "corpora enter the engine (binary column + per-file metadata), "
-    "feeding the multimodal mapInPandas decode stages.",
+    "feeding the multimodal mapInArrow decode stages.",
 )
 def source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _scratch(sf_dir, "docs_bin")

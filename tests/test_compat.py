@@ -331,10 +331,6 @@ def test_file_backed_lazy_datasource(spark, tmp_path):
     # ships by cloudpickle; only keys pass through the driver) — the
     # driver's copy must therefore never have been read from.
     assert src.reads == 0
-    # Forcing eager materialization reads driver-side, one read per key
-    # (the reference master's behavior, mincemeat.py:313-316).
-    assert mapreduce(spark, src, mapfn, reducefn, lazy=False) == result
-    assert src.reads == 2
 
 
 def test_lazy_datasource_getitem_runs_on_executors(spark, tmp_path):

@@ -1507,12 +1507,14 @@ def test_riff_writers_bytes_pinned(case):
 # ------------------------------------------- round-trip harness contract
 
 
-def test_codec_roundtrip_harness_contract(spark):
+@pytest.mark.parametrize("shape", ["carry", "bytes"])
+def test_codec_roundtrip_harness_contract(spark, shape):
     """_codec_roundtrip's per-row contract on a small frame: an empty
     input partition, a decode that emits 0, 1 or 3 rows per document,
-    and an encode that carries truth values past the payload.  The
-    decode sees the payload as ``bytes`` and the carried values
-    unchanged; the output keeps the declared schema and names."""
+    and an encode that returns either a tuple carrying truth values past
+    the payload or the payload bytes alone.  The decode sees the payload
+    as ``bytes`` and the carried values unchanged; the output keeps the
+    declared schema and names."""
     from pyspark.sql.types import StructType
 
     from mincemeatpy_spark.multimodal.roundtrip import _codec_roundtrip
@@ -1525,9 +1527,11 @@ def test_codec_roundtrip_harness_contract(spark):
     src = spark.createDataFrame(rdd, "doc_id long, tag string")
 
     def encode_row(doc_id, tag):
+        if shape == "bytes":
+            return tag.encode()
         return tag.encode(), doc_id * 10, f"t{doc_id}"
 
-    def decode_row(doc_id, payload, true_n, true_s):
+    def decode_row(doc_id, payload, true_n=None, true_s=None):
         return [
             {"i": i, "kind": type(payload).__name__,
              "text": payload.decode(), "truth": true_n, "label": true_s}
@@ -1535,18 +1539,15 @@ def test_codec_roundtrip_harness_contract(spark):
         ]
 
     schema = "doc_id long, i int, kind string, text string, truth long, label string"
-    df = _codec_roundtrip(
-        src, encode_row, decode_row, schema,
-        carry="true_n long, true_s string",
-    )
+    df = _codec_roundtrip(src, encode_row, decode_row, schema)
     assert df.schema == StructType.fromDDL(schema)
+
+    def truths(d):
+        return (d * 10, f"t{d}") if shape == "carry" else (None, None)
+
+    text = {d: "ab" * d for d in range(1, 6)}
     assert sorted(map(tuple, df.collect())) == [
-        (1, 0, "bytes", "ab", 10, "t1"),
-        (2, 0, "bytes", "abab", 20, "t2"),
-        (2, 1, "bytes", "abab", 20, "t2"),
-        (2, 2, "bytes", "abab", 20, "t2"),
-        (4, 0, "bytes", "abababab", 40, "t4"),
-        (5, 0, "bytes", "ababababab", 50, "t5"),
-        (5, 1, "bytes", "ababababab", 50, "t5"),
-        (5, 2, "bytes", "ababababab", 50, "t5"),
+        (d, i, "bytes", text[d], *truths(d))
+        for d, n in [(1, 1), (2, 3), (4, 1), (5, 3)]
+        for i in range(n)
     ]

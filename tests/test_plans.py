@@ -18,6 +18,7 @@ from contextlib import contextmanager
 import pytest
 
 from mincemeatpy_spark.plans import plan_facts
+from mincemeatpy_spark.registry import load_all_queries
 
 BUDGETS = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "budgets.json"
@@ -1329,7 +1330,7 @@ def test_video_corpus_dedupes_before_decode(registry_run):
     # pipeline_video_corpus's 100 TB ordering: the sha2 digest
     # aggregation (dedupe) must sit BETWEEN the encode stage and the
     # decode stage, so only unique payloads reach the codec.  Three
-    # MapInPandas stages total (encode, decode; the explode side reuses
+    # MapInArrow stages total (encode, decode; the explode side reuses
     # the cached decode), and the digest HashAggregate appears after
     # the first Python stage but before the second in the plan tree —
     # i.e. the decode stage's subtree CONTAINS the aggregate while the
@@ -1341,9 +1342,9 @@ def test_video_corpus_dedupes_before_decode(registry_run):
     # plans print top-down (sink first): the decode Python stage must
     # print BEFORE the digest-keyed exchange, which must print BEFORE
     # the encode Python stage — i.e. decode consumes the deduped set.
-    d = plan.find("MapInPandas decode")
+    d = plan.find("MapInArrow decode")
     x = plan.find("Exchange hashpartitioning(digest")
-    e = plan.find("MapInPandas encode")
+    e = plan.find("MapInArrow encode")
     assert -1 not in (d, x, e), plan[:800]
     assert d < x < e, "digest dedupe is not between encode and decode"
 
@@ -1374,6 +1375,18 @@ def test_codec_roundtrips_are_one_narrow_python_stage(registry_run):
         assert not facts["joins"], name
         if name in repartitioned:
             assert facts["exchanges"], name  # the parallelism repartition
+
+
+def test_multimodal_python_stages_are_arrow_row_stages(registry_run):
+    # every Python stage of every multimodal query is a mapInArrow row
+    # stage (roundtrip._row_stage): no query converts through pandas.
+    names = sorted(
+        n for n, q in load_all_queries().items() if q.category == "multimodal"
+    )
+    assert len(names) == 30, names
+    for name in names:
+        python = plan_facts(_plan(registry_run, name))["python"]
+        assert set(python) <= {"MapInArrow"}, (name, python)
 
 
 def test_html_extract_is_scan_side(registry_run):

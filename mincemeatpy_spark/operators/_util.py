@@ -68,3 +68,24 @@ def q6_i64(x):
 
     y = np.asarray(x, dtype=np.float64) * 1_000_000.0
     return (np.sign(y) * np.floor(np.abs(y) + 0.5)).astype(np.int64)
+
+
+def q6_embeddings(batch):
+    """An Arrow batch's ``embedding`` column as ``[n][64]`` int64
+    micro-units (:func:`q6_i64`); ``(0, 64)`` for an empty batch.  The
+    list offsets flatten to one values array, so no per-element Python
+    object is made."""
+    flat = batch.column("embedding").flatten().to_numpy(zero_copy_only=False)
+    return q6_i64(flat).reshape(-1, 64)
+
+
+def q6_sample(rows, *cols):
+    """Collected embedding rows as numpy, sorted by ``vec_id``: the ids,
+    the ``[n][64]`` int64 micro-unit matrix (:func:`q6_i64`) in the same
+    order, then one int64 array per extra column name in ``cols``."""
+    import numpy as np
+
+    rows = sorted(rows, key=lambda r: r["vec_id"])
+    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+    mat = q6_i64([r["embedding"] for r in rows]).reshape(-1, 64)
+    return (ids, mat, *(np.array([r[c] for r in rows], dtype=np.int64) for c in cols))

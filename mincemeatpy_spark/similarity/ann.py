@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as Wnd, functions as F
 
 from mincemeatpy_spark.lineage import truncate_eager, truncate_lazy
-from mincemeatpy_spark.operators._util import q6_i64
+from mincemeatpy_spark.operators._util import q6_embeddings, q6_sample
 from mincemeatpy_spark.registry import QUERIES, register
 from mincemeatpy_spark.tables import t
 
@@ -54,6 +54,109 @@ def _pq_queries(e: DataFrame) -> DataFrame:
     return e.filter(
         (F.col("vec_id") % _PQ_QMOD == 0)
         & (F.col("vec_id") < _PQ_QMOD * _PQ_QCAP)
+    )
+
+
+# --- the integer-vector kernel kit --------------------------------------
+#
+# Every quantized-ANN query below is one MapReduce job: map each Arrow
+# batch of (vec_id, embedding) to int64 distances against a broadcast
+# query sample, combine map-side to each query's nearest few
+# (_nearest — the reference's collectfn), shuffle on query_id and reduce
+# with the row_number() cut (_top3).
+
+
+def _nearest(row_ids, col_ids, key, k):
+    """The ``(r, c)`` index arrays of each row's k smallest
+    ``(key[r, c], col_ids[c])`` pairs in ``key[len(row_ids)][len(col_ids)]``,
+    skipping the pair where ``row_ids[r] == col_ids[c]`` (ids are unique
+    on each side).  Ties go to the lowest col_id and NaN keys sort last:
+    ``row_number() OVER (PARTITION BY row ORDER BY key, col_id) <= k``
+    over the non-self pairs.  Run per Arrow batch, it keeps an exact
+    superset of each row's global top-k members from that batch, so a
+    batch ships at most ``len(row_ids) * k`` rows."""
+    import numpy as np
+
+    if key.shape[1] > k:
+        # A row's k smallest non-self keys are all <= its (k+1)-th
+        # smallest key (at most one column is self): only those, and
+        # NaN keys, go to the exact sort.
+        kth = np.partition(key, k, axis=1)[:, k : k + 1]
+        cand = ~(key > kth)
+    else:
+        cand = np.ones(key.shape, dtype=bool)
+    r, c = np.nonzero(cand & (row_ids[:, None] != col_ids[None, :]))
+    order = np.lexsort((col_ids[c], key[r, c], r))
+    r, c = r[order], c[order]
+    # rank within the row = position minus the row's first position
+    keep = np.arange(len(r)) - np.searchsorted(r, r) < k
+    return r[keep], c[keep]
+
+
+def _top3(pairs: DataFrame) -> DataFrame:
+    """``row_number() OVER (PARTITION BY query_id ORDER BY adc_dist,
+    neighbor_id) <= 3`` as a bigint ``rnk`` column (a WindowGroupLimit,
+    no global sort)."""
+    w = Wnd.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
+    return pairs.withColumn("rnk", F.row_number().over(w).cast("bigint")).filter(
+        F.col("rnk") <= 3
+    )
+
+
+def _l2(qm, mat):
+    """Exact squared L2 from every row of ``qm`` to every row of ``mat``
+    (int64 micro-units): ||q-v||^2 = q.q - 2 q.v + v.v, terms <= ~4e13."""
+    return (
+        (qm * qm).sum(axis=1)[:, None]
+        - 2 * (qm @ mat.T)
+        + (mat * mat).sum(axis=1)[None, :]
+    )
+
+
+def _scan_top3(e: DataFrame, q_ids, dist) -> DataFrame:
+    """Each query's 3 nearest vectors of ``e`` (vec_id, embedding):
+    ``dist(mat)`` maps a batch's ``[n][64]`` micro-unit matrix to
+    ``[len(q_ids)][n]`` int64 distances; one mapInArrow pass keeps the
+    per-batch top 3 (:func:`_nearest`, self excluded) and :func:`_top3`
+    cuts the global one.  Columns: query_id, neighbor_id, adc_dist,
+    rnk."""
+    import pyarrow as pa
+
+    def scan_top3(batches):
+        import numpy as np
+
+        for batch in batches:
+            ids = np.asarray(batch.column("vec_id"), dtype=np.int64)
+            d = dist(q6_embeddings(batch))
+            r, c = _nearest(q_ids, ids, d, 3)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(x, type=pa.int64()) for x in (q_ids[r], ids[c], d[r, c])],
+                ["query_id", "neighbor_id", "adc_dist"],
+            )
+
+    pairs = e.mapInArrow(scan_top3, "query_id long, neighbor_id long, adc_dist long")
+    return _top3(pairs)
+
+
+def _recall_at_3(
+    spark: SparkSession, e: DataFrame, q_rows, approx_top: DataFrame
+) -> DataFrame:
+    """Recall@3 of an index's ``approx_top`` (query_id, neighbor_id)
+    against exact integer-L2 brute force over the collected query sample
+    ``q_rows``: the ground truth is one :func:`_scan_top3` pass of
+    :func:`_l2`, left-joined to the broadcast approximate top 3."""
+    q_ids, q_mat = q6_sample(q_rows)
+    bc = spark.sparkContext.broadcast(q_mat)
+    exact = _scan_top3(e, q_ids, lambda mat: _l2(bc.value, mat))
+    hits = approx_top.select("query_id", "neighbor_id", F.lit(1).alias("hit"))
+    n = F.count("hit")
+    return (
+        exact.join(F.broadcast(hits), ["query_id", "neighbor_id"], "left")
+        .groupBy("query_id")
+        .agg(
+            n.cast("bigint").alias("n_hits"),
+            F.round(n.cast("double") / 3, 6).alias("recall_at_3"),
+        )
     )
 
 
@@ -479,22 +582,15 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         acc = np.zeros((64, 64), dtype=np.int64)
         seen = False
         for batch in batches:
-            # zero-copy-ish: list offsets -> flat values -> reshape; no
-            # per-element Python objects on the hot path
-            flat = batch.column("embedding").flatten().to_numpy(
-                zero_copy_only=False
-            )
-            if len(flat) == 0:
-                continue
-            q = q6_i64(flat.reshape(-1, 64))
+            q = q6_embeddings(batch)
             acc += q.T @ q
-            seen = True
+            seen |= len(q) > 0
         if seen:
-            ii, jj = np.meshgrid(np.arange(_DIM), np.arange(_DIM), indexing="ij")
+            ii, jj = np.divmod(np.arange(_DIM * _DIM), _DIM)
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(ii.ravel(), type=pa.int32()),
-                    pa.array(jj.ravel(), type=pa.int32()),
+                    pa.array(ii, type=pa.int32()),
+                    pa.array(jj, type=pa.int32()),
                     pa.array(acc.ravel(), type=pa.int64()),
                 ],
                 ["i", "j", "g"],
@@ -787,22 +883,18 @@ def ann_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     "100 TB the index stores 8 bytes/vector (8 codes) instead of 256, "
     "assignment is one numpy pass per Arrow batch against a broadcast "
     "16x64 codebook, and query ADC scans codes, not vectors — this is "
-    "the memory-bound regime where PQ beats IVF probing.  Top-3 per "
-    "query via WindowGroupLimit, no global sort.",
+    "the memory-bound regime where PQ beats IVF probing.  Each batch "
+    "ships only its per-query top 3 (_nearest, the map-side combine), "
+    "and the global top 3 per query is a WindowGroupLimit, no global "
+    "sort.",
 )
 def similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pyarrow as pa
 
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    rows = e.filter(F.col("vec_id") < 16).collect()
-    # half-away-from-zero micro-quantization (matches the oracle's round())
-    cent = q6_i64(
-        [r["embedding"] for r in sorted(rows, key=lambda r: r["vec_id"])]
-    )  # [16][64]
-    qrows = _pq_queries(e).collect()  # <= _PQ_QCAP rows at any corpus size
-    q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    q_mat = q6_i64([r["embedding"] for r in qrows])
+    cent = q6_sample(e.filter(F.col("vec_id") < 16).collect())[1]  # [16][64]
+    # <= _PQ_QCAP rows at any corpus size
+    q_ids, q_mat = q6_sample(_pq_queries(e).collect())
     # Per-subspace query→codeword distance tables: [8][nq][16]
     qtab = np.stack(
         [
@@ -813,45 +905,20 @@ def similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             for s in range(8)
         ]
     )
-    bc = spark.sparkContext.broadcast((cent, q_ids, qtab))
+    bc = spark.sparkContext.broadcast((cent, qtab))
 
-    def adc(batches):
-        import numpy as np
+    def adc(mat):
+        c, qt = bc.value
+        total = np.zeros((qt.shape[1], len(mat)), dtype=np.int64)
+        for s in range(8):
+            d = (
+                (mat[:, None, s * 8 : s * 8 + 8] - c[None, :, s * 8 : s * 8 + 8])
+                ** 2
+            ).sum(axis=2)  # [n][16]
+            total += qt[s][:, np.argmin(d, axis=1)]  # first min = lowest codeword
+        return total
 
-        c, qi, qt = bc.value
-        for batch in batches:
-            ids = np.asarray(batch.column("vec_id"), dtype=np.int64)
-            flat = batch.column("embedding").flatten().to_numpy(
-                zero_copy_only=False
-            )
-            mat = q6_i64(flat.reshape(-1, 64))
-            n = len(ids)
-            total = np.zeros((len(qi), n), dtype=np.int64)
-            for s in range(8):
-                d = (
-                    (mat[:, None, s * 8 : s * 8 + 8] - c[None, :, s * 8 : s * 8 + 8])
-                    ** 2
-                ).sum(axis=2)  # [n][16]
-                codes = np.argmin(d, axis=1)  # first min = lowest codeword
-                total += qt[s][:, codes]
-            qq, vv = np.meshgrid(np.arange(len(qi)), np.arange(n), indexing="ij")
-            qq, vv = qq.ravel(), vv.ravel()
-            keep = qi[qq] != ids[vv]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qi[qq][keep], type=pa.int64()),
-                    pa.array(ids[vv][keep], type=pa.int64()),
-                    pa.array(total[qq, vv][keep], type=pa.int64()),
-                ],
-                ["query_id", "neighbor_id", "adc_dist"],
-            )
-
-    pairs = e.mapInArrow(adc, "query_id long, neighbor_id long, adc_dist long")
-    w = Wnd.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= 3)
-    )
+    return _scan_top3(e, q_ids, adc)
 
 
 @register(
@@ -933,70 +1000,10 @@ def similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     "samples queries, never the corpus.",
 )
 def similarity_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pyarrow as pa
-
-    pq_top = similarity_ann_pq(spark, sf_dir).select("query_id", "neighbor_id")
-
+    pq_top = similarity_ann_pq(spark, sf_dir)
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qrows = _pq_queries(e).collect()  # <= _PQ_QCAP rows at any corpus size
-    q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    # half-away-from-zero micro-quantization (matches the oracle's round())
-    q_mat = q6_i64([r["embedding"] for r in qrows])
-    bc = spark.sparkContext.broadcast((q_ids, q_mat))
-
-    def exact_dists(batches):
-        import numpy as np
-
-        qi, qm = bc.value
-        for batch in batches:
-            ids = np.asarray(batch.column("vec_id"), dtype=np.int64)
-            flat = batch.column("embedding").flatten().to_numpy(
-                zero_copy_only=False
-            )
-            mat = q6_i64(flat.reshape(-1, 64))
-            # ||q-v||^2 = q.q - 2 q.v + v.v — exact int64 (terms <= ~4e13)
-            d = (
-                (qm * qm).sum(axis=1)[:, None]
-                - 2 * (qm @ mat.T)
-                + (mat * mat).sum(axis=1)[None, :]
-            )
-            qq, vv = np.meshgrid(
-                np.arange(len(qi)), np.arange(len(ids)), indexing="ij"
-            )
-            qq, vv = qq.ravel(), vv.ravel()
-            keep = qi[qq] != ids[vv]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qi[qq][keep], type=pa.int64()),
-                    pa.array(ids[vv][keep], type=pa.int64()),
-                    pa.array(d[qq, vv][keep], type=pa.int64()),
-                ],
-                ["query_id", "vec_id", "dist"],
-            )
-
-    exact = e.mapInArrow(exact_dists, "query_id long, vec_id long, dist long")
-    w = Wnd.partitionBy("query_id").orderBy("dist", "vec_id")
-    exact_top = (
-        exact.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("query_id", "vec_id")
-    )
-    hit = F.col("neighbor_id").isNotNull().cast("int")
-    return (
-        exact_top.join(
-            F.broadcast(pq_top),
-            (pq_top.query_id == exact_top.query_id)
-            & (pq_top.neighbor_id == exact_top.vec_id),
-            "left_outer",
-        )
-        .drop(pq_top.query_id)
-        .groupBy("query_id")
-        .agg(
-            F.sum(hit).cast("bigint").alias("n_hits"),
-            F.round(F.sum(hit).cast("double") / 3, 6).alias("recall_at_3"),
-        )
-    )
+    # <= _PQ_QCAP rows at any corpus size
+    return _recall_at_3(spark, e, _pq_queries(e).collect(), pq_top)
 
 
 # --- hybrid retrieval: lexical + dense rank fusion ----------------------
@@ -1464,15 +1471,13 @@ def embedding_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
 
     e = t(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    rows = e.filter(
-        (F.col("vec_id") % _EVAL_MOD == 0)
-        & (F.col("vec_id") < _EVAL_MOD * _EVAL_CAP)
-    ).collect()
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    labs = np.array([r["label"] for r in rows], dtype=np.int64)
-    mat = q6_i64([r["embedding"] for r in rows])
-    order = np.argsort(ids, kind="stable")
-    ids, labs, mat = ids[order], labs[order], mat[order]
+    ids, mat, labs = q6_sample(
+        e.filter(
+            (F.col("vec_id") % _EVAL_MOD == 0)
+            & (F.col("vec_id") < _EVAL_MOD * _EVAL_CAP)
+        ).collect(),
+        "label",
+    )
     nrm = np.sqrt((mat * mat).sum(axis=1).astype(np.float64))
     n_lab = int(labs.max()) + 1
     bc = spark.sparkContext.broadcast((ids, labs, mat, nrm))
@@ -1484,26 +1489,19 @@ def embedding_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         for batch in batches:
             a_ids = np.asarray(batch.column("vec_id"), dtype=np.int64)
             a_labs = np.asarray(batch.column("label"), dtype=np.int64)
-            flat = batch.column("embedding").flatten().to_numpy(
-                zero_copy_only=False
-            )
-            a_mat = q6_i64(flat.reshape(-1, 64))
+            a_mat = q6_embeddings(batch)
             a_nrm = np.sqrt((a_mat * a_mat).sum(axis=1).astype(np.float64))
             gram = a_mat @ b_mat.T  # exact int64
             cos = gram.astype(np.float64) / np.outer(a_nrm, b_nrm)
-            preds = np.empty(len(a_ids), dtype=np.int64)
-            for i in range(len(a_ids)):
-                # leave-one-out by EXCLUDING self from the candidate set
-                # (an -inf mask would still occupy a top-5 slot and vote
-                # for its own label whenever the sample has <= 5 rows)
-                m = b_ids != a_ids[i]
-                cand = np.nonzero(m)[0]
-                # ORDER BY cos DESC, nb ASC: lexsort's last key is primary
-                top = cand[np.lexsort((b_ids[m], -cos[i][m]))[:5]]
-                preds[i] = np.argmax(np.bincount(b_labs[top], minlength=n_lab))
+            # ORDER BY cos DESC, nb; leave-one-out because _nearest
+            # drops self (an -inf mask would still take a top-5 slot and
+            # vote for its own label whenever the sample has <= 5 rows)
+            r, c = _nearest(a_ids, b_ids, -cos, 5)
+            votes = np.zeros((len(a_ids), n_lab), dtype=np.int64)
+            np.add.at(votes, (r, b_labs[c]), 1)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(a_labs, type=pa.int64()),
-                 pa.array(preds, type=pa.int64())],
+                 pa.array(votes.argmax(axis=1), type=pa.int64())],
                 ["la", "predicted"],
             )
 
@@ -1574,56 +1572,42 @@ def embedding_label_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
 
     e = t(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    rows = e.filter(
-        (F.col("vec_id") % _EVAL_MOD == 0)
-        & (F.col("vec_id") < _EVAL_MOD * _EVAL_CAP)
-    ).collect()
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    labs = np.array([r["label"] for r in rows], dtype=np.int64)
-    mat = q6_i64([r["embedding"] for r in rows])
-    order = np.argsort(ids, kind="stable")
-    ids, labs, mat = ids[order], labs[order], mat[order]
+    ids, mat, labs = q6_sample(
+        e.filter(
+            (F.col("vec_id") % _EVAL_MOD == 0)
+            & (F.col("vec_id") < _EVAL_MOD * _EVAL_CAP)
+        ).collect(),
+        "label",
+    )
     nrm = np.sqrt((mat * mat).sum(axis=1).astype(np.float64))
     uniq = np.unique(labs)
-    bc = spark.sparkContext.broadcast((ids, labs, mat, nrm, uniq))
+    onehot = (labs[:, None] == uniq[None, :]).astype(np.int64)  # [nb][n_labels]
+    bc = spark.sparkContext.broadcast((ids, mat, nrm, onehot, uniq))
 
     def partials(batches):
         import numpy as np
 
-        b_ids, b_labs, b_mat, b_nrm, u = bc.value
-        masks = {int(l): b_labs == l for l in u}
+        b_ids, b_mat, b_nrm, b_onehot, u = bc.value
         for batch in batches:
             a_ids = np.asarray(batch.column("vec_id"), dtype=np.int64)
             a_labs = np.asarray(batch.column("label"), dtype=np.int64)
-            flat = batch.column("embedding").flatten().to_numpy(
-                zero_copy_only=False
-            )
-            a_mat = q6_i64(flat.reshape(-1, 64))
+            a_mat = q6_embeddings(batch)
             a_nrm = np.sqrt((a_mat * a_mat).sum(axis=1).astype(np.float64))
             gram = a_mat @ b_mat.T  # exact int64
             cq = np.floor(
                 1_000_000 * (gram.astype(np.float64) / np.outer(a_nrm, b_nrm))
             ).astype(np.int64)
-            la_out, lb_out, s_out, n_out = [], [], [], []
-            for i in range(len(a_ids)):
-                self_j = np.nonzero(b_ids == a_ids[i])[0]
-                for l in u:
-                    m = masks[int(l)]
-                    s = int(cq[i, m].sum())
-                    c = int(m.sum())
-                    if len(self_j) and m[self_j[0]]:
-                        s -= int(cq[i, self_j[0]])
-                        c -= 1
-                    if c:
-                        la_out.append(int(a_labs[i]))
-                        lb_out.append(int(l))
-                        s_out.append(s)
-                        n_out.append(c)
+            # per-(vector, reference label) sum and count over the
+            # non-self pairs: exact int64 products with the one-hot labels
+            other = a_ids[:, None] != b_ids[None, :]
+            s = np.where(other, cq, 0) @ b_onehot
+            n = other.astype(np.int64) @ b_onehot
+            ii, ll = np.nonzero(n)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(la_out, type=pa.int64()),
-                 pa.array(lb_out, type=pa.int64()),
-                 pa.array(s_out, type=pa.int64()),
-                 pa.array(n_out, type=pa.int64())],
+                [pa.array(a_labs[ii], type=pa.int64()),
+                 pa.array(u[ll], type=pa.int64()),
+                 pa.array(s[ii, ll], type=pa.int64()),
+                 pa.array(n[ii, ll], type=pa.int64())],
                 ["la", "lb", "s", "n"],
             )
 
@@ -1928,10 +1912,7 @@ def similarity_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # One bounded collect: the 8 coarse centroids are a prefix slice of
     # the 16 codebook seeds.
-    rows16 = e.filter(F.col("vec_id") < 16).collect()
-    m16 = q6_i64(
-        [r["embedding"] for r in sorted(rows16, key=lambda r: r["vec_id"])]
-    )  # [16][64]
+    m16 = q6_sample(e.filter(F.col("vec_id") < 16).collect())[1]  # [16][64]
     cc = m16[:8]  # [8][64] coarse centroids
     # Codebook = residuals of the first 16 vectors w.r.t. their own
     # coarse assignment (argmin = first minimum = lowest centroid id,
@@ -1939,13 +1920,8 @@ def similarity_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     a16 = ((m16[:, None, :] - cc[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
     book = m16 - cc[a16]  # [16][64]
 
-    qrows = _pq_queries(e).collect()  # <= _PQ_QCAP rows at any corpus size
-    q_ids = np.array(
-        sorted(r["vec_id"] for r in qrows), dtype=np.int64
-    )
-    q_mat = q6_i64(
-        [r["embedding"] for r in sorted(qrows, key=lambda r: r["vec_id"])]
-    )
+    # <= _PQ_QCAP rows at any corpus size
+    q_ids, q_mat = q6_sample(_pq_queries(e).collect())
     # nprobe=2 nearest lists per query (stable argsort -> lowest id ties).
     qc = ((q_mat[:, None, :] - cc[None, :, :]) ** 2).sum(axis=2)  # [nq][8]
     probes = np.argsort(qc, axis=1, kind="stable")[:, :2]  # [nq][2]
@@ -1971,13 +1947,9 @@ def similarity_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
 
         c, bk, qi, pr, qt = bc.value
-        nq = len(qi)
         for batch in batches:
             ids = np.asarray(batch.column("vec_id"), dtype=np.int64)
-            flat = batch.column("embedding").flatten().to_numpy(
-                zero_copy_only=False
-            )
-            mat = q6_i64(flat.reshape(-1, 64))
+            mat = q6_embeddings(batch)
             n = len(ids)
             lst = ((mat[:, None, :] - c[None, :, :]) ** 2).sum(axis=2).argmin(
                 axis=1
@@ -1993,37 +1965,22 @@ def similarity_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ** 2
                 ).sum(axis=2)
                 codes[s] = np.argmin(d, axis=1)  # first min = lowest codeword
-            out_q, out_v, out_d = [], [], []
-            for q in range(nq):
-                for j in range(2):
-                    cand = np.flatnonzero(
-                        (lst == pr[q, j]) & (ids != qi[q])
-                    )
-                    if cand.size == 0:
-                        continue
-                    tot = np.zeros(cand.size, dtype=np.int64)
-                    for s in range(8):
-                        tot += qt[s][q, j][codes[s][cand]]
-                    out_q.append(np.full(cand.size, qi[q], dtype=np.int64))
-                    out_v.append(ids[cand])
-                    out_d.append(tot)
-            if not out_q:
-                continue
+            # candidates of probe j: the vectors in list pr[q, j], self
+            # excluded; each vector sits in one list, so in <= 1 probe
+            out = []
+            for j in range(2):
+                qq, vv = np.nonzero(
+                    (lst[None, :] == pr[:, j : j + 1]) & (qi[:, None] != ids[None, :])
+                )
+                tot = sum(qt[s][qq, j, codes[s][vv]] for s in range(8))
+                out.append((qi[qq], ids[vv], tot))
             yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(out_q), type=pa.int64()),
-                    pa.array(np.concatenate(out_v), type=pa.int64()),
-                    pa.array(np.concatenate(out_d), type=pa.int64()),
-                ],
+                [pa.array(np.concatenate(x), type=pa.int64()) for x in zip(*out)],
                 ["query_id", "neighbor_id", "adc_dist"],
             )
 
     pairs = e.mapInArrow(adc, "query_id long, neighbor_id long, adc_dist long")
-    w = Wnd.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= 3)
-    )
+    return _top3(pairs)
 
 
 @register(
@@ -2168,70 +2125,10 @@ def ann_index_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     "never corpus x corpus.",
 )
 def similarity_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pyarrow as pa
-
-    ivfpq_top = similarity_ann_ivfpq(spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-
+    ivfpq_top = similarity_ann_ivfpq(spark, sf_dir)
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qrows = _pq_queries(e).collect()  # <= _PQ_QCAP rows at any corpus size
-    q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    q_mat = q6_i64([r["embedding"] for r in qrows])
-    bc = spark.sparkContext.broadcast((q_ids, q_mat))
-
-    def exact_dists(batches):
-        import numpy as np
-
-        qi, qm = bc.value
-        for batch in batches:
-            ids = np.asarray(batch.column("vec_id"), dtype=np.int64)
-            flat = batch.column("embedding").flatten().to_numpy(
-                zero_copy_only=False
-            )
-            mat = q6_i64(flat.reshape(-1, 64))
-            d = (
-                (qm * qm).sum(axis=1)[:, None]
-                - 2 * (qm @ mat.T)
-                + (mat * mat).sum(axis=1)[None, :]
-            )
-            qq, vv = np.meshgrid(
-                np.arange(len(qi)), np.arange(len(ids)), indexing="ij"
-            )
-            qq, vv = qq.ravel(), vv.ravel()
-            keep = qi[qq] != ids[vv]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qi[qq][keep], type=pa.int64()),
-                    pa.array(ids[vv][keep], type=pa.int64()),
-                    pa.array(d[qq, vv][keep], type=pa.int64()),
-                ],
-                ["query_id", "vec_id", "dist"],
-            )
-
-    exact = e.mapInArrow(exact_dists, "query_id long, vec_id long, dist long")
-    w = Wnd.partitionBy("query_id").orderBy("dist", "vec_id")
-    exact_top = (
-        exact.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("query_id", "vec_id")
-    )
-    hit = F.col("neighbor_id").isNotNull().cast("int")
-    return (
-        exact_top.join(
-            F.broadcast(ivfpq_top),
-            (ivfpq_top.query_id == exact_top.query_id)
-            & (ivfpq_top.neighbor_id == exact_top.vec_id),
-            "left_outer",
-        )
-        .drop(ivfpq_top.query_id)
-        .groupBy("query_id")
-        .agg(
-            F.sum(hit).cast("bigint").alias("n_hits"),
-            F.round(F.sum(hit).cast("double") / 3, 6).alias("recall_at_3"),
-        )
-    )
+    # <= _PQ_QCAP rows at any corpus size
+    return _recall_at_3(spark, e, _pq_queries(e).collect(), ivfpq_top)
 
 
 QUERIES["similarity_ivfpq_recall"].oracle = QUERIES[
@@ -2744,74 +2641,29 @@ _SQ8_ORACLE_CTES = """
     "and ranking are exactly oracle-checked.  At 100 TB: the (min, "
     "span) stats are one posexplode aggregate (64 groups) collected "
     "as a 2x64 model artifact and broadcast; encode+score is one "
-    "numpy pass per Arrow batch (the PQ kernel pattern) against a "
-    "query sample HARD-capped at _SQ8_QCAP=128 — tighter than PQ's "
-    "1000 cap because the brute nq x corpus kernel has no posting-"
-    "list pruning to hide behind (r13 soak lesson); top-3 per "
-    "query via WindowGroupLimit, no global sort.",
+    "numpy pass per Arrow batch against a query sample HARD-capped "
+    "at _SQ8_QCAP=128 — tighter than PQ's 1000 cap because the brute "
+    "nq x corpus kernel has no posting-list pruning to hide behind.  "
+    "Each batch ships only its per-query top 3 "
+    "(_nearest, the map-side combine), and the global top 3 per "
+    "query is a WindowGroupLimit, no global sort.",
 )
 def similarity_ann_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pyarrow as pa
 
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     mn, span = _sq8_stats(e)
-    qrows = _sq8_queries(e).collect()  # <= _SQ8_QCAP rows at any scale
-    q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    q_mat = q6_i64([r["embedding"] for r in qrows])
+    q_ids, q_mat = q6_sample(_sq8_queries(e).collect())  # <= _SQ8_QCAP rows
     bc = spark.sparkContext.broadcast(
-        (q_ids, q_mat, np.array(mn, dtype=np.int64),
-         np.array(span, dtype=np.int64))
+        (q_mat, np.array(mn, dtype=np.int64), np.array(span, dtype=np.int64))
     )
 
-    def sq_adc(batches):
-        import numpy as np
+    def sq_adc(mat):
+        qm, mnv, spv = bc.value
+        codes = np.where(spv > 0, ((mat - mnv) * 255) // np.where(spv > 0, spv, 1), 0)
+        return _l2(qm, mnv + (codes * spv) // 255)  # against the reconstruction
 
-        qi, qm, mnv, spv = bc.value
-        safe = np.where(spv > 0, spv, 1)
-        qq_sq = (qm * qm).sum(axis=1)
-        for batch in batches:
-            ids = np.asarray(batch.column("vec_id"), dtype=np.int64)
-            flat = batch.column("embedding").flatten().to_numpy(
-                zero_copy_only=False
-            )
-            mat = q6_i64(flat.reshape(-1, 64))
-            codes = np.where(spv > 0, ((mat - mnv) * 255) // safe, 0)
-            recon = mnv + (codes * spv) // 255
-            d = (
-                qq_sq[:, None]
-                - 2 * (qm @ recon.T)
-                + (recon * recon).sum(axis=1)[None, :]
-            )
-            # Per-batch top-3 per query (ties to lowest neighbor_id) —
-            # an exact superset of each query's global top-3 members
-            # from this batch, so the downstream window sees nq*3 rows
-            # per batch instead of nq*batch (the TakeOrdered pushdown).
-            oq, on, od = [], [], []
-            for qrow in range(len(qi)):
-                mask = ids != qi[qrow]
-                cid, cd = ids[mask], d[qrow][mask]
-                sel = np.lexsort((cid, cd))[:3]
-                oq.extend([qi[qrow]] * len(sel))
-                on.extend(cid[sel])
-                od.extend(cd[sel])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.array(oq, dtype=np.int64), type=pa.int64()),
-                    pa.array(np.array(on, dtype=np.int64), type=pa.int64()),
-                    pa.array(np.array(od, dtype=np.int64), type=pa.int64()),
-                ],
-                ["query_id", "neighbor_id", "adc_dist"],
-            )
-
-    pairs = e.mapInArrow(
-        sq_adc, "query_id long, neighbor_id long, adc_dist long"
-    )
-    w = Wnd.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= 3)
-    )
+    return _scan_top3(e, q_ids, sq_adc)
 
 
 @register(
@@ -2858,71 +2710,10 @@ def similarity_ann_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     "on the bounded query sample, never corpus x corpus.",
 )
 def similarity_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pyarrow as pa
-
-    sq_top = similarity_ann_sq8(spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-
+    sq_top = similarity_ann_sq8(spark, sf_dir)
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qrows = _sq8_queries(e).collect()  # <= _SQ8_QCAP rows at any scale
-    q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    q_mat = q6_i64([r["embedding"] for r in qrows])
-    bc = spark.sparkContext.broadcast((q_ids, q_mat))
-
-    def exact_dists(batches):
-        import numpy as np
-
-        qi, qm = bc.value
-        for batch in batches:
-            ids = np.asarray(batch.column("vec_id"), dtype=np.int64)
-            flat = batch.column("embedding").flatten().to_numpy(
-                zero_copy_only=False
-            )
-            mat = q6_i64(flat.reshape(-1, 64))
-            d = (
-                (qm * qm).sum(axis=1)[:, None]
-                - 2 * (qm @ mat.T)
-                + (mat * mat).sum(axis=1)[None, :]
-            )
-            # per-batch top-3 pushdown (see sq_adc) — exact
-            oq, on, od = [], [], []
-            for qrow in range(len(qi)):
-                mask = ids != qi[qrow]
-                cid, cd = ids[mask], d[qrow][mask]
-                sel = np.lexsort((cid, cd))[:3]
-                oq.extend([qi[qrow]] * len(sel))
-                on.extend(cid[sel])
-                od.extend(cd[sel])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.array(oq, dtype=np.int64), type=pa.int64()),
-                    pa.array(np.array(on, dtype=np.int64), type=pa.int64()),
-                    pa.array(np.array(od, dtype=np.int64), type=pa.int64()),
-                ],
-                ["query_id", "vec_id", "dist"],
-            )
-
-    exact = e.mapInArrow(exact_dists, "query_id long, vec_id long, dist long")
-    w = Wnd.partitionBy("query_id").orderBy("dist", "vec_id")
-    exact_top = (
-        exact.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("query_id", "vec_id")
-    )
-    joined = exact_top.join(
-        sq_top,
-        (sq_top.query_id == exact_top.query_id)
-        & (sq_top.neighbor_id == exact_top.vec_id),
-        "left",
-    )
-    return joined.groupBy(exact_top.query_id).agg(
-        F.count(sq_top.neighbor_id).cast("bigint").alias("n_hits"),
-        F.round(
-            F.count(sq_top.neighbor_id).cast("double") / 3, 6
-        ).alias("recall_at_3"),
-    )
+    # <= _SQ8_QCAP rows at any scale
+    return _recall_at_3(spark, e, _sq8_queries(e).collect(), sq_top)
 
 
 @register(

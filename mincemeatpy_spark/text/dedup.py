@@ -26,7 +26,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
 from mincemeatpy_spark.lineage import truncate_eager, truncate_lazy
-from mincemeatpy_spark.operators._util import q6_i64
+from mincemeatpy_spark.operators._util import q6_embeddings, q6_sample
 from mincemeatpy_spark.registry import QUERIES, register
 from mincemeatpy_spark.tables import fan_out, t
 
@@ -584,14 +584,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vs the capped ground-truth sample", and the registered scale path
     # for corpus-vs-corpus remains the LSH/semdedup family.  The oracle
     # applies the identical predicate on its b side.
-    rows = e.filter(F.col("vec_id") < _COS_BCAP).collect()
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-
-    # HALF-AWAY-FROM-ZERO micro-quantization, matching DuckDB round()
-    # and Spark F.round (the semdedup cluster path) exactly.
-    mat = q6_i64([r["embedding"] for r in rows])
-    order = np.argsort(ids, kind="stable")
-    ids, mat = ids[order], mat[order]
+    ids, mat = q6_sample(e.filter(F.col("vec_id") < _COS_BCAP).collect())
     nrm = np.sqrt((mat * mat).sum(axis=1).astype(np.float64))
     # r14 (guide §4.2): the broadcast side ships as float64 so the Gram
     # matmul runs through BLAS — numpy has no BLAS kernel for int64 and
@@ -609,10 +602,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         b_ids, b_mat, b_nrm = bc.value
         for batch in batches:
             a_ids = np.asarray(batch.column("vec_id"), dtype=np.int64)
-            flat = batch.column("embedding").flatten().to_numpy(
-                zero_copy_only=False
-            )
-            a_mat = q6_i64(flat.reshape(-1, 64))
+            a_mat = q6_embeddings(batch)
             a_nrm = np.sqrt((a_mat * a_mat).sum(axis=1).astype(np.float64))
             # float64 BLAS matmul of exact integers — bit-identical to
             # the int64 product (dot <= 6.4e13 < 2^53; see driver-side

@@ -92,11 +92,12 @@ _ALLOWLIST = {
     ),
     "similarity/ann.py::similarity_ann_sq8": (
         1,
-        "pure-predicate cap — queries _PQ_QMOD/_PQ_QCAP",
+        "pure-predicate cap — queries _PQ_QMOD/_SQ8_QCAP (<= 128 rows "
+        "at any corpus size)",
     ),
     "similarity/ann.py::similarity_sq8_recall": (
         1,
-        "pure-predicate cap — queries _PQ_QMOD/_PQ_QCAP",
+        "pure-predicate cap — queries _PQ_QMOD/_SQ8_QCAP",
     ),
     "similarity/ann.py::similarity_ann_ivfpq": (
         2,
@@ -210,27 +211,45 @@ def test_allowlist_bounds_are_documented(key):
     assert count >= 1 and isinstance(bound, str) and len(bound) > 10
 
 
-def test_pq_query_sample_is_hard_capped(spark):
-    """VERDICT r5 task 7a: the PQ-family query predicate must bound the
-    collected side at ANY corpus size — prove it on a synthetic table
-    10x past the cap, and pin the oracles to the identical predicate so
-    the two sides can only move in lockstep."""
+@pytest.mark.parametrize(
+    "sample, cap, names",
+    [
+        pytest.param(
+            "_pq_queries",
+            "_PQ_QCAP",
+            (
+                "similarity_ann_pq",
+                "similarity_pq_recall",
+                "similarity_ann_ivfpq",
+                "similarity_ivfpq_recall",
+            ),
+            id="pq",
+        ),
+        pytest.param(
+            "_sq8_queries",
+            "_SQ8_QCAP",
+            ("similarity_ann_sq8", "similarity_sq8_recall"),
+            id="sq8",
+        ),
+    ],
+)
+def test_query_sample_is_hard_capped(spark, sample, cap, names):
+    """Each ANN family's query predicate must bound the collected side
+    at ANY corpus size — prove it on a synthetic table 10x past the
+    cap, and pin the oracles to the identical predicate so the two
+    sides can only move in lockstep."""
+    import mincemeatpy_spark.similarity.ann as ann
     from mincemeatpy_spark.registry import load_all_queries
-    from mincemeatpy_spark.similarity.ann import _PQ_QCAP, _PQ_QMOD, _pq_queries
 
-    big = spark.range(0, _PQ_QMOD * _PQ_QCAP * 10).selectExpr("id AS vec_id")
-    assert _pq_queries(big).count() == _PQ_QCAP
+    qcap = getattr(ann, cap)
+    big = spark.range(0, ann._PQ_QMOD * qcap * 10).selectExpr("id AS vec_id")
+    assert getattr(ann, sample)(big).count() == qcap
 
     qs = load_all_queries()
-    predicate = f"vec_id % {_PQ_QMOD} = 0 AND vec_id < {_PQ_QMOD * _PQ_QCAP}"
-    for name in (
-        "similarity_ann_pq",
-        "similarity_pq_recall",
-        "similarity_ann_ivfpq",
-        "similarity_ivfpq_recall",
-    ):
+    predicate = f"vec_id % {ann._PQ_QMOD} = 0 AND vec_id < {ann._PQ_QMOD * qcap}"
+    for name in names:
         assert predicate in " ".join(qs[name].oracle.split()), (
-            f"{name}: oracle no longer applies the _PQ_QMOD/_PQ_QCAP cap"
+            f"{name}: oracle no longer applies the _PQ_QMOD/{cap} cap"
         )
 
 

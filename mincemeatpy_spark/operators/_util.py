@@ -58,6 +58,14 @@ def oracle_decavg(expr: str) -> str:
     return f"({oracle_decsum(expr)} / COUNT(*))"
 
 
+def hash60(col: Column) -> Column:
+    """60-bit integer hash of a string: the first 15 hex digits of its
+    md5.  DuckDB computes the same integer as
+    ``('0x' || substring(md5(x), 1, 15))::BIGINT``, so a hash-keyed join,
+    sample or bucket gives identical rows in both engines."""
+    return F.conv(F.substring(F.md5(col.cast("binary")), 1, 15), 16, 10).cast("bigint")
+
+
 def q6_i64(x):
     """numpy twin of the per-row micro-unit step: doubles to int64
     micro-units with HALF-AWAY-FROM-ZERO rounding, matching DuckDB
@@ -89,3 +97,22 @@ def q6_sample(rows, *cols):
     ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
     mat = q6_i64([r["embedding"] for r in rows]).reshape(-1, 64)
     return (ids, mat, *(np.array([r[c] for r in rows], dtype=np.int64) for c in cols))
+
+
+def q6_dot(a, b):
+    """``a @ b.T`` of int64 micro-unit matrices, exact, through BLAS.
+    numpy has no BLAS kernel for int64 and multiplies in a plain loop, so
+    the product runs in float64 and is cast back.  That is exact while
+    every partial sum is an integer below 2^53, which holds when
+    ``k * max|a| * max|b| < 2^53`` (k the shared width); ValueError
+    otherwise.  Unit vectors in micro-units give at most
+    64 * 1e6 * 1e6 = 6.4e13."""
+    import numpy as np
+
+    a, b = np.asarray(a), np.asarray(b)
+    bound = a.shape[1] * (int(np.abs(a).max()) if a.size else 0) * (
+        int(np.abs(b).max()) if b.size else 0
+    )
+    if bound >= 2**53:
+        raise ValueError(f"q6_dot: k*max|a|*max|b| = {bound} is not below 2^53")
+    return (a.astype(np.float64) @ b.astype(np.float64).T).astype(np.int64)

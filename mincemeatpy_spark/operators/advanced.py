@@ -12,10 +12,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from mincemeatpy_spark.operators._util import decsum, oracle_decsum
+from mincemeatpy_spark.operators._util import decsum, hash60, oracle_decsum
 from mincemeatpy_spark.registry import register
 from mincemeatpy_spark.tables import t
-from mincemeatpy_spark.text.dedup import _hash60
 
 
 @register(
@@ -255,19 +254,7 @@ def sample_reservoir_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sample_bernoulli_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("split-v1:"), F.col("doc_id").cast("string")
-                ).cast("binary")
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    h = hash60(F.concat(F.lit("split-v1:"), F.col("doc_id").cast("string")))
     split = F.when(h % 1000 < 100, F.lit("eval")).otherwise(F.lit("train"))
     return d.groupBy(split.alias("split")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -799,7 +786,7 @@ def layout_hilbert_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    h = _hash60(F.col("doc_id").cast("string")) % 1000003
+    h = hash60(F.col("doc_id").cast("string")) % 1000003
     key = F.log((h + 1) / F.lit(1000004.0)) / F.col("n_chars")
     w = Window.partitionBy("lang").orderBy(key.desc(), F.col("doc_id").asc())
     return (

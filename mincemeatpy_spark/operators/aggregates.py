@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from mincemeatpy_spark.operators._util import decavg, decsum, oracle_decavg, oracle_decsum
+from mincemeatpy_spark.operators._util import decavg, decsum, hash60, oracle_decavg, oracle_decsum
 from mincemeatpy_spark.registry import register
 from mincemeatpy_spark.tables import t
 
@@ -1557,13 +1557,7 @@ def dp_noisy_counts(
         .agg(F.count(F.lit(1)).alias("n"))
         .withColumn(
             "h",
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(salt), F.col("event_type"))), 1, 15
-                ),
-                16,
-                10,
-            ).cast("bigint"),
+            hash60(F.concat(F.lit(salt), F.col("event_type"))),
         )
         .withColumn("y", F.shiftright("h", 1))
     )

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from mincemeatpy_spark.operators._util import hash60
 from mincemeatpy_spark.registry import register
 from mincemeatpy_spark.tables import t
 
@@ -2347,11 +2348,7 @@ def features_hashing_trick(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     ).alias("feat")
-    # Shared md5->int60 derivation (text.dedup._hash60) — one site to
-    # keep bit-identical with the oracle's hex form.
-    from mincemeatpy_spark.text.dedup import _hash60
-
-    bucket = (_hash60(F.concat(F.lit("fh-v1:"), F.col("feat"))) % 16).alias(
+    bucket = (hash60(F.concat(F.lit("fh-v1:"), F.col("feat"))) % 16).alias(
         "bucket"
     )
     return (
@@ -2504,8 +2501,6 @@ def _pois1_case(h: str) -> str:
 def events_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from mincemeatpy_spark.text.dedup import _hash60
-
     x = (
         t(spark, sf_dir, "events")
         .filter((F.col("event_type") == "purchase") & F.col("value").isNotNull())
@@ -2516,7 +2511,7 @@ def events_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("v"),
         )
     )
-    h = _hash60(
+    h = hash60(
         F.concat(
             F.lit("bs:"),
             F.col("b").cast("string"),

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from mincemeatpy_spark.operators._util import hash60
 from mincemeatpy_spark.registry import register
 from mincemeatpy_spark.tables import t
 
@@ -211,14 +212,7 @@ def map_column_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sample_stratified_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 15),
-            16,
-            10,
-        ).cast("bigint")
-        % 1000
-    )
+    bucket = hash60(F.col("doc_id").cast("string")) % 1000
     keep = ((F.col("lang") == "en") & (bucket < 100)) | (
         (F.col("lang") != "en") & (bucket < 500)
     )

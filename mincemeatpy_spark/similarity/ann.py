@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as Wnd, functions as F
 
 from mincemeatpy_spark.lineage import truncate_eager, truncate_lazy
-from mincemeatpy_spark.operators._util import q6_embeddings, q6_sample
+from mincemeatpy_spark.operators._util import hash60, q6_dot, q6_embeddings, q6_sample
 from mincemeatpy_spark.registry import QUERIES, register
 from mincemeatpy_spark.tables import t
 
@@ -108,7 +108,7 @@ def _l2(qm, mat):
     (int64 micro-units): ||q-v||^2 = q.q - 2 q.v + v.v, terms <= ~4e13."""
     return (
         (qm * qm).sum(axis=1)[:, None]
-        - 2 * (qm @ mat.T)
+        - 2 * q6_dot(qm, mat)
         + (mat * mat).sum(axis=1)[None, :]
     )
 
@@ -229,15 +229,12 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _planes(spark: SparkSession) -> DataFrame:
     """Deterministic pseudo-random hyperplanes: weight(p,d) derived from
     md5(p:d), uniform in [-1, 1) — reproducible in any engine."""
-    h = lambda col: F.conv(F.substring(F.md5(col.cast("binary")), 1, 15), 16, 10).cast(
-        "bigint"
-    )
     return spark.range(_N_PLANES).select(
         F.col("id").cast("int").alias("p"),
         F.transform(
             F.sequence(F.lit(1), F.lit(_DIM)),
             lambda d: (
-                h(F.concat(F.col("id").cast("string"), F.lit(":"), d.cast("string")))
+                hash60(F.concat(F.col("id").cast("string"), F.lit(":"), d.cast("string")))
                 / F.lit(_POW2_60)
             )
             * 2
@@ -1491,8 +1488,7 @@ def embedding_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             a_labs = np.asarray(batch.column("label"), dtype=np.int64)
             a_mat = q6_embeddings(batch)
             a_nrm = np.sqrt((a_mat * a_mat).sum(axis=1).astype(np.float64))
-            gram = a_mat @ b_mat.T  # exact int64
-            cos = gram.astype(np.float64) / np.outer(a_nrm, b_nrm)
+            cos = q6_dot(a_mat, b_mat) / np.outer(a_nrm, b_nrm)
             # ORDER BY cos DESC, nb; leave-one-out because _nearest
             # drops self (an -inf mask would still take a top-5 slot and
             # vote for its own label whenever the sample has <= 5 rows)
@@ -1593,7 +1589,7 @@ def embedding_label_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
             a_labs = np.asarray(batch.column("label"), dtype=np.int64)
             a_mat = q6_embeddings(batch)
             a_nrm = np.sqrt((a_mat * a_mat).sum(axis=1).astype(np.float64))
-            gram = a_mat @ b_mat.T  # exact int64
+            gram = q6_dot(a_mat, b_mat)
             cq = np.floor(
                 1_000_000 * (gram.astype(np.float64) / np.outer(a_nrm, b_nrm))
             ).astype(np.int64)

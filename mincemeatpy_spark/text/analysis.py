@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mincemeatpy_spark.lineage import truncate_eager, truncate_lazy
+from mincemeatpy_spark.operators._util import hash60
 from mincemeatpy_spark.registry import register
 from mincemeatpy_spark.tables import t
 
@@ -1345,9 +1346,7 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "pos",
-            F.conv(F.substring(F.md5(gram.cast("binary")), 1, 15), 16, 10)
-            .cast("bigint")
-            .alias("h"),
+            hash60(gram).alias("h"),
         )
     )
     win = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(-3, 0)
@@ -1436,9 +1435,7 @@ def text_winnowing_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "pos",
-            F.conv(F.substring(F.md5(gram.cast("binary")), 1, 15), 16, 10)
-            .cast("bigint")
-            .alias("h"),
+            hash60(gram).alias("h"),
         )
     )
     win = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(-3, 0)
@@ -1565,13 +1562,8 @@ def word_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
     )
 
-    # The one md5->int60 derivation shared repo-wide (text.dedup._hash60)
-    # — every cross-engine hash site must stay bit-identical to the
-    # oracle's '0x' || substring(md5(...), 1, 15) form.
-    from mincemeatpy_spark.text.dedup import _hash60
-
     def _h(salt: str) -> F.Column:
-        return _hash60(F.concat(F.lit(salt), F.col("word"))) % 64
+        return hash60(F.concat(F.lit(salt), F.col("word"))) % 64
 
     h = wc.select("word", "c", _h("cms-0:").alias("h0"), _h("cms-1:").alias("h1"))
     r0 = h.groupBy(F.col("h0").alias("col0")).agg(

@@ -3,9 +3,19 @@
 Five dedup families over ``documents`` (+ one over ``embeddings``), each
 a named, oracle-checked operator.  The deterministic hash primitive
 shared by MinHash and SimHash is a 60-bit integer from the md5 hex
-prefix — bit-identical in Spark (``conv(substring(md5(x),1,15),16,10)``)
-and DuckDB (``('0x'||substring(md5(x),1,15))::BIGINT``), which is what
-makes the LSH pipelines fully oracle-checkable instead of rows-only.
+prefix (``operators._util.hash60``) — bit-identical in Spark
+(``conv(substring(md5(x),1,15),16,10)``) and DuckDB
+(``('0x'||substring(md5(x),1,15))::BIGINT``), which is what makes the
+LSH pipelines fully oracle-checkable instead of rows-only.
+
+The shingle-set and MinHash kit below does each step of the near-dup
+family once: ``_shingle_df`` (the cached hashed shingle sets),
+``_minhash`` (16 minima and the set size), ``_bands``, ``_band_pairs``
+(the band-collision self-join), ``_overlaps`` (the exact shingle
+self-join), ``_verify`` (candidate overlaps) and ``_matches`` (signature
+agreement).  Every Jaccard, containment, LSH and eval query over
+shingles is a short caller of it, so the LSH recipe (seeds, bands,
+verification) is changed in one place.
 
 Scale design (100 TB):
 - exact dedup shuffles 16-byte digests, never documents;
@@ -26,19 +36,19 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
 from mincemeatpy_spark.lineage import truncate_eager, truncate_lazy
-from mincemeatpy_spark.operators._util import q6_embeddings, q6_sample
+from mincemeatpy_spark.operators._util import hash60, q6_dot, q6_embeddings, q6_sample
 from mincemeatpy_spark.registry import QUERIES, register
 from mincemeatpy_spark.tables import fan_out, t
 
-# --- shared deterministic primitives -----------------------------------
+# --- the shingle-set and MinHash kit ------------------------------------
+#
+# In the reference's terms MinHash-LSH near-dup detection is one mincemeat
+# job: the map shingles and hashes, the combine keeps 16 minima per
+# document, the band signature is the shuffle key and the reduce
+# verifies.  Each step has one kernel below; the oracle side mirrors them
+# with _minh_cols_sql, _bands_sql and _matches_sql.
 
 _WS = r"\s+"
-
-
-def _hash60(col: Column) -> Column:
-    """60-bit integer hash of a string, md5-derived (cross-engine exact)."""
-    return F.conv(F.substring(F.md5(col.cast("binary")), 1, 15), 16, 10).cast("bigint")
-
 
 _ORACLE_H60 = "('0x' || substring(md5({x}), 1, 15))::BIGINT"
 
@@ -70,7 +80,9 @@ _ORACLE_SHINGLES = """
 """
 
 
-def _shingle_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _hashed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`_shingle_df` without the cache, for a caller that reads the
+    set once and materializes its own smaller table."""
     # fan_out: shingling is the expensive per-row stage; never leave it
     # serialized on an under-split scan (no-op on wide scans at scale).
     docs = fan_out(
@@ -79,6 +91,177 @@ def _shingle_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         docs.filter(F.size("w") >= 3)
         .select("doc_id", F.explode(_shingles(F.col("w"))).alias("s"))
+        .select("doc_id", hash60(F.col("s")).alias("s"))
+    )
+
+
+def _shingle_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The hashed shingle sets ``(doc_id, s)``: one row per distinct
+    3-word shingle of every document with at least 3 tokens, ``s`` its
+    60-bit :func:`hash60`.  Shingle strings die here, so every join and
+    shuffle downstream carries 8-byte keys.  Cached, because each caller
+    reads the set at least twice (both sides of a self-join, or the
+    signatures and then the verification), and scan, split, explode and
+    md5 are the query's dominant per-row cost."""
+    return _hashed_shingles(spark, sf_dir).cache()
+
+
+_N_HASHES = 16
+_BAND_SIZE = 4  # 4 bands of 4 → candidate if any band signature collides
+
+# One md5 per shingle; the 16 MinHash functions are affine transforms
+# h_i(x) = (x*a_i + b_i) mod P over the Mersenne prime P=2^31-1 (the
+# standard universal-hash family for MinHash).  Integer-exact in any
+# engine, and one digest per shingle instead of one per (shingle, seed).
+_P = 2_147_483_647
+_A = [(i * 2654435761 + 1) % _P for i in range(_N_HASHES)]
+_B = [(i * 40503 + 17) % _P for i in range(_N_HASHES)]
+
+
+def _affine(i: int, x: str) -> str:
+    # x is the full 60-bit shingle hash; reduce mod P first so the
+    # multiply stays under 2^63 (2^31 * 2^32 headroom) in both engines.
+    return f"(({x} % {_P}) * {_A[i]} + {_B[i]}) % {_P}"
+
+
+def _minhash(sh: DataFrame) -> DataFrame:
+    """Per document of ``sh``: the 16 minima ``m0..m15`` and the set
+    size ``n``.  They are 17 aggregate columns of ONE groupBy, so the
+    shuffle carries one partial row per document and task; exploding a
+    row per seed instead shuffled 12M rows at sf0.1, against ~80k."""
+    return sh.groupBy("doc_id").agg(
+        *[F.min(F.expr(_affine(i, "s"))).alias(f"m{i}") for i in range(_N_HASHES)],
+        F.count(F.lit(1)).alias("n"),
+    )
+
+
+def _bands(minh: DataFrame, rows: int = _BAND_SIZE) -> DataFrame:
+    """One ``(doc_id, n, band, sig)`` row per band of ``rows`` minima,
+    ``sig`` the comma-joined minima.  Each row carries the set size, so
+    a candidate pair leaves the band join with both Jaccard denominators
+    and needs no join back to a doc-count-sized size table, which at
+    1B documents would be two more keyed shuffles."""
+    n_bands = _N_HASHES // rows
+    stack_args = ", ".join(
+        f"{b}, concat_ws(',', {', '.join(f'm{i}' for i in range(b * rows, (b + 1) * rows))})"
+        for b in range(n_bands)
+    )
+    return minh.selectExpr("doc_id", "n", f"stack({n_bands}, {stack_args}) AS (band, sig)")
+
+
+def _band_pairs(bands: DataFrame) -> DataFrame:
+    """LSH candidates ``(d1, d2, n1, n2)``, d1 < d2: documents that share
+    a (band, sig) bucket, once per pair however many bands collide.  The
+    pair alone is the dedup key (n1, n2 follow from it), so a later join
+    on (d1, d2) reuses its shuffle.  No forced broadcast: the band table
+    scales with the corpus, and AQE broadcasts at runtime while it fits."""
+    ba, bb = bands.alias("ba"), bands.alias("bb")
+    return (
+        ba.join(
+            bb,
+            (F.col("ba.band") == F.col("bb.band"))
+            & (F.col("ba.sig") == F.col("bb.sig"))
+            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
+        )
+        .select(
+            F.col("ba.doc_id").alias("d1"),
+            F.col("bb.doc_id").alias("d2"),
+            F.col("ba.n").alias("n1"),
+            F.col("bb.n").alias("n2"),
+        )
+        .dropDuplicates(["d1", "d2"])
+    )
+
+
+def _overlaps(sh: DataFrame, ordered: bool = True) -> DataFrame:
+    """``(d1, d2, i)``: the number ``i`` of shingles two documents share,
+    by the inverted-index self-join on the shingle hash.  Pairs are
+    d1 < d2, or every ordered pair d1 != d2 when not ``ordered``.  Exact
+    but quadratic in hot shingles."""
+    a, b = sh.alias("a"), sh.alias("b")
+    other = F.col("a.doc_id") < F.col("b.doc_id") if ordered else (
+        F.col("a.doc_id") != F.col("b.doc_id")
+    )
+    return (
+        a.join(b, (F.col("a.s") == F.col("b.s")) & other)
+        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
+        .agg(F.count(F.lit(1)).alias("i"))
+    )
+
+
+def _verify(sh: DataFrame, cand: DataFrame) -> DataFrame:
+    """``(d1, d2, n1, n2, i)`` for the candidate pairs of ``cand`` only:
+    each pair joins back to its two shingle sets, so verification scales
+    with the candidates, not with every co-shingled pair."""
+    a, b = sh.alias("a"), sh.alias("b")
+    return (
+        cand.join(a, F.col("a.doc_id") == F.col("d1"))
+        .join(b, (F.col("b.doc_id") == F.col("d2")) & (F.col("b.s") == F.col("a.s")))
+        .groupBy("d1", "d2", "n1", "n2")
+        .agg(F.count(F.lit(1)).alias("i"))
+    )
+
+
+def _jaccard(n1: Column, n2: Column) -> Column:
+    """Jaccard of a pair with ``i`` shared shingles and set sizes n1, n2."""
+    return F.col("i").cast("double") / (n1 + n2 - F.col("i"))
+
+
+def _jaccard_pairs(sh: DataFrame, sizes: DataFrame | None = None) -> DataFrame:
+    """Exact near-dup pairs ``(d1, d2, jaccard)`` of ``sh`` with Jaccard
+    >= 0.25, jaccard rounded to 6 places.  ``sizes`` is ``(doc_id, n)``;
+    by default the per-document count of ``sh``."""
+    if sizes is None:
+        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    jac = _jaccard(F.col("sa.n"), F.col("sb.n"))
+    return (
+        _overlaps(sh)
+        .join(sizes.alias("sa"), F.col("sa.doc_id") == F.col("d1"))
+        .join(sizes.alias("sb"), F.col("sb.doc_id") == F.col("d2"))
+        .filter(jac >= 0.25)
+        .select("d1", "d2", F.round(jac, 6).alias("jaccard"))
+    )
+
+
+def _minhash_lsh(sh: DataFrame) -> DataFrame:
+    """MinHash-LSH pairs ``(d1, d2, jaccard)`` of ``sh``: band candidates,
+    each verified with its exact Jaccard."""
+    # The band table feeds both sides of the candidate self-join; lazy
+    # truncation runs the minhash aggregate once for both.
+    bands = _bands(_minhash(sh)).transform(truncate_lazy)
+    return _verify(sh, _band_pairs(bands)).select(
+        "d1", "d2", F.round(_jaccard(F.col("n1"), F.col("n2")), 6).alias("jaccard")
+    )
+
+
+def _matches(a: str, b: str) -> Column:
+    """How many of the 16 minima the signatures aliased a and b share."""
+    return sum(
+        (F.col(f"{a}.m{k}") == F.col(f"{b}.m{k}")).cast("int") for k in range(_N_HASHES)
+    )
+
+
+def _minh_cols_sql() -> str:
+    return ", ".join(f"min({_affine(i, 'base')}) AS m{i}" for i in range(_N_HASHES))
+
+
+def _bands_sql(src: str, cols: str = "doc_id", rows: int = _BAND_SIZE) -> str:
+    """Oracle twin of :func:`_bands`: one SELECT per band of ``src``,
+    ``sig`` the band's minima joined with commas."""
+
+    def sig(b: int) -> str:
+        return " || ',' || ".join(f"m{i}::VARCHAR" for i in range(b * rows, (b + 1) * rows))
+
+    return " UNION ALL ".join(
+        f"SELECT {cols}, {b} AS band, {sig(b)} AS sig FROM {src}"
+        for b in range(_N_HASHES // rows)
+    )
+
+
+def _matches_sql(a: str, b: str) -> str:
+    return " + ".join(
+        f"(CASE WHEN {a}.m{i} = {b}.m{i} THEN 1 ELSE 0 END)"
+        for i in range(_N_HASHES)
     )
 
 
@@ -162,121 +345,10 @@ def dedup_exact_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
     "that dedup_minhash_lsh approximates at scale.",
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = (
-        _shingle_df(spark, sf_dir)
-        .select("doc_id", _hash60(F.col("s")).alias("s"))
-        .cache()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    jac = F.col("i").cast("double") / (F.col("sa.n") + F.col("sb.n") - F.col("i"))
-    return (
-        inter.join(sa, F.col("sa.doc_id") == F.col("d1"))
-        .join(sb, F.col("sb.doc_id") == F.col("d2"))
-        .filter(jac >= 0.25)
-        .select("d1", "d2", F.round(jac, 6).alias("jaccard"))
-    )
+    return _jaccard_pairs(_shingle_df(spark, sf_dir))
 
 
 # --- 3. MinHash + LSH --------------------------------------------------
-
-_N_HASHES = 16
-_BAND_SIZE = 4  # 4 bands of 4 → candidate if any band signature collides
-
-# One md5 per shingle; the 16 MinHash functions are affine transforms
-# h_i(x) = (x*a_i + b_i) mod P over the Mersenne prime P=2^31-1 (the
-# standard universal-hash family for MinHash).  Integer-exact in any
-# engine, and one digest per shingle instead of one per (shingle, seed).
-#
-# The 16 minima are computed as 16 aggregate columns in ONE groupBy —
-# no seed crossJoin, so the shuffle carries |shingle rows| partial aggs,
-# not 16x that.  (The first cut exploded per seed: 12M-row shuffle at
-# sf0.1 vs ~80k now.)
-_P = 2_147_483_647
-_A = [(i * 2654435761 + 1) % _P for i in range(_N_HASHES)]
-_B = [(i * 40503 + 17) % _P for i in range(_N_HASHES)]
-
-
-def _affine(i: int) -> str:
-    # base is the full 60-bit shingle hash; reduce mod P first so the
-    # multiply stays under 2^63 (2^31 * 2^32 headroom) in both engines.
-    return f"((base % {_P}) * {_A[i]} + {_B[i]}) % {_P}"
-
-
-def _band_sig_sql(b: int) -> str:
-    """Band signature: comma-joined minima of the band's 4 seeds."""
-    parts = [f"m{i}::VARCHAR" for i in range(b * _BAND_SIZE, (b + 1) * _BAND_SIZE)]
-    return " || ',' || ".join(parts)
-
-
-def _minhash_band_rows(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """Shared front half of the MinHash-LSH family: hashed shingles
-    (``based``) and band-signature rows (``bands``), each band row
-    carrying the doc's shingle-set size ``n``."""
-    based = (
-        _shingle_df(spark, sf_dir)
-        .select("doc_id", _hash60(F.col("s")).alias("base"))
-        .cache()
-    )
-    # One pass over the hashed shingles computes the 16 minima AND the
-    # set size — sizes ride along instead of a second 260k-row agg.
-    minh = based.groupBy("doc_id").agg(
-        *[F.min(F.expr(_affine(i))).alias(f"m{i}") for i in range(_N_HASHES)],
-        F.count(F.lit(1)).alias("n"),
-    )
-    n_bands = _N_HASHES // _BAND_SIZE
-    stack_args = ", ".join(
-        f"{b}, concat_ws(',', {', '.join(f'm{i}' for i in range(b * _BAND_SIZE, (b + 1) * _BAND_SIZE))})"
-        for b in range(n_bands)
-    )
-    # Band rows CARRY the doc's shingle-set size (+8 bytes each), so the
-    # candidate pairs emerge with both sizes attached and the Jaccard
-    # denominator needs NO join back to a doc-count-sized size table —
-    # at 1B docs that table is way past broadcast range, so the old
-    # shape's two size joins were two extra keyed shuffles.  No forced
-    # broadcast on the self-join either: the band table scales with the
-    # corpus; AQE picks broadcast at runtime while it actually fits.
-    bands = minh.selectExpr(
-        "doc_id", "n", f"stack({n_bands}, {stack_args}) AS (band, sig)"
-    )
-    # r13 optimization round: every consumer references the band table
-    # at least twice (the candidate self-join; the capped twin adds the
-    # bucket-count rollup), and each reference re-ran the 16-way min
-    # aggregation over the hashed shingles.  Truncating here
-    # materializes the minhash pass ONCE per query; the band table is
-    # (doc_id, n, band, sig) — 4 narrow columns, vocab-scale, cheap to
-    # hold (guide §2.4: share one computation instead of re-deriving it
-    # per branch).
-    from mincemeatpy_spark.lineage import truncate_lazy
-
-    return based, bands.transform(truncate_lazy)
-
-
-def _lsh_verify_candidates(based: DataFrame, cand: DataFrame) -> DataFrame:
-    """Exact-jaccard verification restricted to LSH candidates (shared
-    by the capped and uncapped ops): join candidate pairs back to their
-    (hashed) shingle sets — verification work scales with |candidates|,
-    not with all co-shingled pairs (the whole point of LSH at 100 TB)."""
-    a = based.alias("a")
-    b = based.alias("b")
-    inter = (
-        cand.join(a, F.col("a.doc_id") == F.col("d1"))
-        .join(b, (F.col("b.doc_id") == F.col("d2")) & (F.col("b.base") == F.col("a.base")))
-        .groupBy("d1", "d2", "n1", "n2")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    jac = F.col("i").cast("double") / (F.col("n1") + F.col("n2") - F.col("i"))
-    return inter.select("d1", "d2", F.round(jac, 6).alias("jaccard"))
 
 
 @register(
@@ -289,11 +361,11 @@ def _lsh_verify_candidates(based: DataFrame, cand: DataFrame) -> DataFrame:
         ),
         minh AS (
             SELECT doc_id,
-                   {", ".join(f"min({_affine(i)}) AS m{i}" for i in range(_N_HASHES))}
+                   {_minh_cols_sql()}
             FROM based GROUP BY doc_id
         ),
         bands AS (
-            {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {_band_sig_sql(b)} AS sig FROM minh" for b in range(_N_HASHES // _BAND_SIZE))}
+            {_bands_sql("minh")}
         ),
         cand AS (
             SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
@@ -329,25 +401,7 @@ def _lsh_verify_candidates(based: DataFrame, cand: DataFrame) -> DataFrame:
     "in the collision case.)",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    based, bands = _minhash_band_rows(spark, sf_dir)
-    ba = bands.alias("ba")
-    bb = bands.alias("bb")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("ba.band") == F.col("bb.band"))
-            & (F.col("ba.sig") == F.col("bb.sig"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
-        .select(
-            F.col("ba.doc_id").alias("d1"),
-            F.col("bb.doc_id").alias("d2"),
-            F.col("ba.n").alias("n1"),
-            F.col("bb.n").alias("n2"),
-        )
-        .distinct()
-    )
-    return _lsh_verify_candidates(based, cand)
+    return _minhash_lsh(_shingle_df(spark, sf_dir))
 
 
 _BAND_CAP = 50  # LSH buckets with more members than this are hot bands
@@ -363,12 +417,12 @@ _BAND_CAP = 50  # LSH buckets with more members than this are hot bands
         ),
         minh AS (
             SELECT doc_id,
-                   {", ".join(f"min({_affine(i)}) AS m{i}" for i in range(_N_HASHES))},
+                   {_minh_cols_sql()},
                    count(*) AS n
             FROM based GROUP BY doc_id
         ),
         bands AS (
-            {" UNION ALL ".join(f"SELECT doc_id, n, {b} AS band, {_band_sig_sql(b)} AS sig FROM minh" for b in range(_N_HASHES // _BAND_SIZE))}
+            {_bands_sql("minh", "doc_id, n")}
         ),
         bc AS (
             SELECT band, sig, count(*) AS cnt
@@ -422,7 +476,9 @@ _BAND_CAP = 50  # LSH buckets with more members than this are hot bands
     "candidates-only jaccard of the uncapped op, shared code.",
 )
 def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    based, bands = _minhash_band_rows(spark, sf_dir)
+    sh = _shingle_df(spark, sf_dir)
+    # the band table feeds the bucket counts and both join sides
+    bands = _bands(_minhash(sh)).transform(truncate_lazy)
     bc = bands.groupBy("band", "sig").agg(F.count(F.lit(1)).alias("cnt"))
     keptb = (
         bands.join(bc, ["band", "sig"])
@@ -437,24 +493,12 @@ def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.expr("CAST(cnt * (cnt - 1) DIV 2 AS BIGINT)")), F.lit(0)
         ).cast("bigint").alias("pairs_skipped"),
     )
-    ba = keptb.alias("ba")
-    bb = keptb.alias("bb")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("ba.band") == F.col("bb.band"))
-            & (F.col("ba.sig") == F.col("bb.sig"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
-        .select(
-            F.col("ba.doc_id").alias("d1"),
-            F.col("bb.doc_id").alias("d2"),
-            F.col("ba.n").alias("n1"),
-            F.col("bb.n").alias("n2"),
-        )
-        .distinct()
+    jac = _jaccard(F.col("n1"), F.col("n2"))
+    return (
+        _verify(sh, _band_pairs(keptb))
+        .select("d1", "d2", F.round(jac, 6).alias("jaccard"))
+        .crossJoin(F.broadcast(acct))
     )
-    return _lsh_verify_candidates(based, cand).crossJoin(F.broadcast(acct))
 
 
 # --- 4. SimHash --------------------------------------------------------
@@ -507,7 +551,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select("doc_id", F.explode(F.split("text", _WS)).alias("tok")).filter(
         F.col("tok") != ""
     )
-    hashed = toks.select("doc_id", _hash60(F.col("tok")).alias("h"))
+    hashed = toks.select("doc_id", hash60(F.col("tok")).alias("h"))
     votes = hashed.groupBy("doc_id").agg(
         *[
             F.sum(
@@ -586,15 +630,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # applies the identical predicate on its b side.
     ids, mat = q6_sample(e.filter(F.col("vec_id") < _COS_BCAP).collect())
     nrm = np.sqrt((mat * mat).sum(axis=1).astype(np.float64))
-    # r14 (guide §4.2): the broadcast side ships as float64 so the Gram
-    # matmul runs through BLAS — numpy has no BLAS kernel for int64 and
-    # falls back to a slow naive loop.  EXACTNESS IS PRESERVED: every
-    # quantized value is an integer with |v| <= 1e6, so each product is
-    # <= 1e12 and each 64-term dot <= 6.4e13 — every partial sum is an
-    # integer below 2^53, represented exactly in float64 regardless of
-    # accumulation order.  The float64 Gram is bit-identical to the
-    # int64 one.
-    bc = spark.sparkContext.broadcast((ids, mat.astype(np.float64), nrm))
+    bc = spark.sparkContext.broadcast((ids, mat, nrm))
 
     def pairs(batches):
         import numpy as np
@@ -604,12 +640,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             a_ids = np.asarray(batch.column("vec_id"), dtype=np.int64)
             a_mat = q6_embeddings(batch)
             a_nrm = np.sqrt((a_mat * a_mat).sum(axis=1).astype(np.float64))
-            # float64 BLAS matmul of exact integers — bit-identical to
-            # the int64 product (dot <= 6.4e13 < 2^53; see driver-side
-            # comment), and orders faster than numpy's non-BLAS int64
-            # fallback loop.
-            gram = a_mat.astype(np.float64) @ b_mat.T
-            cos = gram / np.outer(a_nrm, b_nrm)
+            cos = q6_dot(a_mat, b_mat) / np.outer(a_nrm, b_nrm)
             ii, jj = np.nonzero((cos >= 0.4) & (a_ids[:, None] < b_ids[None, :]))
             if len(ii):
                 yield pa.RecordBatch.from_arrays(
@@ -909,9 +940,9 @@ def text_substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     )
-    # r14 (guide §2.4, the r13 simhash/minhash pattern): ``g`` feeds BOTH
-    # the duplicate test (groupBy h) and the hits semi-join left side;
-    # without truncation each consumer re-runs the whole scan → split →
+    # ``g`` feeds BOTH the duplicate test (groupBy h) and the hits
+    # semi-join left side, so it is truncated to share one computation:
+    # without it each consumer re-runs the whole scan → split →
     # 10-token-slice md5 → explode chain (the query's dominant per-row
     # cost) — the before-plan shows two complete gram-hash subtrees and
     # zero reuse.  The materialized table is 5 narrow columns at
@@ -1043,8 +1074,9 @@ def fuzzy_match_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle of its own.",
 )
 def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    truth = dedup_ngram_jaccard(spark, sf_dir).select("d1", "d2")
-    lsh = dedup_minhash_lsh(spark, sf_dir)
+    sh = _shingle_df(spark, sf_dir)
+    truth = _jaccard_pairs(sh).select("d1", "d2")
+    lsh = _minhash_lsh(sh)
     n_true = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_true"))
     cand_counts = lsh.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_candidates"),
@@ -1069,7 +1101,7 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         minh AS (
             SELECT doc_id,
-                   {", ".join(f"min({_affine(i)}) AS m{i}" for i in range(_N_HASHES))},
+                   {_minh_cols_sql()},
                    count(*) AS n
             FROM based GROUP BY doc_id
         ),
@@ -1082,7 +1114,7 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs AS (
             SELECT i.d1, i.d2,
                    i.i::DOUBLE / (ma.n + mb.n - i.i) AS true_j,
-                   ({" + ".join(f"CASE WHEN ma.m{k} = mb.m{k} THEN 1 ELSE 0 END" for k in range(_N_HASHES))})::DOUBLE
+                   ({_matches_sql("ma", "mb")})::DOUBLE
                        / {_N_HASHES} AS est_j
             FROM inter i
             JOIN minh ma ON ma.doc_id = i.d1
@@ -1109,35 +1141,15 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mincemeatpy_spark.operators._util import decsum
 
-    # based feeds the quadratic self-join (both aliases) AND the minhash
-    # aggregate, and minh feeds two aliases — cache/checkpoint so the
-    # expensive scan/split/explode/md5 stage runs once, not ~5x (the
-    # same reason the siblings cache based / checkpoint minh).
-    based = (
-        _shingle_df(spark, sf_dir)
-        .select("doc_id", _hash60(F.col("s")).alias("base"))
-        .cache()
-    )
-    minh = based.groupBy("doc_id").agg(
-        *[F.min(F.expr(_affine(i))).alias(f"m{i}") for i in range(_N_HASHES)],
-        F.count(F.lit(1)).alias("n"),
-    ).transform(truncate_lazy)
-    a = based.alias("a")
-    b = based.alias("b")
-    inter = (
-        a.join(b, (F.col("a.base") == F.col("b.base")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
+    sh = _shingle_df(spark, sf_dir)
+    # minh feeds both signature sides of the pair join
+    minh = _minhash(sh).transform(truncate_lazy)
     ma = minh.alias("ma")
     mb = minh.alias("mb")
-    true_j = F.col("i").cast("double") / (F.col("ma.n") + F.col("mb.n") - F.col("i"))
-    matches = sum(
-        (F.col(f"ma.m{k}") == F.col(f"mb.m{k}")).cast("int") for k in range(_N_HASHES)
-    )
-    est_j = matches.cast("double") / F.lit(_N_HASHES)
+    true_j = _jaccard(F.col("ma.n"), F.col("mb.n"))
+    est_j = _matches("ma", "mb").cast("double") / F.lit(_N_HASHES)
     pairs = (
-        inter.join(ma, F.col("ma.doc_id") == F.col("d1"))
+        _overlaps(sh).join(ma, F.col("ma.doc_id") == F.col("d1"))
         .join(mb, F.col("mb.doc_id") == F.col("d2"))
         .filter(true_j >= 0.25)
         .select(F.abs(est_j - true_j).alias("abs_err"))
@@ -1274,8 +1286,7 @@ def dedup_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ids = ids[order]
         mat = np.array(list(pdf["qe"].iloc[order]), dtype=np.int64)
         nrm = np.sqrt((mat * mat).sum(axis=1).astype(np.float64))
-        gram = mat @ mat.T  # exact int64
-        cos = gram.astype(np.float64) / np.outer(nrm, nrm)
+        cos = q6_dot(mat, mat) / np.outer(nrm, nrm)
         ii, jj = np.nonzero((cos >= threshold) & (ids[:, None] < ids[None, :]))
         return _pd.DataFrame(
             {
@@ -1417,9 +1428,8 @@ def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("in_index", F.lit(1))
     )
-    # r14 (guide §2.4): ``batch`` feeds the keeper aggregate AND the
-    # triage join — truncating hashes the ingest batch once instead of
-    # twice (the batch is the thing that can be huge at scale; the
+    # ``batch`` feeds the keeper aggregate AND the triage join —
+    # truncating hashes the ingest batch once instead of twice (the batch is the thing that can be huge at scale; the
     # materialized table is (doc_id, fp), 24 bytes/row).
     batch = d.filter(F.col("doc_id") % 10 == 0).select(
         "doc_id", F.md5(F.col("text").cast("binary")).alias("fp")
@@ -1469,11 +1479,7 @@ def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     "no pair joins anywhere.",
 )
 def text_novelty_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = (
-        _shingle_df(spark, sf_dir)
-        .select("doc_id", _hash60(F.col("s")).alias("s"))
-        .cache()
-    )
+    sh = _shingle_df(spark, sf_dir)
     first_seen = sh.groupBy("s").agg(F.min("doc_id").alias("first_doc"))
     novel = F.when(F.col("first_doc") == F.col("doc_id"), 1).otherwise(0)
     return (
@@ -1519,25 +1525,11 @@ def text_novelty_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     "unchanged (band on the contained side's signature).",
 )
 def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = (
-        _shingle_df(spark, sf_dir)
-        .select("doc_id", _hash60(F.col("s")).alias("s"))
-        .cache()
-    )
+    sh = _shingle_df(spark, sf_dir)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
     cont = F.col("i").cast("double") / F.col("sa.n")
     return (
-        inter.join(sizes.alias("sa"), F.col("sa.doc_id") == F.col("d1"))
+        _overlaps(sh, ordered=False).join(sizes.alias("sa"), F.col("sa.doc_id") == F.col("d1"))
         .filter(cont >= 0.8)
         .select(
             F.col("d1").alias("contained_doc"),
@@ -1716,11 +1708,11 @@ def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         minh AS (
             SELECT doc_id,
-                   {", ".join(f"min({_affine(i)}) AS m{i}" for i in range(_N_HASHES))}
+                   {_minh_cols_sql()}
             FROM based GROUP BY doc_id
         ),
         bands AS (
-            {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {_band_sig_sql(b)} AS sig FROM minh" for b in range(_N_HASHES // _BAND_SIZE))}
+            {_bands_sql("minh")}
         ),
         cand AS (
             SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
@@ -1823,11 +1815,6 @@ def contrastive_pairs_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _band_sig_sql_rows(b: int, rows: int) -> str:
-    parts = [f"m{i}::VARCHAR" for i in range(b * rows, (b + 1) * rows)]
-    return " || ',' || ".join(parts)
-
-
 @register(
     "dedup_lsh_band_tradeoff",
     oracle=f"""
@@ -1835,7 +1822,7 @@ def _band_sig_sql_rows(b: int, rows: int) -> str:
         shh AS (SELECT doc_id, {_ORACLE_H60.format(x='s')} AS base FROM sh),
         minh AS (
             SELECT doc_id,
-                   {", ".join(f"min({_affine(i)}) AS m{i}" for i in range(_N_HASHES))}
+                   {_minh_cols_sql()}
             FROM shh GROUP BY doc_id
         ),
         sizes AS (SELECT doc_id, count(*) AS n FROM shh GROUP BY doc_id),
@@ -1851,7 +1838,7 @@ def _band_sig_sql_rows(b: int, rows: int) -> str:
             WHERE i::DOUBLE / (sa.n + sb.n - i) >= 0.25
         ),
         bands_44 AS (
-            {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {_band_sig_sql_rows(b, 4)} AS sig FROM minh" for b in range(4))}
+            {_bands_sql("minh", rows=4)}
         ),
         cand_44 AS (
             SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
@@ -1859,7 +1846,7 @@ def _band_sig_sql_rows(b: int, rows: int) -> str:
               ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
         ),
         bands_28 AS (
-            {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {_band_sig_sql_rows(b, 8)} AS sig FROM minh" for b in range(2))}
+            {_bands_sql("minh", rows=8)}
         ),
         cand_28 AS (
             SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
@@ -1895,56 +1882,19 @@ def _band_sig_sql_rows(b: int, rows: int) -> str:
     "Signatures are computed once; each banding is a cheap re-stack.",
 )
 def dedup_lsh_band_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    based = (
-        _shingle_df(spark, sf_dir)
-        .select("doc_id", _hash60(F.col("s")).alias("base"))
-        .cache()
-    )
+    sh = _shingle_df(spark, sf_dir)
     # Both configs and all six counts reuse the signature table and the
     # exact truth; localCheckpoint materializes each once instead of
     # re-running the quadratic truth join per count (measured ~2x).
-    minh = based.groupBy("doc_id").agg(
-        *[F.min(F.expr(_affine(i))).alias(f"m{i}") for i in range(_N_HASHES)],
-        F.count(F.lit(1)).alias("n"),
-    ).transform(truncate_lazy)
-    sizes = minh.select("doc_id", "n")
-    a, b = based.alias("a"), based.alias("b")
-    inter = (
-        a.join(b, (F.col("a.base") == F.col("b.base")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    jac = F.col("i").cast("double") / (F.col("sa.n") + F.col("sb.n") - F.col("i"))
+    minh = _minhash(sh).transform(truncate_lazy)
     truth = (
-        inter.join(sizes.alias("sa"), F.col("sa.doc_id") == F.col("d1"))
-        .join(sizes.alias("sb"), F.col("sb.doc_id") == F.col("d2"))
-        .filter(jac >= 0.25)
+        _jaccard_pairs(sh, minh.select("doc_id", "n"))
         .select("d1", "d2")
-    ).transform(truncate_lazy)
-
-    def candidates(n_bands: int, rows: int):
-        stack_args = ", ".join(
-            f"{bi}, concat_ws(',', {', '.join(f'm{i}' for i in range(bi * rows, (bi + 1) * rows))})"
-            for bi in range(n_bands)
-        )
-        bands = minh.selectExpr(
-            "doc_id", f"stack({n_bands}, {stack_args}) AS (band, sig)"
-        )
-        ba, bb = bands.alias("ba"), bands.alias("bb")
-        return (
-            ba.join(
-                bb,
-                (F.col("ba.band") == F.col("bb.band"))
-                & (F.col("ba.sig") == F.col("bb.sig"))
-                & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-            )
-            .select(F.col("ba.doc_id").alias("d1"), F.col("bb.doc_id").alias("d2"))
-            .distinct()
-        )
-
+        .transform(truncate_lazy)
+    )
     out = None
-    for config, nb, rows in (("4x4", 4, 4), ("2x8", 2, 8)):
-        cand = candidates(nb, rows)
+    for config, rows in (("4x4", 4), ("2x8", 8)):
+        cand = _band_pairs(_bands(minh, rows)).select("d1", "d2")
         n_cand = cand.agg(F.count(F.lit(1)).alias("n_candidates"))
         n_true = truth.agg(F.count(F.lit(1)).alias("n_true"))
         n_hit = truth.join(cand, ["d1", "d2"]).agg(
@@ -1979,11 +1929,11 @@ def dedup_lsh_band_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         minh AS (
             SELECT doc_id,
-                   {", ".join(f"min({_affine(i)}) AS m{i}" for i in range(_N_HASHES))}
+                   {_minh_cols_sql()}
             FROM based GROUP BY doc_id
         ),
         bands AS (
-            {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {_band_sig_sql(b)} AS sig FROM minh" for b in range(_N_HASHES // _BAND_SIZE))}
+            {_bands_sql("minh")}
         ),
         cand AS (
             SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
@@ -2078,27 +2028,10 @@ _DF_CAP = 50  # shingles appearing in more docs than this are stop-shingles
     "8-byte hash; everything else is the exact pipeline's shape.",
 )
 def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = (
-        _shingle_df(spark, sf_dir)
-        .select("doc_id", _hash60(F.col("s")).alias("s"))
-        .cache()
-    )
+    sh = _shingle_df(spark, sf_dir)
     df = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     kept = sh.join(df.filter(F.col("df") <= _DF_CAP), "s").select("doc_id", "s")
-    sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = kept.alias("a"), kept.alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    jac = F.col("i").cast("double") / (F.col("sa.n") + F.col("sb.n") - F.col("i"))
-    return (
-        inter.join(sizes.alias("sa"), F.col("sa.doc_id") == F.col("d1"))
-        .join(sizes.alias("sb"), F.col("sb.doc_id") == F.col("d2"))
-        .filter(jac >= 0.25)
-        .select("d1", "d2", F.round(jac, 6).alias("jaccard"))
-    )
+    return _jaccard_pairs(kept)
 
 
 @register(
@@ -2191,8 +2124,8 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair, so the output IS the distinct set and the pair-level
     # exchange is gone).  Proven at sf1 (probes/r13/simhash_minband_ab.py):
     # identical 105,157,386 rows, zero dup pairs, exceptAll empty both
-    # ways; 101-112 s -> 42-46 s (2.4x).  The same trick is why banded
-    # MinHash emits `min_band` in dedup_minhash_lsh's candidates.
+    # ways; 101-112 s -> 42-46 s (2.4x).  (MinHash's band join,
+    # _band_pairs, still dedups its pairs with an aggregate.)
     ba, bb = bands.alias("ba"), bands.alias("bb")
     hamming = F.bit_count(F.col("h1").bitwiseXOR(F.col("h2")))
 
@@ -2255,11 +2188,11 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         minh AS (
             SELECT doc_id,
-                   {", ".join(f"min({_affine(i)}) AS m{i}" for i in range(_N_HASHES))}
+                   {_minh_cols_sql()}
             FROM (SELECT doc_id, s AS base FROM shh) GROUP BY doc_id
         ),
         bands AS (
-            {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {_band_sig_sql(b)} AS sig FROM minh" for b in range(_N_HASHES // _BAND_SIZE))}
+            {_bands_sql("minh")}
         ),
         cand AS (
             SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
@@ -2343,9 +2276,11 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "plan; the matrix is three broadcast-joined counts.",
 )
 def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    exact = dedup_ngram_jaccard(spark, sf_dir).select("d1", "d2").transform(truncate_lazy)
+    # The exact and LSH legs read one shingle set, hashed once.
+    sh = _shingle_df(spark, sf_dir)
+    exact = _jaccard_pairs(sh).select("d1", "d2").transform(truncate_lazy)
     lsh = (
-        dedup_minhash_lsh(spark, sf_dir)
+        _minhash_lsh(sh)
         .filter(F.col("jaccard") >= 0.25)
         .select("d1", "d2")
         .transform(truncate_lazy)
@@ -2502,12 +2437,12 @@ def text_substring_dedup_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         minh AS (
             SELECT doc_id,
-                   {", ".join(f"min({_affine(i)}) AS m{i}" for i in range(_N_HASHES))}
+                   {_minh_cols_sql()}
             FROM (SELECT doc_id, s AS base FROM (SELECT doc_id, base AS s FROM based))
             GROUP BY doc_id
         ),
         bands AS (
-            {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {_band_sig_sql(b)} AS sig FROM minh" for b in range(_N_HASHES // _BAND_SIZE))}
+            {_bands_sql("minh")}
         ),
         cand AS (
             SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
@@ -2549,50 +2484,8 @@ def text_substring_dedup_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is identical.  Verification touches candidates only.",
 )
 def dedup_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    based = (
-        _shingle_df(spark, sf_dir)
-        .select("doc_id", _hash60(F.col("s")).alias("base"))
-        .cache()
-    )
-    minh = based.groupBy("doc_id").agg(
-        *[F.min(F.expr(_affine(i))).alias(f"m{i}") for i in range(_N_HASHES)],
-        F.count(F.lit(1)).alias("n"),
-    )
-    n_bands = _N_HASHES // _BAND_SIZE
-    stack_args = ", ".join(
-        f"{b}, concat_ws(',', {', '.join(f'm{i}' for i in range(b * _BAND_SIZE, (b + 1) * _BAND_SIZE))})"
-        for b in range(n_bands)
-    )
-    # Band rows carry the shingle-set size, so the candidate pairs emerge
-    # with both denominators attached — no joins back to a doc-count-
-    # sized size table, and nothing corpus-scale is force-broadcast
-    # (AQE picks broadcast at runtime while sides fit).
-    bands = minh.selectExpr(
-        "doc_id", "n", f"stack({n_bands}, {stack_args}) AS (band, sig)"
-    )
-    ba, bb = bands.alias("ba"), bands.alias("bb")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("ba.band") == F.col("bb.band"))
-            & (F.col("ba.sig") == F.col("bb.sig"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
-        .select(
-            F.col("ba.doc_id").alias("d1"),
-            F.col("bb.doc_id").alias("d2"),
-            F.col("ba.n").alias("n1"),
-            F.col("bb.n").alias("n2"),
-        )
-        .distinct()
-    )
-    a, b = based.alias("a"), based.alias("b")
-    inter = (
-        cand.join(a, F.col("a.doc_id") == F.col("d1"))
-        .join(b, (F.col("b.doc_id") == F.col("d2")) & (F.col("b.base") == F.col("a.base")))
-        .groupBy("d1", "d2", "n1", "n2")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
+    sh = _shingle_df(spark, sf_dir)
+    inter = _verify(sh, _band_pairs(_bands(_minhash(sh))))
     fwd = inter.select(
         F.col("d1").alias("contained_doc"),
         F.col("d2").alias("container_doc"),
@@ -2619,17 +2512,6 @@ def dedup_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EST_MATCH_MIN = 8  # signature agreement >= 8/16 ~ estimated Jaccard 0.5
 
 
-def _minh_cols_sql() -> str:
-    return ", ".join(f"min({_affine(i)}) AS m{i}" for i in range(_N_HASHES))
-
-
-def _matches_sql(a: str, b: str) -> str:
-    return " + ".join(
-        f"(CASE WHEN {a}.m{i} = {b}.m{i} THEN 1 ELSE 0 END)"
-        for i in range(_N_HASHES)
-    )
-
-
 @register(
     "dedup_incremental_lsh",
     oracle=f"""
@@ -2639,10 +2521,10 @@ def _matches_sql(a: str, b: str) -> str:
         bm AS (SELECT * FROM minh WHERE doc_id % 10 = 0),
         im AS (SELECT * FROM minh WHERE doc_id % 10 <> 0),
         bb AS (
-            {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {_band_sig_sql(b)} AS sig FROM bm" for b in range(_N_HASHES // _BAND_SIZE))}
+            {_bands_sql("bm")}
         ),
         ib AS (
-            {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {_band_sig_sql(b)} AS sig FROM im" for b in range(_N_HASHES // _BAND_SIZE))}
+            {_bands_sql("im")}
         ),
         cand_idx AS (
             SELECT DISTINCT b.doc_id AS bd, i.doc_id AS idx
@@ -2701,28 +2583,14 @@ def _matches_sql(a: str, b: str) -> str:
     "Fixture split: doc_id % 10 == 0 is the incoming batch.",
 )
 def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    based = _shingle_df(spark, sf_dir).select(
-        "doc_id", _hash60(F.col("s")).alias("base")
-    )
-    minh = based.groupBy("doc_id").agg(
-        *[F.min(F.expr(_affine(i))).alias(f"m{i}") for i in range(_N_HASHES)]
-    ).transform(truncate_lazy)
-    n_bands = _N_HASHES // _BAND_SIZE
-    stack_args = ", ".join(
-        f"{b}, concat_ws(',', {', '.join(f'm{i}' for i in range(b * _BAND_SIZE, (b + 1) * _BAND_SIZE))})"
-        for b in range(n_bands)
-    )
+    # The signatures are the only reader of the set, and they are
+    # truncated, so the set itself is not cached.
+    minh = _minhash(_hashed_shingles(spark, sf_dir)).transform(truncate_lazy)
     is_batch = F.col("doc_id") % 10 == 0
-    bands = minh.selectExpr(
-        "doc_id", f"stack({n_bands}, {stack_args}) AS (band, sig)"
-    )
+    bands = _bands(minh)
     bb = bands.filter(is_batch)
     ib = bands.filter(~is_batch)
-
-    matches = sum(
-        (F.col(f"ma.m{i}") == F.col(f"mb.m{i}")).cast("int")
-        for i in range(_N_HASHES)
-    )
+    matches = _matches("ma", "mb")
     ma, mb = minh.alias("ma"), minh.alias("mb")
 
     cand_idx = (
@@ -2742,19 +2610,9 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("hit_idx", F.lit(1))
     )
-    cand_bb = (
-        bb.alias("a")
-        .join(
-            bb.alias("c"),
-            (F.col("c.band") == F.col("a.band"))
-            & (F.col("c.sig") == F.col("a.sig"))
-            & (F.col("a.doc_id") < F.col("c.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("d1"), F.col("c.doc_id").alias("d2"))
-        .distinct()
-    )
     losers = (
-        cand_bb.join(ma, F.col("ma.doc_id") == F.col("d1"))
+        _band_pairs(bb)
+        .join(ma, F.col("ma.doc_id") == F.col("d1"))
         .join(mb, F.col("mb.doc_id") == F.col("d2"))
         .filter(matches >= _EST_MATCH_MIN)
         .select("d2")
@@ -3063,9 +2921,9 @@ _PPJ_NUM, _PPJ_DEN = 1, 2
     "scales with candidates, not corpus².",
 )
 def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = _shingle_df(spark, sf_dir).select(
-        "doc_id", _hash60(F.col("s")).alias("s")
-    )
+    # ``ranked`` below is the only reader of the set, and it is
+    # truncated, so the set itself is not cached.
+    sh = _hashed_shingles(spark, sf_dir)
     dfreq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     # per-doc shingle set in global (df, s) order: arr drives the
     # prefix; sarr (values only) is the verify payload carried ONCE per
@@ -3198,7 +3056,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "scan, no Python), and the global first-instance rule is a window "
     "min over the digest partition — ONE shuffle keyed on "
     "xxhash64(segment) + one packed BIGINT key, never segment text "
-    "(the dedup_exact digest rule, dedup.py:87), so shuffle bytes are "
+    "(the dedup_exact digest rule), so shuffle bytes are "
     "~16/row regardless of segment length and there is no O(corpus) "
     "firsts table to join (or worse, broadcast) back.  The oracle "
     "joins on raw segment text, "

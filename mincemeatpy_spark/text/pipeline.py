@@ -16,17 +16,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from mincemeatpy_spark.lineage import truncate_eager, truncate_lazy
+from mincemeatpy_spark.operators._util import hash60
 from mincemeatpy_spark.registry import QUERIES, register
 from mincemeatpy_spark.tables import t
 from mincemeatpy_spark.text.analysis import tokens
 from mincemeatpy_spark.text.dedup import (
-    _BAND_SIZE,
-    _N_HASHES,
     _ORACLE_H60,
     _ORACLE_SHINGLES,
-    _affine,
-    _band_sig_sql,
-    _hash60,
+    _bands_sql,
+    _hashed_shingles,
+    _minh_cols_sql,
     dedup_minhash_lsh,
     dedup_ngram_jaccard,
 )
@@ -125,11 +124,11 @@ def _finish_pipeline(quality: DataFrame, losers: DataFrame) -> DataFrame:
         ),
         minh AS (
             SELECT doc_id,
-                   {", ".join(f"min({_affine(i)}) AS m{i}" for i in range(_N_HASHES))}
+                   {_minh_cols_sql()}
             FROM based GROUP BY doc_id
         ),
         bands AS (
-            {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {_band_sig_sql(b)} AS sig FROM minh" for b in range(_N_HASHES // _BAND_SIZE))}
+            {_bands_sql("minh")}
         ),
         cand AS (
             SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
@@ -524,7 +523,7 @@ def corpus_shard_bybytes(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def corpus_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
-    h = _hash60(F.col("doc_id").cast("string")) % 100
+    h = hash60(F.col("doc_id").cast("string")) % 100
     split = (
         F.when(h < 90, F.lit("train"))
         .when(h < 97, F.lit("val"))
@@ -576,7 +575,7 @@ def corpus_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     epochs = spark.range(2).select(F.col("id").cast("int").alias("epoch"))
     j = d.crossJoin(F.broadcast(epochs))
     batch = (
-        _hash60(
+        hash60(
             F.concat_ws(":", F.col("epoch").cast("string"), F.col("doc_id").cast("string"))
         )
         % 16
@@ -1022,14 +1021,7 @@ def corpus_quality_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFr
         .when((n_tokens >= 10) & (uniq >= 0.4), "mid")
         .otherwise("low")
     )
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 15),
-            16,
-            10,
-        ).cast("bigint")
-        % 1000
-    )
+    bucket = hash60(F.col("doc_id").cast("string")) % 1000
     keep = (
         (F.col("band") == "high")
         | ((F.col("band") == "mid") & (F.col("bucket") < 500))
@@ -1330,8 +1322,6 @@ def corpus_select_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(vector_quantize_int8's kernel shape), keep the plan.",
 )
 def rag_chunk_index_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mincemeatpy_spark.text.dedup import _hash60
-
     docs = t(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", r"\s+").alias("w")
     ).filter(F.size("w") >= 1)
@@ -1355,7 +1345,7 @@ def rag_chunk_index_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array(
             *[
                 (
-                    _hash60(
+                    hash60(
                         F.concat(
                             F.lit(f"emb:{d}:"), F.col("ctext")
                         )
@@ -1473,22 +1463,21 @@ def rag_chunk_index_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
     "broadcast hints: every table here scales with the corpus.",
 )
 def corpus_split_leakage_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mincemeatpy_spark.text.dedup import _shingle_df
-
-    h = _hash60(F.col("doc_id").cast("string")) % 100
+    h = hash60(F.col("doc_id").cast("string")) % 100
     split = (
         F.when(h < 90, F.lit("train"))
         .when(h < 97, F.lit("val"))
         .otherwise(F.lit("test"))
     )
-    # r14 (guide §2.4): ``sh`` is consumed four ways (ss→a, ss→b,
-    # ss→a2, and the doc-level leak join) — without truncation the
-    # scan→shingle→md5 chain ran once per consumer.  Both truncated
-    # tables are narrow (3 / 2 columns, shingle-scale — linear in
-    # corpus tokens, the usual trade).
+    # ``sh`` is consumed four ways (ss→a, ss→b, ss→a2, and the
+    # doc-level leak join), so it is truncated: one computation shared
+    # instead of the scan→shingle→md5 chain run once per consumer.  The
+    # truncated table is the only reader of the hashed shingle set,
+    # which is therefore not cached.  Both truncated tables are narrow
+    # (3 / 2 columns, shingle-scale — linear in corpus tokens).
     sh = (
-        _shingle_df(spark, sf_dir)
-        .select("doc_id", _hash60(F.col("s")).alias("sh"))
+        _hashed_shingles(spark, sf_dir)
+        .select("doc_id", F.col("s").alias("sh"))
         .withColumn("split", split)
         .distinct()
         .transform(truncate_lazy)
@@ -1592,7 +1581,7 @@ def corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = words.select(
         "doc_id",
         "lang",
-        (_hash60(F.col("word")) % 64).alias("bkt"),
+        (hash60(F.col("word")) % 64).alias("bkt"),
     )
     bs = toks.groupBy("bkt").agg(
         F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("t_cnt"),
@@ -1715,7 +1704,7 @@ def corpus_url_parse_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def corpus_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = corpus_dsir_weights(spark, sf_dir)
-    h = _hash60(F.col("doc_id").cast("string")) % 1000003
+    h = hash60(F.col("doc_id").cast("string")) % 1000003
     u = (h + 1) / F.lit(1000004.0)
     key = F.col("dsir_logweight") - F.log(-F.log(u))
     return (

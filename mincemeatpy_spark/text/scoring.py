@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from mincemeatpy_spark.operators._util import hash60
 from mincemeatpy_spark.registry import register
 from mincemeatpy_spark.tables import t
 from mincemeatpy_spark.text.analysis import tokens
@@ -693,9 +694,7 @@ def lm_doc_score_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     "predicate partitions the same scan.",
 )
 def lm_kn_heldout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mincemeatpy_spark.text.dedup import _hash60
-
-    hd = _hash60(F.col("doc_id").cast("string")) % 100
+    hd = hash60(F.col("doc_id").cast("string")) % 100
     db = _doc_bigrams(spark, sf_dir).withColumn("hd", hd)
     model = _kn_model_from_pairs(db.filter(F.col("hd") < 90)).select(
         "w1", "w2", "p_ppm"

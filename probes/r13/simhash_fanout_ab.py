@@ -28,7 +28,8 @@ sys.path.insert(
 from pyspark.sql import DataFrame, SparkSession, functions as F  # noqa: E402
 
 from mincemeatpy_spark.tables import fan_out, t  # noqa: E402
-from mincemeatpy_spark.text.dedup import _SIM_BITS, _WS, _hash60  # noqa: E402
+from mincemeatpy_spark.operators._util import hash60  # noqa: E402
+from mincemeatpy_spark.text.dedup import _SIM_BITS, _WS  # noqa: E402
 
 
 def _sigs(spark: SparkSession, sf_dir: str, wide: bool) -> DataFrame:
@@ -38,7 +39,7 @@ def _sigs(spark: SparkSession, sf_dir: str, wide: bool) -> DataFrame:
     toks = d.select(
         "doc_id", F.explode(F.split("text", _WS)).alias("tok")
     ).filter(F.col("tok") != "")
-    hashed = toks.select("doc_id", _hash60(F.col("tok")).alias("h"))
+    hashed = toks.select("doc_id", hash60(F.col("tok")).alias("h"))
     votes = hashed.groupBy("doc_id").agg(
         *[
             F.sum(

@@ -6,7 +6,9 @@ Arrow batch; it is pinned here against the per-query loop it replaced,
 on inputs the fixtures never produce (heavy ties, self present or
 absent, fewer than k + 1 columns, empty sides, float keys with NaN).
 The per-batch pushdown is then checked end to end: a query's rows must
-not depend on how the scan is cut into Arrow batches.
+not depend on how the scan is cut into Arrow batches.  ``q6_dot``, the
+float64 BLAS route to an exact int64 matrix product, is pinned at its
+2^53 bound.
 """
 
 from __future__ import annotations
@@ -14,6 +16,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from mincemeatpy_spark.operators._util import q6_dot
 from mincemeatpy_spark.registry import load_all_queries
 from mincemeatpy_spark.similarity.ann import _nearest
 
@@ -68,6 +71,27 @@ def test_nearest_matches_per_query_loop():
 QUERIES = load_all_queries()
 
 _BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+def test_q6_dot_is_the_int64_product_up_to_its_bound():
+    k = 64
+    top = 11_863_283  # largest m with k * m * m < 2^53
+    assert k * top * top < 2**53 <= k * top * (top + 1)
+    rng = np.random.default_rng(14)
+    a = rng.integers(-top, top + 1, (9, k))
+    b = rng.integers(-top, top + 1, (7, k))
+    a[0], b[0], b[1] = top, top, -top  # dots of +-k*top^2: every partial sum near 2^53
+    a[1, 0] = -top
+    got = q6_dot(a, b)
+    assert got.dtype == np.int64
+    assert np.array_equal(got, a @ b.T)
+    assert got[0, 0] == k * top * top
+    assert q6_dot(a[:0], b).shape == (0, 7)
+    b[2, 5] = top + 1
+    with pytest.raises(ValueError):
+        q6_dot(a, b)
+    with pytest.raises(ValueError):  # k * max|a| * max|b| == 2^53 exactly
+        q6_dot(np.full((1, k), 2**23), np.full((1, k), -(2**24)))
 
 
 @pytest.mark.parametrize(

@@ -1,4 +1,4 @@
-"""Lineage truncation with a reliability knob (r7 judge task 6).
+"""Lineage truncation with a reliability knob.
 
 Iterative queries (PageRank, star-contraction CC, prefix-doubling
 suffix array, k-means, BPE) re-plan on their own output each round;

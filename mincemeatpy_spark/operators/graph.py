@@ -11,11 +11,26 @@ Graphs are derived from the fixture, not synthesized: PageRank runs on
 the customer→supplier purchase graph (who buys from whom, via
 orders⋈lineitem), triangles on the part co-purchase graph (parts that
 appear in the same order).
+
+Every query is a short caller of one kit, named after the MapReduce
+phase each piece plays in a superstep:
+
+* map — the edge lists: ``_purchases``/``_purchase_edges`` (int64 node
+  keys, customers 2k and suppliers 2k+1, decoded by ``_node_key``) and
+  ``_copurchase_edges`` (part pairs u < v);
+* combine — ``_symmetrize`` (e ∪ reverse(e)), ``_degree`` (the per-node
+  count or weight sum) and ``_triangles`` (the two-self-join count);
+* shuffle + reduce — ``_pagerank_step`` (integer contributions
+  aggregated on dst, with an optional dangling-mass redistribution),
+  ``_pagerank`` (its loop) and ``_hits_half`` (one normalized HITS
+  half-step), which ``text.html_extract`` reuses on the host graph.
+
+The ``*_sql`` twins spell the same pieces for the DuckDB oracles.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from mincemeatpy_spark.lineage import truncate_eager, truncate_lazy
 from mincemeatpy_spark.registry import register
@@ -29,25 +44,249 @@ _PR_SCALE = 10**12
 _BFS_BROADCAST_MAX_ROWS = 2_000_000
 
 
+# --- map: edge lists ----------------------------------------------------
+
+
+def _cust_node(key: str) -> Column:
+    """Node key of a customer key: 2k (int64, SCALE rule 5)."""
+    return (F.col(key) * 2).cast("bigint")
+
+
+def _supp_node(key: str) -> Column:
+    """Node key of a supplier key: 2k + 1."""
+    return (F.col(key) * 2 + 1).cast("bigint")
+
+
+def _node_key(node: str = "node") -> Column:
+    """The customer or supplier key of a node key (``node % 2`` tells
+    which side)."""
+    return F.shiftright(node, 1)
+
+
+def _purchases(
+    spark: SparkSession, sf_dir: str, min_qty: int | None = None
+) -> DataFrame:
+    """Every purchase (one row per lineitem) as ``(u, v, l_quantity)``:
+    customer node u bought from supplier node v.  ``min_qty`` keeps only
+    lineitems of at least that quantity (the sparsified graph)."""
+    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = t(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_suppkey", "l_quantity"
+    )
+    if min_qty is not None:
+        li = li.filter(F.col("l_quantity") >= min_qty)
+    return o.join(li, o.o_orderkey == li.l_orderkey).select(
+        _cust_node("o_custkey").alias("u"),
+        _supp_node("l_suppkey").alias("v"),
+        "l_quantity",
+    )
+
+
+def _purchase_edges(
+    spark: SparkSession, sf_dir: str, min_qty: int | None = None
+) -> DataFrame:
+    """Distinct customer→supplier edges ``(u, v)`` in node keys."""
+    return _purchases(spark, sf_dir, min_qty).select("u", "v").distinct()
+
+
+def _purchase_edges_sql(min_qty: int | None = None) -> str:
+    """SQL twin of ``_purchase_edges``."""
+    where = "" if min_qty is None else f"WHERE l.l_quantity >= {min_qty}"
+    return f"""
+        SELECT DISTINCT o.o_custkey * 2 AS u, l.l_suppkey * 2 + 1 AS v
+        FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+        {where}"""
+
+
+def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Part co-purchase edges ``(u, v)``, u < v: parts below 800 that
+    share an order, each undirected edge once."""
+    a = (
+        t(spark, sf_dir, "lineitem")
+        .filter(F.col("l_partkey") < 800)
+        .select("l_orderkey", "l_partkey")
+        .distinct()
+    )
+    x, y = a.alias("x"), a.alias("y")
+    return (
+        x.join(
+            y,
+            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
+            & (F.col("x.l_partkey") < F.col("y.l_partkey")),
+        )
+        .select(F.col("x.l_partkey").alias("u"), F.col("y.l_partkey").alias("v"))
+        .distinct()
+    )
+
+
+# SQL twin of _copurchase_edges: the CTEs ``a`` and ``e``.
+_COPURCHASE_SQL = """
+        a AS (SELECT DISTINCT l_orderkey, l_partkey
+              FROM lineitem WHERE l_partkey < 800),
+        e AS (SELECT DISTINCT x.l_partkey AS u, y.l_partkey AS v
+              FROM a x JOIN a y ON x.l_orderkey = y.l_orderkey
+                                AND x.l_partkey < y.l_partkey)"""
+
+
+# --- combine: symmetrize, degree, triangles -----------------------------
+
+
+def _symmetrize(e: DataFrame, *carry: str) -> DataFrame:
+    """``e ∪ reverse(e)`` over ``(u, v, *carry)``.  No distinct: every
+    caller's edge list is distinct with no edge in both directions
+    (bipartite, or oriented one way), so a dedup would be a pure extra
+    shuffle."""
+    return e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v"), *carry))
+
+
+def _sym_sql(carry: str = "") -> str:
+    """SQL twin of ``_symmetrize``: the CTE ``sym`` over the CTE ``e``."""
+    return f"sym AS (SELECT u, v{carry} FROM e UNION ALL SELECT v, u{carry} FROM e)"
+
+
+# SQL twin of _degree over ``sym``: the CTE ``deg (node, d)``.
+_DEG_SQL = "deg AS (SELECT u AS node, count(*) AS d FROM sym GROUP BY u)"
+
+
+def _degree(e: DataFrame, key: str = "u", weight: str | None = None) -> DataFrame:
+    """``(key, d)``: per-node edge count, or the sum of ``weight``."""
+    d = F.count(F.lit(1)) if weight is None else F.sum(weight)
+    return e.groupBy(key).agg(d.alias("d"))
+
+
+def _triangles(e: DataFrame) -> DataFrame:
+    """1-row ``n_triangles`` of an edge list canonicalized u < v: each
+    triangle u < v < w counted once by two self-joins."""
+    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
+    return (
+        e1.join(e2, F.col("e2.u") == F.col("e1.v"))
+        .join(
+            e3,
+            (F.col("e3.u") == F.col("e1.u")) & (F.col("e3.v") == F.col("e2.v")),
+        )
+        .agg(F.count(F.lit(1)).alias("n_triangles"))
+    )
+
+
+# SQL twin of _triangles over the CTE ``e``.
+_TRIANGLES_SQL = """
+            SELECT count(*) AS n_triangles
+            FROM e e1
+            JOIN e e2 ON e2.u = e1.v
+            JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v"""
+
+
+# --- shuffle + reduce: integer PageRank and HITS supersteps -------------
+
+
+def _contrib(edges: DataFrame, outw: DataFrame, ranks: DataFrame) -> DataFrame:
+    """``(src, dst, c)``: the rank share each edge carries, c = r(src) *
+    w // outw(src), over edges ``(src, dst, w)``, out-weights ``(src,
+    d)`` and ranks ``(node, r)``."""
+    return (
+        edges.join(outw, "src")
+        .join(ranks, ranks.node == F.col("src"))
+        .select("src", "dst", F.expr("(r * w) div d").alias("c"))
+    )
+
+
+def _pagerank_step(
+    edges: DataFrame,
+    outw: DataFrame,
+    nodes: DataFrame,
+    nb: DataFrame,
+    ranks: DataFrame,
+    dangling: bool,
+) -> DataFrame:
+    """One integer PageRank superstep (damping 0.85, floor division) to
+    new ranks ``(node, r)`` over every node of ``nodes``.  ``nb`` is the
+    1-row ``n_nodes``.  With ``dangling``, the rank held by nodes with
+    no out-edges is spread evenly over all nodes, so mass is conserved
+    up to floor-division slack; without it that mass leaves the graph."""
+    inflow = _contrib(edges, outw, ranks).groupBy("dst").agg(F.sum("c").alias("s"))
+    nxt = nodes.join(inflow, nodes.node == inflow.dst, "left").crossJoin(nb)
+    share = "coalesce(s, 0)"
+    if dangling:
+        # 1-row broadcast: the anti-join is node-scale, never edge-scale.
+        nxt = nxt.crossJoin(
+            F.broadcast(
+                ranks.join(outw, ranks.node == outw.src, "left_anti").agg(
+                    F.coalesce(F.sum("r"), F.lit(0)).cast("bigint").alias("dang")
+                )
+            )
+        )
+        share += " + (dang div n_nodes)"
+    return nxt.select(
+        "node",
+        F.expr(
+            f"15 * ({_PR_SCALE} div n_nodes) div 100 + 85 * ({share}) div 100"
+        )
+        .cast("bigint")
+        .alias("r"),
+    )
+
+
+def _pagerank(
+    edges: DataFrame, outw: DataFrame, nodes: DataFrame, iters: int, dangling: bool
+) -> DataFrame:
+    """``iters`` PageRank supersteps from the uniform rank, lineage
+    truncated eagerly after each.  The node count rides in-plan as a
+    broadcast 1-row aggregate: no driver-side count job."""
+    nb = F.broadcast(nodes.agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes")))
+    ranks = nodes.crossJoin(nb).select(
+        "node", F.expr(f"cast({_PR_SCALE} div n_nodes as bigint)").alias("r")
+    )
+    for _ in range(iters):
+        ranks = _pagerank_step(edges, outw, nodes, nb, ranks, dangling).transform(
+            truncate_eager
+        )
+    return ranks
+
+
+def _hits_half(
+    edges: DataFrame, nodes: DataFrame, score: DataFrame, frm: str, to: str
+) -> DataFrame:
+    """One HITS half-step: each node's new score ``(node, v)`` sums
+    score(frm) * w over its edges arriving on the ``to`` side, L1-
+    normalized to _PR_SCALE by dividing by the total first (x // max(
+    total // SCALE, 1)): x * SCALE would overflow int64."""
+    raw = (
+        edges.join(score.withColumnRenamed("node", "k"), F.col("k") == F.col(frm))
+        .select(F.col(to).alias("t"), F.expr("v * w").alias("x"))
+        .groupBy("t")
+        .agg(F.sum("x").alias("s"))
+    )
+    norm = F.broadcast(
+        raw.agg(
+            F.greatest(F.expr(f"sum(s) div {_PR_SCALE}"), F.lit(1))
+            .cast("bigint")
+            .alias("dn")
+        )
+    )
+    return (
+        nodes.join(raw, nodes.node == raw.t, "left")
+        .crossJoin(norm)
+        .select("node", F.expr("coalesce(s, 0) div dn").cast("bigint").alias("v"))
+        .transform(truncate_eager)
+    )
+
+
 @register(
     "graph_pagerank_iter",
     oracle=f"""
-        WITH edges AS (
-            SELECT DISTINCT o.o_custkey AS src, l.l_suppkey AS dst
-            FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        ),
-        deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
+        WITH edges AS ({_purchase_edges_sql()}),
+        deg AS (SELECT u, count(*) AS d FROM edges GROUP BY u),
         n AS (SELECT (SELECT count(*) FROM customer)
                    + (SELECT count(*) FROM supplier) AS n),
         r0 AS (SELECT {_PR_SCALE} // n AS r FROM n),
         contrib AS (
-            SELECT e.dst, (SELECT r FROM r0) // d.d AS c
-            FROM edges e JOIN deg d ON d.src = e.src
+            SELECT e.v, (SELECT r FROM r0) // d.d AS c
+            FROM edges e JOIN deg d ON d.u = e.u
         )
         SELECT s.s_suppkey,
                CAST((15 * (SELECT r FROM r0)) // 100
                    + (85 * COALESCE(sum(c.c), 0)) // 100 AS BIGINT) AS rank_scaled
-        FROM supplier s LEFT JOIN contrib c ON c.dst = s.s_suppkey
+        FROM supplier s LEFT JOIN contrib c ON c.v = s.s_suppkey * 2 + 1
         GROUP BY s.s_suppkey
         """,
     category="graph",
@@ -64,13 +303,7 @@ _BFS_BROADCAST_MAX_ROWS = 2_000_000
     "edge-contributions.",
 )
 def graph_pagerank_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    edges = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("src"), F.col("l_suppkey").alias("dst"))
-        .distinct()
-    )
+    edges = _purchase_edges(spark, sf_dir)
     # Node count rides IN-PLAN as a broadcast 1-row aggregate (customers
     # + suppliers) — no driver-side count jobs before the main action.
     nb = F.broadcast(
@@ -81,16 +314,20 @@ def graph_pagerank_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select((F.col("ncust") + F.col("nsupp")).cast("bigint").alias("n_nodes"))
     )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     # No hint on the node-scale degree table; AQE broadcasts while it fits.
     contrib = (
-        edges.join(deg, "src")
+        edges.join(_degree(edges), "u")
         .crossJoin(nb)
-        .select("dst", F.expr(f"({_PR_SCALE} div n_nodes) div d").alias("c"))
+        .select(
+            _node_key("v").alias("s_suppkey"),
+            F.expr(f"({_PR_SCALE} div n_nodes) div d").alias("c"),
+        )
     )
     s = t(spark, sf_dir, "supplier").select("s_suppkey")
     return (
-        s.join(contrib, s.s_suppkey == contrib.dst, "left")
+        # joined on the supplier key itself, so the aggregate below
+        # reuses the join's partitioning instead of shuffling again
+        s.join(contrib, "s_suppkey", "left")
         .groupBy("s_suppkey")
         .agg(F.expr("85 * coalesce(sum(c), 0) div 100").alias("flow"))
         .crossJoin(nb)
@@ -109,12 +346,8 @@ def graph_pagerank_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "graph_pagerank_2iter",
     oracle=f"""
-        WITH edges AS (
-            SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS src,
-                            's' || CAST(l.l_suppkey AS VARCHAR) AS dst
-            FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        ),
-        deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
+        WITH edges AS ({_purchase_edges_sql()}),
+        deg AS (SELECT u, count(*) AS d FROM edges GROUP BY u),
         n AS (SELECT (SELECT count(*) FROM customer)
                    + (SELECT count(*) FROM supplier) AS n),
         r0 AS (SELECT CAST({_PR_SCALE} // n AS BIGINT) AS r FROM n),
@@ -123,25 +356,26 @@ def graph_pagerank_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
         -- in-edges on the bipartite purchase graph, so rank1(c) = tp and
         -- rank1(s) = tp + 85% * sum(r0 // deg(src)).
         contrib1 AS (
-            SELECT e.dst, (SELECT r FROM r0) // d.d AS c
-            FROM edges e JOIN deg d ON d.src = e.src
+            SELECT e.v, (SELECT r FROM r0) // d.d AS c
+            FROM edges e JOIN deg d ON d.u = e.u
         ),
         -- iteration 2: contributions now carry rank1(src) = tp.
         contrib2 AS (
-            SELECT e.dst, (SELECT tp FROM tele) // d.d AS c
-            FROM edges e JOIN deg d ON d.src = e.src
+            SELECT e.v, (SELECT tp FROM tele) // d.d AS c
+            FROM edges e JOIN deg d ON d.u = e.u
         )
         SELECT s.s_suppkey,
                CAST((SELECT tp FROM tele)
                    + (85 * COALESCE(sum(c.c), 0)) // 100 AS BIGINT) AS rank_scaled
-        FROM supplier s LEFT JOIN contrib2 c ON c.dst = 's' || CAST(s.s_suppkey AS VARCHAR)
+        FROM supplier s LEFT JOIN contrib2 c ON c.v = s.s_suppkey * 2 + 1
         GROUP BY s.s_suppkey
         """,
     category="graph",
     doc="TWO PageRank power iterations via the generic iterative driver "
     "loop graph_pagerank_iter documents: a rank table over ALL nodes "
-    "(prefixed 'c'/'s' ids), each iteration one edges ⋈ deg "
-    "⋈ ranks plan re-run with the previous rank table, localCheckpoint "
+    "(int64 node keys: customers 2k, suppliers 2k+1), each iteration "
+    "one edges ⋈ deg ⋈ ranks plan re-run with the previous rank table, "
+    "localCheckpoint "
     "truncating lineage between supersteps (the Pregel shape; same "
     "recipe as graph_bfs_distances).  Integer fixed-point throughout, "
     "so both iterations are bit-identical to the oracle's unrolled CTE "
@@ -151,77 +385,31 @@ def graph_pagerank_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     "loop and must converge to the same integers.",
 )
 def graph_pagerank_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     edges = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
+        _purchase_edges(spark, sf_dir)
+        .select(F.col("u").alias("src"), F.col("v").alias("dst"), F.lit(1).alias("w"))
         .transform(truncate_lazy)
     )
     nodes = (
         t(spark, sf_dir, "customer")
-        .select(F.concat(F.lit("c"), F.col("c_custkey").cast("string")).alias("node"))
+        .select(_cust_node("c_custkey").alias("node"))
         .unionAll(
-            t(spark, sf_dir, "supplier").select(
-                F.concat(F.lit("s"), F.col("s_suppkey").cast("string")).alias("node")
-            )
+            t(spark, sf_dir, "supplier").select(_supp_node("s_suppkey").alias("node"))
         )
         .transform(truncate_lazy)
     )
-    # Node count rides IN-PLAN as a broadcast 1-row aggregate; each
-    # superstep's checkpoint job evaluates it as a subtree of the same
-    # action — no separate driver-side count job.  (The per-superstep
-    # eager localCheckpoint jobs are loop-control, exempt by design.)
-    nb = F.broadcast(
-        nodes.agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
-    )
-    r0_col = F.expr(f"cast({_PR_SCALE} div n_nodes as bigint)")
-    tele_col = F.expr(f"cast(15 * ({_PR_SCALE} div n_nodes) div 100 as bigint)")
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-
-    ranks = nodes.crossJoin(nb).select("node", r0_col.alias("r"))
-    for _ in range(2):
-        contrib = (
-            edges.join(deg, "src")
-            .join(ranks, ranks.node == F.col("src"))
-            .select("dst", F.expr("r div d").alias("c"))
-        )
-        inflow = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes.join(inflow, nodes.node == inflow.dst, "left")
-            .crossJoin(nb)
-            .select(
-                "node",
-                (
-                    tele_col
-                    + F.expr("85 * coalesce(s, 0) div 100")
-                ).cast("bigint").alias("r"),
-            )
-            .transform(truncate_eager)
-        )
-    return ranks.filter(F.col("node").startswith("s")).select(
-        F.substring("node", 2, 100).cast("bigint").alias("s_suppkey"),
-        F.col("r").alias("rank_scaled"),
+    ranks = _pagerank(edges, _degree(edges, "src"), nodes, 2, dangling=False)
+    return ranks.filter(F.col("node") % 2 == 1).select(
+        _node_key().alias("s_suppkey"), F.col("r").alias("rank_scaled")
     )
 
 
 @register(
     "graph_triangle_count",
-    oracle="""
-        WITH a AS (SELECT DISTINCT l_orderkey, l_partkey
-                   FROM lineitem WHERE l_partkey < 800),
-        e AS (SELECT DISTINCT x.l_partkey AS u, y.l_partkey AS v
-              FROM a x JOIN a y ON x.l_orderkey = y.l_orderkey
-                                AND x.l_partkey < y.l_partkey)
-        SELECT (SELECT count(*) FROM e) AS n_edges,
-               count(*) AS n_triangles
-        FROM e e1
-        JOIN e e2 ON e2.u = e1.v
-        JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v
+    oracle=f"""
+        WITH {_COPURCHASE_SQL},
+        tri AS ({_TRIANGLES_SQL})
+        SELECT (SELECT count(*) FROM e) AS n_edges, n_triangles FROM tri
         """,
     category="graph",
     doc="Triangle counting on the part co-purchase graph (parts sharing "
@@ -235,45 +423,17 @@ def graph_pagerank_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     "canonical u < v form here is that orientation under the key order.",
 )
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    a = (
-        t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_partkey") < 800)
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    x, y = a.alias("x"), a.alias("y")
-    e = (
-        x.join(
-            y,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_partkey") < F.col("y.l_partkey")),
-        )
-        .select(F.col("x.l_partkey").alias("u"), F.col("y.l_partkey").alias("v"))
-        .distinct()
-    )
-    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e2.u") == F.col("e1.v"))
-        .join(
-            e3,
-            (F.col("e3.u") == F.col("e1.u")) & (F.col("e3.v") == F.col("e2.v")),
-        )
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-    )
-    return e.agg(F.count(F.lit(1)).alias("n_edges")).crossJoin(tri)
+    e = _copurchase_edges(spark, sf_dir)
+    return e.agg(F.count(F.lit(1)).alias("n_edges")).crossJoin(_triangles(e))
 
 
 @register(
     "graph_bfs_distances",
-    oracle="""
-        WITH RECURSIVE e AS (
-            SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS u,
-                            's' || CAST(l.l_suppkey AS VARCHAR) AS v
-            FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        ),
-        sym AS (SELECT u, v FROM e UNION SELECT v, u FROM e),
+    oracle=f"""
+        WITH RECURSIVE e AS ({_purchase_edges_sql()}),
+        {_sym_sql()},
         walk(node, d) AS (
-            SELECT 'c1', 0
+            SELECT CAST(2 AS BIGINT), 0
             UNION
             SELECT s.v, w.d + 1
             FROM walk w JOIN sym s ON s.u = w.node
@@ -281,7 +441,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         dist AS (SELECT node, min(d) AS d FROM walk GROUP BY node)
         SELECT d, count(*) AS n_nodes,
-               min(node) AS example_node
+               min(CASE WHEN node % 2 = 0 THEN 'c' ELSE 's' END
+                   || CAST(node // 2 AS VARCHAR)) AS example_node
         FROM dist GROUP BY d
         """,
     category="graph",
@@ -298,25 +459,10 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the node key each hop and the hop count bounds total work.",
 )
 def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    # Narrow keys (SCALE rule 5): nodes travel as int64 through every
-    # join/distinct/shuffle — customers even (2k), suppliers odd (2k+1);
+    # Nodes travel as int64 keys through every join/distinct/shuffle;
     # the 'c…'/'s…' display labels are formatted only at the end, on the
     # node-count-sized distance table, where no shuffle follows.
-    e = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).cast("bigint").alias("u"),
-            (F.col("l_suppkey") * 2 + 1).cast("bigint").alias("v"),
-        )
-        .distinct()
-    )
-    # No distinct on the union: e is already distinct and a forward edge
-    # (even→odd) can never equal a reversed one (odd→even), so the
-    # dedup would be a pure extra shuffle of the full edge list.
-    sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    sym = sym.transform(truncate_eager)
+    sym = _symmetrize(_purchase_edges(spark, sf_dir)).transform(truncate_eager)
 
     dist = spark.createDataFrame([(2, 0)], "node bigint, d int")
     frontier, frontier_rows = dist, 1
@@ -351,9 +497,9 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
         frontier = nxt
     labeled = dist.select(
         "d",
-        F.expr(
-            "concat(CASE WHEN node % 2 = 0 THEN 'c' ELSE 's' END,"
-            " CAST(node div 2 AS STRING))"
+        F.concat(
+            F.when(F.col("node") % 2 == 0, "c").otherwise("s"),
+            _node_key().cast("string"),
         ).alias("node"),
     )
     return labeled.groupBy("d").agg(
@@ -364,17 +510,14 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_degree_distribution",
-    oracle="""
-        WITH edges AS (
-            SELECT DISTINCT o.o_custkey AS src, l.l_suppkey AS dst
-            FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        ),
+    oracle=f"""
+        WITH edges AS ({_purchase_edges_sql()}),
         deg AS (
-            SELECT src AS node, count(*) AS d FROM edges GROUP BY src
+            SELECT u AS node, count(*) AS d FROM edges GROUP BY u
             UNION ALL
-            SELECT dst + 1000000, count(*) FROM edges GROUP BY dst
+            SELECT v, count(*) FROM edges GROUP BY v
         )
-        SELECT CASE WHEN node < 1000000 THEN 'customer'
+        SELECT CASE WHEN node % 2 = 0 THEN 'customer'
                     ELSE 'supplier' END AS side,
                length(bin(d)) - 1 AS degree_log2,
                count(*) AS n_nodes,
@@ -392,20 +535,11 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     "edge list is touched once per side and nothing quadratic exists.",
 )
 def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    edges = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("src"), F.col("l_suppkey").alias("dst"))
-        .distinct()
-    )
+    edges = _purchase_edges(spark, sf_dir)
     deg = (
-        edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+        _degree(edges, "u")
         .select(F.lit("customer").alias("side"), "d")
-        .unionAll(
-            edges.groupBy("dst").agg(F.count(F.lit(1)).alias("d"))
-            .select(F.lit("supplier").alias("side"), "d")
-        )
+        .unionAll(_degree(edges, "v").select(F.lit("supplier").alias("side"), "d"))
     )
     return deg.groupBy(
         "side", (F.length(F.bin("d")) - 1).alias("degree_log2")
@@ -429,14 +563,21 @@ def _kcore_round_sql(i: int) -> str:
         )"""
 
 
+def _kcore_peel_round(edges: DataFrame) -> DataFrame:
+    """One peel round over symmetric edges ``(u, v)``: drop every edge
+    with an endpoint of degree below _KCORE_K."""
+    keep = _degree(edges).filter(F.col("d") >= _KCORE_K).select("u")
+    return edges.join(keep, "u", "left_semi").join(
+        keep.select(F.col("u").alias("v")), "v", "left_semi"
+    )
+
+
 @register(
     "graph_kcore_peel",
     oracle=f"""
-        WITH e AS (
-            SELECT DISTINCT o.o_custkey * 2 AS u, l.l_suppkey * 2 + 1 AS v
-            FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        ),
-        e0 AS (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
+        WITH e AS ({_purchase_edges_sql()}),
+        {_sym_sql()},
+        e0 AS (SELECT u, v FROM sym),
         {",".join(_kcore_round_sql(i) for i in range(1, 5))}
         SELECT CAST((SELECT count(DISTINCT u) FROM e0) AS BIGINT)
                    AS n_nodes_start,
@@ -461,66 +602,43 @@ def _kcore_round_sql(i: int) -> str:
     "community algorithm on the dense remainder.",
 )
 def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).cast("bigint").alias("u"),
-            (F.col("l_suppkey") * 2 + 1).cast("bigint").alias("v"),
-        )
-        .distinct()
-    )
-    edges = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    edges = edges.transform(truncate_lazy)
+    edges = _symmetrize(_purchase_edges(spark, sf_dir)).transform(truncate_lazy)
     n_start = edges.agg(
         F.countDistinct("u").cast("bigint").alias("n_nodes_start")
     )
     for _ in range(4):
-        deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("c"))
-        keep = deg.filter(F.col("c") >= _KCORE_K).select("u")
-        edges = (
-            edges.join(keep, "u", "left_semi")
-            .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
-            .transform(truncate_lazy)
-        )
-    deg4 = edges.groupBy("u").agg(F.count(F.lit(1)).alias("c"))
-    core = edges.join(deg4, "u").agg(
+        edges = _kcore_peel_round(edges).transform(truncate_lazy)
+    core = edges.join(_degree(edges), "u").agg(
         F.countDistinct("u").cast("bigint").alias("n_nodes_core"),
         (F.count(F.lit(1)) / 2).cast("bigint").alias("n_edges_core"),
-        F.max("c").cast("bigint").alias("max_degree_core"),
+        F.max("d").cast("bigint").alias("max_degree_core"),
     )
     return n_start.crossJoin(core).select(
         "n_nodes_start", "n_nodes_core", "n_edges_core", "max_degree_core"
     )
 
 
+def _sssp_round_sql(i: int) -> str:
+    return f"""
+        d{i} AS (SELECT node, min(d) AS d FROM (
+                   SELECT node, d FROM d{i - 1}
+                   UNION ALL
+                   SELECT s.v, p.d + s.w FROM d{i - 1} p JOIN sym s ON s.u = p.node
+               ) GROUP BY node)"""
+
+
 @register(
     "graph_sssp_weighted",
-    oracle="""
+    oracle=f"""
         WITH e AS (
             SELECT o.o_custkey * 2 AS u, l.l_suppkey * 2 + 1 AS v,
                    CAST(min(l.l_quantity) AS BIGINT) AS w
             FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
             GROUP BY 1, 2
         ),
-        sym AS (SELECT u, v, w FROM e UNION ALL SELECT v, u, w FROM e),
+        {_sym_sql(carry=", w")},
         d0(node, d) AS (SELECT 2, CAST(0 AS BIGINT)),
-        d1 AS (SELECT node, min(d) AS d FROM (
-                   SELECT node, d FROM d0
-                   UNION ALL
-                   SELECT s.v, d0.d + s.w FROM d0 JOIN sym s ON s.u = d0.node
-               ) GROUP BY node),
-        d2 AS (SELECT node, min(d) AS d FROM (
-                   SELECT node, d FROM d1
-                   UNION ALL
-                   SELECT s.v, d1.d + s.w FROM d1 JOIN sym s ON s.u = d1.node
-               ) GROUP BY node),
-        d3 AS (SELECT node, min(d) AS d FROM (
-                   SELECT node, d FROM d2
-                   UNION ALL
-                   SELECT s.v, d2.d + s.w FROM d2 JOIN sym s ON s.u = d2.node
-               ) GROUP BY node)
+        {",".join(_sssp_round_sql(i) for i in range(1, 4))}
         SELECT (node - 1) // 2 AS s_suppkey, d AS dist_qty
         FROM d3
         WHERE node % 2 = 1 AND (node - 1) // 2 <= 25
@@ -543,22 +661,12 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     "broadcasts it while it fits.",
 )
 def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_quantity"
-    )
-    # Narrow int64 node keys (SCALE rule 5): customers even, suppliers odd.
     e = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .groupBy(
-            (F.col("o_custkey") * 2).cast("bigint").alias("u"),
-            (F.col("l_suppkey") * 2 + 1).cast("bigint").alias("v"),
-        )
+        _purchases(spark, sf_dir)
+        .groupBy("u", "v")
         .agg(F.min("l_quantity").cast("bigint").alias("w"))
     )
-    sym = e.unionAll(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"), "w")
-    ).transform(truncate_eager)
+    sym = _symmetrize(e, "w").transform(truncate_eager)
 
     dist = spark.createDataFrame([(2, 0)], "node bigint, d bigint")
     for _ in range(3):
@@ -571,29 +679,18 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.min("d").alias("d"))
             .transform(truncate_eager)
         )
-    # Integer div (not float /): node keys overflow double exactness at
-    # billion-node scale.
-    return dist.filter(
-        (F.col("node") % 2 == 1) & (F.expr("(node - 1) div 2") <= 25)
-    ).select(
-        F.expr("(node - 1) div 2").cast("bigint").alias("s_suppkey"),
-        F.col("d").alias("dist_qty"),
+    return dist.filter((F.col("node") % 2 == 1) & (_node_key() <= 25)).select(
+        _node_key().alias("s_suppkey"), F.col("d").alias("dist_qty")
     )
 
 
 @register(
     "graph_modularity",
-    oracle="""
-        WITH RECURSIVE a AS (
-            SELECT DISTINCT l_orderkey, l_partkey
-            FROM lineitem WHERE l_partkey < 800
-        ),
-        e AS (SELECT DISTINCT x.l_partkey AS u, y.l_partkey AS v
-              FROM a x JOIN a y ON x.l_orderkey = y.l_orderkey
-                                AND x.l_partkey < y.l_partkey),
+    oracle=f"""
+        WITH RECURSIVE {_COPURCHASE_SQL},
         m AS (SELECT count(*) AS m FROM e),
-        sym AS (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
-        deg AS (SELECT u AS node, count(*) AS d FROM sym GROUP BY u),
+        {_sym_sql()},
+        {_DEG_SQL},
         reach(u, v) AS (
             SELECT u, u FROM (SELECT DISTINCT u FROM sym)
             UNION
@@ -648,28 +745,9 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mincemeatpy_spark.text.dedup import _min_label_components
 
-    a = (
-        t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_partkey") < 800)
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    x, y = a.alias("x"), a.alias("y")
-    e = (
-        x.join(
-            y,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_partkey") < F.col("y.l_partkey")),
-        )
-        .select(F.col("x.l_partkey").alias("u"), F.col("y.l_partkey").alias("v"))
-        .distinct()
-        .transform(truncate_eager)
-    )
+    e = _copurchase_edges(spark, sf_dir).transform(truncate_eager)
     m = F.broadcast(e.agg(F.count(F.lit(1)).alias("m")))
-    sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy(F.col("u").alias("node")).agg(
-        F.count(F.lit(1)).alias("d")
-    )
+    deg = _degree(_symmetrize(e)).withColumnRenamed("u", "node")
     comp = _min_label_components(
         e.select(F.col("u").alias("d1"), F.col("v").alias("d2"))
     ).select(F.col("doc_id").alias("node"), F.col("cluster_id").alias("c"))
@@ -717,14 +795,10 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_link_prediction_jaccard",
-    oracle="""
-        WITH a AS (SELECT DISTINCT l_orderkey, l_partkey
-                   FROM lineitem WHERE l_partkey < 800),
-        e AS (SELECT DISTINCT x.l_partkey AS u, y.l_partkey AS v
-              FROM a x JOIN a y ON x.l_orderkey = y.l_orderkey
-                                AND x.l_partkey < y.l_partkey),
-        sym AS (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
-        deg AS (SELECT u AS node, count(*) AS d FROM sym GROUP BY u),
+    oracle=f"""
+        WITH {_COPURCHASE_SQL},
+        {_sym_sql()},
+        {_DEG_SQL},
         wedge AS (
             SELECT s1.v AS u, s2.v AS v, count(*) AS common
             FROM sym s1 JOIN sym s2 ON s2.u = s1.u AND s1.v < s2.v
@@ -762,25 +836,9 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mitigation as dedup_ngram_jaccard_capped's stop-shingles).",
 )
 def graph_link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    a = (
-        t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_partkey") < 800)
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    x, y = a.alias("x"), a.alias("y")
-    e = (
-        x.join(
-            y,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_partkey") < F.col("y.l_partkey")),
-        )
-        .select(F.col("x.l_partkey").alias("u"), F.col("y.l_partkey").alias("v"))
-        .distinct()
-        .transform(truncate_eager)
-    )
-    sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy(F.col("u").alias("node")).agg(F.count(F.lit(1)).alias("d"))
+    e = _copurchase_edges(spark, sf_dir).transform(truncate_eager)
+    sym = _symmetrize(e)
+    deg = _degree(sym)
     s1, s2 = sym.alias("s1"), sym.alias("s2")
     wedge = (
         s1.join(
@@ -790,8 +848,8 @@ def graph_link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame
         .groupBy(F.col("s1.v").alias("u"), F.col("s2.v").alias("v"))
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    du = deg.select(F.col("node").alias("nu"), F.col("d").alias("du"))
-    dv = deg.select(F.col("node").alias("nv"), F.col("d").alias("dv"))
+    du = deg.select(F.col("u").alias("nu"), F.col("d").alias("du"))
+    dv = deg.select(F.col("u").alias("nv"), F.col("d").alias("dv"))
     cand = (
         wedge.join(e, ["u", "v"], "left_anti")
         .join(du, F.col("u") == F.col("nu"))
@@ -818,33 +876,8 @@ def graph_link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # Sparsified purchase graph shared by the star-CC and label-propagation
 # queries (l_quantity >= 48 keeps ~6% of lineitem, so the graph
-# fractures into many components instead of one giant one).  ONE
-# builder + ONE SQL fragment so the two queries cannot silently
-# diverge (the skew family's _skewed_fact/_HOTKEY_ORACLE pattern).
-_SPARSE_EDGES_SQL = """
-        SELECT DISTINCT CAST(o.o_custkey * 2 AS BIGINT) AS u,
-                        CAST(l.l_suppkey * 2 + 1 AS BIGINT) AS v
-        FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        WHERE l.l_quantity >= 48
-"""
-
-
-def _sparse_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_quantity"
-    )
-    return (
-        o.join(
-            li.filter(F.col("l_quantity") >= 48),
-            o.o_orderkey == li.l_orderkey,
-        )
-        .select(
-            (F.col("o_custkey") * 2).cast("bigint").alias("u"),
-            (F.col("l_suppkey") * 2 + 1).cast("bigint").alias("v"),
-        )
-        .distinct()
-    )
+# fractures into many components instead of one giant one).
+_SPARSE_QTY = 48
 
 
 # Alternating-algorithm CC: cap on rounds (the algorithm converges in
@@ -857,8 +890,8 @@ _CC_MAX_ROUNDS = 10
 @register(
     "graph_connected_components_star",
     oracle=f"""
-        WITH RECURSIVE edges AS ({_SPARSE_EDGES_SQL}),
-        sym AS (SELECT u, v FROM edges UNION SELECT v, u FROM edges),
+        WITH RECURSIVE e AS ({_purchase_edges_sql(_SPARSE_QTY)}),
+        {_sym_sql()},
         reach(node, lab) AS (
             SELECT u, u FROM (SELECT DISTINCT u FROM sym)
             UNION
@@ -890,11 +923,11 @@ _CC_MAX_ROUNDS = 10
     "Output is the bounded component-size histogram.",
 )
 def graph_connected_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = _sparse_edges(spark, sf_dir).transform(truncate_eager)
+    edges = _purchase_edges(spark, sf_dir, _SPARSE_QTY).transform(truncate_eager)
 
     def large_star(e: DataFrame) -> DataFrame:
         # connect every strictly-larger neighbor of u to min(N(u) ∪ {u})
-        sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        sym = _symmetrize(e)
         mins = sym.groupBy("u").agg(
             F.least(F.min("v"), F.col("u")).alias("m")
         )
@@ -955,8 +988,8 @@ def graph_connected_components_star(spark: SparkSession, sf_dir: str) -> DataFra
 @register(
     "graph_label_propagation",
     oracle=f"""
-        WITH edges AS ({_SPARSE_EDGES_SQL}),
-        sym AS (SELECT u, v FROM edges UNION SELECT v, u FROM edges),
+        WITH e AS ({_purchase_edges_sql(_SPARSE_QTY)}),
+        {_sym_sql()},
         l0 AS (SELECT DISTINCT u AS node, u AS lab FROM sym),
         v1 AS (
             SELECT s.u, l.lab, count(*) AS c
@@ -1005,10 +1038,9 @@ def graph_connected_components_star(spark: SparkSession, sf_dir: str) -> DataFra
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    edges = _sparse_edges(spark, sf_dir)
-    sym = edges.unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).transform(truncate_eager)
+    sym = _symmetrize(_purchase_edges(spark, sf_dir, _SPARSE_QTY)).transform(
+        truncate_eager
+    )
 
     lab = sym.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("lab")
@@ -1035,20 +1067,11 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_clustering_coefficient",
-    oracle="""
-        WITH a AS (SELECT DISTINCT l_orderkey, l_partkey
-                   FROM lineitem WHERE l_partkey < 800),
-        e AS (SELECT DISTINCT x.l_partkey AS u, y.l_partkey AS v
-              FROM a x JOIN a y ON x.l_orderkey = y.l_orderkey
-                                AND x.l_partkey < y.l_partkey),
-        sym AS (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
-        deg AS (SELECT u AS node, count(*) AS d FROM sym GROUP BY u),
-        tri AS (
-            SELECT count(*) AS n_triangles
-            FROM e e1
-            JOIN e e2 ON e2.u = e1.v
-            JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v
-        ),
+    oracle=f"""
+        WITH {_COPURCHASE_SQL},
+        {_sym_sql()},
+        {_DEG_SQL},
+        tri AS ({_TRIANGLES_SQL}),
         wed AS (SELECT CAST(sum(d * (d - 1) // 2) AS BIGINT) AS n_wedges
                 FROM deg)
         SELECT CAST(n_triangles AS BIGINT) AS n_triangles,
@@ -1074,40 +1097,11 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle of data-scale rows.",
 )
 def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    a = (
-        t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_partkey") < 800)
-        .select("l_orderkey", "l_partkey")
-        .distinct()
+    e = _copurchase_edges(spark, sf_dir).transform(truncate_eager)
+    wedges = _degree(_symmetrize(e)).agg(
+        F.sum(F.expr("d * (d - 1) div 2")).cast("bigint").alias("n_wedges")
     )
-    x, y = a.alias("x"), a.alias("y")
-    e = (
-        x.join(
-            y,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_partkey") < F.col("y.l_partkey")),
-        )
-        .select(F.col("x.l_partkey").alias("u"), F.col("y.l_partkey").alias("v"))
-        .distinct()
-        .transform(truncate_eager)
-    )
-    sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    wedges = (
-        sym.groupBy("u")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .agg(
-            F.sum(F.expr("d * (d - 1) div 2")).cast("bigint").alias("n_wedges")
-        )
-    )
-    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e2.u") == F.col("e1.v"))
-        .join(
-            e3,
-            (F.col("e3.u") == F.col("e1.u")) & (F.col("e3.v") == F.col("e2.v")),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_triangles"))
-    )
+    tri = _triangles(e)
     return tri.crossJoin(wedges).select(
         "n_triangles",
         "n_wedges",
@@ -1120,16 +1114,13 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_degree_assortativity",
-    oracle="""
-        WITH e AS (
-            SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
-            FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        ),
-        dc AS (SELECT c, CAST(count(*) AS BIGINT) AS dcx FROM e GROUP BY c),
-        ds AS (SELECT s, CAST(count(*) AS BIGINT) AS dsy FROM e GROUP BY s),
+    oracle=f"""
+        WITH e AS ({_purchase_edges_sql()}),
+        dc AS (SELECT u, CAST(count(*) AS BIGINT) AS dcx FROM e GROUP BY u),
+        ds AS (SELECT v, CAST(count(*) AS BIGINT) AS dsy FROM e GROUP BY v),
         xy AS (
             SELECT dc.dcx AS x, ds.dsy AS y
-            FROM e JOIN dc ON e.c = dc.c JOIN ds ON e.s = ds.s
+            FROM e JOIN dc ON e.u = dc.u JOIN ds ON e.v = ds.v
         )
         SELECT CAST(count(*) AS BIGINT) AS n_edges,
                CAST(sum(x) AS BIGINT) AS sx,
@@ -1158,19 +1149,11 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     "keys, SCALE rule 5); the final reduce is a 1-row aggregate.",
 )
 def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    dc = e.groupBy("c").agg(F.count(F.lit(1)).cast("bigint").alias("dcx"))
-    ds = e.groupBy("s").agg(F.count(F.lit(1)).cast("bigint").alias("dsy"))
+    e = _purchase_edges(spark, sf_dir)
     xy = (
-        e.join(dc, "c")
-        .join(ds, "s")
-        .select(F.col("dcx").alias("x"), F.col("dsy").alias("y"))
+        e.join(_degree(e, "u").withColumnRenamed("d", "x"), "u")
+        .join(_degree(e, "v").withColumnRenamed("d", "y"), "v")
+        .select("x", "y")
     )
     n = F.count(F.lit(1))
     sx, sy = F.sum("x"), F.sum("y")

@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions 
 
 from mincemeatpy_spark.lineage import truncate_eager, truncate_lazy
 from mincemeatpy_spark.operators._util import hash60, q6_dot, q6_embeddings, q6_sample
+from mincemeatpy_spark.operators.graph import _symmetrize
 from mincemeatpy_spark.registry import QUERIES, register
 from mincemeatpy_spark.tables import fan_out, t
 
@@ -721,11 +722,9 @@ def _min_label_components(edges: DataFrame) -> DataFrame:
     lineage (and thus the physical plan) stays flat.  (On a real cluster
     use checkpoint() on reliable storage instead.)
     """
-    sym = (
+    sym = _symmetrize(
         edges.select(F.col("d1").alias("u"), F.col("d2").alias("v"))
-        .unionAll(edges.select(F.col("d2").alias("u"), F.col("d1").alias("v")))
-        .cache()
-    )
+    ).cache()
     labels = (
         sym.select("u")
         .distinct()

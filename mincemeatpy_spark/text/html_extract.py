@@ -1,4 +1,5 @@
-"""Web-document text extraction (VERDICT r11 task 3).
+"""Web-document text extraction, the stage between WARC ingest and the
+corpus gates.
 
 The reference's anecdotal workload — "word frequency lists for many
 gigabytes of text" over lazily-read files (reference README.md:76,
@@ -41,6 +42,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from mincemeatpy_spark.lineage import truncate_lazy
+from mincemeatpy_spark.operators.graph import (
+    _PR_SCALE,
+    _contrib,
+    _degree,
+    _hits_half,
+    _pagerank,
+)
 from mincemeatpy_spark.registry import register
 from mincemeatpy_spark.tables import t
 
@@ -574,6 +583,17 @@ def _web_gated(extracted: DataFrame) -> DataFrame:
     )
 
 
+# Hosts of a page's absolute links: one pattern, spelled identically for
+# both engines.
+_RE_HREF_HOST = 'href="http://([^"/]+)'
+
+
+def _href_hosts(html_sql: str) -> str:
+    """``regexp_extract_all`` of every absolute link's host in the HTML
+    that SQL expression ``html_sql`` yields (Spark and DuckDB alike)."""
+    return f"regexp_extract_all({html_sql}, '{_RE_HREF_HOST}', 1)"
+
+
 @register(
     "web_link_graph",
     oracle=f"""
@@ -581,9 +601,7 @@ def _web_gated(extracted: DataFrame) -> DataFrame:
                CAST(count(*) AS BIGINT) AS n_links,
                CAST(count(DISTINCT doc_id) AS BIGINT) AS n_pages
         FROM (
-            SELECT doc_id, source,
-                   regexp_extract_all({_HTML_SYNTH_SQL},
-                       'href="http://([^"/]+)', 1) AS hosts
+            SELECT doc_id, source, {_href_hosts(_HTML_SYNTH_SQL)} AS hosts
             FROM documents
         ), UNNEST(hosts) AS u(dst)
         GROUP BY source, u.dst
@@ -607,14 +625,11 @@ def web_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents").select(
         "doc_id", "source", F.expr(_HTML_SYNTH_SQL).alias("html")
     )
-    hosts = F.expr(
-        "regexp_extract_all(html, 'href=\"http://([^\"/]+)', 1)"
-    )
     return (
         docs.select(
             "doc_id",
             F.col("source").alias("src_site"),
-            F.explode(hosts).alias("dst_site"),
+            F.explode(F.expr(_href_hosts("html"))).alias("dst_site"),
         )
         .groupBy("src_site", "dst_site")
         .agg(
@@ -624,30 +639,24 @@ def web_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- host-level crawl-graph PageRank (VERDICT r12 task 4) --------------
+# --- host-level crawl-graph PageRank ------------------------------------
 
-# Fixed-point rank scale (integer 1e-12 units — float PageRank drifts by
-# summation order across engines; see operators/graph.py).
-_PR_SCALE = 10**12
 _PR_ITERS = 3
 
 
 def _host_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted host→host edge list from the synthesized pages: each
-    page lives on host ``site(doc_id mod 5).example`` (five crawled
-    hosts) and its absolute outlinks target ``site0-6.example`` — so
-    ``site5``/``site6`` receive links but host no crawled pages: the
-    DANGLING frontier hosts every real crawl graph has, exercising the
-    dangling-mass correction on real structure.  One scan-side
-    regexp_extract_all + one edge-key aggregation; at 100 TB the
-    shuffle carries (src, dst, partial count) only."""
+    """Weighted host→host edge list ``(src, dst, w)`` from the
+    synthesized pages: each page lives on host ``site(doc_id mod
+    5).example`` (five crawled hosts) and its absolute outlinks target
+    ``site0-6.example`` — so ``site5``/``site6`` receive links but host
+    no crawled pages: the DANGLING frontier hosts every real crawl graph
+    has, exercising the dangling-mass correction on real structure.  One
+    scan-side regexp_extract_all + one edge-key aggregation; at 100 TB
+    the shuffle carries (src, dst, partial count) only."""
     # (r13: fan_out reverted here for the same A/B reason as
     # web_link_graph — the single regex is lighter than the shuffle.)
     docs = t(spark, sf_dir, "documents").select(
         "doc_id", F.expr(_HTML_SYNTH_SQL).alias("html")
-    )
-    hosts = F.expr(
-        "regexp_extract_all(html, 'href=\"http://([^\"/]+)', 1)"
     )
     return (
         docs.select(
@@ -656,27 +665,32 @@ def _host_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("doc_id") % 5).cast("string"),
                 F.lit(".example"),
             ).alias("src"),
-            F.explode(hosts).alias("dst"),
+            F.explode(F.expr(_href_hosts("html"))).alias("dst"),
         )
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
     )
 
 
-def _host_pagerank_oracle(iters: int, tail: str | None = None) -> str:
-    """Unrolled fixed-point weighted-PageRank recurrence (MATERIALIZED
-    per round, the bpe_train_32merges DuckDB lesson: plain CTEs inline
-    at each reference and re-evaluate exponentially in depth).
-    ``tail`` overrides the final SELECT (default: the rank table) so
-    derived queries — the frontier prioritizer — reuse the identical
-    recurrence."""
-    head = f"""
+def _host_nodes(edges: DataFrame) -> DataFrame:
+    """``node``: every host that links or is linked to."""
+    return (
+        edges.select(F.col("src").alias("node"))
+        .unionAll(edges.select(F.col("dst").alias("node")))
+        .distinct()
+        .transform(truncate_lazy)
+    )
+
+
+# SQL twin of _host_edges and _host_nodes: the CTEs ``pages``,
+# ``edges`` and ``nodes`` (column ``h``) that every host-graph oracle
+# starts from.
+_HOST_GRAPH_SQL = f"""
         pages AS (
             SELECT doc_id,
                    'site' || CAST(doc_id % 5 AS VARCHAR) || '.example'
                        AS src,
-                   regexp_extract_all({_HTML_SYNTH_SQL},
-                       'href="http://([^"/]+)', 1) AS hosts
+                   {_href_hosts(_HTML_SYNTH_SQL)} AS hosts
             FROM documents
         ),
         edges AS MATERIALIZED (
@@ -688,7 +702,17 @@ def _host_pagerank_oracle(iters: int, tail: str | None = None) -> str:
             SELECT DISTINCT h FROM (
                 SELECT src AS h FROM edges
                 UNION ALL SELECT dst FROM edges)
-        ),
+        )"""
+
+
+def _host_pagerank_oracle(iters: int, tail: str | None = None) -> str:
+    """Unrolled fixed-point weighted-PageRank recurrence (MATERIALIZED
+    per round, the bpe_train_32merges DuckDB lesson: plain CTEs inline
+    at each reference and re-evaluate exponentially in depth).
+    ``tail`` overrides the final SELECT (default: the rank table) so
+    derived queries — the frontier prioritizer — reuse the identical
+    recurrence."""
+    head = f"""{_HOST_GRAPH_SQL},
         nn AS MATERIALIZED (SELECT count(*) AS n FROM nodes),
         outw AS MATERIALIZED (
             SELECT src, sum(w) AS ow FROM edges GROUP BY src
@@ -698,19 +722,17 @@ def _host_pagerank_oracle(iters: int, tail: str | None = None) -> str:
                        AS r
             FROM nodes
         )"""
-    rounds = []
-    for i in range(1, iters + 1):
-        p = i - 1
-        rounds.append(f"""
+    rounds = ",".join(
+        f"""
         contrib_{i} AS MATERIALIZED (
             SELECT e.dst AS h, SUM((r.r * e.w) // o.ow) AS s
             FROM edges e
             JOIN outw o ON o.src = e.src
-            JOIN r_{p} r ON r.h = e.src
+            JOIN r_{i - 1} r ON r.h = e.src
             GROUP BY e.dst
         ),
         dang_{i} AS MATERIALIZED (
-            SELECT COALESCE(SUM(r), 0) AS d FROM r_{p}
+            SELECT COALESCE(SUM(r), 0) AS d FROM r_{i - 1}
             WHERE h NOT IN (SELECT src FROM outw)
         ),
         r_{i} AS MATERIALIZED (
@@ -721,14 +743,11 @@ def _host_pagerank_oracle(iters: int, tail: str | None = None) -> str:
                                     // (SELECT n FROM nn)))) // 100
                         AS BIGINT) AS r
             FROM nodes n LEFT JOIN contrib_{i} c ON c.h = n.h
-        )""")
-    return (
-        "WITH "
-        + head
-        + ","
-        + ",".join(rounds)
-        + " "
-        + (tail or f"SELECT h AS host, r AS rank_scaled FROM r_{iters}")
+        )"""
+        for i in range(1, iters + 1)
+    )
+    return f"WITH {head},{rounds} " + (
+        tail or f"SELECT h AS host, r AS rank_scaled FROM r_{iters}"
     )
 
 
@@ -736,8 +755,8 @@ def _host_pagerank_oracle(iters: int, tail: str | None = None) -> str:
     "web_host_pagerank",
     oracle=_host_pagerank_oracle(_PR_ITERS),
     category="graph",
-    doc="Host-level crawl-graph PageRank (VERDICT r12 task 4): the r12 "
-    "link-graph extraction FUSED with the iterative rank loop — "
+    doc="Host-level crawl-graph PageRank: the link-graph extraction "
+    "FUSED with the iterative rank loop — "
     "extract hrefs scan-side → roll up weighted (src host, dst host) "
     "edges → three weighted power iterations with damping 0.85 and a "
     "broadcast dangling-mass correction (frontier hosts ``site5``/"
@@ -756,60 +775,11 @@ def _host_pagerank_oracle(iters: int, tail: str | None = None) -> str:
     "only — never bodies, never all-pairs.",
 )
 def web_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mincemeatpy_spark.lineage import truncate_eager, truncate_lazy
-
     edges = _host_edges(spark, sf_dir).transform(truncate_lazy)
-    nodes = (
-        edges.select(F.col("src").alias("h"))
-        .unionAll(edges.select(F.col("dst").alias("h")))
-        .distinct()
-        .transform(truncate_lazy)
+    ranks = _pagerank(
+        edges, _degree(edges, "src", "w"), _host_nodes(edges), _PR_ITERS, dangling=True
     )
-    # Node count rides IN-PLAN as a 1-row broadcast aggregate — no
-    # driver-side count job (the graph_pagerank_iter convention).
-    nb = F.broadcast(
-        nodes.agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
-    )
-    outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
-    r0_col = F.expr(f"cast({_PR_SCALE} div n_nodes as bigint)")
-    tele_col = F.expr(
-        f"cast(15 * ({_PR_SCALE} div n_nodes) div 100 as bigint)"
-    )
-    ranks = nodes.crossJoin(nb).select("h", r0_col.alias("r"))
-    for _ in range(_PR_ITERS):
-        contrib = (
-            edges.join(outw, "src")
-            .join(ranks, ranks.h == F.col("src"))
-            .select("dst", F.expr("(r * w) div ow").alias("c"))
-        )
-        inflow = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        # Dangling mass: rank held by hosts with no out-edges, as a
-        # 1-row broadcast (anti-join is node-scale, never edge-scale).
-        dang = F.broadcast(
-            ranks.join(outw, ranks.h == outw.src, "left_anti").agg(
-                F.coalesce(F.sum("r"), F.lit(0)).cast("bigint").alias("d")
-            )
-        )
-        ranks = (
-            nodes.join(inflow, nodes.h == inflow.dst, "left")
-            .crossJoin(nb)
-            .crossJoin(dang)
-            .select(
-                "h",
-                (
-                    tele_col
-                    + F.expr(
-                        "85 * (coalesce(s, 0) + (d div n_nodes)) div 100"
-                    )
-                )
-                .cast("bigint")
-                .alias("r"),
-            )
-            .transform(truncate_eager)
-        )
-    return ranks.select(
-        F.col("h").alias("host"), F.col("r").alias("rank_scaled")
-    )
+    return ranks.select(F.col("node").alias("host"), F.col("r").alias("rank_scaled"))
 
 
 # --- anchor-text corpus ------------------------------------------------
@@ -936,22 +906,18 @@ _FRONTIER_TAIL = f"""
     "partial-distinct) exchange.",
 )
 def web_frontier_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mincemeatpy_spark.lineage import truncate_lazy
-
     ranks = web_host_pagerank(spark, sf_dir).select(
-        F.col("host").alias("h"), F.col("rank_scaled").alias("r")
+        F.col("host").alias("node"), F.col("rank_scaled").alias("r")
     ).transform(truncate_lazy)
     edges = _host_edges(spark, sf_dir).transform(truncate_lazy)
-    outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
+    outw = _degree(edges, "src", "w")
     frontier_edges = edges.join(
         outw.select(F.col("src").alias("dst_src")),
         edges.dst == F.col("dst_src"),
         "left_anti",
     )
     return (
-        frontier_edges.join(outw, "src")
-        .join(ranks, ranks.h == F.col("src"))
-        .select("dst", "src", F.expr("(r * w) div ow").alias("c"))
+        _contrib(frontier_edges, outw, ranks)
         .groupBy("dst")
         .agg(
             F.sum("c").cast("bigint").alias("priority_scaled"),
@@ -968,71 +934,42 @@ def web_frontier_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HITS_ROUNDS = 2
 
 
+def _hits_half_sql(name: str, score: str, frm: str, to: str) -> str:
+    """SQL twin of ``_hits_half``: the CTEs ``{name}_raw`` and
+    ``{name}``, scores ``(h, v)`` from ``score`` over the edges."""
+    return f"""
+        {name}_raw AS MATERIALIZED (
+            SELECT e.{to} AS h, SUM(p.v * e.w) AS s
+            FROM edges e JOIN {score} p ON p.h = e.{frm}
+            GROUP BY e.{to}
+        ),
+        {name} AS MATERIALIZED (
+            SELECT n.h,
+                   CAST(COALESCE(x.s, 0)
+                        // greatest((SELECT SUM(s) FROM {name}_raw)
+                                    // {_PR_SCALE}, 1) AS BIGINT) AS v
+            FROM nodes n LEFT JOIN {name}_raw x ON x.h = n.h
+        )"""
+
+
 def _hits_oracle(rounds: int) -> str:
     """Unrolled integer HITS recurrence: L1-normalized to _PR_SCALE via
     divide-the-total-first (a // max(A // SCALE, 1)) so every
     intermediate stays in int64 — a*SCALE would overflow."""
-    head = f"""
-        pages AS (
-            SELECT doc_id,
-                   'site' || CAST(doc_id % 5 AS VARCHAR) || '.example'
-                       AS src,
-                   regexp_extract_all({_HTML_SYNTH_SQL},
-                       'href="http://([^"/]+)', 1) AS hosts
-            FROM documents
-        ),
-        edges AS MATERIALIZED (
-            SELECT src, u.dst, CAST(count(*) AS BIGINT) AS w
-            FROM pages, UNNEST(hosts) AS u(dst)
-            GROUP BY src, u.dst
-        ),
-        nodes AS MATERIALIZED (
-            SELECT DISTINCT h FROM (
-                SELECT src AS h FROM edges
-                UNION ALL SELECT dst FROM edges)
-        ),
+    halves = "".join(
+        f"""{_hits_half_sql(f"a_{i}", f"h_{i - 1}", "src", "dst")},"""
+        f"""{_hits_half_sql(f"h_{i}", f"a_{i}", "dst", "src")},"""
+        for i in range(1, rounds + 1)
+    )
+    return f"""
+        WITH {_HOST_GRAPH_SQL},
         h_0 AS MATERIALIZED (
             SELECT h, CAST({_PR_SCALE} AS BIGINT) AS v FROM nodes
-        )"""
-    parts = []
-    for i in range(1, rounds + 1):
-        p = i - 1
-        parts.append(f"""
-        araw_{i} AS MATERIALIZED (
-            SELECT e.dst AS h, SUM(hp.v * e.w) AS s
-            FROM edges e JOIN h_{p} hp ON hp.h = e.src
-            GROUP BY e.dst
-        ),
-        a_{i} AS MATERIALIZED (
-            SELECT n.h,
-                   CAST(COALESCE(ar.s, 0)
-                        // greatest((SELECT SUM(s) FROM araw_{i})
-                                    // {_PR_SCALE}, 1) AS BIGINT) AS v
-            FROM nodes n LEFT JOIN araw_{i} ar ON ar.h = n.h
-        ),
-        hraw_{i} AS MATERIALIZED (
-            SELECT e.src AS h, SUM(a.v * e.w) AS s
-            FROM edges e JOIN a_{i} a ON a.h = e.dst
-            GROUP BY e.src
-        ),
-        h_{i} AS MATERIALIZED (
-            SELECT n.h,
-                   CAST(COALESCE(hr.s, 0)
-                        // greatest((SELECT SUM(s) FROM hraw_{i})
-                                    // {_PR_SCALE}, 1) AS BIGINT) AS v
-            FROM nodes n LEFT JOIN hraw_{i} hr ON hr.h = n.h
-        )""")
-    return (
-        "WITH "
-        + head
-        + ","
-        + ",".join(parts)
-        + f"""
+        ),{halves.rstrip(",")}
         SELECT n.h AS host, a.v AS auth_scaled, hh.v AS hub_scaled
         FROM nodes n
         JOIN a_{rounds} a ON a.h = n.h
         JOIN h_{rounds} hh ON hh.h = n.h"""
-    )
 
 
 @register(
@@ -1055,70 +992,16 @@ def _hits_oracle(rounds: int) -> str:
     "sum) only; lineage truncated between rounds (kmeans convention).",
 )
 def web_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mincemeatpy_spark.lineage import truncate_eager, truncate_lazy
-
     edges = _host_edges(spark, sf_dir).transform(truncate_lazy)
-    nodes = (
-        edges.select(F.col("src").alias("h"))
-        .unionAll(edges.select(F.col("dst").alias("h")))
-        .distinct()
-        .transform(truncate_lazy)
-    )
-    hub = nodes.select("h", F.lit(_PR_SCALE).cast("bigint").alias("v"))
-    auth = None
+    nodes = _host_nodes(edges)
+    hub = nodes.select("node", F.lit(_PR_SCALE).cast("bigint").alias("v"))
     for _ in range(_HITS_ROUNDS):
-        araw = (
-            edges.join(hub.withColumnRenamed("h", "sh"),
-                       F.col("sh") == F.col("src"))
-            .select("dst", F.expr("v * w").alias("x"))
-            .groupBy("dst")
-            .agg(F.sum("x").alias("s"))
-        )
-        anorm = F.broadcast(
-            araw.agg(
-                F.greatest(
-                    F.expr(f"sum(s) div {_PR_SCALE}"), F.lit(1)
-                ).cast("bigint").alias("dn")
-            )
-        )
-        auth = (
-            nodes.join(araw, nodes.h == araw.dst, "left")
-            .crossJoin(anorm)
-            .select(
-                "h",
-                F.expr("coalesce(s, 0) div dn").cast("bigint").alias("v"),
-            )
-            .transform(truncate_eager)
-        )
-        hraw = (
-            edges.join(auth.withColumnRenamed("h", "dh"),
-                       F.col("dh") == F.col("dst"))
-            .select("src", F.expr("v * w").alias("x"))
-            .groupBy("src")
-            .agg(F.sum("x").alias("s"))
-        )
-        hnorm = F.broadcast(
-            hraw.agg(
-                F.greatest(
-                    F.expr(f"sum(s) div {_PR_SCALE}"), F.lit(1)
-                ).cast("bigint").alias("dn")
-            )
-        )
-        hub = (
-            nodes.join(hraw, nodes.h == hraw.src, "left")
-            .crossJoin(hnorm)
-            .select(
-                "h",
-                F.expr("coalesce(s, 0) div dn").cast("bigint").alias("v"),
-            )
-            .transform(truncate_eager)
-        )
+        auth = _hits_half(edges, nodes, hub, "src", "dst")
+        hub = _hits_half(edges, nodes, auth, "dst", "src")
     return (
-        nodes.join(auth.withColumnRenamed("v", "auth_scaled"), "h")
-        .join(hub.withColumnRenamed("v", "hub_scaled"), "h")
-        .select(
-            F.col("h").alias("host"), "auth_scaled", "hub_scaled"
-        )
+        nodes.join(auth.withColumnRenamed("v", "auth_scaled"), "node")
+        .join(hub.withColumnRenamed("v", "hub_scaled"), "node")
+        .select(F.col("node").alias("host"), "auth_scaled", "hub_scaled")
     )
 
 

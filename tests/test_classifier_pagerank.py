@@ -1,9 +1,8 @@
-"""White-box pins for the r13 additions: host-level crawl-graph
-PageRank (VERDICT r12 task 4) and the learned quality classifier
-(task 5).  Value-exactness vs DuckDB is the oracle pair's job; these
-pin the STRUCTURAL claims the docstrings make — the dangling-mass
-correction actually fires, the model actually separates the classes,
-the decision path is float-free."""
+"""White-box pins for host-level crawl-graph PageRank and the learned
+quality classifier.  Value-exactness vs DuckDB is the oracle pair's
+job; these pin the STRUCTURAL claims the docstrings make — the
+dangling-mass correction actually fires, the model actually separates
+the classes, the decision path is float-free."""
 
 from __future__ import annotations
 

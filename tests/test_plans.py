@@ -872,31 +872,15 @@ def test_simhash_pairs_no_signature_rejoin(registry_run):
     assert n_joins == 1, f"expected 1 join, plan has {dict(joins)}"
 
 
-def _customer_supplier_edges(spark, sf_dir):
-    """The graph queries' bipartite edge list: customers even (2k),
-    suppliers odd (2k+1), int64 end to end."""
-    from pyspark.sql import functions as F
-
-    from mincemeatpy_spark.tables import t as tt
-
-    o = tt(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = tt(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    return (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).cast("bigint").alias("u"),
-            (F.col("l_suppkey") * 2 + 1).cast("bigint").alias("v"),
-        )
-        .distinct()
-    )
-
-
 def test_bfs_edges_shuffle_integer_keys(spark, sf_dir, registry_run):
     """graph_bfs_distances: node keys are int64 end-to-end (SCALE rule
     5); the display-label concat appears only above the final
     node-count-sized aggregate, never below a join or distinct."""
-    e = _customer_supplier_edges(spark, sf_dir)
+    from mincemeatpy_spark.operators.graph import _purchase_edges, _symmetrize
+
+    e = _purchase_edges(spark, sf_dir)
     assert dict(e.dtypes) == {"u": "bigint", "v": "bigint"}
+    assert dict(_symmetrize(e).dtypes) == {"u": "bigint", "v": "bigint"}
     full = registry_run("graph_bfs_distances").checked()
     # Output labels are still the public 'c…'/'s…' strings.
     assert dict(full.dtypes)["example_node"] == "string"
@@ -1023,22 +1007,17 @@ def test_kcore_four_rounds_reach_fixpoint(spark, sf_dir):
     both the loop and the oracle recurrence need one more round (they
     would still agree with each other — which is exactly why the oracle
     gate cannot catch it)."""
-    from pyspark.sql import functions as F
+    from mincemeatpy_spark.operators.graph import (
+        _kcore_peel_round,
+        _purchase_edges,
+        _symmetrize,
+    )
 
-    from mincemeatpy_spark.operators.graph import _KCORE_K
-
-    e = _customer_supplier_edges(spark, sf_dir)
-    edges = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    edges = _symmetrize(_purchase_edges(spark, sf_dir))
     counts = []
     for _ in range(5):
         counts.append(edges.count())
-        deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("c"))
-        keep = deg.filter(F.col("c") >= _KCORE_K).select("u")
-        edges = (
-            edges.join(keep, "u", "left_semi")
-            .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
-            .localCheckpoint(eager=True)
-        )
+        edges = _kcore_peel_round(edges).localCheckpoint(eager=True)
     n5 = edges.count()
     assert n5 == counts[4], (
         f"5th peel round changed the edge count {counts[4]} -> {n5}: "

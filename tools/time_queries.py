@@ -1,7 +1,14 @@
 """Quick A/B timing of named queries with the bench's methodology
-(noop sink, local[$SPARK_GRAFT_CPUS], k trials, median) — for the r13
-optimization round's inner loop.  NOT the driver contract; bench.py
-remains the instrument of record.
+(noop sink, local[$SPARK_GRAFT_CPUS], k trials, median) — the inner loop
+of an optimization A/B.  NOT the driver contract; bench.py remains the
+instrument of record.
+
+Each query gets one untimed build plus noop sink before its timed
+trials.  Without it the first trial pays the query's cold start —
+loading its code path, JIT and whole-stage code generation — so with
+``-k 1`` the first query named was timed mostly on warm-up:
+``dedup_minhash_lsh`` read 5.1-7.1 s in fresh sessions at sf0.1 against
+1.25-2.16 s once warm.
 
 Usage: python tools/time_queries.py [-k N] name [name ...]
 """
@@ -36,13 +43,14 @@ def main() -> None:
     for name in args:
         q = queries[name]
         trials = []
-        for _ in range(k):
-            # r14: same trial isolation as bench.py — no cross-trial
-            # reuse of cached intermediates via canonical-plan match.
+        for i in range(k + 1):
+            # Same trial isolation as bench.py: no cross-trial reuse of
+            # cached intermediates via canonical-plan match.
             spark.catalog.clearCache()
             t0 = time.perf_counter()
             q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            trials.append(time.perf_counter() - t0)
+            if i:  # trial 0 is the untimed warm-up
+                trials.append(time.perf_counter() - t0)
         med = statistics.median(trials)
         print(
             f"{med:8.3f}  {name}  trials="
